@@ -17,7 +17,7 @@ naming layer so a user manages MANY tables by name:
 
 State is a versioned JSON name→root mapping committed with the same
 ``os.link`` compare-and-swap the table metadata layer uses
-(meta/snapshots.py:_try_publish): concurrent registrations race on the
+(meta/snapshots.py:publish_json): concurrent registrations race on the
 next version file and the loser rebases — no lock service, works on any
 POSIX-complete store. The catalog holds only POINTERS; dropping a name
 never deletes table data (mirroring Glue's external-table semantics).
@@ -29,10 +29,10 @@ import json
 import os
 import re
 import time
-import uuid
 from typing import Any, Optional
 
 from .errors import LakehouseError
+from .meta.snapshots import publish_json
 
 _NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_.-]*$")
 _VERSION_RE = re.compile(r"^cat-v(\d+)\.json$")
@@ -62,24 +62,6 @@ def _list_versions(path: str) -> list[int]:
     return sorted(out)
 
 
-def _try_publish(path: str, version: int, payload: dict[str, Any]) -> bool:
-    """CAS-publish one catalog version (os.link fails on EEXIST when a
-    concurrent writer claimed it — same discipline as table commits)."""
-    target = _version_path(path, version)
-    tmp = f"{target}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
-    return True
-
-
 class Catalog:
     def __init__(self, path: str):
         self.path = os.path.abspath(path)
@@ -92,7 +74,7 @@ class Catalog:
         if _list_versions(path):
             raise CatalogError(f"catalog already exists at {path}")
         os.makedirs(_catalog_dir(path), exist_ok=True)
-        if not _try_publish(path, 1, {"tables": {}}):
+        if not publish_json(_version_path(path, 1), {"tables": {}}):
             raise CatalogError(f"catalog already exists at {path}")
         return Catalog(path)
 
@@ -128,8 +110,9 @@ class Catalog:
         for attempt in range(max_retries):
             version, tables = self._state()
             new_tables = apply(dict(tables))
-            if _try_publish(
-                self.path, version + 1, {"tables": new_tables}
+            if publish_json(
+                _version_path(self.path, version + 1),
+                {"tables": new_tables},
             ):
                 return new_tables
             time.sleep(0.05 * (attempt + 1))

@@ -49,6 +49,13 @@ Two writers (the write-side twins, same registered format):
   Offsets live in the query checkpoint, so restart resumes exactly-once
   as long as the referenced snapshots have not been expired.
 
+Every Arrow read — batch, ``changes=true`` CDC, and the storage-
+partitioned join (spj.py) — goes through ONE per-file kernel,
+:func:`read_files`: physical names by field id (``fieldids.physical_
+names``), fills and initial-defaults, then one select/exclude row mask
+for selector and delete files under the sequence rule. It is the Arrow
+twin of the Spark-side kernel ``meta/scan.read_entries``.
+
 Scale note: the Arrow-in-Python read path moves data through executor
 Python workers, so it deliberately targets *integration* (federated
 engines, streaming tails, moderate scans), not the 100 TB maintenance
@@ -82,6 +89,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from . import fieldids
 from .errors import LakehouseError
 from .expressions import Predicate
 from .meta.scan import plan_scan
@@ -171,31 +179,6 @@ def _view_schema_id(meta: TableMetadata, sid: Optional[int]) -> int:
     return meta.current_schema_id
 
 
-def _rename_maps(meta: TableMetadata, view_schema_id: int):
-    """gid -> {physical name: view name} for field-id mapped tables
-    (None when the table never renamed/dropped — zero-cost path). The
-    map is EXHAUSTIVE over the view's fields present in that write
-    schema: on mapped tables readers must never fall back to matching
-    by name, or a dropped-and-readded name would resurrect old values.
-    """
-    from . import fieldids
-
-    if not fieldids.has_mapped_schemas(meta.schemas):
-        return None
-    all_ids = fieldids.schema_field_ids(meta.schemas)
-    view_ids = all_ids[view_schema_id]
-    out = {}
-    for gid, ids in enumerate(all_ids):
-        inv = {v: k for k, v in ids.items()}
-        out[gid] = {
-            inv[fid]: cur for cur, fid in view_ids.items() if fid in inv
-        }
-    out[fieldids.LEGACY_SCHEMA_ID] = out[
-        fieldids.resolve_legacy_gid(meta.schemas)
-    ]
-    return out
-
-
 # --- partitions ---------------------------------------------------------------
 
 
@@ -206,17 +189,17 @@ class FilesPartition(InputPartition):
     CDC-stream partitions (``changes=true`` readers) additionally carry
     ``change`` ('insert' | 'delete'), the committing ``snapshot_id``,
     and — for delete rows — ``selectors``: the commit's NEW delete
-    files, applied as a row SELECTOR (keep rows they kill) while
-    ``deletes`` stays the usual exclusion (rows already dead BEFORE the
-    commit must not re-emit)."""
+    files, applied as a row SELECTOR (keep rows they kill; None =
+    every row) while ``deletes`` stays the usual exclusion (rows
+    already dead BEFORE the commit must not re-emit)."""
 
     def __init__(self, files, deletes, *, change=None, selectors=None,
                  snapshot_id=None):
-        self.files = files  # [{"path", "rel", "seq"}]
+        self.files = files  # _file_dicts: {"path", "rel", "seq", ...}
         # key=None marks a positional delete file (file_path, row_pos)
         self.deletes = deletes  # [{"path", "key", "seq"}]
         self.change = change
-        self.selectors = selectors or []
+        self.selectors = selectors
         self.snapshot_id = snapshot_id
 
 
@@ -247,36 +230,36 @@ def _delete_dicts(root, delete_files) -> list[dict]:
     ]
 
 
-def _partitions_for(
-    root, plan, target_bytes, ren_by_gid=None
-) -> list[FilesPartition]:
-    deletes = _delete_dicts(root, plan.delete_files)
-    def _ren(e):
-        if ren_by_gid is None:
-            return None
-        gid = e.schema_id
-        if gid is None or gid not in ren_by_gid:
-            gid = max(g for g in ren_by_gid if g >= 0)  # current
-        return ren_by_gid[gid]
-
+def _file_dicts(root, entries, names) -> list[dict]:
+    """Manifest data entries → the picklable per-file dicts the Arrow
+    read kernel takes. ``names`` is ``fieldids.physical_names`` for the
+    schema being read (None on never-mapped tables)."""
     from .meta.scan import entry_fills
 
-    out = []
-    for members in _bin_pack(plan.files, target_bytes):
-        files = [
-            {
-                "path": os.path.join(root, e.file_path),
-                "rel": e.file_path,
-                "seq": e.seq,
-                "ren": _ren(e),
-                # adopted non-self-contained files: per-file constant
-                # column fills (ops/adopt.py; see meta/scan.entry_fills)
-                "fill": entry_fills(e.stats) or None,
-            }
-            for e in members
-        ]
-        out.append(FilesPartition(files, deletes))
-    return out
+    return [
+        {
+            "path": os.path.join(root, e.file_path),
+            "rel": e.file_path,
+            "seq": e.seq,
+            # field-id mapped file: {physical name: view name}, over
+            # the view's fields present in this file's write schema
+            "ren": None if names is None else {
+                p: c for c, p in names[e.schema_id].items() if p is not None
+            },
+            # adopted non-self-contained file: per-file constant column
+            # fills (ops/adopt.py; see meta/scan.entry_fills)
+            "fill": entry_fills(e.stats) or None,
+        }
+        for e in entries
+    ]
+
+
+def _partitions_for(root, plan, target_bytes, names) -> list[FilesPartition]:
+    deletes = _delete_dicts(root, plan.delete_files)
+    return [
+        FilesPartition(_file_dicts(root, members, names), deletes)
+        for members in _bin_pack(plan.files, target_bytes)
+    ]
 
 
 # --- Arrow read path (runs in executor Python workers) ------------------------
@@ -315,17 +298,78 @@ def _conform_arrow_table(
     return tbl.select(names).cast(target)
 
 
-def _read_partition(part: FilesPartition, spark_schema: T.StructType):
-    """Yield Arrow record batches for one partition, deletes applied.
+def _read_deletes(dicts):
+    """Delete-file dicts → ({key column: [(seq, keys)]}, [(seq, table)]):
+    equality keys grouped per key column (deletes on different keys
+    never cross-contaminate), positional files kept whole. Delete files
+    are tiny relative to data; each task reads the ones it needs rather
+    than shipping key sets through the driver."""
+    import pyarrow.parquet as pq
 
-    Missing columns (files written before an additive schema evolution)
-    are null-filled; extra physical columns (the clustering ``zkey``)
-    are dropped by column selection; everything is cast to the exact
-    Arrow schema Spark expects for this source. Equality deletes follow
-    the Iceberg sequence rule per delete-KEY column (grouped exactly
-    like the native reader's _anti_join_eq_deletes, meta/scan.py) so
-    deletes on different keys never cross-contaminate.
+    eq: dict[str, list] = {}
+    pos: list = []
+    for d in dicts:
+        if d["key"] is None:
+            pos.append((d["seq"], pq.read_table(d["path"])))
+        else:
+            keys = pq.read_table(d["path"], columns=[d["key"]]).column(0)
+            eq.setdefault(d["key"], []).append((d["seq"], keys))
+    return eq, pos
+
+
+def _file_keys(groups, f_seq, have):
+    """[(key column, combined key array)] of equality deletes that apply
+    to a file committed at ``f_seq`` (Iceberg seq rule) — constant per
+    FILE, so built once here, not per record batch."""
+    import pyarrow as pa
+
+    out = []
+    for key_name, grp in groups.items():
+        chunks = [c for dseq, keys in grp if f_seq < dseq for c in keys.chunks]
+        if chunks and key_name in have:
+            out.append((key_name, pa.chunked_array(chunks).combine_chunks()))
+    return out
+
+
+def _file_positions(pos_groups, f_seq, rel):
+    """Sorted row positions positional deletes name for THIS file (by
+    its table-relative path, seq rule applied), or None — each batch
+    slices its window with searchsorted, no per-row Python."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    chunks = []
+    for dseq, dtbl in pos_groups:
+        if f_seq >= dseq:
+            continue
+        m = pc.equal(dtbl.column("file_path"), rel or "")
+        hit = dtbl.filter(pc.fill_null(m, False))
+        if hit.num_rows:
+            chunks.append(hit.column("row_pos").to_numpy())
+    if not chunks:
+        return None
+    return np.unique(np.concatenate(chunks))
+
+
+def read_files(
+    files, spark_schema: T.StructType, deletes=(), selectors=None
+):
+    """The Arrow read kernel: yield Arrow record batches of ``files``
+    (``_file_dicts``) conformed to ``spark_schema``. Batch reads, CDC
+    reads and SPJ all come through this one per-file loop.
+
+    Per file: the view's columns are read under their write-time names
+    (``ren``, from ``fieldids.physical_names``) and renamed back;
+    absent columns fill with the file's adopted constant (``fill``),
+    else the field's ``initial-default``, else null; extra physical
+    columns (the clustering ``zkey``) are dropped. Rows are then
+    masked: ``selectors`` (delete-file dicts) SELECT the rows they kill
+    (None = select all), ``deletes`` exclude the rows they kill — both
+    under the Iceberg seq rule (data ``seq`` < delete ``seq``), eq keys
+    via ``is_in`` (a null key never matches), positions on the raw
+    batch offsets. A file no mask touches is a plain column-pruned read.
     """
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -336,85 +380,52 @@ def _read_partition(part: FilesPartition, spark_schema: T.StructType):
     target = to_arrow_schema(spark_schema)
     names = list(target.names)
     # initial-defaults ride in the Spark schema's field metadata (the
-    # Arrow conversion drops it, so harvest here): files missing a
-    # defaulted column fill the DEFAULT, matching the native scan
+    # Arrow conversion drops it, so harvest here)
     defaults = {
         f.name: field_default(f)
         for f in spark_schema.fields
         if field_default(f) is not None
     }
+    sel_eq, sel_pos = _read_deletes(selectors or [])
+    excl_eq, excl_pos = _read_deletes(deletes)
 
-    # delete files are tiny (one key column) relative to data; each task
-    # reads the ones overlapping its bin rather than shipping key sets
-    # through the driver. Grouped by key column; each group keeps its
-    # per-file commit seq for the sequence rule. key=None entries are
-    # positional delete files: (file_path, row_pos) rows kept whole.
-    del_keys: dict[str, list[tuple[int, pa.ChunkedArray]]] = {}
-    pos_dels: list[tuple[int, "pa.Table"]] = []
-    for d in part.deletes:
-        if d["key"] is None:
-            pos_dels.append((d["seq"], pq.read_table(d["path"])))
-            continue
-        keys = pq.read_table(d["path"], columns=[d["key"]]).column(0)
-        del_keys.setdefault(d["key"], []).append((d["seq"], keys))
+    def _eq_mask(tbl, key_name, dead):
+        m = pc.is_in(tbl.column(key_name), value_set=dead)
+        return pc.fill_null(m, False).to_numpy(zero_copy_only=False)
 
-    for f in part.files:
+    def _pos_mask(mask, positions, offset, n, value):
+        lo, hi = np.searchsorted(positions, [offset, offset + n])
+        if hi > lo:
+            mask[positions[lo:hi] - offset] = value
+
+    for f in files:
         pf = pq.ParquetFile(f["path"])
         have = set(pf.schema_arrow.names)
         # adopted non-self-contained file: its fill constants override
         # the schema-level defaults for THIS file's missing columns
         fdefaults = defaults
-        fill = f.get("fill") if isinstance(f, dict) else None
-        if fill:
+        if f.get("fill"):
             fdefaults = dict(defaults)
-            for c, v in fill.items():
+            for c, v in f["fill"].items():
                 if c in names and v is not None:
                     try:
                         v = pa.array([v]).cast(target.field(c).type)[0].as_py()
                     except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
                         pass
                     fdefaults[c] = v
-        ren = f.get("ren") if isinstance(f, dict) else None
+        ren = f.get("ren")
         if ren is not None:
-            # field-id mapped file: read the view's columns under their
-            # WRITE-TIME names only (never match by name — a dropped-
-            # and-readded name must not resurrect old values), rename
-            # each batch back to view names below
             cols = [p for p in ren if p in have and ren[p] in names]
             have = {ren[p] for p in cols}
         else:
             cols = [c for c in names if c in have]
-        # dead-key sets are constant per FILE (they depend only on the
-        # file's seq) — build once here, not per record batch
-        dead_by_key: list[tuple[str, pa.Array]] = []
-        for key_name, groups in del_keys.items():
-            chunks = [
-                c
-                for dseq, keys in groups
-                if f["seq"] < dseq
-                for c in keys.chunks
-            ]
-            if chunks and key_name in have:
-                dead_by_key.append(
-                    (key_name, pa.chunked_array(chunks).combine_chunks())
-                )
-        # dead row positions for THIS file (positional deletes name the
-        # file by its table-relative path); sorted, so each batch slices
-        # its window with searchsorted — no per-row Python
-        dead_pos = None
-        if pos_dels:
-            import numpy as np
-
-            chunks = []
-            for dseq, dtbl in pos_dels:
-                if f["seq"] >= dseq:
-                    continue
-                m = pc.equal(dtbl.column("file_path"), f.get("rel") or "")
-                hit = dtbl.filter(pc.fill_null(m, False))
-                if hit.num_rows:
-                    chunks.append(hit.column("row_pos").to_numpy())
-            if chunks:
-                dead_pos = np.unique(np.concatenate(chunks))
+        f_sel_eq = _file_keys(sel_eq, f["seq"], have)
+        f_sel_pos = _file_positions(sel_pos, f["seq"], f.get("rel"))
+        f_excl_eq = _file_keys(excl_eq, f["seq"], have)
+        f_excl_pos = _file_positions(excl_pos, f["seq"], f.get("rel"))
+        masked = (
+            selectors is not None or f_excl_eq or f_excl_pos is not None
+        )
         offset = 0
         for batch in pf.iter_batches(columns=cols):
             tbl = pa.Table.from_batches([batch])
@@ -422,23 +433,22 @@ def _read_partition(part: FilesPartition, spark_schema: T.StructType):
                 tbl = tbl.rename_columns(
                     [ren.get(c, c) for c in tbl.column_names]
                 )
-            n = tbl.num_rows
-            if dead_pos is not None:
-                import numpy as np
-
-                lo, hi = np.searchsorted(dead_pos, [offset, offset + n])
-                if hi > lo:
-                    keep = np.ones(n, dtype=bool)
-                    keep[dead_pos[lo:hi] - offset] = False
+            if masked:
+                n = tbl.num_rows
+                keep = np.full(n, selectors is None, dtype=bool)
+                if f_sel_pos is not None:
+                    _pos_mask(keep, f_sel_pos, offset, n, True)
+                for key_name, dead in f_sel_eq:
+                    keep |= _eq_mask(tbl, key_name, dead)
+                if f_excl_pos is not None:
+                    _pos_mask(keep, f_excl_pos, offset, n, False)
+                for key_name, dead in f_excl_eq:
+                    keep &= ~_eq_mask(tbl, key_name, dead)
+                offset += n
+                if not keep.any():
+                    continue
+                if not keep.all():
                     tbl = tbl.filter(pa.array(keep))
-            offset += n
-            for key_name, dead in dead_by_key:
-                keep = pc.invert(
-                    pc.is_in(tbl.column(key_name), value_set=dead)
-                )
-                # is_in returns null (not false) for null probe values;
-                # a null key can never match an equality delete -> keep
-                tbl = tbl.filter(pc.fill_null(keep, True))
             yield from _conform_arrow_table(
                 tbl, target, defaults=fdefaults
             ).to_batches()
@@ -465,8 +475,9 @@ def _tag_change(batch, change: str, snapshot_id):
 
 def _read_changes_partition(part: FilesPartition,
                             base_schema: T.StructType):
-    """CDC-stream read task (``changes=true``): yield the partition's
-    rows tagged with ``_change_type`` / ``_commit_snapshot_id``.
+    """CDC-stream read task (``changes=true``): the partition's rows
+    through :func:`read_files`, tagged with ``_change_type`` /
+    ``_commit_snapshot_id``.
 
     Insert partitions are a plain read of the commit's added files
     (no deletes can apply to them at commit time — their seq equals the
@@ -476,132 +487,12 @@ def _read_changes_partition(part: FilesPartition,
     already live BEFORE the commit — exclude, so a row only ever
     streams as deleted once. ``part.selectors is None`` selects ALL
     live rows — the copy-on-write shape, where the whole file was
-    removed by the commit (exclusions still apply). Mask arithmetic
-    mirrors _read_partition (positions on the RAW batch offsets, eq
-    via is_in with null→no match), combined into one filter per batch.
+    removed by the commit (exclusions still apply).
     """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .schema import field_default
-
-    if part.change != "delete":
-        for batch in _read_partition(part, base_schema):
-            yield _tag_change(batch, "insert", part.snapshot_id)
-        return
-
-    target = to_arrow_schema(base_schema)
-    names = list(target.names)
-    defaults = {
-        f.name: field_default(f)
-        for f in base_schema.fields
-        if field_default(f) is not None
-    }
-
-    def _load(dicts):
-        eq: dict[str, list] = {}
-        pos: list = []
-        for d in dicts:
-            if d["key"] is None:
-                pos.append((d["seq"], pq.read_table(d["path"])))
-            else:
-                keys = pq.read_table(d["path"], columns=[d["key"]]).column(0)
-                eq.setdefault(d["key"], []).append((d["seq"], keys))
-        return eq, pos
-
-    select_all = part.selectors is None
-    sel_eq, sel_pos = _load(part.selectors or [])
-    excl_eq, excl_pos = _load(part.deletes)
-
-    def _file_keys(groups, f_seq, have):
-        out = []
-        for key_name, grp in groups.items():
-            chunks = [
-                c
-                for dseq, keys in grp
-                if f_seq < dseq
-                for c in keys.chunks
-            ]
-            if chunks and key_name in have:
-                out.append(
-                    (key_name, pa.chunked_array(chunks).combine_chunks())
-                )
-        return out
-
-    def _file_positions(pos_groups, f_seq, rel):
-        chunks = []
-        for dseq, dtbl in pos_groups:
-            if f_seq >= dseq:
-                continue
-            m = pc.equal(dtbl.column("file_path"), rel or "")
-            hit = dtbl.filter(pc.fill_null(m, False))
-            if hit.num_rows:
-                chunks.append(hit.column("row_pos").to_numpy())
-        if not chunks:
-            return None
-        return np.unique(np.concatenate(chunks))
-
-    def _pos_mask(mask, positions, offset, n, value):
-        lo, hi = np.searchsorted(positions, [offset, offset + n])
-        if hi > lo:
-            mask[positions[lo:hi] - offset] = value
-
-    def _eq_mask(tbl, key_name, dead):
-        m = pc.is_in(tbl.column(key_name), value_set=dead)
-        return pc.fill_null(m, False).to_numpy(zero_copy_only=False)
-
-    for f in part.files:
-        pf = pq.ParquetFile(f["path"])
-        have = set(pf.schema_arrow.names)
-        fdefaults = defaults
-        fill = f.get("fill")
-        if fill:
-            fdefaults = dict(defaults)
-            for c, v in fill.items():
-                if c in names and v is not None:
-                    try:
-                        v = pa.array([v]).cast(target.field(c).type)[0].as_py()
-                    except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                        pass
-                    fdefaults[c] = v
-        ren = f.get("ren")
-        if ren is not None:
-            cols = [p for p in ren if p in have and ren[p] in names]
-            have = {ren[p] for p in cols}
-        else:
-            cols = [c for c in names if c in have]
-        f_sel_eq = _file_keys(sel_eq, f["seq"], have)
-        f_excl_eq = _file_keys(excl_eq, f["seq"], have)
-        f_sel_pos = _file_positions(sel_pos, f["seq"], f.get("rel"))
-        f_excl_pos = _file_positions(excl_pos, f["seq"], f.get("rel"))
-        offset = 0
-        for batch in pf.iter_batches(columns=cols):
-            tbl = pa.Table.from_batches([batch])
-            if ren is not None and tbl.num_columns:
-                tbl = tbl.rename_columns(
-                    [ren.get(c, c) for c in tbl.column_names]
-                )
-            n = tbl.num_rows
-            keep = np.full(n, select_all, dtype=bool)
-            if f_sel_pos is not None:
-                _pos_mask(keep, f_sel_pos, offset, n, True)
-            for key_name, dead in f_sel_eq:
-                keep |= _eq_mask(tbl, key_name, dead)
-            if f_excl_pos is not None:
-                _pos_mask(keep, f_excl_pos, offset, n, False)
-            for key_name, dead in f_excl_eq:
-                keep &= ~_eq_mask(tbl, key_name, dead)
-            offset += n
-            if not keep.any():
-                continue
-            tbl = tbl.filter(pa.array(keep))
-            for b in _conform_arrow_table(
-                tbl, target, defaults=fdefaults
-            ).to_batches():
-                yield _tag_change(b, "delete", part.snapshot_id)
+    for batch in read_files(
+        part.files, base_schema, part.deletes, part.selectors
+    ):
+        yield _tag_change(batch, part.change, part.snapshot_id)
 
 
 # --- batch reader -------------------------------------------------------------
@@ -677,15 +568,17 @@ class LakehouseBatchReader(DataSourceReader):
             self._root,
             plan,
             self._target_bytes,
-            ren_by_gid=_rename_maps(
-                meta, _view_schema_id(meta, self._snapshot_id)
+            fieldids.physical_names(
+                meta.schemas, _view_schema_id(meta, self._snapshot_id)
             ),
         )
         # Spark requires >= 1 partition; empty table -> one empty task
         return parts or [FilesPartition([], [])]
 
     def read(self, partition: FilesPartition):
-        yield from _read_partition(partition, self._schema)
+        yield from read_files(
+            partition.files, self._schema, partition.deletes
+        )
 
 
 class LakehousePushdownBatchReader(LakehouseBatchReader):
@@ -830,7 +723,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
             self._root,
             plan,
             self._target_bytes,
-            ren_by_gid=_rename_maps(meta, self._schema_id),
+            fieldids.physical_names(meta.schemas, self._schema_id),
         )
         return parts or [FilesPartition([], [])]
 
@@ -847,7 +740,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
         from .ops.changes import DATA_NEUTRAL_OPS, _chain
         from .ops.mor import _pos_delete_touches, _range_intersects
 
-        ren = _rename_maps(meta, self._schema_id)
+        names = fieldids.physical_names(meta.schemas, self._schema_id)
         parts: list[FilesPartition] = []
         plans: dict = {}  # adjacent chain steps share a boundary plan
 
@@ -896,10 +789,9 @@ class LakehouseStreamReader(DataSourceStreamReader):
                         prev_dels.values(),
                     ),
                     self._target_bytes,
-                    ren_by_gid=ren,
+                    names,
                 ):
                     part.change = "delete"
-                    part.selectors = None  # all live rows of the file
                     part.snapshot_id = snap.snapshot_id
                     parts.append(part)
             new_dels = [
@@ -909,7 +801,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
             ]
             for part in _partitions_for(
                 self._root, _Plan(added), self._target_bytes,
-                ren_by_gid=ren,
+                names,
             ):
                 part.change = "insert"
                 part.snapshot_id = snap.snapshot_id
@@ -933,7 +825,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
                 selectors = _delete_dicts(self._root, new_dels)
                 for part in _partitions_for(
                     self._root, _Plan(affected, prev_dels.values()),
-                    self._target_bytes, ren_by_gid=ren,
+                    self._target_bytes, names,
                 ):
                     part.change = "delete"
                     part.selectors = selectors
@@ -945,7 +837,9 @@ class LakehouseStreamReader(DataSourceStreamReader):
         if self._changes:
             yield from _read_changes_partition(partition, self._schema)
             return
-        yield from _read_partition(partition, self._schema)
+        yield from read_files(
+            partition.files, self._schema, partition.deletes
+        )
 
     def commit(self, end: dict) -> None:
         pass

@@ -119,30 +119,40 @@ def resolve_legacy_gid(schemas: Sequence[dict[str, Any]]) -> int:
     return legacy[-1] if legacy else 0
 
 
+def physical_names(
+    schemas: Sequence[dict[str, Any]], view_schema_id: int
+) -> Optional[dict[Optional[int], dict[str, Optional[str]]]]:
+    """The one answer to "under which PHYSICAL name does view column C
+    live in a file written under schema G": ``{G: {C: name | None}}``,
+    ``None`` meaning the field does not exist in such files (read it as
+    its default — never by name, or a dropped-and-re-added name would
+    resurrect old values). Keys cover every schema id plus
+    ``LEGACY_SCHEMA_ID`` and ``None`` (an entry not yet stamped: the
+    view schema). Returns ``None`` on never-mapped tables, where names
+    ARE physical. Used by the Spark read kernel (meta/scan.py), the
+    Arrow read kernel (datasource.py), SPJ and stats/bloom pruning."""
+    if not has_mapped_schemas(schemas):
+        return None
+    all_ids = schema_field_ids(schemas)
+    view_ids = all_ids[view_schema_id]
+    out: dict[Optional[int], dict[str, Optional[str]]] = {}
+    for gid, ids in enumerate(all_ids):
+        name_by_id = {v: k for k, v in ids.items()}
+        out[gid] = {c: name_by_id.get(fid) for c, fid in view_ids.items()}
+    out[LEGACY_SCHEMA_ID] = out[resolve_legacy_gid(schemas)]
+    out[None] = out[view_schema_id]
+    return out
+
+
 def name_lookup(schemas: Sequence[dict[str, Any]], current_schema_id: int):
     """``fn(entry, current_col) -> physical column name | None``: which
     name the CURRENT column was written under in this entry's file
     (``None`` = the field does not exist there). Identity on
     never-mapped tables."""
-    if not has_mapped_schemas(schemas):
+    phys = physical_names(schemas, current_schema_id)
+    if phys is None:
         return lambda e, col: col
-    all_ids = schema_field_ids(schemas)
-    cur_ids = all_ids[current_schema_id]
-    legacy_gid = resolve_legacy_gid(schemas)
-    name_by_gid = [{v: k for k, v in ids.items()} for ids in all_ids]
-
-    def get(e, col):
-        fid = cur_ids.get(col)
-        if fid is None:
-            return None
-        gid = e.schema_id
-        if gid is None:
-            gid = current_schema_id
-        elif gid == LEGACY_SCHEMA_ID:
-            gid = legacy_gid
-        return name_by_gid[gid].get(fid)
-
-    return get
+    return lambda e, col: phys[e.schema_id].get(col)
 
 
 def stats_lookup(schemas: Sequence[dict[str, Any]], current_schema_id: int):

@@ -9,6 +9,16 @@ is re-applied in Spark so Catalyst additionally pushes it into the
 Parquet reader (row-group skipping), matching the reference's
 ``filterPushdown=true`` (/root/reference/etl/glue_stream.py:301).
 
+Every Spark-side read of data files goes through ONE kernel,
+:func:`read_entries`: entries (+ optional schema, pending deletes, and
+the ``__seq``/``__path``/``__pos`` lineage columns) → DataFrame. It
+alone resolves physical column names by field id, fills initial-
+defaults and adopted-file constants, and applies the delete sequence
+rule; ``read_plan``, ``read_lazy_plan``, every ``ops/*`` rewrite, CDC
+and ``scan_with_lineage`` call it. Its Arrow twin is
+``datasource.read_files``; both take the name mapping from
+``fieldids.physical_names``.
+
 For manifest sets too large for the driver (10^12-row tables have
 millions of files), ``plan_scan_lazy`` + ``read_lazy_plan`` run the same
 pruning as a Spark job over the manifest Parquet files themselves and
@@ -22,7 +32,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
-from typing import Optional, Sequence
+from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -177,21 +187,21 @@ def _split_delete_kinds(
     return eq, pos
 
 
-def _anti_join_eq_deletes(
+def _eq_delete_join(
     spark: SparkSession,
     table_root: str,
     df: DataFrame,
     delete_files: Sequence[DataFileEntry],
+    how: str = "left_anti",
 ) -> DataFrame:
-    """Apply Iceberg's sequence rule to a DataFrame that carries a
-    ``__seq`` column: left-anti join the broadcast union of equality
+    """The equality-delete probe, under Iceberg's sequence rule, for a
+    DataFrame that carries ``__seq``: join the broadcast union of
     delete keys where ``delete.seq > data.seq`` (a delete applies only
     to files committed strictly before it), one join per delete-key
-    column. The single implementation shared by the driver scan, the
-    lazy/distributed scan, and CDC — the seq rule lives in exactly one
-    place. Positional entries in ``delete_files`` are ignored (apply
-    them with :func:`_anti_join_pos_deletes`); ``__seq`` is preserved
-    so both kinds can chain."""
+    column. ``left_anti`` hides the deleted rows (every read);
+    ``left_semi`` keeps exactly them (``convert_deletes`` turning keys
+    into positions). Positional entries are ignored; ``__seq`` is
+    preserved so both delete kinds can chain."""
     from pyspark.sql import functions as F
 
     by_key: dict[str, list[DataFileEntry]] = {}
@@ -208,7 +218,7 @@ def _anti_join_eq_deletes(
         df = df.join(
             F.broadcast(ddf),
             (df[key] == ddf["__dk"]) & (ddf["__dseq"] > df["__seq"]),
-            "left_anti",
+            how,
         )
     return df
 
@@ -239,8 +249,6 @@ def _anti_join_pos_deletes(
             F.lit(d.seq).alias("__dseq"),
         )
         ddf = one if ddf is None else ddf.unionByName(one)
-    if ddf is None:
-        return df
     return df.join(
         F.broadcast(ddf),
         (df["__path"] == ddf["__dp"])
@@ -250,73 +258,9 @@ def _anti_join_pos_deletes(
     )
 
 
-# helper columns carried by merge-on-read reads (dropped before the
-# caller sees the DataFrame)
+# lineage columns the read kernel can carry: commit seq, root-relative
+# file path, row index within the file
 _MOR_COLS = ("__seq", "__path", "__pos")
-
-
-def _mapped_read_parts(
-    meta: TableMetadata, logical: T.StructType, gid: int
-) -> tuple[T.StructType, list]:
-    """(physical read schema, select exprs) materializing ``logical``
-    from files written under schema ``gid``: field ids resolve each
-    logical column to its write-time PHYSICAL name (rename survives),
-    ids absent from the write schema are filled with the field's
-    ``initial-default`` (null when none — late adds and
-    drop-then-re-add), and names outside the table schema entirely
-    (``__zkey`` etc.) pass through physically."""
-    from pyspark.sql import functions as F
-
-    from .. import fieldids
-    from ..schema import field_default
-
-    schemas = meta.schemas
-    all_ids = fieldids.schema_field_ids(schemas)
-    cur_ids = all_ids[meta.current_schema_id]
-    if gid == fieldids.LEGACY_SCHEMA_ID:
-        gid = fieldids.resolve_legacy_gid(schemas)
-    name_by_id = {v: k for k, v in all_ids[gid].items()}
-    read_fields, sel = [], []
-    for f in logical.fields:
-        phys = (
-            name_by_id.get(cur_ids[f.name])
-            if f.name in cur_ids
-            else f.name
-        )
-        if phys is None:
-            sel.append(
-                F.lit(field_default(f)).cast(f.dataType).alias(f.name)
-            )
-        else:
-            read_fields.append(T.StructField(phys, f.dataType, True))
-            sel.append(F.col(phys).alias(f.name))
-    return T.StructType(read_fields), sel
-
-
-def seq_schema_groups(
-    table_root: str, meta: TableMetadata, entries: Sequence[DataFileEntry]
-) -> dict:
-    """Group entries for `_union_seq_groups`: plain seq keys on tables
-    that never renamed/dropped (zero behavior change), (seq, write
-    schema id) keys once field-id mapping is in play."""
-    from .. import fieldids
-
-    mapped = fieldids.has_mapped_schemas(meta.schemas)
-    by: dict = {}
-    for e in entries:
-        if mapped:
-            gid = (
-                e.schema_id
-                if e.schema_id is not None
-                else meta.current_schema_id
-            )
-            key = (e.seq, gid)
-        else:
-            key = e.seq
-        by.setdefault(key, []).append(
-            os.path.join(table_root, e.file_path)
-        )
-    return by
 
 
 def entry_fills(stats) -> dict[str, Any]:
@@ -332,31 +276,17 @@ def entry_fills(stats) -> dict[str, Any]:
     }
 
 
-def fills_of_entries(
-    entries: Sequence[DataFileEntry],
-) -> dict[str, dict[str, Any]]:
-    """rel_path → {col: const} over fill-flagged entries only."""
-    out: dict[str, dict[str, Any]] = {}
-    for e in entries:
-        m = entry_fills(e.stats)
-        if m:
-            out[e.file_path] = m
-    return out
-
-
 _FILL_PATH = "__fillp"
 
 
-def _fill_path_expr(table_root: str):
+def _path_expr(table_root: str, alias: str):
     """Root-relative file path of each row, computed by the parquet
-    reader itself (``_metadata.file_path`` = "file:" + absolute path —
-    same normalization as the positional-delete ``__path``)."""
+    reader itself: ``_metadata.file_path`` is "file:" + absolute path,
+    manifests store root-relative paths — strip the constant prefix."""
     from pyspark.sql import functions as F
 
     plen = len("file:" + os.path.abspath(table_root) + "/")
-    return F.expr(f"substring(_metadata.file_path, {plen + 1})").alias(
-        _FILL_PATH
-    )
+    return F.expr(f"substring(_metadata.file_path, {plen + 1})").alias(alias)
 
 
 def _apply_entry_fills(
@@ -406,93 +336,106 @@ def read_entries(
     table_root: str,
     entries: Sequence[DataFileEntry],
     logical_schema: Optional[T.StructType] = None,
-) -> DataFrame:
-    """Plain (no seq/pos columns) mapped-aware read of a set of data
-    file entries — the one helper every rewrite op should use instead
-    of ``spark.read.schema(table.schema).parquet(*paths)``: identical
-    plan on tables that never renamed/dropped a column, per-write-
-    schema grouped reads (physical names resolved by field id) once
-    they have. Adopted-file fills (``entry_fills``) are applied here,
-    so every rewrite op regains self-contained output for free."""
-    schema = logical_schema or T.StructType.fromJson(meta.schema_json)
-    if not entries:
-        return spark.createDataFrame([], schema)
-    fills = fills_of_entries(entries)
-    groups = seq_schema_groups(table_root, meta, entries)
-    if all(isinstance(k, int) for k in groups):
-        paths = [os.path.join(table_root, e.file_path) for e in entries]
-        df = spark.read.schema(schema).parquet(*paths)
-        if fills:
-            df = _apply_entry_fills(
-                spark, schema,
-                df.select("*", _fill_path_expr(table_root)), fills,
-            )
-        return df
-    flat: dict = {}
-    for (_seq, gid), paths in groups.items():
-        flat.setdefault((0, gid), []).extend(paths)
-    return _union_seq_groups(
-        spark, schema, flat, meta=meta,
-        fills=fills or None, fill_root=table_root,
-    ).drop("__seq")
-
-
-def _union_seq_groups(
-    spark: SparkSession,
-    schema: T.StructType,
-    by_seq: dict,
     *,
-    rel_prefix: Optional[str] = None,
-    meta: Optional[TableMetadata] = None,
-    fills: Optional[dict] = None,
-    fill_root: Optional[str] = None,
-) -> Optional[DataFrame]:
-    """Union of per-commit-seq parquet reads, each group carrying its
-    seq as a literal ``__seq`` column (no per-row path join; distinct
-    seqs are bounded by commit count). Single implementation behind
-    every merge-on-read reader.
+    deletes: Sequence[DataFileEntry] = (),
+    lineage: bool = False,
+) -> DataFrame:
+    """The Spark-side read kernel: data-file entries → DataFrame under
+    ``logical_schema`` (default: the table's current schema). Every
+    reader of data files — scans, every rewrite op, CDC, lineage —
+    comes through here, so three decisions are made once:
 
-    With ``rel_prefix`` (the table root), each row additionally carries
-    ``__path`` (file path relative to the root, via the Parquet
-    ``_metadata.file_path`` column — computed by the reader, no join)
-    and ``__pos`` (``_metadata.row_index``), the join keys positional
-    deletes need.
+    - physical column names by field id (``fieldids.physical_names``):
+      on mapped tables files are grouped by write schema, each group is
+      read under its write-time names and aliased back; a field absent
+      from a group reads as its ``initial-default`` (null when none);
+      names outside the table schema (``__zkey``) pass through;
+    - adopted-file fills (``entry_fills``): one broadcast join keyed on
+      the reader-computed file path;
+    - the sequence rule for ``deletes``: positional then equality
+      deletes hide rows of data files with strictly smaller seq, as
+      broadcast anti-joins (the wide side never shuffles).
 
-    Keys are either plain seq ints, or ``(seq, write_schema_id)``
-    tuples from :func:`seq_schema_groups` on field-id-mapped tables —
-    then ``meta`` must be given and each group is read under its
-    write-time physical names, aliased back to the current ones."""
+    ``lineage=True`` keeps ``__seq`` (commit seq), ``__path`` (root-
+    relative file path) and ``__pos`` (row index) on every row. The
+    seq and path/pos columns are only built when deletes or lineage
+    need them: an unmapped table with no deletes, fills or lineage
+    reads as ONE multi-path parquet scan with the declared schema."""
     from pyspark.sql import functions as F
 
-    pos_cols = []
-    if rel_prefix is not None:
-        # the reader reports "file:" + absolute path; manifests store
-        # root-relative paths — strip the constant-length prefix
-        plen = len("file:" + os.path.abspath(rel_prefix) + "/")
-        pos_cols = [
-            F.expr(
-                f"substring(_metadata.file_path, {plen + 1})"
-            ).alias("__path"),
+    from .. import fieldids
+    from ..schema import field_default
+
+    schema = logical_schema or T.StructType.fromJson(meta.schema_json)
+    if not entries:
+        df = spark.createDataFrame([], schema)
+        if lineage:
+            df = df.select(
+                "*",
+                F.lit(None).cast("long").alias("__seq"),
+                F.lit(None).cast("string").alias("__path"),
+                F.lit(None).cast("long").alias("__pos"),
+            )
+        return df
+    eq, pos = _split_delete_kinds(deletes)
+    names = fieldids.physical_names(meta.schemas, meta.current_schema_id)
+    fills = {}
+    for e in entries:
+        kept = {
+            c: v for c, v in entry_fills(e.stats).items() if c in schema.names
+        }
+        if kept:
+            fills[e.file_path] = kept
+    with_seq = lineage or bool(deletes)
+    extra = []
+    if lineage or pos:
+        extra += [
+            _path_expr(table_root, "__path"),
             F.col("_metadata.row_index").alias("__pos"),
         ]
-    fill_cols = []
     if fills:
-        fill_cols = [_fill_path_expr(fill_root)]
-    df = None
-    for key in sorted(by_seq):
-        if isinstance(key, tuple):
-            seq, gid = key
-            read_schema, sel = _mapped_read_parts(meta, schema, gid)
-        else:
-            seq, read_schema, sel = key, schema, [F.col("*")]
-        part = (
-            spark.read.schema(read_schema)
-            .parquet(*by_seq[key])
-            .select(*sel, F.lit(seq).alias("__seq"), *pos_cols, *fill_cols)
+        extra.append(_path_expr(table_root, _FILL_PATH))
+
+    # one read per (seq, write schema); seq is a per-group literal
+    # (bounded by commit count — no per-row path join)
+    groups: dict = {}
+    for e in sorted(entries, key=lambda e: e.seq) if with_seq else entries:
+        key = (
+            e.seq if with_seq else 0,
+            e.schema_id if names is not None else None,
         )
+        groups.setdefault(key, []).append(
+            os.path.join(table_root, e.file_path)
+        )
+    df = None
+    for (seq, gid), paths in groups.items():
+        read_schema, sel = schema, [F.col("*")]
+        if names is not None:
+            phys_of = names[gid]
+            read_fields, sel = [], []
+            for f in schema.fields:
+                phys = phys_of.get(f.name, f.name)
+                if phys is None:
+                    sel.append(
+                        F.lit(field_default(f)).cast(f.dataType).alias(f.name)
+                    )
+                else:
+                    read_fields.append(T.StructField(phys, f.dataType, True))
+                    sel.append(F.col(phys).alias(f.name))
+            read_schema = T.StructType(read_fields)
+        cols = sel + ([F.lit(seq).alias("__seq")] if with_seq else []) + extra
+        part = spark.read.schema(read_schema).parquet(*paths)
+        if names is not None or len(cols) > 1:
+            part = part.select(*cols)
         df = part if df is None else df.unionByName(part)
-    if df is not None and fills:
+    if fills:
         df = _apply_entry_fills(spark, schema, df, fills)
+    if pos:
+        df = _anti_join_pos_deletes(spark, table_root, df, pos)
+    if eq:
+        df = _eq_delete_join(spark, table_root, df, eq)
+    if with_seq and not lineage:
+        df = df.drop(*_MOR_COLS)
     return df
 
 
@@ -514,44 +457,12 @@ def _split_deletes(mdf: DataFrame) -> tuple[DataFrame, list[DataFileEntry]]:
     )
 
 
-def _apply_mor_deletes(
-    spark: SparkSession,
-    table_root: str,
-    schema: T.StructType,
-    data_files: Sequence[DataFileEntry],
-    delete_files: Sequence[DataFileEntry],
-    *,
-    meta: Optional[TableMetadata] = None,
-) -> DataFrame:
-    """Merge-on-read: seq-grouped reads + the shared sequence-rule
-    anti-joins (equality deletes by key, positional deletes by
-    (file_path, row_pos)). The per-row path/pos columns are only read
-    when positional deletes are actually pending — the equality-only
-    path is byte-identical to round 2."""
-    eq, pos = _split_delete_kinds(delete_files)
-    fills = fills_of_entries(data_files)
-    if meta is not None:
-        by_seq = seq_schema_groups(table_root, meta, data_files)
-    else:
-        by_seq = {}
-        for e in data_files:
-            by_seq.setdefault(e.seq, []).append(
-                os.path.join(table_root, e.file_path)
-            )
-    df = _union_seq_groups(
-        spark,
-        schema,
-        by_seq,
-        rel_prefix=table_root if pos else None,
-        meta=meta,
-        fills=fills or None,
-        fill_root=table_root,
-    )
-    if pos:
-        df = _anti_join_pos_deletes(spark, table_root, df, pos)
-    if eq:
-        df = _anti_join_eq_deletes(spark, table_root, df, eq)
-    return df.drop(*_MOR_COLS)
+def _finish(df: DataFrame, residual_sql, columns) -> DataFrame:
+    if residual_sql:
+        df = df.filter(residual_sql)
+    if columns:
+        df = df.select(*columns)
+    return df
 
 
 def read_plan(
@@ -562,7 +473,7 @@ def read_plan(
     *,
     columns: Optional[Sequence[str]] = None,
 ) -> DataFrame:
-    """Materialize a plan as a DataFrame.
+    """Materialize a plan as a DataFrame through :func:`read_entries`.
 
     Data files are self-contained (identity-partition columns are stored
     in the files, see ops/append.py), so the read is a plain multi-path
@@ -571,41 +482,10 @@ def read_plan(
     Pending merge-on-read deletes (equality and positional) are applied
     as broadcast anti-joins before projection.
     """
-    schema = T.StructType.fromJson(meta.schema_json)
-    if not plan.files:
-        df = spark.createDataFrame([], schema)
-    elif plan.delete_files:
-        df = _apply_mor_deletes(
-            spark, table_root, schema, plan.files, plan.delete_files,
-            meta=meta,
-        )
-    else:
-        fills = fills_of_entries(plan.files)
-        groups = seq_schema_groups(table_root, meta, plan.files)
-        if all(isinstance(k, int) for k in groups):
-            # un-mapped table: single multi-path read, same as ever
-            paths = [
-                os.path.join(table_root, e.file_path) for e in plan.files
-            ]
-            df = spark.read.schema(schema).parquet(*paths)
-            if fills:
-                df = _apply_entry_fills(
-                    spark, schema,
-                    df.select("*", _fill_path_expr(table_root)), fills,
-                )
-        else:
-            flat = {}  # drop the seq dimension — only schema groups matter
-            for (_seq, gid), paths in groups.items():
-                flat.setdefault((0, gid), []).extend(paths)
-            df = _union_seq_groups(
-                spark, schema, flat, meta=meta,
-                fills=fills or None, fill_root=table_root,
-            ).drop("__seq")
-    if plan.residual_sql:
-        df = df.filter(plan.residual_sql)
-    if columns:
-        df = df.select(*columns)
-    return df
+    df = read_entries(
+        spark, meta, table_root, plan.files, deletes=plan.delete_files
+    )
+    return _finish(df, plan.residual_sql, columns)
 
 
 def prune_entries_df(
@@ -637,22 +517,16 @@ def prune_entries_df(
     # dict into the closure so every executor-side stats/bloom lookup
     # uses the entry's write-time names (rename/drop sound, identical
     # to the driver path). None = unmapped table, plain name lookups.
-    phys_by_gid: Optional[dict[int, dict[str, Optional[str]]]] = None
+    phys_by_gid = None
     cur_gid = -1
-    if meta is not None and fieldids.has_mapped_schemas(meta.schemas):
-        cols = [p.col for p in preds]
-        all_ids = fieldids.schema_field_ids(meta.schemas)
-        cur_ids = all_ids[meta.current_schema_id]
+    if meta is not None:
         cur_gid = meta.current_schema_id
-        legacy_gid = fieldids.resolve_legacy_gid(meta.schemas)
-        phys_by_gid = {}
-        for gid, ids in enumerate(all_ids):
-            inv = {v: k for k, v in ids.items()}
-            phys_by_gid[gid] = {
-                c: inv.get(cur_ids[c]) if c in cur_ids else None
-                for c in cols
+        names = fieldids.physical_names(meta.schemas, cur_gid)
+        if names is not None:
+            cols = [p.col for p in preds]
+            phys_by_gid = {
+                gid: {c: m.get(c) for c in cols} for gid, m in names.items()
             }
-        phys_by_gid[fieldids.LEGACY_SCHEMA_ID] = phys_by_gid[legacy_gid]
     has_gid_col = "schema_id" in mdf.columns
 
     def keep_batch(batches):
@@ -734,12 +608,12 @@ class LazyScanPlan:
     delete_files: list[DataFileEntry] = field(default_factory=list)
 
     def iter_path_chunks(self, table_root: str, chunk_size: int = 100_000):
-        """Yield lists of ≤``chunk_size`` (absolute path, seq, gid,
-        rel path, fills) tuples; driver memory is bounded by one chunk
-        (toLocalIterator streams partitions). ``fills`` is the adopted
-        non-self-contained column map (``entry_fills``) or None —
-        parsed only when the stats JSON carries the flag, so the common
-        path pays one substring probe per row."""
+        """Yield lists of ≤``chunk_size`` (absolute path, entry) pairs;
+        driver memory is bounded by one chunk (toLocalIterator streams
+        partitions). Each entry carries only what the read kernel needs
+        (path, seq, write schema id, stats) — and stats are parsed only
+        when the JSON carries the adopted-file ``fill`` flag, so the
+        common path pays one substring probe per row."""
         cols = ["file_path"] + (
             ["seq"] if "seq" in self.files_df.columns else []
         )
@@ -749,30 +623,26 @@ class LazyScanPlan:
         has_stats = "stats_json" in self.files_df.columns
         if has_stats:
             cols.append("stats_json")
-        chunk: list[tuple[str, int, int, str, Optional[dict]]] = []
+        chunk: list[tuple[str, DataFileEntry]] = []
         for row in (
             self.files_df.select(*cols).toLocalIterator(
                 prefetchPartitions=True
             )
         ):
-            seq = row.seq if "seq" in cols and row.seq is not None else 0
-            gid = (
-                row.schema_id
-                if has_gid and row.schema_id is not None
-                else -1
-            )
-            fills = None
+            stats = {}
             if has_stats and row.stats_json and '"fill"' in row.stats_json:
-                fills = entry_fills(json.loads(row.stats_json)) or None
-            chunk.append(
-                (
-                    os.path.join(table_root, row.file_path),
-                    seq,
-                    gid,
-                    row.file_path,
-                    fills,
-                )
+                stats = json.loads(row.stats_json)
+            entry = DataFileEntry(
+                row.file_path,
+                stats=stats,
+                seq=row.seq if "seq" in cols and row.seq is not None else 0,
+                schema_id=(
+                    row.schema_id
+                    if has_gid and row.schema_id is not None
+                    else -1
+                ),
             )
+            chunk.append((os.path.join(table_root, row.file_path), entry))
             if len(chunk) >= chunk_size:
                 yield chunk
                 chunk = []
@@ -831,60 +701,20 @@ def read_lazy_plan(
     chunk_size: int = 100_000,
 ) -> DataFrame:
     """Materialize a LazyScanPlan without ever building the full path
-    list in one Python object: chunked multi-path reads, unioned lazily.
-    Pending equality deletes are applied the same way as read_plan —
-    chunks are further grouped by seq so no per-row path join is needed.
-    """
-    from pyspark.sql import functions as F
-
-    from .. import fieldids
-
-    schema = T.StructType.fromJson(meta.schema_json)
-    mapped = fieldids.has_mapped_schemas(meta.schemas)
-    mor = bool(plan.delete_files)
-    eq, pos = _split_delete_kinds(plan.delete_files)
+    list in one Python object: each bounded chunk goes through
+    :func:`read_entries` (pending deletes included — they apply row by
+    row, so per-chunk application is exact) and the chunks are unioned
+    lazily."""
     df = None
     for chunk in plan.iter_path_chunks(table_root, chunk_size):
-        fills = {
-            rel: fl for _p, _s, _g, rel, fl in chunk if fl
-        }
-        if mor or mapped:
-            by_seq: dict = {}
-            for p, seq, gid, _rel, _fl in chunk:
-                key = (seq, gid) if mapped else seq
-                by_seq.setdefault(key, []).append(p)
-            part = _union_seq_groups(
-                spark, schema, by_seq,
-                rel_prefix=table_root if pos else None,
-                meta=meta,
-                fills=fills or None,
-                fill_root=table_root,
-            )
-            if not mor:
-                part = part.drop("__seq")
-        else:
-            part = spark.read.schema(schema).parquet(
-                *[p for p, _s, _g, _r, _f in chunk]
-            )
-            if fills:
-                part = _apply_entry_fills(
-                    spark, schema,
-                    part.select("*", _fill_path_expr(table_root)), fills,
-                )
+        part = read_entries(
+            spark, meta, table_root, [e for _p, e in chunk],
+            deletes=plan.delete_files,
+        )
         df = part if df is None else df.unionByName(part)
     if df is None:
-        df = spark.createDataFrame([], schema)
-    elif mor:
-        if pos:
-            df = _anti_join_pos_deletes(spark, table_root, df, pos)
-        if eq:
-            df = _anti_join_eq_deletes(spark, table_root, df, eq)
-        df = df.drop(*_MOR_COLS)
-    if plan.residual_sql:
-        df = df.filter(plan.residual_sql)
-    if columns:
-        df = df.select(*columns)
-    return df
+        df = read_entries(spark, meta, table_root, [])
+    return _finish(df, plan.residual_sql, columns)
 
 
 def plan_scan_distributed(

@@ -12,8 +12,8 @@ time travel"). This module rebuilds that black box:
   name — ``link(2)`` fails with EEXIST if a concurrent writer got there
   first, giving compare-and-swap semantics on any POSIX filesystem (on
   object stores this maps to a conditional PUT / If-None-Match);
-- ``version-hint.text`` is an advisory pointer only; readers list
-  ``v*.metadata.json`` and take the max, so a stale hint is harmless.
+- there is no version-hint pointer: readers list ``v*.metadata.json``
+  and take the max.
 
 Losers of the race re-read the new current metadata, re-validate their
 snapshot against it (rebase) and retry — classic optimistic concurrency.
@@ -178,8 +178,8 @@ def list_versions(table_root: str) -> list[int]:
 
 
 def current_version(table_root: str) -> int:
-    """Hint-accelerated: trust version-hint.text if the file it names
-    exists AND no later version exists; else full listing."""
+    """Newest published version: the max over a listing of
+    ``v*.metadata.json``."""
     versions = list_versions(table_root)
     if not versions:
         raise TableNotFoundError(f"no table metadata under {table_root}")
@@ -231,14 +231,14 @@ def read_manifest_list(table_root: str, rel: str) -> list[dict[str, Any]]:
         return json.load(f)["manifests"]
 
 
-def _try_publish(table_root: str, version: int, payload: dict[str, Any]) -> bool:
-    """Compare-and-swap publish of ``v<version>.metadata.json``.
+def publish_json(target: str, payload: dict[str, Any]) -> bool:
+    """Compare-and-swap publish of one JSON file — the single CAS
+    primitive behind table commits and catalog versions.
 
     ``os.link`` is atomic and fails with EEXIST when a concurrent committer
-    already claimed the version — the CAS we need (os.rename would
+    already claimed the name — the CAS we need (os.rename would
     silently overwrite the winner).
     """
-    target = _version_path(table_root, version)
     tmp = f"{target}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(payload, f, indent=1)
@@ -250,12 +250,12 @@ def _try_publish(table_root: str, version: int, payload: dict[str, Any]) -> bool
         return False
     finally:
         os.unlink(tmp)
-    # advisory hint for fast readers; losing a race here is harmless
-    _atomic_write_json(
-        os.path.join(metadata_dir(table_root), "version-hint.json"),
-        {"version": version},
-    )
     return True
+
+
+def _try_publish(table_root: str, version: int, payload: dict[str, Any]) -> bool:
+    """CAS-publish ``v<version>.metadata.json``."""
+    return publish_json(_version_path(table_root, version), payload)
 
 
 def next_snapshot_id(meta: TableMetadata) -> int:

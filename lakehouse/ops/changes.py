@@ -65,12 +65,15 @@ def _files_of(table, snapshot_id: Optional[int]) -> dict[str, Any]:
     return {e.file_path: e for e in table.live_files(snapshot_id)}
 
 
-def _read_file_entries(table, entries) -> DataFrame:
-    """Mapped-aware multi-file read (field-id rename/drop safe)."""
+def _read_file_entries(table, entries, deletes=()) -> DataFrame:
+    """Read data-file entries through the read kernel (field-id
+    rename/drop safe, ``deletes`` applied under the seq rule)."""
     from ..meta.scan import read_entries
 
     entries = sorted(entries, key=lambda e: e.file_path)
-    return read_entries(table.spark, table.meta, table.root, entries)
+    return read_entries(
+        table.spark, table.meta, table.root, entries, deletes=deletes
+    )
 
 
 def incremental_scan(
@@ -150,50 +153,30 @@ def row_changes(
     old_dels = old_plan.delete_files if old_plan else []
     new_dels = new_plan.delete_files if new_plan else []
 
-    if not old_dels and not new_dels:
-        old_df = _read_file_entries(
-            table, [old_entries[p] for p in only_old]
-        )
-        new_df = _read_file_entries(
-            table, [new_entries[p] for p in only_new]
-        )
-    else:
-        from ..meta.scan import _apply_mor_deletes
-        from ..ops.mor import _pos_delete_touches, _range_intersects
+    from ..ops.mor import _pos_delete_touches, _range_intersects
 
-        all_dels = {d.file_path: d for d in old_dels + new_dels}.values()
+    all_dels = {d.file_path: d for d in old_dels + new_dels}.values()
 
-        def _affected(e) -> bool:
-            return any(
-                e.seq < d.seq
-                and (
-                    _pos_delete_touches(e, d)
-                    if d.is_pos_delete
-                    else _range_intersects(
-                        e.stats.get(d.delete_key) or {},
-                        d.stats.get(d.delete_key) or {},
-                    )
+    def _affected(e) -> bool:
+        return any(
+            e.seq < d.seq
+            and (
+                _pos_delete_touches(e, d)
+                if d.is_pos_delete
+                else _range_intersects(
+                    e.stats.get(d.delete_key) or {},
+                    d.stats.get(d.delete_key) or {},
                 )
-                for d in all_dels
             )
+            for d in all_dels
+        )
 
-        def _side(entries, only, dels) -> DataFrame:
-            read = [
-                e
-                for p, e in sorted(entries.items())
-                if p in only or _affected(e)
-            ]
-            if not read:
-                return table.spark.createDataFrame([], table.schema)
-            if not dels:
-                return _read_file_entries(table, read)
-            return _apply_mor_deletes(
-                table.spark, table.root, table.schema, read, dels,
-                meta=table.meta,
-            )
+    def _side(entries, only, dels) -> DataFrame:
+        read = [e for p, e in entries.items() if p in only or _affected(e)]
+        return _read_file_entries(table, read, dels)
 
-        old_df = _side(old_entries, set(only_old), old_dels)
-        new_df = _side(new_entries, set(only_new), new_dels)
+    old_df = _side(old_entries, set(only_old), old_dels)
+    new_df = _side(new_entries, set(only_new), new_dels)
 
     if columns is not None:
         old_df = old_df.select(*columns)

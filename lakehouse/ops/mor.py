@@ -616,25 +616,15 @@ def delete_mor_positional(
     if not plan.files:
         log.finish_job({"snapshot_id": None, "keys_deleted": 0})
         return MorDeleteResult(log.job_id, None, 0, None)
-    from ..meta.scan import (
-        _union_seq_groups,
-        fills_of_entries,
-        seq_schema_groups,
-    )
-
-    meta = table.meta
-    by_seq = seq_schema_groups(table.root, meta, plan.files)
+    from ..meta.scan import read_entries
 
     # rows already hidden by PENDING deletes may match again here —
     # harmless: their (path, pos) is invisible either way, and
     # materialize rewrites those files to new paths, orphaning the
     # stale positions together with the delete files themselves.
     pos_df = (
-        _union_seq_groups(
-            table.spark, table.schema, by_seq, rel_prefix=table.root,
-            meta=meta,
-            fills=fills_of_entries(plan.files) or None,
-            fill_root=table.root,
+        read_entries(
+            table.spark, table.meta, table.root, plan.files, lineage=True
         )
         .filter(F.expr(pred_sql))
         .select(
@@ -765,7 +755,7 @@ def convert_deletes(
     """
     from pyspark.sql import types as T
 
-    from ..meta.scan import _split_delete_kinds, _union_seq_groups
+    from ..meta.scan import _eq_delete_join, _split_delete_kinds, read_entries
 
     spark = table.spark
     plan = table.plan()
@@ -806,34 +796,13 @@ def convert_deletes(
             reduced = T.StructType(
                 [f for f in table.schema.fields if f.name in need]
             )
-            from ..meta.scan import fills_of_entries, seq_schema_groups
-
-            meta = table.meta
-            by_seq = seq_schema_groups(table.root, meta, affected)
-            # adopted-file fills restricted to the reduced key schema
-            fills = {
-                p: kept
-                for p, m in fills_of_entries(affected).items()
-                if (kept := {c: v for c, v in m.items() if c in need})
-            }
-            df = _union_seq_groups(
-                spark, reduced, by_seq, rel_prefix=table.root, meta=meta,
-                fills=fills or None, fill_root=table.root,
+            df = read_entries(
+                spark, table.meta, table.root, affected, reduced,
+                lineage=True,
             )
             for key in need:
-                ddf = None
-                for d in by_key[key]:
-                    one = spark.read.parquet(
-                        os.path.join(table.root, d.file_path)
-                    ).select(
-                        F.col(key).alias("__dk"),
-                        F.lit(d.seq).alias("__dseq"),
-                    )
-                    ddf = one if ddf is None else ddf.unionByName(one)
-                hit = df.join(
-                    F.broadcast(ddf),
-                    (df[key] == ddf["__dk"]) & (ddf["__dseq"] > df["__seq"]),
-                    "left_semi",
+                hit = _eq_delete_join(
+                    spark, table.root, df, by_key[key], "left_semi"
                 )
                 parts.append(
                     hit.select(
@@ -908,7 +877,7 @@ def materialize_deletes(
 ) -> MaterializeResult:
     """Apply every pending delete (equality AND positional) to the data
     files it can touch and drop the delete files (one REPLACE commit)."""
-    from ..meta.scan import _apply_mor_deletes
+    from ..meta.scan import read_entries
 
     plan = table.plan()
     dels = plan.delete_files
@@ -948,8 +917,8 @@ def materialize_deletes(
 
     entries: list[DataFileEntry] = []
     if plain:
-        rewrite_df = _apply_mor_deletes(
-            table.spark, table.root, table.schema, plain, dels
+        rewrite_df = read_entries(
+            table.spark, table.meta, table.root, plain, deletes=dels
         )
         bytes_in = sum(e.file_size_bytes for e in plain)
         if target_file_count is None:
@@ -966,36 +935,14 @@ def materialize_deletes(
     for i, (so, files) in enumerate(sorted(clustered.items())):
         from pyspark.sql import functions as _F
 
-        from ..meta.scan import (
-            _MOR_COLS,
-            _anti_join_eq_deletes,
-            _anti_join_pos_deletes,
-            _split_delete_kinds,
-            _union_seq_groups,
-        )
         from ..ops.append import harvest_stats, list_job_files
         from ..ops.cluster import ZKEY_COL, schema_with_zkey
         from ..partitioning import with_partition_columns
 
-        eq_dels, pos_dels = _split_delete_kinds(dels)
-        from ..meta.scan import fills_of_entries, seq_schema_groups
-
-        _meta = table.meta
-        by_seq = seq_schema_groups(table.root, _meta, files)
-        df = _union_seq_groups(
-            table.spark,
-            schema_with_zkey(table.schema),
-            by_seq,
-            rel_prefix=table.root if pos_dels else None,
-            meta=_meta,
-            fills=fills_of_entries(files) or None,
-            fill_root=table.root,
+        df = read_entries(
+            table.spark, table.meta, table.root, files,
+            schema_with_zkey(table.schema), deletes=dels,
         )
-        if pos_dels:
-            df = _anti_join_pos_deletes(table.spark, table.root, df, pos_dels)
-        if eq_dels:
-            df = _anti_join_eq_deletes(table.spark, table.root, df, eq_dels)
-        df = df.drop(*_MOR_COLS)
         df, part_cols = with_partition_columns(
             df, table.meta.partition_spec
         )
@@ -1007,7 +954,7 @@ def materialize_deletes(
         group_bytes = sum(e.file_size_bytes for e in files)
         n_files = max(1, round(group_bytes / (128 * 1024 * 1024)))
         df = df.repartitionByRange(
-            max(n_files, len(by_seq)),
+            max(n_files, len({e.seq for e in files})),
             *[_F.col(c) for c in part_cols],
             _F.col(ZKEY_COL),
         ).sortWithinPartitions(*part_cols, ZKEY_COL)

@@ -12,8 +12,9 @@ the reader does not report its partitioning to Catalyst.
 
 Execution here: one Spark job over a METADATA frame (one row per
 bucket, carrying both sides' file lists + per-file physical column
-maps), ``mapInPandas`` tasks read their bucket's files directly via
-pyarrow (columns pruned to the selection) and join in pandas — Arrow
+maps), ``mapInPandas`` tasks read their bucket's files through the
+Arrow read kernel (datasource.read_files, columns pruned to the
+selection) and join in pandas — Arrow
 batch IO, no per-row Python, no join node and no data exchange in the
 plan (the only exchange is the ≤N-row task-frame round-robin; gated in
 tests/test_spj.py). Wall-clock rides the largest bucket, exactly like
@@ -32,9 +33,9 @@ Requirements checked up front: both current partition specs contain
 delete files (run ``materialize_deletes`` first — a fold-in is a
 rewrite the bucket layout survives); every live entry carries the
 bucket partition value (files predating a spec evolution don't).
-Field-id renames and adopted-file constant fills are handled (per-file
-physical names resolved from the manifest schema ids; fills applied in
-the kernel).
+Field-id renames, adopted-file constant fills and ADD COLUMN defaults
+read exactly as ``Table.scan()`` reads them — the same read kernel
+serves the datasource.
 
 The reference has no distributed join at all (its enrichment is
 row-local, etl/handlers/click_handler.py); this is the operator its
@@ -44,7 +45,6 @@ warehouse would need first at lakehouse scale.
 from __future__ import annotations
 
 import json
-import os
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -65,15 +65,13 @@ def _bucket_field(meta, key: str):
     return None
 
 
-def _side_plan(table, key: str, columns: Sequence[str], side: str):
-    """Validate one side and return (bucket_field, {bucket: [filespec]}).
-
-    filespec = {"path": abs_path, "cols": {logical: physical|None},
-    "fills": {logical: const}} — everything the kernel needs to read
-    the file under the CURRENT schema without consulting the driver.
-    """
-    from .fieldids import name_lookup
-    from .meta.scan import entry_fills
+def _side_plan(table, key: str, side: str):
+    """Validate one side and return (bucket_field, {bucket: [file dict]})
+    — the Arrow read kernel's per-file dicts (datasource._file_dicts:
+    physical names by field id, adopted-file fills), everything needed
+    to read the file under the CURRENT schema without the driver."""
+    from .datasource import _file_dicts
+    from .fieldids import physical_names
 
     meta = table.meta
     bf = _bucket_field(meta, key)
@@ -89,7 +87,6 @@ def _side_plan(table, key: str, columns: Sequence[str], side: str):
             "materialize_deletes() first (the fold-in preserves the "
             "bucket layout)"
         )
-    names_of = name_lookup(meta.schemas, meta.current_schema_id)
     bname = bf["name"]
     by_bucket: dict[int, list] = {}
     for e in plan.files:
@@ -100,27 +97,26 @@ def _side_plan(table, key: str, columns: Sequence[str], side: str):
                 "table first — its rewrite derives partition values "
                 "under the CURRENT spec (compact carries old values)"
             )
-        fills = entry_fills(e.stats)
-        spec = {
-            "path": os.path.join(table.root, e.file_path),
-            "cols": {c: names_of(e, c) for c in columns},
-            "fills": {c: fills[c] for c in fills if c in columns},
-        }
-        by_bucket.setdefault(int(e.partition[bname]), []).append(spec)
-    return bf, by_bucket
+        by_bucket.setdefault(int(e.partition[bname]), []).append(e)
+    names = physical_names(meta.schemas, meta.current_schema_id)
+    return bf, {
+        b: _file_dicts(table.root, es, names) for b, es in by_bucket.items()
+    }
 
 
-def _read_side_pdf(filespecs, columns):
-    """Concatenate one bucket's files into a pandas frame with LOGICAL
-    column names — pyarrow reads pruned to the physically-present
-    columns, absent fields become fills or nulls. Integral columns map
-    to pandas NULLABLE dtypes (Int8..Int64): a plain to_pandas() would
-    promote a null-containing int64 key column to float64, silently
-    rounding keys beyond 2^53 and corrupting join membership."""
-    import numpy as np
+def _read_side_pdf(files, schema: T.StructType):
+    """One bucket's files as a pandas frame with LOGICAL column names,
+    read through the Arrow read kernel (datasource.read_files: columns
+    pruned to ``schema``, absent fields become fills, defaults or
+    nulls). Integral columns map to pandas NULLABLE dtypes
+    (Int8..Int64): a plain to_pandas() would promote a null-containing
+    int64 key column to float64, silently rounding keys beyond 2^53 and
+    corrupting join membership."""
     import pandas as pd
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .datasource import read_files
 
     int_map = {
         pa.int8(): pd.Int8Dtype(),
@@ -128,29 +124,17 @@ def _read_side_pdf(filespecs, columns):
         pa.int32(): pd.Int32Dtype(),
         pa.int64(): pd.Int64Dtype(),
     }
-    parts = []
-    for fs in filespecs:
-        phys = [p for p in (fs["cols"].get(c) for c in columns) if p]
-        tbl = pq.read_table(fs["path"], columns=phys)
-        pdf = tbl.to_pandas(types_mapper=int_map.get)
-        pdf.columns = [
-            next(c for c in columns if fs["cols"].get(c) == p)
-            for p in pdf.columns
-        ]
-        for c in columns:
-            if c not in pdf.columns:
-                fill = fs["fills"].get(c)
-                pdf[c] = fill if fill is not None else np.nan
-        parts.append(pdf[list(columns)])
-    if not parts:
-        return pd.DataFrame({c: [] for c in columns})
-    return pd.concat(parts, ignore_index=True)
+    tbl = pa.Table.from_batches(
+        list(read_files(files, schema)), schema=to_arrow_schema(schema)
+    )
+    return tbl.to_pandas(types_mapper=int_map.get)
 
 
 def _validate_and_plan(table_a, table_b, on, select_a, select_b):
     """Shared front half of join + cogroup: resolve/validate the column
     selections, plan both sides, check bucket-spec compatibility.
-    Returns (select_a, select_b, cols_a, cols_b, buckets_a, buckets_b).
+    Returns (select_a, select_b, read_a, read_b, buckets_a, buckets_b)
+    — ``read_*`` the schema each side's bucket frames are read under.
     """
     sa, sb = table_a.schema, table_b.schema
     names_a = [f.name for f in sa.fields]
@@ -169,16 +153,16 @@ def _validate_and_plan(table_a, table_b, on, select_a, select_b):
     for c in select_b:
         if c not in names_b:
             raise SpjError(f"select_b column {c!r} not in table B")
-    cols_a = [on] + select_a
-    cols_b = [on] + select_b
-    bf_a, buckets_a = _side_plan(table_a, on, cols_a, "A")
-    bf_b, buckets_b = _side_plan(table_b, on, cols_b, "B")
+    read_a = T.StructType([sa[c] for c in [on] + select_a])
+    read_b = T.StructType([sb[c] for c in [on] + select_b])
+    bf_a, buckets_a = _side_plan(table_a, on, "A")
+    bf_b, buckets_b = _side_plan(table_b, on, "B")
     if int(bf_a["n"]) != int(bf_b["n"]):
         raise SpjError(
             f"bucket counts differ: A={bf_a['n']} B={bf_b['n']} — "
             "co-location requires identical N"
         )
-    return select_a, select_b, cols_a, cols_b, buckets_a, buckets_b
+    return select_a, select_b, read_a, read_b, buckets_a, buckets_b
 
 
 _TASK_SCHEMA = T.StructType(
@@ -256,7 +240,7 @@ def storage_partitioned_join(
     if how in ("left_semi", "left_anti") and select_b is None:
         select_b = []
     sa, sb = table_a.schema, table_b.schema
-    select_a, select_b, cols_a, cols_b, buckets_a, buckets_b = (
+    select_a, select_b, read_a, read_b, buckets_a, buckets_b = (
         _validate_and_plan(table_a, table_b, on, select_a, select_b)
     )
     overlap = (set(select_a) & set(select_b)) | ({on} & set(select_a)) | (
@@ -322,8 +306,8 @@ def storage_partitioned_join(
 
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                a = _read_side_pdf(json.loads(row.a), cols_a)
-                b = _read_side_pdf(json.loads(row.b), cols_b)
+                a = _read_side_pdf(json.loads(row.a), read_a)
+                b = _read_side_pdf(json.loads(row.b), read_b)
                 if how_pd is None:  # left_semi / left_anti
                     bkeys = b[on].dropna().unique()
                     if how == "left_semi":
@@ -393,7 +377,7 @@ def storage_partitioned_cogroup(
     sides — including keys present on only one side) and must return a
     pandas frame conforming to ``schema``. Same planning, validation,
     and sizing contract as ``storage_partitioned_join``."""
-    select_a, select_b, cols_a, cols_b, buckets_a, buckets_b = (
+    select_a, select_b, read_a, read_b, buckets_a, buckets_b = (
         _validate_and_plan(table_a, table_b, on, select_a, select_b)
     )
     spark = table_a.spark
@@ -411,8 +395,8 @@ def storage_partitioned_cogroup(
     def kernel(batches):
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                a = _read_side_pdf(json.loads(row.a), cols_a)
-                b = _read_side_pdf(json.loads(row.b), cols_b)
+                a = _read_side_pdf(json.loads(row.a), read_a)
+                b = _read_side_pdf(json.loads(row.b), read_b)
                 j = func(a, b)
                 j = j[out_names]
                 for lo in range(0, len(j), chunk_rows):

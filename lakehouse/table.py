@@ -887,7 +887,7 @@ class Table:
         from pyspark.sql import functions as F
 
         from .errors import LakehouseError
-        from .meta.scan import _union_seq_groups, seq_schema_groups
+        from .meta.scan import read_entries
 
         plan = self.plan(filter=filter, snapshot_id=snapshot_id)
         if plan.delete_files:
@@ -895,27 +895,13 @@ class Table:
                 "scan_with_lineage: table has pending merge-on-read "
                 "deletes; run materialize_deletes() first"
             )
-        schema = self.schema
-        out_cols = [f.name for f in schema.fields]
-        if not plan.files:
-            empty = self.spark.createDataFrame([], schema)
-            return empty.select(
-                *out_cols,
-                F.lit(None).cast("string").alias("_file"),
-                F.lit(None).cast("long").alias("_pos"),
-                F.lit(None).cast("long").alias("_snapshot_id"),
-            )
-        from .meta.scan import fills_of_entries
-
-        groups = seq_schema_groups(self.root, self.meta, plan.files)
-        df = _union_seq_groups(
-            self.spark, schema, groups, rel_prefix=self.root, meta=self.meta,
-            fills=fills_of_entries(plan.files) or None, fill_root=self.root,
+        df = read_entries(
+            self.spark, self.meta, self.root, plan.files, lineage=True
         )
         if plan.residual_sql:
             df = df.filter(plan.residual_sql)
         return df.select(
-            *out_cols,
+            *self.schema.names,
             F.col("__path").alias("_file"),
             F.col("__pos").alias("_pos"),
             F.col("__seq").cast("long").alias("_snapshot_id"),

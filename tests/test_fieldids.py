@@ -262,3 +262,90 @@ def test_field_id_reconstruction_and_monotonicity(spark, table_root):
     ids2 = fieldids.schema_field_ids(t.meta.schemas)[-1]
     assert ids2["lang"] == max(ids0.values()) + 1
     assert fieldids.has_mapped_schemas(t.meta.schemas)
+
+
+def _kv_table(spark, root, *, spec=None):
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
+    )
+    t = Table.create(spark, root, schema, partition_spec=spec)
+    t.append(
+        spark.createDataFrame([(i, f"v{i}") for i in range(10)], schema)
+    )
+    return t
+
+
+def test_materialize_deletes_after_rename_keeps_values(spark, table_root):
+    t = _kv_table(spark, table_root)
+    t.rename_column("v", "w")
+    t.delete("k < 3", mode="mor", key="k")
+    want = {(i, f"v{i}") for i in range(3, 10)}
+    assert {(r.k, r.w) for r in t.scan().collect()} == want
+    t.materialize_deletes()
+    assert not t.plan().delete_files
+    assert {(r.k, r.w) for r in t.scan().collect()} == want
+
+
+def test_every_reader_returns_the_same_rows(spark, tmp_path):
+    """One table with a renamed column, a DEFAULT-added column, and one
+    pending equality plus one positional delete: every read path must
+    return the same row set, before and after materialization."""
+    from pyspark.sql import types as T
+
+    from lakehouse.datasource import register
+    from lakehouse.spj import storage_partitioned_join
+
+    register(spark)
+    spec = [{"name": "kb", "transform": "bucket", "source": "k", "n": 4}]
+    t = _kv_table(spark, str(tmp_path / "t"), spec=spec)
+    t.rename_column("v", "w")
+    t.add_column("score", "bigint", default=7)
+    t.append(
+        spark.createDataFrame(
+            [(i, f"v{i}", i * 100) for i in range(10, 15)], t.schema
+        )
+    )
+    t.delete("k < 3", mode="mor", key="k")
+    t.delete("w = 'v12'", mode="mor-pos")
+    kinds = sorted(d.is_pos_delete for d in t.plan().delete_files)
+    assert kinds == [False, True]
+
+    cols = ["k", "w", "score"]
+    want = {(i, f"v{i}", 7) for i in range(3, 10)} | {
+        (i, f"v{i}", i * 100) for i in (10, 11, 13, 14)
+    }
+
+    def rows(df):
+        return {tuple(r) for r in df.select(*cols).collect()}
+
+    def readers():
+        yield "scan", t.scan()
+        yield "datasource", spark.read.format("lakehouse").load(t.root)
+        yield "lazy", t.scan(distributed_planning=True)
+        yield "changes", t.row_changes(from_snapshot_id=None).where(
+            "_change_type = 'insert'"
+        )
+
+    for name, df in readers():
+        assert rows(df) == want, name
+
+    t.materialize_deletes()
+    assert not t.plan().delete_files
+    keys = Table.create(
+        spark,
+        str(tmp_path / "keys"),
+        T.StructType([T.StructField("k", T.LongType())]),
+        partition_spec=spec,
+    )
+    keys.append(spark.range(20).withColumnRenamed("id", "k"))
+    spj = storage_partitioned_join(
+        t, keys, on="k", select_a=["w", "score"], select_b=[]
+    )
+    for name, df in [
+        *readers(),
+        ("spj", spj),
+        ("lineage", t.scan_with_lineage()),
+    ]:
+        assert rows(df) == want, name

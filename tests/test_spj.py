@@ -354,3 +354,19 @@ def test_semi_anti_int64_keys_stay_exact_with_nulls(spark, tmp_path):
     anti = storage_partitioned_join(ta, tb, on="uid", how="left_anti")
     got = sorted((str(r.uid), r.v) for r in anti.collect())
     assert got == sorted([(str(big), "big"), ("None", "n")])
+
+
+def test_spj_reads_add_column_default(spark, tmp_path):
+    """Files written before ``ADD COLUMN ... DEFAULT`` join with the
+    default, exactly as ``Table.scan()`` reads them."""
+    ta = _mk(spark, tmp_path / "a", SCHEMA_A, _df_a(spark))
+    tb = _mk(spark, tmp_path / "b", SCHEMA_B, _df_b(spark))
+    ta.add_column("score", "bigint", default=7)
+    got = storage_partitioned_join(
+        ta, tb, on="uid", select_a=["score"], select_b=["segment"]
+    )
+    want = ta.scan().select("uid", "score").join(
+        tb.scan().select("uid", "segment"), on="uid"
+    )
+    assert _sorted_rows(got) == _sorted_rows(want)
+    assert {r.score for r in got.collect()} == {7}
