@@ -1143,12 +1143,12 @@ class LakehouseStreamWriter(DataSourceStreamArrowWriter):
         return FilesCommitMessage(rels)
 
     def commit(self, messages, batchId: int) -> None:
-        from .streaming import committed_batch_ids
+        from .streaming import batch_replayed
         from .table import Table
 
         t = Table(None, self._root)
         rels = _collect_rel_paths(messages)
-        if int(batchId) in committed_batch_ids(t):
+        if batch_replayed(t, batchId):
             _drop_files(self._root, rels)  # checkpoint replay
             return
         entries = _harvest_entries(self._root, rels, self._spec)

@@ -201,7 +201,7 @@ def load_metadata(
 def _atomic_write_json(path: str, payload: dict[str, Any]) -> None:
     tmp = f"{path}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
-        json.dump(payload, f, indent=1)
+        f.write(json.dumps(payload, separators=(",", ":")))
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
@@ -241,7 +241,7 @@ def publish_json(target: str, payload: dict[str, Any]) -> bool:
     """
     tmp = f"{target}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
-        json.dump(payload, f, indent=1)
+        f.write(json.dumps(payload, separators=(",", ":")))
         f.flush()
         os.fsync(f.fileno())
     try:

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..errors import LakehouseError
 from ..meta import snapshots as S
 from ..meta.manifests import read_manifest
+from ..streaming import mark_expired_batches
 
 # files newer than this are presumed to belong to an in-flight job
 DEFAULT_GRACE_MS = 3 * 24 * 3600 * 1000
@@ -113,9 +114,11 @@ def expire_snapshots(
                 s.snapshot_id for s in snaps if s.timestamp_ms >= older_than_ms
             )
         surviving = [s for s in snaps if s.snapshot_id in keep]
-        expired_holder["ids"] = [
-            s.snapshot_id for s in snaps if s.snapshot_id not in keep
-        ]
+        expired = [s for s in snaps if s.snapshot_id not in keep]
+        expired_holder["ids"] = [s.snapshot_id for s in expired]
+        # the stream replay guard must keep skipping the batches whose
+        # snapshots go now
+        props = mark_expired_batches(base.properties, expired)
         return S.TableMetadata(
             table_uuid=base.table_uuid,
             location=base.location,
@@ -128,7 +131,7 @@ def expire_snapshots(
             default_spec_id=base.default_spec_id,
             current_snapshot_id=base.current_snapshot_id,
             snapshots=surviving,
-            properties=base.properties,
+            properties=props,
             refs=refs,
         )
 

@@ -21,24 +21,64 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .errors import LakehouseError
+from .meta.snapshots import TableMetadata
 
 
-def committed_batch_ids(table) -> set[int]:
-    """Batch ids already committed to the table (scan of snapshot
-    summaries — small driver-side metadata)."""
+#: table property: the highest ``stream_batch_id`` among the snapshots
+#: ``expire_snapshots`` has dropped — the replay guard's memory of batches
+#: whose snapshots no longer exist
+EXPIRED_BATCH_PROP = "stream_expired_batch_id"
+
+
+def _batch_ids(snapshots) -> set[int]:
     out = set()
-    for s in table.snapshots():
+    for s in snapshots:
         bid = (s.summary or {}).get("stream_batch_id")
         if bid is not None:
             out.add(int(bid))
     return out
 
 
+def committed_batch_ids(table) -> set[int]:
+    """Batch ids of the table's retained snapshots (scan of snapshot
+    summaries — small driver-side metadata). ``table`` may also be a
+    ``TableMetadata`` already loaded from the table."""
+    if isinstance(table, TableMetadata):
+        return _batch_ids(table.snapshots)
+    return _batch_ids(table.snapshots())
+
+
+def mark_expired_batches(properties: dict, dropped) -> dict:
+    """``properties`` with the expired-batch mark raised to cover every
+    batch id among the ``dropped`` snapshots; ``expire_snapshots``
+    applies it in its own commit, so expiry never makes a committed
+    batch look new to the replay guard."""
+    ids = _batch_ids(dropped)
+    if not ids:
+        return properties
+    prev = properties.get(EXPIRED_BATCH_PROP)
+    if prev is not None:
+        ids.add(int(prev))
+    return {**properties, EXPIRED_BATCH_PROP: max(ids)}
+
+
+def batch_replayed(table, batch_id: int) -> bool:
+    """The replay guard every idempotent sink runs first: True when
+    ``batch_id`` is already committed, either in a retained snapshot or
+    at or below the expired-batch mark (its snapshot has since been
+    expired). One metadata load serves both checks."""
+    meta = table.meta
+    mark = meta.properties.get(EXPIRED_BATCH_PROP)
+    if mark is not None and int(batch_id) <= int(mark):
+        return True
+    return int(batch_id) in committed_batch_ids(meta)
+
+
 def append_batch(table, *, target_file_count: Optional[int] = None):
     """foreachBatch callback: idempotent ACID append of one micro-batch."""
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) in committed_batch_ids(table):
+        if batch_replayed(table, batch_id):
             return  # replayed batch after restart — already committed
         if batch_df.isEmpty():
             return
@@ -76,7 +116,7 @@ def upsert_batch(
     """
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) in committed_batch_ids(table):
+        if batch_replayed(table, batch_id):
             return
         if batch_df.isEmpty():
             return
@@ -126,7 +166,7 @@ def append_if_absent_batch(
     """
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) in committed_batch_ids(table):
+        if batch_replayed(table, batch_id):
             return
         if batch_df.isEmpty():
             return
@@ -220,7 +260,7 @@ def replicate_batch(
     """
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) in committed_batch_ids(dst):
+        if batch_replayed(dst, batch_id):
             return
         if batch_df.isEmpty():
             return

@@ -220,7 +220,12 @@ class Table:
         """Build snapshot N+1 = parent − removed + added, with manifest
         rewrite: any parent manifest touched by a removal is rewritten
         without the removed entries; untouched manifests are reused as-is
-        (cheap commits, bounded metadata churn).
+        (cheap commits, bounded metadata churn). Parent manifests are
+        opened only while some removed path is still unaccounted for: a
+        commit that removes nothing reuses the parent manifest list
+        unopened, and a removal stops reading at the last manifest that
+        holds one of its paths, so commit cost follows the change, not
+        the table's history.
 
         ``set_props``: property updates applied IN THE SAME commit as the
         data change (``None`` value removes a key). Derived-table refresh
@@ -283,6 +288,11 @@ class Table:
                     self.root, base.snapshot(head_id).manifest_list
                 )
                 for m in parent_list:
+                    if not still_to_remove:
+                        # every removed path is accounted for: the rest
+                        # of the parent list is reused unopened
+                        manifests_out.append(m)
+                        continue
                     entries = read_manifest(self.root, m["path"])
                     hit = [e for e in entries if e.file_path in still_to_remove]
                     if not hit:
@@ -692,9 +702,11 @@ class Table:
     ) -> S.Snapshot:
         """ACID append: write partitioned Parquet + commit a new snapshot.
 
-        Engine counterpart of the reference's streaming Delta append sink
-        (/root/reference/etl/glue_stream.py:339-349); for streams, hook it
-        up via ``writeStream.foreachBatch(lambda b, _: table.append(b))``.
+        Engine counterpart of the reference's streaming Delta append sink.
+        For streams, use ``writeStream.foreachBatch(
+        streaming.append_batch(table))``: it skips replayed micro-batches,
+        which a bare ``table.append`` in ``foreachBatch`` would commit
+        twice.
         """
         meta = self.meta
         if new_schema is not None and not is_additive_evolution(

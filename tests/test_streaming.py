@@ -421,3 +421,24 @@ def test_enrich_with_table_batch_sees_dim_updates(spark, tmp_path):
     # replay idempotency stays the sink's contract
     cb(batch, 1)
     assert dst.scan().count() == 12
+
+
+def test_replay_guard_survives_snapshot_expiry(spark, clips_table):
+    """A batch whose snapshot was expired must still be skipped on
+    replay: expiry records the highest dropped batch id as a mark."""
+    cb = append_batch(clips_table)
+    b0 = synth_clips_df(spark, 12, seed=7, n_days=2)
+    cb(b0, 0)
+    clips_table.append(synth_clips_df(spark, 8, start=12, seed=7, n_days=2))
+    clips_table.expire_snapshots(keep_last=1)
+    assert committed_batch_ids(clips_table) == set()  # retained only
+    cb(b0, 0)  # replay after restart, its snapshot long expired
+    assert clips_table.scan().count() == 20
+    # a later expiry that drops no stream snapshot keeps the mark
+    clips_table.append(synth_clips_df(spark, 4, start=20, seed=7, n_days=2))
+    clips_table.expire_snapshots(keep_last=1)
+    cb(b0, 0)
+    assert clips_table.scan().count() == 24
+    cb(synth_clips_df(spark, 6, start=24, seed=7, n_days=2), 1)
+    assert clips_table.scan().count() == 30
+    assert committed_batch_ids(clips_table) == {1}
