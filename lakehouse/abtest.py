@@ -163,7 +163,7 @@ def ab_test_oracle_sql(
         ), arms AS (
           SELECT {case} AS variant,
                  count(*) AS users,
-                 SUM(c) AS converters,
+                 CAST(SUM(c) AS BIGINT) AS converters,
                  CAST(coalesce(SUM(v), 0) AS DOUBLE) AS conv_value
           FROM pu GROUP BY 1
         ), ctrl AS (

@@ -41,6 +41,7 @@ threshold, message); an empty frame means all clear.
 
 from __future__ import annotations
 
+import os
 import time
 from typing import Any, Mapping, Optional, Sequence
 
@@ -244,7 +245,10 @@ def catalog_alerts(
     duplicate alerts each stamped with an unrelated table_name and
     re-run the progress scan N times. The sweep therefore evaluates
     each stream_stalled rule ONCE, attributed to its progress table's
-    own basename."""
+    own basename. With ``names`` given, a stream_stalled rule is
+    evaluated (and its progress table scanned) only when that basename
+    is in ``names``; rules for progress tables outside the subset are
+    skipped."""
     per_table = [r for r in rules if r.get("kind") != "stream_stalled"]
     stream_rules = [r for r in rules if r.get("kind") == "stream_stalled"]
     rows: list[tuple] = []
@@ -256,17 +260,13 @@ def catalog_alerts(
             )
         )
     for r in stream_rules:
-        import os as _os
-
         pt = r.get("progress_table")
         if not hasattr(pt, "scan"):
             raise AlertError("stream_stalled needs progress_table=<Table>")
+        pt_name = os.path.basename(pt.root.rstrip("/"))
+        if names is not None and pt_name not in names:
+            continue
         rows.extend(
-            evaluate_alert_rows(
-                pt,
-                [r],
-                now_ms=now_ms,
-                table_name=_os.path.basename(pt.root.rstrip("/")),
-            )
+            evaluate_alert_rows(pt, [r], now_ms=now_ms, table_name=pt_name)
         )
     return spark.createDataFrame(rows, ALERT_SCHEMA)

@@ -7,11 +7,12 @@ on the engine's property + commit machinery:
 
 - a constraint is a table property ``constraint.<name> = <sql expr>``,
   committed through the same CAS loop as data commits;
-- every row-writing path funnels through
+- every Spark-side writer of new rows funnels through
   :func:`lakehouse.ops.append.write_data_files`, which wraps the frame
   with :func:`enforce` — a map-side filter whose FALSE branch is
   ``raise_error`` — so a violating row fails the Spark job BEFORE any
-  snapshot is committed (ACID: nothing to roll back);
+  snapshot is committed (ACID: nothing to roll back); the ``lakehouse``
+  format writers cannot evaluate SQL and refuse such tables instead;
 - SQL semantics: NULL / unknown passes (only rows where the expression
   evaluates to FALSE violate), matching the SQL-standard CHECK rule.
 

@@ -41,6 +41,17 @@ Two writers (the write-side twins, same registered format):
   files instead of double-committing — the standard-API twin of
   ``streaming.append_batch``.
 
+Both writers share one planning/task/abort half and harvest through
+``ops/append.harvest_stats``. Of the table's write contract they APPLY
+the plain data work: column DEFAULTs (the readers' Arrow conform),
+Bloom sidecars and ``agg_stats_columns`` sums (harvest). They REFUSE
+at planning time every table whose contract needs Spark (SQL
+expressions, a range-partitioned sort) or a commit-time watermark:
+CHECK constraints, generated columns, identity columns and a sort
+order (``ops/append.write_contract``, the list the Spark-side writer
+applies), plus bucket specs (JVM xxhash64). So no row ever commits
+outside the contract ``Table.append`` enforces.
+
 - **stream** — ``spark.readStream.format("lakehouse")``: offsets are
   snapshot ids, each micro-batch reads exactly the data files appended
   in ``(start, end]`` following the incremental-append-scan contract of
@@ -375,17 +386,13 @@ def read_files(
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from .schema import field_default
+    from .schema import field_defaults
 
     target = to_arrow_schema(spark_schema)
     names = list(target.names)
     # initial-defaults ride in the Spark schema's field metadata (the
     # Arrow conversion drops it, so harvest here)
-    defaults = {
-        f.name: field_default(f)
-        for f in spark_schema.fields
-        if field_default(f) is not None
-    }
+    defaults = field_defaults(spark_schema)
     sel_eq, sel_pos = _read_deletes(selectors or [])
     excl_eq, excl_pos = _read_deletes(deletes)
 
@@ -921,8 +928,10 @@ def _encode_dir_value(value) -> str:
 
 def _write_task_batches(batch_iter, root, job_rel, schema_json, spec):
     """Executor half of the write: conform Arrow batches to the table
-    schema, split rows by derived partition value, stream each group into
-    one parquet file per (task, partition). Returns the relative paths.
+    schema (missing columns take their DEFAULT, as in
+    ``schema.conform``), split rows by derived partition value, stream
+    each group into one parquet file per (task, partition). Returns the
+    relative paths.
 
     Mirrors the no-rename discipline of ops/append.py: files land
     directly in an immutable job dir; only paths reported by successful
@@ -937,9 +946,11 @@ def _write_task_batches(batch_iter, root, job_rel, schema_json, spec):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from .partitioning import PART_PREFIX
+    from .schema import field_defaults
 
-    target = to_arrow_schema(T.StructType.fromJson(schema_json))
-    names = list(target.names)
+    schema = T.StructType.fromJson(schema_json)
+    target = to_arrow_schema(schema)
+    defaults = field_defaults(schema)
     task_id = _uuid.uuid4().hex
     writers: dict[str, pq.ParquetWriter] = {}
     rel_paths: dict[str, str] = {}
@@ -948,7 +959,8 @@ def _write_task_batches(batch_iter, root, job_rel, schema_json, spec):
     try:
         for batch in batch_iter:
             tbl = _conform_arrow_table(
-                pa.Table.from_batches([batch]), target, reject_extras=True
+                pa.Table.from_batches([batch]), target,
+                reject_extras=True, defaults=defaults,
             )
             if len(tbl) == 0:
                 continue
@@ -1016,36 +1028,6 @@ def _write_task_batches(batch_iter, root, job_rel, schema_json, spec):
     return sorted(rel_paths.values())
 
 
-def _harvest_entries(root, rel_paths, spec):
-    """Driver half: footer-stats harvest for the committed file set —
-    same collect_file_stats (+ bloom sidecars for tables opted in via
-    ``bloom_columns``) the native path uses, so manifests are
-    indistinguishable from Table.append()'s."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from .bloom import bloom_columns_property, harvest_file_blooms
-    from .meta.manifests import collect_file_stats
-    from .ops.agg import agg_stats_columns_property
-    from .ops.append import _parse_partition_dirs
-
-    props = load_metadata(root).properties
-    bloom_cols = bloom_columns_property(props)
-    sum_cols = agg_stats_columns_property(props)
-
-    def one(rel):
-        entry = collect_file_stats(
-            os.path.join(root, rel),
-            rel,
-            _parse_partition_dirs(rel, spec),
-            sum_columns=sum_cols,
-        )
-        harvest_file_blooms(entry, root, bloom_cols)
-        return entry
-
-    with ThreadPoolExecutor(max_workers=16) as pool:
-        return list(pool.map(one, rel_paths))
-
-
 def _collect_rel_paths(messages) -> list[str]:
     return sorted(
         p for m in messages if m is not None for p in m.rel_paths
@@ -1060,33 +1042,43 @@ def _drop_files(root, rel_paths) -> None:
             pass
 
 
-class LakehouseBatchWriter(DataSourceArrowWriter):
-    """``df.write.format("lakehouse").mode("append"|"overwrite")``.
+def _refuse_unwritable(meta: TableMetadata) -> None:
+    """Planning-time refusal of tables whose write contract the Arrow
+    path cannot honour (see the module docstring)."""
+    from .ops.append import write_contract
 
-    Tasks write conformed parquet straight into an immutable job dir;
-    ``commit`` harvests footer stats for exactly the task-reported files
-    and publishes ONE atomic snapshot ("append", or "overwrite" removing
-    every previously-live file). Uncommitted files are never visible.
-    """
+    why = [k for k, v in write_contract(meta.properties).items() if v]
+    if any(
+        f.get("transform", "identity") == "bucket"
+        for f in meta.partition_spec
+    ):
+        why.insert(0, "a bucket partition spec")
+    if why:
+        raise LakehouseError(
+            f"the lakehouse format writers cannot apply this table's "
+            f"{', '.join(why)}; write through Table.append() (batch) or "
+            f"writeStream.foreachBatch(streaming.append_batch(table)) "
+            f"(streaming), which enforce the full write contract"
+        )
 
-    def __init__(self, root: str, overwrite: bool):
+
+class _FormatWriter:
+    """The half the batch and stream writers share: refuse up front,
+    tasks write conformed parquet into an immutable job dir, abort
+    drops the task-reported files, ``_entries`` harvests them."""
+
+    JOB_PREFIX = "ds"
+
+    def __init__(self, root: str, overwrite: bool = False):
         import uuid as _uuid
 
+        meta = load_metadata(root)
+        _refuse_unwritable(meta)
         self._root = root
         self._overwrite = overwrite
-        meta = load_metadata(root)
         self._schema_json = meta.schema_json
         self._spec = meta.partition_spec
-        # fail fast (planning time) on transforms the Arrow path can't
-        # reproduce bit-for-bit
-        for f in self._spec:
-            if f.get("transform", "identity") == "bucket":
-                raise LakehouseError(
-                    "bucket-partitioned tables are not writable through "
-                    "the lakehouse format (JVM xxhash64 has no exact "
-                    "Arrow twin); use Table.append()"
-                )
-        self._job_rel = f"data/job-ds-{_uuid.uuid4().hex}"
+        self._job_rel = f"data/job-{self.JOB_PREFIX}-{_uuid.uuid4().hex}"
 
     def write(self, iterator):
         rels = _write_task_batches(
@@ -1094,11 +1086,29 @@ class LakehouseBatchWriter(DataSourceArrowWriter):
         )
         return FilesCommitMessage(rels)
 
+    def abort(self, messages, batchId: Optional[int] = None) -> None:
+        _drop_files(self._root, _collect_rel_paths(messages))
+
+    def _entries(self, rels):
+        from .ops.append import _parse_partition_dirs, harvest_stats
+
+        return harvest_stats(
+            None,
+            self._root,
+            [(rel, _parse_partition_dirs(rel, self._spec)) for rel in rels],
+        )
+
+
+class LakehouseBatchWriter(_FormatWriter, DataSourceArrowWriter):
+    """``df.write.format("lakehouse").mode("append"|"overwrite")``:
+    publishes ONE atomic snapshot ("append", or "overwrite" removing
+    every previously-live file). Uncommitted files are never visible.
+    """
+
     def commit(self, messages):
         from .table import Table
 
-        rels = _collect_rel_paths(messages)
-        entries = _harvest_entries(self._root, rels, self._spec)
+        entries = self._entries(_collect_rel_paths(messages))
         t = Table(None, self._root)
         if self._overwrite:
             plan = t.plan()
@@ -1109,11 +1119,8 @@ class LakehouseBatchWriter(DataSourceArrowWriter):
         else:
             t._commit_files("append", entries)
 
-    def abort(self, messages):
-        _drop_files(self._root, _collect_rel_paths(messages))
 
-
-class LakehouseStreamWriter(DataSourceStreamArrowWriter):
+class LakehouseStreamWriter(_FormatWriter, DataSourceStreamArrowWriter):
     """``df.writeStream.format("lakehouse")`` — idempotent micro-batch
     appends, the standard-API twin of streaming.append_batch (which the
     reference expresses as ``writeStream.format("delta")``,
@@ -1121,26 +1128,7 @@ class LakehouseStreamWriter(DataSourceStreamArrowWriter):
     (restart from checkpoint) drop their files instead of re-committing.
     """
 
-    def __init__(self, root: str):
-        import uuid as _uuid
-
-        self._root = root
-        meta = load_metadata(root)
-        self._schema_json = meta.schema_json
-        self._spec = meta.partition_spec
-        for f in self._spec:
-            if f.get("transform", "identity") == "bucket":
-                raise LakehouseError(
-                    "bucket-partitioned tables are not writable through "
-                    "the lakehouse format; use streaming.append_batch()"
-                )
-        self._job_rel = f"data/job-stream-{_uuid.uuid4().hex}"
-
-    def write(self, iterator):
-        rels = _write_task_batches(
-            iterator, self._root, self._job_rel, self._schema_json, self._spec
-        )
-        return FilesCommitMessage(rels)
+    JOB_PREFIX = "stream"
 
     def commit(self, messages, batchId: int) -> None:
         from .streaming import batch_replayed
@@ -1151,13 +1139,10 @@ class LakehouseStreamWriter(DataSourceStreamArrowWriter):
         if batch_replayed(t, batchId):
             _drop_files(self._root, rels)  # checkpoint replay
             return
-        entries = _harvest_entries(self._root, rels, self._spec)
         t._commit_files(
-            "append", entries, summary={"stream_batch_id": int(batchId)}
+            "append", self._entries(rels),
+            summary={"stream_batch_id": int(batchId)},
         )
-
-    def abort(self, messages, batchId: int) -> None:
-        _drop_files(self._root, _collect_rel_paths(messages))
 
 
 # --- the data source ----------------------------------------------------------

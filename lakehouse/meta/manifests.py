@@ -179,7 +179,6 @@ def collect_file_stats(
     rel_path: str,
     partition: Mapping[str, Any],
     *,
-    stat_columns: Optional[Sequence[str]] = None,
     sum_columns: Optional[Sequence[str]] = None,
     sort_order: str = "",
 ) -> DataFileEntry:
@@ -202,7 +201,6 @@ def collect_file_stats(
     md = pq.ParquetFile(abs_path).metadata
     ncols = md.num_columns
     names = [md.schema.column(i).name for i in range(ncols)]
-    want = set(stat_columns) if stat_columns is not None else None
 
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
@@ -212,8 +210,6 @@ def collect_file_stats(
         row_group = md.row_group(rg)
         for ci in range(ncols):
             name = names[ci]
-            if want is not None and name not in want:
-                continue
             col = row_group.column(ci)
             st = col.statistics
             if st is None or not st.has_min_max:
@@ -259,8 +255,6 @@ def collect_file_stats(
 
     stats: dict[str, dict[str, Any]] = {}
     for name in names:
-        if want is not None and name not in want and name not in sums:
-            continue
         entry: dict[str, Any] = {"rows": md.num_rows}
         if has_stats.get(name) and name in mins:
             entry["min"] = mins[name]

@@ -15,13 +15,18 @@ metadata commit. Differences from the reference, by design:
 - file sizing is explicit: callers either keep the incoming partitioning
   (streaming micro-batches — the canonical small-file generator the
   compactor exists for) or request a shuffle to ``target_file_count``.
+
+Two layers. :func:`write_files` is the one data-file kernel (save →
+list → harvest) that every Spark-side writer calls, rewrites included;
+:func:`write_data_files` sits above it for NEW rows and applies the
+table's write contract (:func:`write_contract`, plus schema DEFAULTs).
 """
 
 from __future__ import annotations
 
 import os
 import uuid
-from typing import Any, Optional, Sequence
+from typing import Any, Mapping, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -69,81 +74,118 @@ def list_job_files(
 
 
 def harvest_stats(
-    spark: SparkSession,
+    spark: Optional[SparkSession],
     table_root: str,
     files: Sequence[tuple[str, dict[str, Any]]],
     *,
-    stat_columns: Optional[Sequence[str]] = None,
     sort_order: str = "",
 ) -> list[DataFileEntry]:
     """Footer-only stats harvest; distributed over executors when the file
-    count is too large for the driver to chew through serially.
+    count is too large for the driver to chew through serially and a
+    session is at hand (``spark=None`` — the format writers' commit
+    worker — always harvests on local threads).
 
     Tables with the ``bloom_columns`` property additionally get a
-    Bloom-filter sidecar per file (lakehouse/bloom.py) built here — the
-    single choke point every write/rewrite path (append, compact,
-    cluster, MoR materialize, format writer) funnels through, so blooms
-    stay consistent across ops without per-op wiring.
+    Bloom-filter sidecar per file (lakehouse/bloom.py), and tables with
+    ``agg_stats_columns`` per-file sums, built here: every data file the
+    engine writes is harvested here — through :func:`write_files`
+    (append, overwrite, MERGE, compact, cluster, MoR materialize), the
+    ``lakehouse`` format writers' commit, and ``add_files`` — so blooms
+    and sums stay consistent across ops without per-op wiring. MoR
+    delete files are the one exception: they take plain footer stats.
     """
     from ..bloom import bloom_columns_property, harvest_file_blooms
     from ..meta.snapshots import load_metadata
     from .agg import agg_stats_columns_property
 
-    stat_cols = list(stat_columns) if stat_columns else None
     props = load_metadata(table_root).properties
     bloom_cols = bloom_columns_property(props)
     sum_cols = agg_stats_columns_property(props)
 
-    if len(files) <= DISTRIBUTE_STATS_THRESHOLD:
-        from concurrent.futures import ThreadPoolExecutor
+    def one(item):
+        rel, part = item
+        entry = collect_file_stats(
+            os.path.join(table_root, rel),
+            rel,
+            part,
+            sum_columns=sum_cols,
+            sort_order=sort_order,
+        )
+        harvest_file_blooms(entry, table_root, bloom_cols)
+        return entry
 
-        def one(item):
-            rel, part = item
-            entry = collect_file_stats(
-                os.path.join(table_root, rel),
-                rel,
-                part,
-                stat_columns=stat_cols,
-                sum_columns=sum_cols,
-                sort_order=sort_order,
-            )
-            harvest_file_blooms(entry, table_root, bloom_cols)
-            return entry
+    if spark is None or len(files) <= DISTRIBUTE_STATS_THRESHOLD:
+        from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=16) as pool:
             return list(pool.map(one, files))
 
     # scale path: ship (rel, partition) pairs to executors; each reads only
     # footers of its slice (shared storage — same layout as S3/HDFS deploys)
-    sc = spark.sparkContext
-    payload = [(rel, part) for rel, part in files]
-
-    def part_stats(items):
-        from ..bloom import harvest_file_blooms as hfb
-        from ..meta.manifests import collect_file_stats as cfs
-
-        for rel, part in items:
-            entry = cfs(
-                os.path.join(table_root, rel),
-                rel,
-                part,
-                stat_columns=stat_cols,
-                sum_columns=sum_cols,
-                sort_order=sort_order,
-            )
-            hfb(entry, table_root, bloom_cols)
-            yield entry.to_row()
-
     rows = (
-        sc.parallelize(payload, max(1, len(payload) // 64))
-        .mapPartitions(part_stats)
+        spark.sparkContext.parallelize(list(files), max(1, len(files) // 64))
+        .map(lambda item: one(item).to_row())
         .collect()
     )
     return [DataFileEntry.from_row(r) for r in rows]
 
 
+def write_files(
+    df: DataFrame,
+    table_root: str,
+    job_rel: str,
+    spec: Sequence[dict[str, Any]],
+    *,
+    extra_dirs: Sequence[str] = (),
+    sort_order: str = "",
+    mode: str = "error",
+) -> list[DataFileEntry]:
+    """The one data-file kernel: save ``df`` as Parquet under
+    ``job_rel``, list the files the job wrote, harvest their entries.
+
+    ``df`` already carries the spec's ``_p_<name>`` columns (plus any
+    ``extra_dirs`` split columns — salt, cluster bucket, compaction
+    bin), which become hive directory levels; partition values are
+    parsed back from the spec's levels only. ``sort_order`` is the
+    layout tag stamped on every entry. ``mode="overwrite"`` lets a
+    resumed rewrite bin replace its own half-written job dir.
+
+    No contract is applied here: rewrites move rows that are already
+    committed and call this directly; new rows go through
+    :func:`write_data_files` first.
+    """
+    dirs = [PART_PREFIX + f["name"] for f in spec] + list(extra_dirs)
+    writer = df.write.mode(mode).format("parquet")
+    if dirs:
+        writer = writer.partitionBy(*dirs)
+    writer.save(os.path.join(table_root, job_rel))
+    return harvest_stats(
+        df.sparkSession,
+        table_root,
+        list_job_files(table_root, job_rel, spec),
+        sort_order=sort_order,
+    )
+
+
+def write_contract(properties: Mapping[str, Any]) -> dict[str, Any]:
+    """The table properties that form the write contract, by kind.
+    :func:`write_data_files` applies CHECK, generated and sort order;
+    identity is assigned by the committing op, which advances its
+    watermark in the same commit. The ``lakehouse`` format writers
+    refuse any table where one is set. DEFAULTs live in the schema."""
+    from ..constraints import constraints_of, generated_of
+    from ..identity import identity_of
+    from ..sortorder import sort_order_of
+
+    return {
+        "CHECK constraints": constraints_of(properties),
+        "generated columns": generated_of(properties),
+        "identity columns": identity_of(properties),
+        "sort order": sort_order_of(properties),
+    }
+
+
 def write_data_files(
-    spark: SparkSession,
     table_root: str,
     schema_json: dict[str, Any],
     spec: Sequence[dict[str, Any]],
@@ -152,10 +194,16 @@ def write_data_files(
     target_file_count: Optional[int] = None,
     files_per_partition: Optional[int] = None,
     sort_order: str = "",
-    stat_columns: Optional[Sequence[str]] = None,
     job_dir: Optional[str] = None,
 ) -> list[DataFileEntry]:
-    """Write ``df`` as committed-later data files; returns manifest entries.
+    """Write new rows as committed-later data files under the table's
+    write contract; returns manifest entries.
+
+    The contract layer above :func:`write_files`: conform to the schema
+    (missing columns take their DEFAULT), compute generated columns,
+    enforce CHECK constraints — a violation fails the job before any
+    commit — and apply the table sort order unless the caller stamped
+    its own layout tag.
 
     ``target_file_count``: shuffle-repartition before the write to bound
     output file count — capped at one file per partition value (rows of a
@@ -167,61 +215,48 @@ def write_data_files(
     ``None``/``None`` keeps the incoming partitioning (no shuffle — the
     streaming append path).
     """
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    schema = T.StructType.fromJson(schema_json)
-    out = conform(df, schema)
-
-    # write-time CHECK constraints: every row-writing path funnels
-    # through here, so enforcement is one fused map-side predicate that
-    # fails the job BEFORE any snapshot commit (lakehouse/constraints.py)
-    from ..constraints import constraints_of, enforce
+    from ..constraints import apply_generated, enforce
     from ..meta.snapshots import load_metadata
-    from ..sortorder import provenance_tag, sort_order_of
+    from ..sortorder import provenance_tag
 
-    props = load_metadata(table_root).properties
+    out = conform(df, T.StructType.fromJson(schema_json))
+    contract = write_contract(load_metadata(table_root).properties)
     # generated columns first (compute-or-validate), so CHECK
-    # constraints below can reference the computed values
-    from ..constraints import apply_generated, generated_of
-
-    gen = generated_of(props)
-    if gen:
-        out = apply_generated(out, gen)
-    checks = constraints_of(props)
-    if checks:
-        out = enforce(out, checks)
+    # constraints can reference the computed values; CHECK is one
+    # fused map-side predicate (lakehouse/constraints.py)
+    if contract["generated columns"]:
+        out = apply_generated(out, contract["generated columns"])
+    if contract["CHECK constraints"]:
+        out = enforce(out, contract["CHECK constraints"])
 
     # table sort order (lakehouse/sortorder.py): applied unless the
     # caller stamped its own layout provenance (cluster's zorder/hilbert
     # tags, MoR delete-file tags)
-    order_cols = sort_order_of(props) if not sort_order else []
+    order_cols = [] if sort_order else contract["sort order"]
     order_cols = [c for c in order_cols if c in out.columns]
     if order_cols:
         sort_order = provenance_tag(order_cols)
 
     out, part_cols = with_partition_columns(out, spec)
 
-    salt_col = None
+    salt = []
     if files_per_partition and files_per_partition > 1 and part_cols:
-        from pyspark.sql import functions as F
-
-        salt_col = "__salt"
+        salt = ["__salt"]
         out = out.withColumn(
-            salt_col,
+            "__salt",
             F.pmod(
                 F.xxhash64(F.col(out.columns[0]).cast("string")),
                 F.lit(files_per_partition),
             ),
         )
 
-    if target_file_count is not None or salt_col:
-        from pyspark.sql import functions as F
-
-        keys = [F.col(c) for c in part_cols]
-        if salt_col:
-            keys.append(F.col(salt_col))
+    if target_file_count is not None or salt:
+        keys = [F.col(c) for c in part_cols + salt]
         n = target_file_count or 1
-        if salt_col:
+        if salt:
             n = max(n, files_per_partition)
         if order_cols:
             # range-partition on (partition cols, sort cols): files in
@@ -238,21 +273,13 @@ def write_data_files(
             out = out.repartition(n)
     elif order_cols:
         # no-shuffle path (streaming appends): task-local sort only
-        out = out.sortWithinPartitions(
-            *(part_cols + order_cols) if part_cols else order_cols
-        )
+        out = out.sortWithinPartitions(*(part_cols + order_cols))
 
-    job_rel = job_dir or f"data/job-{uuid.uuid4().hex}"
-    writer = out.write.mode("error").format("parquet")
-    if part_cols:
-        writer = writer.partitionBy(*(part_cols + ([salt_col] if salt_col else [])))
-    writer.save(os.path.join(table_root, job_rel))
-
-    files = list_job_files(table_root, job_rel, spec)
-    return harvest_stats(
-        spark,
+    return write_files(
+        out,
         table_root,
-        files,
-        stat_columns=stat_columns,
+        job_dir or f"data/job-{uuid.uuid4().hex}",
+        spec,
+        extra_dirs=salt,
         sort_order=sort_order,
     )

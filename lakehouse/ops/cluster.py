@@ -32,16 +32,15 @@ driver and got SLOWER with more cores):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
-from typing import Any, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import functions as F
 
 from ..curves import bits_per_dim
 from ..lineage import LineageLog
 from ..meta.manifests import DataFileEntry
-from ..ops.append import harvest_stats
+from ..ops.append import write_files
 
 ZKEY_COL = "zkey"
 
@@ -176,7 +175,6 @@ def cluster(
     sort_order = f"{curve}({','.join(columns)})"
     existing = log.done_tasks()
     job_data_rel = f"data/{log.job_id}"
-    all_paths = [os.path.join(table.root, e.file_path) for e in live]
 
     if "rewrite-complete" in existing:
         # coarse resume: the whole rewrite finished (sentinel task), only
@@ -280,18 +278,9 @@ def cluster(
             )
             .sortWithinPartitions(*part_cols, "__bucket", ZKEY_COL)
         )
-        writer = out.write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols, "__bucket")
-        else:
-            writer = writer.partitionBy("__bucket")
-        writer.parquet(os.path.join(table.root, job_data_rel))
-
-        from ..ops.append import list_job_files
-
-        out_files = list_job_files(table.root, job_data_rel, spec)
-        all_entries = harvest_stats(
-            spark, table.root, out_files, sort_order=sort_order
+        all_entries = write_files(
+            out, table.root, job_data_rel, spec, extra_dirs=["__bucket"],
+            sort_order=sort_order, mode="overwrite",
         )
         entries_by_pk: dict[str, list[DataFileEntry]] = {}
         for e in all_entries:

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from ..lineage import LineageLog
 from ..meta.manifests import DataFileEntry
-from ..ops.append import harvest_stats
+from ..ops.append import write_files
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024
 # crossover between the no-shuffle job-per-bin path and the single-job
@@ -150,6 +150,15 @@ def plan_bins(
     return bins
 
 
+def _inherit_partition(entries, members) -> None:
+    """A bin's outputs concatenate its inputs, so they carry the input
+    files' partition values and spec_id — stamping the current spec
+    would disarm overwrite's mixed-spec guard (round-2 review)."""
+    for e in entries:
+        e.partition = dict(members[0].partition)
+        e.spec_id = members[0].spec_id
+
+
 def _run_bins_direct(
     table, log, pending, job_data_rel, entries_by_key, fault_injector
 ) -> None:
@@ -196,28 +205,12 @@ def _run_bins_direct(
                 read_entries(spark, meta, table.root, members)
                 .coalesce(1)  # concatenation, not a shuffle
             )
-        (
-            df.write.mode("overwrite")  # rerun of an interrupted bin
-            .parquet(os.path.join(table.root, out_rel_dir))
-        )
-        out_files = []
-        base = os.path.join(table.root, out_rel_dir)
-        for name in sorted(os.listdir(base)):
-            if name.endswith(".parquet"):
-                out_files.append(
-                    (f"{out_rel_dir}/{name}", members[0].partition)
-                )
-        entries = harvest_stats(
-            spark,
-            table.root,
-            out_files,
+        entries = write_files(
+            df, table.root, out_rel_dir, (),
             sort_order=sort_order if clustered else "",
+            mode="overwrite",  # rerun of an interrupted bin
         )
-        # concatenation carries the INPUT files' partition values, so
-        # outputs inherit the input spec_id — stamping the current spec
-        # would disarm overwrite's mixed-spec guard (round-2 review)
-        for e in entries:
-            e.spec_id = members[0].spec_id
+        _inherit_partition(entries, members)
         log.finish_task(k, entries, files_in=files_in, bytes_in=bytes_in)
         if fault_injector is not None:
             fault_injector(k)
@@ -261,7 +254,7 @@ def _run_bins_shuffle(
                 (os.path.abspath(os.path.join(table.root, e.file_path)), k)
             )
     map_df = spark.createDataFrame(file_to_bin, "__file string, __bin string")
-    (
+    out = (
         read_entries(spark, meta, table.root, all_members)
         .withColumn(
             "__file",
@@ -281,24 +274,12 @@ def _run_bins_shuffle(
         .join(F.broadcast(map_df), "__file", "inner")
         .drop("__file")
         .repartition(max(1, 2 * len(pending)), F.col("__bin"))
-        .write.partitionBy("__bin")
-        .parquet(os.path.join(table.root, attempt_rel))
     )
-
-    # harvest every output footer in one pass, then finalize bins in
-    # deterministic order (lineage only; no further Spark jobs)
-    part_by_key = {k: members[0].partition for k, members in pending}
-    out_files: list[tuple[str, dict]] = []
-    for dirpath, _d, names in os.walk(os.path.join(table.root, attempt_rel)):
-        comp = os.path.basename(dirpath)
-        if not comp.startswith("__bin="):
-            continue
-        k = comp.split("=", 1)[1]
-        for name in sorted(names):
-            if name.endswith(".parquet"):
-                rel = os.path.relpath(os.path.join(dirpath, name), table.root)
-                out_files.append((rel, part_by_key[k]))
-    all_entries = harvest_stats(spark, table.root, out_files)
+    # every output footer is harvested in one pass; bins are then
+    # finalized in deterministic order (lineage only; no further jobs)
+    all_entries = write_files(
+        out, table.root, attempt_rel, (), extra_dirs=["__bin"]
+    )
     by_key: dict[str, list[DataFileEntry]] = {}
     for e in all_entries:
         comp = e.file_path.split("/")[-2]
@@ -317,8 +298,7 @@ def _run_bins_shuffle(
                 f"compaction bin {k} lost rows: {rows_in} in, "
                 f"{rows_out} out — aborting before commit"
             )
-        for e in outs:  # outputs inherit the inputs' spec (see direct path)
-            e.spec_id = members[0].spec_id
+        _inherit_partition(outs, members)
         log.start_task(k, files_in, bytes_in)
         log.finish_task(k, outs, files_in=files_in, bytes_in=bytes_in)
         entries_by_key[k] = outs
@@ -350,7 +330,6 @@ def compact(
     """
     if execution not in ("auto", "direct", "shuffle"):
         raise ValueError(f"unknown compaction execution: {execution!r}")
-    spark = table.spark
     threshold = small_file_threshold or int(target_file_size * 0.75)
     log = LineageLog(table.root, job_id)
     log.start_job(

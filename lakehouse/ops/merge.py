@@ -883,7 +883,6 @@ def merge_into(
     result = kept_target.select(*cols).unionByName(from_source)
 
     entries = write_data_files(
-        spark,
         table.root,
         meta.schema_json,
         meta.partition_spec,

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..lineage import LineageLog
 from ..meta.manifests import DataFileEntry, collect_file_stats
-from ..ops.append import write_data_files
+from ..ops.append import write_data_files, write_files
 from ..ops.row_filter import _predicate_sql
 
 
@@ -324,7 +324,6 @@ def merge_into_mor(
         if nms is None
         else (nms_cond_preds if nms_cond_preds is not None else "all")
     )
-    spark = table.spark
     meta = table.meta
     from ..identity import (
         advance_watermarks,
@@ -395,7 +394,6 @@ def merge_into_mor(
         cols = [f.name for f in schema.fields]
         data_entries = (
             write_data_files(
-                spark,
                 table.root,
                 meta.schema_json,
                 meta.partition_spec,
@@ -603,8 +601,6 @@ def delete_mor_positional(
     rewritten; the rewrite is deferred to ``materialize_deletes``,
     which prunes by the delete entry's min/max ``file_path`` stats.
     """
-    from ..meta.manifests import POS_DELETE_ORDER
-
     pred_sql, tuples = _predicate_sql(predicate)
     log = LineageLog(table.root, job_id)
     log.start_job("delete_mor_pos", {"predicate": pred_sql})
@@ -924,7 +920,6 @@ def materialize_deletes(
         if target_file_count is None:
             target_file_count = max(1, -(-bytes_in // (128 * 1024 * 1024)))
         entries = write_data_files(
-            table.spark,
             table.root,
             table.meta.schema_json,
             table.meta.partition_spec,
@@ -935,7 +930,6 @@ def materialize_deletes(
     for i, (so, files) in enumerate(sorted(clustered.items())):
         from pyspark.sql import functions as _F
 
-        from ..ops.append import harvest_stats, list_job_files
         from ..ops.cluster import ZKEY_COL, schema_with_zkey
         from ..partitioning import with_partition_columns
 
@@ -958,16 +952,9 @@ def materialize_deletes(
             *[_F.col(c) for c in part_cols],
             _F.col(ZKEY_COL),
         ).sortWithinPartitions(*part_cols, ZKEY_COL)
-        out_rel = f"data/{log.job_id}/sorted{i}"
-        writer = df.write
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(os.path.join(table.root, out_rel))
-        out_files = list_job_files(
-            table.root, out_rel, table.meta.partition_spec
-        )
-        entries += harvest_stats(
-            table.spark, table.root, out_files, sort_order=so
+        entries += write_files(
+            df, table.root, f"data/{log.job_id}/sorted{i}",
+            table.meta.partition_spec, sort_order=so,
         )
     removed = [e.file_path for e in affected] + [d.file_path for d in dels]
     snap = table._commit_files(

@@ -54,7 +54,6 @@ def overwrite_partitions(
 
     ``partition_filter`` given → static mode; omitted → dynamic mode.
     """
-    spark = table.spark
     meta = table.meta
     spec = meta.partition_spec
     if not spec:
@@ -135,7 +134,6 @@ def overwrite_partitions(
         {"mode": mode, "partitions": len(parts), "files_removed": len(removed)},
     )
     entries = write_data_files(
-        spark,
         table.root,
         meta.schema_json,
         meta.partition_spec,

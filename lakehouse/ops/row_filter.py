@@ -105,7 +105,6 @@ def _finish(
                 1, -(-bytes_in // (128 * 1024 * 1024))
             )
         entries = write_data_files(
-            table.spark,
             table.root,
             meta.schema_json,
             meta.partition_spec,

@@ -332,8 +332,9 @@ def bucket_batches_oracle_sql(
         FROM b
     )
     SELECT bucket, (rn - 1) // {bs} AS batch_id,
-           count(*) AS n_rows, sum(len) AS sum_len, max(len) AS max_len,
-           count(*) * max(len) - sum(len) AS pad_len
+           count(*) AS n_rows, CAST(sum(len) AS BIGINT) AS sum_len,
+           max(len) AS max_len,
+           CAST(count(*) * max(len) - sum(len) AS BIGINT) AS pad_len
     FROM r GROUP BY 1, 2
     """
 

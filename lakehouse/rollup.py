@@ -417,7 +417,6 @@ class MaterializedRollup:
         t = self.table
         prior = t.plan().files
         entries = write_data_files(
-            t.spark,
             t.root,
             t.meta.schema_json,
             t.meta.partition_spec,

@@ -63,6 +63,15 @@ def field_default(field: T.StructField):
     return md.get(DEFAULT_KEY)
 
 
+def field_defaults(schema: T.StructType) -> dict:
+    """``{name: default}`` for the fields that declare one."""
+    return {
+        f.name: field_default(f)
+        for f in schema.fields
+        if field_default(f) is not None
+    }
+
+
 def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project ``df`` onto ``schema``: cast present columns, fill
     missing ones with the field's default (null when none), drop

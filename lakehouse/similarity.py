@@ -884,7 +884,8 @@ def quantize_embeddings_oracle_sql(table: str = "embeddings") -> str:
         FROM s
     )
     SELECT vec_id, CAST(floor((sc) * 1000000.0 + 0.5) / 1000000.0 AS DOUBLE) AS scale,
-           list_aggregate(list_transform(qv, x -> x * x), 'sum') AS qnorm2
+           CAST(list_aggregate(list_transform(qv, x -> x * x), 'sum')
+                AS BIGINT) AS qnorm2
     FROM q
     """
 

@@ -733,7 +733,6 @@ class Table:
                 _conform(df, T.StructType.fromJson(schema_json)), id_specs
             )
         entries = write_data_files(
-            self.spark,
             self.root,
             schema_json,
             meta.partition_spec,
@@ -1342,11 +1341,12 @@ class Table:
     ) -> S.Snapshot:
         """Metadata-only ADD COLUMN with an optional DEFAULT (the
         Iceberg-v3 ``initial-default``): files written before the column
-        existed scan as ``default`` (not null) — zero rewrites; writers
-        missing the column fill it too (write-default = initial-default,
-        lakehouse/schema.py:conform). Routed through field-id mapping so
-        a drop-then-re-add can never resurrect old values under the new
-        default."""
+        existed scan as ``default`` (not null) — zero rewrites; every
+        writer missing the column fills it too (write-default =
+        initial-default: ``schema.conform`` on the Spark side, the
+        Arrow conform in the ``lakehouse`` format writers). Routed
+        through field-id mapping so a drop-then-re-add can never
+        resurrect old values under the new default."""
         from pyspark.sql import functions as F
 
         from .schema import DEFAULT_KEY
@@ -1495,8 +1495,12 @@ class Table:
     def add_check_constraint(self, name: str, expr: str) -> None:
         """ADD CONSTRAINT: validate every EXISTING row satisfies
         ``expr`` (one column-pruned scan; NULL passes, SQL rule), then
-        commit the constraint as a table property. Subsequent writes on
-        any path enforce it map-side and fail pre-commit on violation.
+        commit the constraint as a table property. Subsequent writes
+        through ``ops/append.write_data_files`` (append, streaming
+        sinks, MERGE, UPDATE/DELETE, overwrite, derived-table refresh)
+        enforce it map-side and fail pre-commit on violation; the
+        ``lakehouse`` format writers refuse the table at planning time.
+        Rewrites of committed rows (compact, cluster) do not re-check.
         """
         from pyspark.sql import functions as F
 
@@ -1534,9 +1538,11 @@ class Table:
         """GENERATED ALWAYS AS: declare ``column`` computed from
         ``expr`` (Delta generated columns — the declarative form of the
         reference's hand-coded date derivation, glue_stream.py:239).
-        From now on every write on every path computes the column when
-        the writer omits it (or supplies NULL) and fails pre-commit on
-        a supplied value that contradicts the expression.
+        From now on every write through ``ops/append.write_data_files``
+        computes the column when the writer omits it (or supplies NULL)
+        and fails pre-commit on a supplied value that contradicts the
+        expression; the ``lakehouse`` format writers refuse the table
+        at planning time.
 
         ADD validation: every existing NON-NULL value must already
         equal the expression (one pruned scan); existing NULLs are

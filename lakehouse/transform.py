@@ -364,7 +364,6 @@ class MaterializedTransform:
         t = self.table
         prior = t.plan().files
         entries = write_data_files(
-            t.spark,
             t.root,
             t.meta.schema_json,
             t.meta.partition_spec,

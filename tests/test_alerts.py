@@ -168,3 +168,44 @@ def test_catalog_sweep_evaluates_stream_stalled_once(spark, tmp_path):
     stalled = [r for r in got if r.alert == "stream_stalled"]
     assert len(stalled) == 1  # once per sweep, not once per table
     assert stalled[0].table_name == "progress"
+
+
+def test_catalog_sweep_names_scope_stream_rules(spark, tmp_path):
+    """``names=`` scopes stream_stalled rules too: a rule whose progress
+    table is outside the subset is not evaluated (its progress table is
+    never scanned), one inside it fires as usual."""
+    import datetime
+
+    from lakehouse.streaming import PROGRESS_SCHEMA
+
+    cat = Catalog.create(str(tmp_path / "wh"))
+    cat.create_table(spark, "a", CLIPS_SCHEMA)
+    cat.load_table(spark, "a").append(
+        synth_clips_df(spark, 5, seed=3, n_days=1), target_file_count=1
+    )
+    cat.create_table(spark, "progress", PROGRESS_SCHEMA)
+    prog = cat.load_table(spark, "progress")
+    ts = datetime.datetime(2026, 8, 21, 6, 0, 0,
+                           tzinfo=datetime.timezone.utc)
+    prog.append(spark.createDataFrame(
+        [("q1", "r1", 3, ts.strftime("%Y-%m-%dT%H:%M:%S.000Z"),
+          100, 10.0, 12.0, 800, "sink")],
+        PROGRESS_SCHEMA,
+    ), target_file_count=1)
+    base_ms = int(ts.timestamp() * 1000)
+    rules = [{"kind": "stream_stalled", "max_age_ms": 60_000,
+              "progress_table": prog}]
+
+    scanned = []
+    real_scan = prog.scan
+    prog.scan = lambda *a, **kw: scanned.append(1) or real_scan(*a, **kw)
+    got = cat.alerts(spark, rules, now_ms=base_ms + 3_600_000, names=["a"])
+    assert got.collect() == [] and scanned == []
+
+    got = cat.alerts(
+        spark, rules, now_ms=base_ms + 3_600_000, names=["a", "progress"]
+    ).collect()
+    assert [(r.table_name, r.alert) for r in got] == [
+        ("progress", "stream_stalled")
+    ]
+    assert scanned

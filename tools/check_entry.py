@@ -14,6 +14,12 @@ replica called green. The gate now FAILS any query whose Spark output
 schema or oracle result contains a decimal type/cell: decimals are for
 internal arithmetic only and must be cast to DOUBLE at the output
 boundary (lakehouse/stablemath.py docstring).
+
+DECLARED ORACLE TYPES: the oracle side is checked on the DuckDB
+relation's declared column types, never on fetched cells — ``fetchall()``
+turns HUGEINT into a plain ``int`` and hides it, while a pandas/Arrow
+materialization turns it into float64 or decimal128 and breaks the
+hash comparison. Any HUGEINT, UHUGEINT or DECIMAL oracle column fails.
 """
 
 from __future__ import annotations
@@ -51,7 +57,9 @@ def decimal_problems(df, ocols, orows):
     any decimal in either side's output. Spark side is schema-typed;
     DuckDB's DB-API description types everything numeric as 'NUMBER',
     so the oracle side is detected by cell type (first non-null cell
-    per column — decimal typing is uniform within a column)."""
+    per column — decimal typing is uniform within a column). ``main``
+    passes no oracle rows: it checks the oracle's declared types with
+    :func:`oracle_type_problems` instead."""
     import decimal
 
     out = []
@@ -85,6 +93,39 @@ def decimal_problems(df, ocols, orows):
     return out
 
 
+BANNED_ORACLE_TYPES = ("HUGEINT", "DECIMAL")  # UHUGEINT contains HUGEINT
+
+
+def oracle_type_problems(con, sql):
+    """Oracle side: DuckDB's DECLARED output types (``con.sql(q)``
+    column types, nested types included), never fetched cells."""
+    rel = con.sql(sql)
+    bad = [
+        f"{name} {typ}"
+        for name, typ in zip(rel.columns, map(str, rel.types))
+        if any(b in typ for b in BANNED_ORACLE_TYPES)
+    ]
+    if not bad:
+        return []
+    return [
+        f"oracle declares {bad} — cast the oracle SQL to BIGINT/DOUBLE"
+    ]
+
+
+def duckdb_views(sf_dir):
+    """A DuckDB connection with one view per parquet table in ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
+            )
+    return con
+
+
 def fingerprint(rows, colnames):
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
     normed = sorted(
@@ -97,21 +138,13 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    import duckdb
-
     import __spark_entry__ as E
     from lakehouse.session import build_session
 
     spark = build_session(
         "check-entry", master="local[8]", shuffle_partitions=8
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    con = duckdb_views(sf_dir)
 
     qs = E.queries()
     oracles = E.oracle_sql()
@@ -140,6 +173,9 @@ def main():
                 n_pass += 1
             continue
         try:
+            problems = decimal_problems(df, [], []) + oracle_type_problems(
+                con, oracles[name]
+            )
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
@@ -148,7 +184,6 @@ def main():
             traceback.print_exc()
             n_fail += 1
             continue
-        problems = decimal_problems(df, ocols, orows)
         if sorted(cols) != sorted(ocols):
             problems.append(f"schema {sorted(cols)} != {sorted(ocols)}")
         if len(rows) != len(orows):
