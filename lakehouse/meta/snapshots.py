@@ -266,19 +266,26 @@ def commit(
     table_root: str,
     apply: Callable[[TableMetadata], TableMetadata],
     *,
+    base: Optional[TableMetadata] = None,
     max_retries: int = 10,
     backoff_s: float = 0.05,
 ) -> TableMetadata:
     """Optimistic commit loop: load current → ``apply`` (pure rebase
     function) → CAS-publish next version. ``apply`` may raise
     CommitConflictError itself if the new current state invalidates the
-    pending change (e.g. a compaction's source files were replaced)."""
+    pending change (e.g. a compaction's source files were replaced).
+
+    ``base``: the metadata the op already loaded (and must not be
+    mutated by ``apply``). The first attempt commits on it; if it is
+    stale the CAS loses, and only then is the current version read."""
     for attempt in range(max_retries):
-        base = load_metadata(table_root)
+        if base is None:
+            base = load_metadata(table_root)
         new_meta = apply(base)
         new_meta.version = base.version + 1
         if _try_publish(table_root, new_meta.version, new_meta.to_json()):
             return new_meta
+        base = None
         time.sleep(backoff_s * (attempt + 1))
     raise CommitConflictError(
         f"commit to {table_root} failed after {max_retries} CAS attempts"

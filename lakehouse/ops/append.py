@@ -79,6 +79,7 @@ def harvest_stats(
     files: Sequence[tuple[str, dict[str, Any]]],
     *,
     sort_order: str = "",
+    properties: Optional[Mapping[str, Any]] = None,
 ) -> list[DataFileEntry]:
     """Footer-only stats harvest; distributed over executors when the file
     count is too large for the driver to chew through serially and a
@@ -93,12 +94,18 @@ def harvest_stats(
     ``lakehouse`` format writers' commit, and ``add_files`` — so blooms
     and sums stay consistent across ops without per-op wiring. MoR
     delete files are the one exception: they take plain footer stats.
+    ``properties``: the table properties the op already loaded (read
+    from the current metadata when omitted).
     """
     from ..bloom import bloom_columns_property, harvest_file_blooms
     from ..meta.snapshots import load_metadata
     from .agg import agg_stats_columns_property
 
-    props = load_metadata(table_root).properties
+    props = (
+        properties
+        if properties is not None
+        else load_metadata(table_root).properties
+    )
     bloom_cols = bloom_columns_property(props)
     sum_cols = agg_stats_columns_property(props)
 
@@ -139,6 +146,7 @@ def write_files(
     extra_dirs: Sequence[str] = (),
     sort_order: str = "",
     mode: str = "error",
+    properties: Optional[Mapping[str, Any]] = None,
 ) -> list[DataFileEntry]:
     """The one data-file kernel: save ``df`` as Parquet under
     ``job_rel``, list the files the job wrote, harvest their entries.
@@ -149,6 +157,7 @@ def write_files(
     parsed back from the spec's levels only. ``sort_order`` is the
     layout tag stamped on every entry. ``mode="overwrite"`` lets a
     resumed rewrite bin replace its own half-written job dir.
+    ``properties`` is passed to :func:`harvest_stats`.
 
     No contract is applied here: rewrites move rows that are already
     committed and call this directly; new rows go through
@@ -164,6 +173,7 @@ def write_files(
         table_root,
         list_job_files(table_root, job_rel, spec),
         sort_order=sort_order,
+        properties=properties,
     )
 
 
@@ -195,6 +205,8 @@ def write_data_files(
     files_per_partition: Optional[int] = None,
     sort_order: str = "",
     job_dir: Optional[str] = None,
+    properties: Optional[Mapping[str, Any]] = None,
+    identity: Optional[Mapping[str, Mapping[str, int]]] = None,
 ) -> list[DataFileEntry]:
     """Write new rows as committed-later data files under the table's
     write contract; returns manifest entries.
@@ -214,16 +226,27 @@ def write_data_files(
     salt dir is opaque to readers, which always get explicit file lists.
     ``None``/``None`` keeps the incoming partitioning (no shuffle — the
     streaming append path).
+
+    ``properties``: the table properties the op already loaded — the
+    contract and the stats harvest read them (one metadata read per
+    write when omitted). ``identity``: identity specs whose NULLs are
+    filled right after the conform; the committing op passes them
+    because it advances the watermarks in its own commit.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from ..constraints import apply_generated, enforce
+    from ..identity import assign_identity
     from ..meta.snapshots import load_metadata
     from ..sortorder import provenance_tag
 
+    if properties is None:
+        properties = load_metadata(table_root).properties
     out = conform(df, T.StructType.fromJson(schema_json))
-    contract = write_contract(load_metadata(table_root).properties)
+    if identity:
+        out = assign_identity(out, identity)
+    contract = write_contract(properties)
     # generated columns first (compute-or-validate), so CHECK
     # constraints can reference the computed values; CHECK is one
     # fused map-side predicate (lakehouse/constraints.py)
@@ -282,4 +305,5 @@ def write_data_files(
         spec,
         extra_dirs=salt,
         sort_order=sort_order,
+        properties=properties,
     )

@@ -13,9 +13,14 @@ following the reference's derivation pattern (:213-239).
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+from typing import Any
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.column import _to_java_column, _to_seq
 
 # --- clips: the engine's canonical payload table (input_hint) -----------------
 
@@ -72,6 +77,13 @@ def field_defaults(schema: T.StructType) -> dict:
     }
 
 
+#: conform projections by (gateway client, schema JSON, input column
+#: names), least recently used last out
+_PROJECTIONS: "OrderedDict[tuple, Any]" = OrderedDict()
+_PROJECTIONS_MAX = 64
+_PROJECTIONS_LOCK = threading.Lock()
+
+
 def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project ``df`` onto ``schema``: cast present columns, fill
     missing ones with the field's default (null when none), drop
@@ -81,19 +93,43 @@ def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     (/root/reference/etl/glue_stream.py:316-334) generalized to any
     schema; the default fill is the write-default half of Iceberg-v3
     column defaults (the read half lives in meta/scan.py).
+
+    Building the projection costs py4j round trips per column (every
+    ``F.col``/``F.lit``/``cast``/``alias`` crosses into the JVM), so
+    it is built once per (JVM, schema JSON, input column names) and
+    kept as a JVM ``Seq[Column]``: a repeat call costs the input
+    schema read and one ``select``, whatever the column count. The
+    columns are unresolved expressions bound to no session, so a
+    projection stays valid across ``spark.stop()`` and a new session
+    on the same JVM; a new JVM (a new gateway client) builds anew.
     """
-    existing = {f.name for f in df.schema.fields}
-    cols = []
-    for field in schema.fields:
-        if field.name in existing:
-            cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(
-                F.lit(field_default(field))
-                .cast(field.dataType)
-                .alias(field.name)
-            )
-    return df.select(*cols)
+    names = tuple(df.columns)
+    client = df._jdf._gateway_client
+    key = (client, schema.json(), names)
+    with _PROJECTIONS_LOCK:
+        jcols = _PROJECTIONS.get(key)
+        if jcols is not None:
+            _PROJECTIONS.move_to_end(key)
+    if jcols is None:
+        existing = set(names)
+        cols = []
+        for field in schema.fields:
+            if field.name in existing:
+                cols.append(
+                    F.col(field.name).cast(field.dataType).alias(field.name)
+                )
+            else:
+                cols.append(
+                    F.lit(field_default(field))
+                    .cast(field.dataType)
+                    .alias(field.name)
+                )
+        jcols = _to_seq(df.sparkSession.sparkContext, cols, _to_java_column)
+        with _PROJECTIONS_LOCK:
+            _PROJECTIONS[key] = jcols
+            while len(_PROJECTIONS) > _PROJECTIONS_MAX:
+                _PROJECTIONS.popitem(last=False)
+    return type(df)(df._jdf.select(jcols), df.sparkSession)
 
 
 # Iceberg's published safe type promotions (spec §Schema Evolution),

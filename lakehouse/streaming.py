@@ -66,8 +66,9 @@ def batch_replayed(table, batch_id: int) -> bool:
     """The replay guard every idempotent sink runs first: True when
     ``batch_id`` is already committed, either in a retained snapshot or
     at or below the expired-batch mark (its snapshot has since been
-    expired). One metadata load serves both checks."""
-    meta = table.meta
+    expired). One metadata load serves both checks; ``table`` may also
+    be a ``TableMetadata`` the op already loaded."""
+    meta = table if isinstance(table, TableMetadata) else table.meta
     mark = meta.properties.get(EXPIRED_BATCH_PROP)
     if mark is not None and int(batch_id) <= int(mark):
         return True
@@ -75,18 +76,28 @@ def batch_replayed(table, batch_id: int) -> bool:
 
 
 def append_batch(table, *, target_file_count: Optional[int] = None):
-    """foreachBatch callback: idempotent ACID append of one micro-batch."""
+    """foreachBatch callback: idempotent ACID append of one micro-batch.
+
+    One metadata version, loaded once per batch, serves the replay
+    guard, the write contract, the stats harvest and the first commit
+    attempt (``Table.append``); only a lost CAS reads the table again.
+    An empty micro-batch is not probed with a Spark job up front (in a
+    real stream that would recompute the batch's source): it is told
+    from what the write produced — no files, or only zero-row ones —
+    and then commits nothing and leaves no file behind.
+    """
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_replayed(table, batch_id):
+        meta = table.meta
+        if batch_replayed(meta, batch_id):
             return  # replayed batch after restart — already committed
-        if batch_df.isEmpty():
-            return
         # the batch id rides in the snapshot summary ATOMICALLY with the
         # append commit — replay after a crash either sees the id (skip)
         # or sees no snapshot (safe to redo); no in-between state
-        table.append(
+        table._append(
+            meta,
             batch_df,
+            commit_empty=False,
             target_file_count=target_file_count,
             extra_summary={"stream_batch_id": int(batch_id)},
         )

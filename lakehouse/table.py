@@ -15,6 +15,7 @@ capability the jar provided is a module here (SURVEY.md §2 second table).
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
 from typing import Any, Optional, Sequence
@@ -216,6 +217,7 @@ class Table:
         set_props: Optional[dict[str, Any]] = None,
         validate: Optional[dict[str, Any]] = None,
         props_guard: Optional[dict[str, Any]] = None,
+        base: Optional[S.TableMetadata] = None,
     ) -> S.Snapshot:
         """Build snapshot N+1 = parent − removed + added, with manifest
         rewrite: any parent manifest touched by a removal is rewritten
@@ -243,6 +245,9 @@ class Table:
         ``current_snapshot_id`` (what plain scans see) untouched. The
         write-audit-publish staging surface. A missing branch is created
         at the current main head first.
+
+        ``base``: the metadata the op already loaded; the first CAS
+        attempt commits on it (see ``snapshots.commit``).
         """
         removed = set(removed_paths)
         result_holder: dict[str, S.Snapshot] = {}
@@ -419,7 +424,7 @@ class Table:
                 refs=refs,
             )
 
-        S.commit(self.root, apply)
+        S.commit(self.root, apply, base=base)
         return result_holder["snap"]
 
     # --- refs: branches, tags, rollback, write-audit-publish ------------------
@@ -706,9 +711,44 @@ class Table:
         For streams, use ``writeStream.foreachBatch(
         streaming.append_batch(table))``: it skips replayed micro-batches,
         which a bare ``table.append`` in ``foreachBatch`` would commit
-        twice.
+        twice, and commits nothing for an empty micro-batch (an empty
+        ``df`` here still commits a snapshot).
+
+        The op reads one metadata version, once: it supplies the schema
+        the rows are conformed to, the write contract, the properties
+        the stats harvest reads, and the base of the first commit
+        attempt. Only a commit that loses the CAS to a concurrent writer
+        reads the table again.
         """
-        meta = self.meta
+        return self._append(
+            self.meta,
+            df,
+            target_file_count=target_file_count,
+            files_per_partition=files_per_partition,
+            new_schema=new_schema,
+            extra_summary=extra_summary,
+            branch=branch,
+            set_props=set_props,
+        )
+
+    def _append(
+        self,
+        meta: S.TableMetadata,
+        df: DataFrame,
+        *,
+        commit_empty: bool = True,
+        target_file_count: Optional[int] = None,
+        files_per_partition: Optional[int] = None,
+        new_schema: Optional[T.StructType] = None,
+        extra_summary: Optional[dict[str, Any]] = None,
+        branch: Optional[str] = None,
+        set_props: Optional[dict[str, Any]] = None,
+    ) -> Optional[S.Snapshot]:
+        """``append`` on the already-loaded ``meta``. With
+        ``commit_empty=False`` a write that produced no rows (no files,
+        or only the zero-row file Spark leaves for an empty unpartitioned
+        write) commits nothing, removes its job directory and returns
+        None."""
         if new_schema is not None and not is_additive_evolution(
             T.StructType.fromJson(meta.schema_json), new_schema
         ):
@@ -720,18 +760,14 @@ class Table:
         schema_json = (
             new_schema.jsonValue() if new_schema is not None else meta.schema_json
         )
-        # identity columns (lakehouse/identity.py): fill NULLs map-side
-        # from the watermark read HERE; the advanced watermark commits
+        # identity columns (lakehouse/identity.py): NULLs fill map-side
+        # from the watermark in ``meta``; the advanced watermark commits
         # in the same snapshot below, CAS-guarded against a concurrent
         # append having moved it (CommitConflictError → re-run)
-        from .identity import advance_watermarks, assign_identity, identity_of
-        from .schema import conform as _conform
+        from .identity import advance_watermarks, identity_of
 
         id_specs = identity_of(meta.properties)
-        if id_specs:
-            df = assign_identity(
-                _conform(df, T.StructType.fromJson(schema_json)), id_specs
-            )
+        job_dir = f"data/job-{uuid.uuid4().hex}"
         entries = write_data_files(
             self.root,
             schema_json,
@@ -739,7 +775,13 @@ class Table:
             df,
             target_file_count=target_file_count,
             files_per_partition=files_per_partition,
+            job_dir=job_dir,
+            properties=meta.properties,
+            identity=id_specs,
         )
+        if not commit_empty and not any(e.record_count for e in entries):
+            shutil.rmtree(os.path.join(self.root, job_dir), ignore_errors=True)
+            return None
         props_guard = None
         if id_specs:
             id_props, props_guard = advance_watermarks(id_specs, entries)
@@ -747,7 +789,7 @@ class Table:
         return self._commit_files(
             "append", entries, (), new_schema=new_schema,
             summary=extra_summary, branch=branch, set_props=set_props,
-            props_guard=props_guard,
+            props_guard=props_guard, base=meta,
         )
 
     # --- read path ------------------------------------------------------------

@@ -102,8 +102,7 @@ def test_ab_test_output_schema_is_hash_safe(spark):
 def test_replica_gate_detects_decimal_outputs(spark):
     """Prove the hardened gate catches the round-4 class: a DataFrame
     with a decimal column must be flagged on the Spark side, and a
-    DuckDB result with a DECIMAL column / Decimal cells on the oracle
-    side."""
+    DuckDB query declaring a DECIMAL column on the oracle side."""
     duckdb = pytest.importorskip("duckdb")
     import os
     import sys
@@ -115,7 +114,7 @@ def test_replica_gate_detects_decimal_outputs(spark):
             "tools",
         ),
     )
-    from check_entry import decimal_problems
+    from check_entry import decimal_problems, oracle_type_problems
 
     bad_df = spark.range(1).select(
         F.lit(1.0).cast("decimal(18,4)").alias("v")
@@ -123,16 +122,13 @@ def test_replica_gate_detects_decimal_outputs(spark):
     ok_df = spark.range(1).select(F.lit(1.0).alias("v"))
 
     con = duckdb.connect()
-    res = con.execute(
+    probs = decimal_problems(bad_df) + oracle_type_problems(
+        con,
         "SELECT NULL::DECIMAL(18,4) AS v UNION ALL "
-        "SELECT CAST(1.0 AS DECIMAL(18,4))"
+        "SELECT CAST(1.0 AS DECIMAL(18,4))",
     )
-    ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    probs = decimal_problems(bad_df, ocols, orows)
     assert any("spark output has DECIMAL" in p for p in probs)
-    assert any("oracle output has DECIMAL" in p for p in probs)
+    assert any("oracle declares" in p and "DECIMAL" in p for p in probs)
 
-    res2 = con.execute("SELECT CAST(1.0 AS DOUBLE) AS v")
-    ocols2 = [d[0] for d in res2.description]
-    assert decimal_problems(ok_df, ocols2, res2.fetchall()) == []
+    assert decimal_problems(ok_df) == []
+    assert oracle_type_problems(con, "SELECT CAST(1.0 AS DOUBLE) AS v") == []

@@ -52,45 +52,21 @@ def norm_cell(v):
     return str(v)
 
 
-def decimal_problems(df, ocols, orows):
+def decimal_problems(df):
     """The class the driver catches and ``str()``-normalization can't:
-    any decimal in either side's output. Spark side is schema-typed;
-    DuckDB's DB-API description types everything numeric as 'NUMBER',
-    so the oracle side is detected by cell type (first non-null cell
-    per column — decimal typing is uniform within a column). ``main``
-    passes no oracle rows: it checks the oracle's declared types with
-    :func:`oracle_type_problems` instead."""
-    import decimal
-
-    out = []
+    any decimal in the Spark output (schema-typed). The oracle side is
+    checked on its declared types by :func:`oracle_type_problems`."""
     bad = [
         f.name
         for f in df.schema.fields
         if "decimal" in f.dataType.simpleString()
     ]
-    if bad:
-        out.append(
-            f"spark output has DECIMAL column(s) {bad} — cast to DOUBLE "
-            "at the output boundary (stablemath.py)"
-        )
-    pending = set(range(len(ocols)))
-    obad = set()
-    for r in orows:
-        if not pending:
-            break
-        for i in list(pending):
-            v = r[i]
-            if v is None:
-                continue
-            if isinstance(v, decimal.Decimal):
-                obad.add(ocols[i])
-            pending.discard(i)
-    if obad:
-        out.append(
-            f"oracle output has DECIMAL column(s) {sorted(obad)} — "
-            "cast the oracle SQL to DOUBLE"
-        )
-    return out
+    if not bad:
+        return []
+    return [
+        f"spark output has DECIMAL column(s) {bad} — cast to DOUBLE "
+        "at the output boundary (stablemath.py)"
+    ]
 
 
 BANNED_ORACLE_TYPES = ("HUGEINT", "DECIMAL")  # UHUGEINT contains HUGEINT
@@ -164,7 +140,7 @@ def main():
             continue
         dt = time.time() - t0
         if name not in oracles:
-            probs = decimal_problems(df, [], [])
+            probs = decimal_problems(df)
             if probs:
                 print(f"FAIL {name}: {'; '.join(probs)}")
                 n_fail += 1
@@ -173,7 +149,7 @@ def main():
                 n_pass += 1
             continue
         try:
-            problems = decimal_problems(df, [], []) + oracle_type_problems(
+            problems = decimal_problems(df) + oracle_type_problems(
                 con, oracles[name]
             )
             res = con.execute(oracles[name])
