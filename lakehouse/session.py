@@ -5,14 +5,71 @@ Mirrors the shape of the reference's conf block
 single-stream sizing (``shuffle.partitions=1``) with AQE: runtime
 partition coalescing + skew-join splitting, which is what survives a
 1000-executor deployment. Package ships via ``spark-submit --py-files``
-(see jobs.py); nothing here depends on local mode.
+(see jobs.py).
+
+Two things are local-mode only, for ``master="local"`` / ``"local[...]"``:
+
+- the 24g default driver heap, because the driver is every executor;
+- the engine's own ``file:`` filesystem (``lakehouse/jvm``). Without the
+  Hadoop native library, Hadoop's local filesystem forks a ``chmod``
+  process for every file, ``.crc`` sidecar and directory a write
+  creates. ``lakehouse.jvm.NoForkLocalFileSystem`` (and ``NoForkLocalFs``
+  for the FileContext path of streaming checkpoints and state stores)
+  set the same modes through ``java.nio`` and keep the checksums. This
+  module can put the jar on the driver's classpath only, so the
+  filesystem is used only where the driver is the one executor and
+  tables are ``file:`` paths, and only when its classes load: in a JVM
+  this call launches, or in a running one that was started with the
+  jar. Anywhere else (``spark-submit --py-files`` with the package in a
+  zip, a cluster master, a JVM started without the jar) Spark keeps the
+  stock filesystem.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+LOCALFS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "lakehouse-localfs.jar"
+)
+_LOCALFS_IMPLS = {
+    "spark.hadoop.fs.file.impl": "lakehouse.jvm.NoForkLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "lakehouse.jvm.NoForkLocalFs",
+}
+_CLASSPATH = "spark.driver.extraClassPath"
+# "local" and "local[N]" / "local[*]" / "local[N,F]"; not "local-cluster",
+# whose executors are separate JVMs without the jar
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def _localfs_conf(master: str | None, extra_conf: dict) -> dict[str, str]:
+    """The confs that put the no-fork local filesystem under this session,
+    or ``{}`` where it cannot be used (see the module docstring). A
+    caller's ``spark.driver.extraClassPath`` is kept, with the jar
+    appended."""
+    if not master or not _LOCAL_MASTER.fullmatch(master):
+        return {}
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        # this call launches the JVM: the jar goes on its classpath
+        if not os.path.isfile(LOCALFS_JAR):  # e.g. imported from a zip
+            return {}
+        cp = [p for p in (extra_conf.get(_CLASSPATH), LOCALFS_JAR) if p]
+        return {_CLASSPATH: os.pathsep.join(cp), **_LOCALFS_IMPLS}
+    # a JVM is running (an earlier session, or spark-submit's): use the
+    # filesystem only if that JVM was started with the jar
+    SparkContext._ensure_initialized()
+    try:
+        SparkContext._jvm.java.lang.Class.forName(
+            _LOCALFS_IMPLS["spark.hadoop.fs.file.impl"]
+        )
+    except Py4JError:
+        return {}
+    return dict(_LOCALFS_IMPLS)
 
 
 def build_session(
@@ -76,7 +133,12 @@ def build_session(
     builder = builder.config(
         "spark.sql.shuffle.partitions", str(shuffle_partitions or cores)
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {**(extra_conf or {})}
+    for k, v in _localfs_conf(master, conf).items():
+        # a caller's own filesystem choice wins; the classpath is merged
+        if k == _CLASSPATH or k not in conf:
+            conf[k] = v
+    for k, v in conf.items():
         builder = builder.config(k, str(v))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
