@@ -494,7 +494,7 @@ FROM merged
 
 
 def _q_lh_sql_merge(spark, sf_dir):
-    """SQL DML front-end (lakehouse/sqldml.py — r3 verdict #4): the
+    """SQL DML front-end (lakehouse/sql.py — r3 verdict #4): the
     same engine ops driven by ``MERGE INTO`` / ``DELETE`` / ``UPDATE``
     STATEMENT TEXT, the on-ramp for SQL-only BI/ELT tooling (the
     reference's analyst surface stops at read-only Athena,
@@ -636,7 +636,7 @@ SELECT * FROM (VALUES
 
 
 def _q_lh_sql_ddl_lifecycle(spark, sf_dir):
-    """SQL DDL front-end (lakehouse/sqlddl.py — r4 verdict #6): a full
+    """SQL DDL front-end (lakehouse/sql.py — r4 verdict #6): a full
     table lifecycle driven through STATEMENT TEXT only — CREATE TABLE
     … PARTITIONED BY … AS SELECT, ALTER TABLE ADD COLUMN … DEFAULT,
     then INSERT / MERGE / DELETE through the DML front-end, then a

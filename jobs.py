@@ -1101,31 +1101,24 @@ def cmd_catalog(args):
     elif args.action == "tables":
         _emit({"op": "catalog", "action": "tables", "tables": cat.tables()})
     elif args.action == "sql":
-        from lakehouse.sqlddl import DDL_HEADS
+        from lakehouse.sql import is_engine_statement
 
         spark = _spark(args)
-        head = (
-            args.query.strip().split(None, 1)[0].upper()
-            if args.query and args.query.strip()
-            else ""
-        )
-        if head in ("INSERT", "MERGE", "UPDATE", "DELETE") + DDL_HEADS:
+        # the statement's OWN query parts (INSERT ... SELECT FROM t, MERGE
+        # USING t, CREATE TABLE AS SELECT FROM t) resolve catalog tables
+        # through the same snapshot-pinned views reads use
+        cat.register_views(spark)
+        if is_engine_statement(spark, args.query):
             # write/DDL statements dispatch to the native ops
-            # (lakehouse/sqldml.py + sqlddl.py); the statement's OWN
-            # query parts (INSERT ... SELECT FROM t, MERGE USING t,
-            # CREATE TABLE AS SELECT FROM t) resolve catalog tables
-            # through the same snapshot-pinned views reads use
-            cat.register_views(spark)
             res = cat.sql(spark, args.query)
             shown = getattr(res, "root", res)  # Table → its root path
             _emit({
                 "op": "catalog",
                 "action": "sql",
-                "statement": head,
+                "statement": args.query.split(None, 1)[0].upper(),
                 "result": repr(shown),
             })
             return
-        cat.register_views(spark)
         rows = spark.sql(args.query).limit(args.limit).collect()
         _emit({
             "op": "catalog",

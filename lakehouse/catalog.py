@@ -320,20 +320,13 @@ class Catalog:
         """Run one DML (``INSERT`` / ``MERGE INTO`` / ``UPDATE`` /
         ``DELETE``) or DDL (``CREATE TABLE … AS`` / ``ALTER TABLE``)
         statement against a catalog table through the engine's native
-        ops (lakehouse/sqldml.py + sqlddl.py — the SQL-tooling
+        ops (Spark's parser + lakehouse/sql.py — the SQL-tooling
         on-ramp; reads go through ``register_views`` + ``spark.sql``).
         ``kw`` forwards to the op (``mode="mor"``, ``isolation=...``,
         or CREATE's ``properties=...``)."""
-        head = statement.strip().split(None, 1)[0].upper() if statement.strip() else ""
-        from .sqlddl import DDL_HEADS
+        from .sql import execute
 
-        if head in DDL_HEADS:
-            from .sqlddl import execute_ddl
-
-            return execute_ddl(statement, catalog=self, spark=spark, **kw)
-        from .sqldml import execute_dml
-
-        return execute_dml(statement, catalog=self, spark=spark, **kw)
+        return execute(statement, catalog=self, spark=spark, **kw)
 
     def transaction(self, spark):
         """Open a multi-table transaction: stage appends to several

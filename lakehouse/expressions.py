@@ -172,3 +172,17 @@ def to_sql(preds: Sequence[Predicate]) -> Optional[str]:
         else:
             parts.append(f"{c} {p.op} {_sql_literal(p.value)}")
     return " AND ".join(parts)
+
+
+def sql_column(expr):
+    """A Spark SQL expression as a Column: text through ``F.expr``; a
+    Column (the SQL front-end hands parsed expressions over as Columns)
+    as given."""
+    from pyspark.sql import Column, functions as F
+
+    return expr if isinstance(expr, Column) else F.expr(expr)
+
+
+def sql_text(expr) -> str:
+    """The text a summary records for a ``sql_column`` input."""
+    return expr if isinstance(expr, str) else str(expr._jc.toString())

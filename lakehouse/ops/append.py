@@ -168,13 +168,29 @@ def write_files(
     if dirs:
         writer = writer.partitionBy(*dirs)
     writer.save(os.path.join(table_root, job_rel))
-    return harvest_stats(
+    entries = harvest_stats(
         df.sparkSession,
         table_root,
         list_job_files(table_root, job_rel, spec),
         sort_order=sort_order,
         properties=properties,
     )
+    if not any(e.record_count for e in entries):
+        return entries  # an all-empty write: the caller decides
+    # Spark's empty tasks still leave a zero-row file (task 0 always
+    # does); beside real rows it is dead weight every scan would open
+    from ..bloom import sidecar_path
+
+    for e in entries:
+        if not e.record_count:
+            path = os.path.join(table_root, e.file_path)
+            crc = os.path.join(
+                os.path.dirname(path), f".{os.path.basename(path)}.crc"
+            )
+            for p in (path, crc, sidecar_path(path)):
+                if os.path.exists(p):
+                    os.remove(p)
+    return [e for e in entries if e.record_count]
 
 
 def write_contract(properties: Mapping[str, Any]) -> dict[str, Any]:

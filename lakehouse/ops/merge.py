@@ -76,11 +76,12 @@ import os
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import MergeError
+from ..expressions import sql_column
 from ..lineage import LineageLog
 from ..ops.append import write_data_files
 from ..schema import conform
@@ -477,11 +478,13 @@ def _normalize_nms(schema, nms, cond):
     """Validate the WHEN NOT MATCHED BY SOURCE clause (Delta's
     whenNotMatchedBySourceDelete / ...Update analog).
 
-    ``nms``: None | "delete" | {col: sql_expr} (update-set map).
+    ``nms``: None | "delete" | {col: sql_expr or Column} (update-set
+    map).
     ``cond``: None (clause applies to every unmatched row) | SQL string
-    over target columns | tuple-filter list in the engine's predicate
-    language (``expressions.normalize_filter``) — the tuple form is what
-    enables manifest pruning and metadata-only whole-file drops.
+    or Column over target columns | tuple-filter list in the engine's
+    predicate language (``expressions.normalize_filter``) — the tuple
+    form is what enables manifest pruning and metadata-only whole-file
+    drops.
 
     Returns ``(nms, cond_sql, cond_preds)``; ``cond_preds`` is None for
     raw-SQL conditions (no stats reasoning possible — every live file
@@ -511,8 +514,8 @@ def _normalize_nms(schema, nms, cond):
         )
     if cond is None:
         return nms, None, None
-    if isinstance(cond, str):
-        if not cond.strip():
+    if isinstance(cond, (str, Column)):
+        if isinstance(cond, str) and not cond.strip():
             # an empty string is falsy downstream and would silently
             # become an UNCONDITIONAL full-sync delete — the templating
             # bug that loses a table
@@ -857,20 +860,20 @@ def merge_into(
     if nms == "delete":
         kept_target = (
             kept_target.filter(
-                ~F.coalesce(F.expr(nms_cond_sql), F.lit(False))
+                ~F.coalesce(sql_column(nms_cond_sql), F.lit(False))
             )
-            if nms_cond_sql
+            if nms_cond_sql is not None
             else kept_target.filter(F.lit(False))
         )
     elif isinstance(nms, dict):
         cond_c = (
-            F.coalesce(F.expr(nms_cond_sql), F.lit(False))
-            if nms_cond_sql
+            F.coalesce(sql_column(nms_cond_sql), F.lit(False))
+            if nms_cond_sql is not None
             else F.lit(True)
         )
         kept_target = kept_target.select(
             *[
-                F.when(cond_c, F.expr(nms[c]).cast(schema[c].dataType))
+                F.when(cond_c, sql_column(nms[c]).cast(schema[c].dataType))
                 .otherwise(F.col(c))
                 .alias(c)
                 if c in nms

@@ -41,6 +41,7 @@ from typing import Optional
 
 from pyspark.sql import functions as F
 
+from ..expressions import sql_column, sql_text
 from ..lineage import LineageLog
 from ..meta.manifests import DataFileEntry, collect_file_stats
 from ..ops.append import write_data_files, write_files
@@ -95,14 +96,16 @@ def delete_mor(
         raise ValueError(f"delete key {key!r} not in table schema")
     pred_sql, _tuples = _predicate_sql(predicate)
     log = LineageLog(table.root, job_id)
-    log.start_job("delete_mor", {"predicate": pred_sql, "key": key})
+    log.start_job(
+        "delete_mor", {"predicate": sql_text(pred_sql), "key": key}
+    )
 
     # key set of rows matching the predicate, under the current MoR view
     # (already-deleted rows don't resurface in the key set); Catalyst
     # prunes the read down to the columns the predicate + key need
     keys_df = (
         table.scan()
-        .filter(F.expr(pred_sql))
+        .filter(sql_column(pred_sql))
         .select(key)
         .filter(F.col(key).isNotNull())
         .distinct()
@@ -116,7 +119,7 @@ def delete_mor(
         #    deleted by key — silent under-delete);
         # 2. no UNMATCHED row may share a key with a matched one (it
         #    would be deleted too — silent over-delete).
-        pred_col = F.expr(pred_sql)
+        pred_col = sql_column(pred_sql)
         n_null_matched = (
             table.scan().filter(pred_col & F.col(key).isNull()).count()
         )
@@ -439,8 +442,8 @@ def merge_into_mor(
                     tgt = table.scan(filter=nms_cond_preds)
             else:
                 tgt = table.scan(filter=nms_cond_preds)
-            if nms_cond_sql:
-                tgt = tgt.filter(F.expr(nms_cond_sql))
+            if nms_cond_sql is not None:
+                tgt = tgt.filter(sql_column(nms_cond_sql))
             dead = tgt.select(F.col(key))
             if n_rows:
                 dead = dead.join(
@@ -556,11 +559,11 @@ def update_mor(
             raise ValueError(f"unknown column in SET: {c!r}")
     pred_sql, tuples = _predicate_sql(predicate)
     matched = table.scan(filter=prune_filter or tuples).filter(
-        F.expr(pred_sql)
+        sql_column(pred_sql)
     )
     src = matched.select(
         *[
-            F.expr(set_exprs[f.name]).cast(f.dataType).alias(f.name)
+            sql_column(set_exprs[f.name]).cast(f.dataType).alias(f.name)
             if f.name in set_exprs
             else F.col(f.name)
             for f in schema.fields
@@ -571,7 +574,10 @@ def update_mor(
         src,
         key=key,
         job_id=job_id,
-        extra_summary={"update_predicate": pred_sql, "set": dict(set_exprs)},
+        extra_summary={
+            "update_predicate": sql_text(pred_sql),
+            "set": {c: sql_text(e) for c, e in set_exprs.items()},
+        },
     )
 
 
@@ -603,7 +609,7 @@ def delete_mor_positional(
     """
     pred_sql, tuples = _predicate_sql(predicate)
     log = LineageLog(table.root, job_id)
-    log.start_job("delete_mor_pos", {"predicate": pred_sql})
+    log.start_job("delete_mor_pos", {"predicate": sql_text(pred_sql)})
 
     # tuple predicates prune the candidate file set through the manifest
     # stats; SQL-string predicates scan all files unless the caller
@@ -622,7 +628,7 @@ def delete_mor_positional(
         read_entries(
             table.spark, table.meta, table.root, plan.files, lineage=True
         )
-        .filter(F.expr(pred_sql))
+        .filter(sql_column(pred_sql))
         .select(
             F.col("__path").alias("file_path"),
             F.col("__pos").alias("row_pos"),

@@ -9,7 +9,7 @@ this module is the from-scratch counterpart, scale-first:
    language, or derived automatically when ``predicate`` itself is a
    tuple filter).
 2. **Probe (narrow).** One column-pruned pass over the candidates —
-   ``filter(pred) → groupBy(input_file_name()) → count`` — finds which
+   ``filter(pred) → groupBy(file path) → count`` — finds which
    files actually contain matching rows and how many. Untouched files
    are never rewritten; at 10^12-row scale this is what turns a DELETE
    into a touched-files job.
@@ -25,13 +25,12 @@ this module is the from-scratch counterpart, scale-first:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 
-from ..expressions import normalize_filter, to_sql
+from ..expressions import normalize_filter, sql_column, sql_text, to_sql
 from ..lineage import LineageLog
 from ..ops.append import write_data_files
 
@@ -47,8 +46,8 @@ class DmlResult:
 
 
 def _predicate_sql(predicate) -> tuple[str, Optional[list]]:
-    """Returns (sql, tuple_filter_or_None)."""
-    if isinstance(predicate, str):
+    """Returns (sql text or Column, tuple_filter_or_None)."""
+    if isinstance(predicate, (str, Column)):
         return predicate, None
     preds = normalize_filter(predicate)
     sql = to_sql(preds)
@@ -58,7 +57,7 @@ def _predicate_sql(predicate) -> tuple[str, Optional[list]]:
 
 
 def _probe_matches(
-    table, files, pred_sql: str
+    table, files, pred_sql
 ) -> dict[str, int]:
     """Matched-row count per relative file path (narrow, column-pruned)."""
     if not files:
@@ -66,23 +65,16 @@ def _probe_matches(
     spark = table.spark
     from ..meta.scan import read_entries
 
+    # the path rides as a column read with each row: input_file_name()
+    # is empty once a subquery predicate turns the filter into a join
     rows = (
-        read_entries(spark, table.meta, table.root, list(files))
-        .filter(F.expr(pred_sql))
-        .groupBy(F.input_file_name().alias("__f"))
+        read_entries(spark, table.meta, table.root, list(files), lineage=True)
+        .filter(sql_column(pred_sql))
+        .groupBy("__path")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
-    root = table.root.rstrip("/") + "/"
-    out: dict[str, int] = {}
-    for r in rows:
-        p = r["__f"]
-        if p.startswith("file:"):
-            p = p[len("file:"):]
-            while p.startswith("//"):
-                p = p[1:]
-        out[p.replace(root, "", 1)] = r["n"]
-    return out
+    return {r["__path"]: r["n"] for r in rows}
 
 
 def _finish(
@@ -151,7 +143,7 @@ def delete(
     """DELETE FROM table WHERE predicate (copy-on-write)."""
     pred_sql, tuples = _predicate_sql(predicate)
     log = LineageLog(table.root, job_id)
-    log.start_job("delete", {"predicate": pred_sql})
+    log.start_job("delete", {"predicate": sql_text(pred_sql)})
     candidates = table.plan(filter=prune_filter or tuples).files
     matched = _probe_matches(table, candidates, pred_sql)
     by_path = {e.file_path: e for e in candidates}
@@ -171,12 +163,12 @@ def delete(
         rewrite_df = read_entries(
             table.spark, table.meta, table.root,
             [by_path[p] for p in rewrite_paths if p in by_path],
-        ).filter(~F.expr(pred_sql))
+        ).filter(~sql_column(pred_sql))
     rows_affected = sum(matched.values())
     return _finish(
         table, "delete", log, rewrite_df, drop_paths, rewrite_paths,
         bytes_in, rows_affected, target_file_count,
-        {"predicate": pred_sql, "rows_deleted": rows_affected},
+        {"predicate": sql_text(pred_sql), "rows_deleted": rows_affected},
     )
 
 
@@ -198,7 +190,11 @@ def update(
     pred_sql, tuples = _predicate_sql(predicate)
     log = LineageLog(table.root, job_id)
     log.start_job(
-        "update", {"predicate": pred_sql, "set": dict(set_exprs)}
+        "update",
+        {
+            "predicate": sql_text(pred_sql),
+            "set": {c: sql_text(e) for c, e in set_exprs.items()},
+        },
     )
     candidates = table.plan(filter=prune_filter or tuples).files
     matched = _probe_matches(table, candidates, pred_sql)
@@ -220,8 +216,8 @@ def update(
             if f.name in set_exprs:
                 projections.append(
                     F.when(
-                        F.expr(pred_sql),
-                        F.expr(set_exprs[f.name]).cast(f.dataType),
+                        sql_column(pred_sql),
+                        sql_column(set_exprs[f.name]).cast(f.dataType),
                     )
                     .otherwise(F.col(f.name))
                     .alias(f.name)
@@ -233,5 +229,5 @@ def update(
     return _finish(
         table, "overwrite", log, rewrite_df, [], rewrite_paths,
         bytes_in, rows_affected, target_file_count,
-        {"predicate": pred_sql, "rows_updated": rows_affected},
+        {"predicate": sql_text(pred_sql), "rows_updated": rows_affected},
     )

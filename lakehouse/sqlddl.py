@@ -1,381 +1,4 @@
-"""SQL DDL front-end: ``CREATE TABLE … AS SELECT`` / ``ALTER TABLE``
-text dispatched to the native catalog/table operations (VERDICT r4
-"What's missing" #2: the DML front-end lets an SQL-only ELT tool
-write, but not create — this closes the gap).
+"""The SQL front-end's DDL entry point, kept under its original name;
+every statement goes through :func:`lakehouse.sql.execute`."""
 
-Same stance as lakehouse/sqldml.py: Spark's own parser can't target
-this engine's tables in a ``--py-files`` deploy (no DSv2 catalog
-plugin), so the standard grammar is parsed here and dispatched to
-``Catalog.create_table`` / ``Table.add_column`` / ``drop_column`` /
-``rename_column`` — and anything outside the grammar is refused
-loudly. Parse errors cost zero Spark jobs.
-
-Supported grammar (case-insensitive keywords):
-
-    CREATE TABLE <name> [PARTITIONED BY (c1[, c2…])] AS <query>
-        → catalog-managed table; schema inferred from the query,
-          identity partitioning on the listed columns, the query
-          result appended as the first snapshot (one ACID commit
-          after create). Requires a catalog (a bare Table bind has
-          nowhere to put a new table).
-    CREATE TABLE <name> (col type [DEFAULT <lit>][, …])
-                 [PARTITIONED BY (c1[, c2…])]
-        → empty catalog-managed table from an explicit column list
-          (types parse through Spark's DDL type parser, so any
-          engine-supported type text works); DEFAULTs apply with the
-          same initial-default semantics as ALTER ADD COLUMN.
-    DROP TABLE <name> [PURGE]
-        → unregisters from the catalog; bare DROP leaves the table
-          directory on disk (external-style — re-register to
-          recover), PURGE also deletes the data and metadata
-          directories irrecoverably.
-    ALTER TABLE <name> ADD COLUMN <col> <type> [DEFAULT <literal>]
-        → metadata-only add with Iceberg-v3 initial-default
-          semantics (Table.add_column) — literal defaults only;
-          an expression default is refused (defaults are stored in
-          metadata and applied at scan: they must be constants).
-    ALTER TABLE <name> DROP COLUMN <col>
-    ALTER TABLE <name> RENAME COLUMN <old> TO <new>
-        → field-id-safe drop/rename (a later re-add can never
-          resurrect old values).
-
-Scale: CREATE … AS SELECT writes through the same partitioned append
-sink as ``Table.append`` (manifest stats, target file sizing); the
-ALTER forms are pure metadata commits — O(1) regardless of table size.
-"""
-
-from __future__ import annotations
-
-import re
-from typing import Optional
-
-from .sqldml import SqlDmlError, _IDENT, _WS, _strip_strings
-
-# the statement heads this module owns — the single source the three
-# SQL entry points (Table.sql, Catalog.sql, the CLI) route by, so the
-# routing lists can never drift
-DDL_HEADS = ("CREATE", "ALTER", "TRUNCATE", "DROP")
-
-
-def _parse_literal(text: str):
-    """A literal DEFAULT value: quoted string, number, boolean. NULL
-    and expressions are refused (NULL default == no default; an
-    expression cannot be stored as an initial-default constant)."""
-    s = text.strip()
-    m = re.fullmatch(r"'((?:[^']|'')*)'", s, re.DOTALL)
-    if m:
-        return m.group(1).replace("''", "'")
-    if re.fullmatch(r"[+-]?\d+", s):
-        return int(s)
-    if re.fullmatch(r"[+-]?(\d+\.\d*|\.\d+|\d+)([eE][+-]?\d+)?", s):
-        return float(s)
-    if s.upper() in ("TRUE", "FALSE"):
-        return s.upper() == "TRUE"
-    raise SqlDmlError(
-        f"DEFAULT must be a literal (string/number/boolean), got "
-        f"{text.strip()[:40]!r} — expression defaults aren't storable "
-        "as initial-default constants; compute them in the INSERT"
-    )
-
-
-def _split_top_commas(text: str) -> list[str]:
-    """Split on commas at parenthesis depth 0 (so ``decimal(10,2)``
-    stays one item). Operates on already-masked text offsets but
-    returns slices of the original."""
-    out, depth, last = [], 0, 0
-    masked = _strip_strings(text)
-    for i, ch in enumerate(masked):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(text[last:i])
-            last = i + 1
-    out.append(text[last:])
-    return [s for s in (p.strip() for p in out) if s]
-
-
-def _create_from_columns(catalog, spark, name, cols_text, part_text, **create_kw):
-    """CREATE TABLE <name> (col type [DEFAULT lit], …) [PARTITIONED
-    BY …] — empty table from an explicit column list. ``cols_text`` is
-    the UNMASKED column-group text, ``part_text`` the PARTITIONED BY
-    column list or None."""
-    from pyspark.sql import types as T
-
-    from .schema import DEFAULT_KEY
-
-    if catalog is None or spark is None:
-        raise SqlDmlError(
-            "CREATE TABLE needs catalog= and spark= (a bound table "
-            "has nowhere to create a sibling)"
-        )
-    fields = []
-    for item in _split_top_commas(cols_text):
-        im = re.match(
-            rf"^({_IDENT}){_WS}(.+?)(?:{_WS}DEFAULT{_WS}(.+))?$",
-            _strip_strings(item),
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not im:
-            raise SqlDmlError(
-                f"bad column definition {item[:40]!r} — expected "
-                "<name> <type> [DEFAULT <literal>]"
-            )
-        cname = im.group(1)
-        dtype_text = item[im.start(2) : im.end(2)].strip()
-        try:
-            dt = T._parse_datatype_string(dtype_text)
-        except Exception:
-            raise SqlDmlError(
-                f"unparseable type {dtype_text!r} for column {cname!r}"
-            )
-        md = {}
-        if im.group(3) is not None:
-            md[DEFAULT_KEY] = _parse_literal(item[im.start(3) : im.end(3)])
-        fields.append(T.StructField(cname, dt, True, md))
-    spec = _identity_spec(part_text, [f.name for f in fields])
-    return catalog.create_table(
-        spark, name, T.StructType(fields), partition_spec=spec, **create_kw
-    )
-
-
-def _identity_spec(part_text, available):
-    """PARTITIONED BY column list → identity partition spec, shared by
-    both CREATE branches (so validation and spec shape can't drift)."""
-    if not part_text:
-        return None
-    cols = [c.strip() for c in part_text.split(",") if c.strip()]
-    missing = [c for c in cols if c not in available]
-    if missing:
-        raise SqlDmlError(
-            f"PARTITIONED BY column(s) {missing} not in {available}"
-        )
-    return [
-        {"name": c, "transform": "identity", "source": c} for c in cols
-    ]
-
-
-def execute_ddl(
-    sql: str,
-    *,
-    catalog=None,
-    table=None,
-    spark=None,
-    **create_kw,
-):
-    """Parse one DDL statement and run it through the engine. Pass
-    ``catalog`` (+ ``spark``) for CREATE TABLE and name-resolved ALTER,
-    or a bound ``table`` for ALTER against that table. ``create_kw``
-    forwards to ``Catalog.create_table`` (``properties=...``) and is
-    only meaningful for CREATE — other statements refuse it loudly (a
-    silently-dropped ``isolation=``/``mode=`` would let a caller
-    believe an option applied)."""
-    stmt = sql.strip().rstrip(";").strip()
-    masked = _strip_strings(stmt)
-    head = masked.lstrip().split(None, 1)[0].upper() if masked.strip() else ""
-    if create_kw and head != "CREATE":
-        raise SqlDmlError(
-            f"unexpected keyword argument(s) {sorted(create_kw)} for "
-            f"{head or '<empty>'} — only CREATE TABLE accepts "
-            "create_table options (properties=...)"
-        )
-
-    def _get_table(name: str):
-        if table is not None:
-            import os as _os
-
-            base = _os.path.basename(table.root.rstrip("/"))
-            if name not in ("*", base):
-                raise SqlDmlError(
-                    f"statement targets {name!r} but the bound table "
-                    f"is {base!r}"
-                )
-            return table
-        if catalog is None or spark is None:
-            raise SqlDmlError("pass catalog= and spark=, or table=")
-        return catalog.load_table(spark, name)
-
-    if head == "CREATE":
-        if catalog is None or spark is None:
-            raise SqlDmlError(
-                "CREATE TABLE needs catalog= and spark= (a bound table "
-                "has nowhere to create a sibling)"
-            )
-        # column-list form: CREATE TABLE <n> ( … ) [PARTITIONED BY (…)]
-        # — the column group must be found by BALANCED-paren scan (a
-        # greedy regex would swallow a trailing PARTITIONED BY group;
-        # nested parens appear legitimately in decimal(10,2))
-        clh = re.match(
-            rf"^CREATE{_WS}TABLE{_WS}({_IDENT})\s*\(",
-            masked,
-            re.IGNORECASE,
-        )
-        if clh:
-            depth, close = 1, -1
-            for i in range(clh.end(), len(masked)):
-                depth += (masked[i] == "(") - (masked[i] == ")")
-                if depth == 0:
-                    close = i
-                    break
-            if close < 0:
-                raise SqlDmlError("unbalanced '(' in CREATE TABLE")
-            cols_span = (clh.end(), close)
-            tail = masked[close + 1 :].strip()
-            # a paren group right after the name is ALWAYS a column
-            # list in CREATE (CTAS requires AS before its query, so a
-            # column legitimately named select/values/with/table must
-            # not be mistaken for a query body); if the content IS a
-            # query, the column parse fails and the error below points
-            # at the missing AS
-            pm = re.fullmatch(
-                rf"(?:PARTITIONED{_WS}BY\s*\(([^)]*)\))?",
-                tail,
-                re.IGNORECASE,
-            )
-            if pm is None:
-                raise SqlDmlError(
-                    f"unexpected text after column list: {tail[:40]!r}"
-                )
-            try:
-                return _create_from_columns(
-                    catalog,
-                    spark,
-                    clh.group(1),
-                    stmt[cols_span[0] : cols_span[1]],
-                    pm.group(1),
-                    **create_kw,
-                )
-            except SqlDmlError:
-                if re.match(
-                    r"^\s*[\s(]*(SELECT|VALUES|WITH|TABLE)\b",
-                    masked[cols_span[0] : cols_span[1]],
-                    re.IGNORECASE,
-                ):
-                    raise SqlDmlError(
-                        "a query body after the table name needs AS: "
-                        "CREATE TABLE <name> AS (SELECT …)"
-                    )
-                raise
-        m = re.match(
-            rf"^CREATE{_WS}TABLE{_WS}({_IDENT})"
-            rf"(?:{_WS}PARTITIONED{_WS}BY\s*\(([^)]*)\))?"
-            rf"{_WS}AS{_WS}",
-            masked,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise SqlDmlError(
-                "expected: CREATE TABLE <name> (col type, …) "
-                "[PARTITIONED BY (c1, …)] | CREATE TABLE <name> "
-                "[PARTITIONED BY (c1, …)] AS SELECT …"
-            )
-        name = m.group(1)
-        query = stmt[m.end() :].strip()
-        # probe past any leading parens/whitespace — compound bodies
-        # like `( (SELECT..) UNION ALL (SELECT..) )` are valid
-        probe = re.sub(r"^[\s(]+", "", query)
-        if not re.match(
-            r"^(SELECT|VALUES|WITH|TABLE)\b", probe, re.IGNORECASE
-        ):
-            raise SqlDmlError(
-                f"CREATE TABLE AS body must be a SELECT/VALUES query, "
-                f"got {query[:40]!r}"
-            )
-        df = spark.sql(query)
-        spec = _identity_spec(m.group(2), df.columns)
-        t = catalog.create_table(
-            spark, name, df.schema, partition_spec=spec, **create_kw
-        )
-        t.append(df)
-        return t
-
-    if head == "ALTER":
-        base = re.match(
-            rf"^ALTER{_WS}TABLE{_WS}({_IDENT}){_WS}", masked, re.IGNORECASE
-        )
-        if not base:
-            raise SqlDmlError("expected: ALTER TABLE <name> <action>")
-        t = _get_table(base.group(1))
-        rest = stmt[base.end() :].strip()
-        masked_rest = masked[base.end() :].strip()
-
-        m = re.match(
-            rf"^ADD{_WS}COLUMN{_WS}({_IDENT}){_WS}(.+?)"
-            rf"(?:{_WS}DEFAULT{_WS}(.+))?$",
-            masked_rest,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            col = m.group(1)
-            # type and default come from the UNMASKED text (a string
-            # default's content was blanked in `masked`)
-            dtype_span = rest[m.start(2) : m.end(2)].strip()
-            default = (
-                _parse_literal(rest[m.start(3) : m.end(3)])
-                if m.group(3) is not None
-                else None
-            )
-            return t.add_column(col, dtype_span, default=default)
-
-        m = re.match(
-            rf"^DROP{_WS}COLUMN{_WS}({_IDENT})$", masked_rest, re.IGNORECASE
-        )
-        if m:
-            return t.drop_column(m.group(1))
-
-        m = re.match(
-            rf"^RENAME{_WS}COLUMN{_WS}({_IDENT}){_WS}TO{_WS}({_IDENT})$",
-            masked_rest,
-            re.IGNORECASE,
-        )
-        if m:
-            return t.rename_column(m.group(1), m.group(2))
-
-        raise SqlDmlError(
-            f"unsupported ALTER action {rest[:40]!r} — grammar: "
-            "ADD COLUMN <col> <type> [DEFAULT <lit>] | DROP COLUMN "
-            "<col> | RENAME COLUMN <old> TO <new>"
-        )
-
-    if head == "TRUNCATE":
-        m = re.match(
-            rf"^TRUNCATE{_WS}TABLE{_WS}({_IDENT})$", masked, re.IGNORECASE
-        )
-        if not m:
-            raise SqlDmlError("expected: TRUNCATE TABLE <name>")
-        return _get_table(m.group(1)).truncate()
-
-    if head == "DROP":
-        m = re.match(
-            rf"^DROP{_WS}TABLE{_WS}({_IDENT})({_WS}PURGE)?$",
-            masked,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise SqlDmlError("expected: DROP TABLE <name> [PURGE]")
-        if catalog is None:
-            raise SqlDmlError("DROP TABLE needs catalog=")
-        name = m.group(1)
-        root = catalog.resolve(name)  # raises if unknown
-        catalog.unregister(name)
-        if m.group(2):
-            import shutil
-
-            try:
-                shutil.rmtree(root)
-            except OSError as e:
-                # the name is already unregistered; a swallowed purge
-                # failure would report "deleted" while data remains
-                raise SqlDmlError(
-                    f"DROP TABLE PURGE: {name!r} was unregistered but "
-                    f"deleting {root!r} failed ({e}); remove the "
-                    "directory manually or re-register and retry"
-                ) from e
-        return root
-
-    raise SqlDmlError(
-        f"unsupported statement {head or sql!r} — this entry point "
-        "accepts CREATE TABLE [… AS] / ALTER TABLE / TRUNCATE TABLE / "
-        "DROP TABLE only"
-    )
+from .sql import SqlDmlError, _parse_literal, execute as execute_ddl  # noqa: F401

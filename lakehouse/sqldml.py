@@ -1,702 +1,4 @@
-"""SQL DML front-end: ``MERGE INTO`` / ``UPDATE`` / ``DELETE`` text
-dispatched to the engine's native ops (VERDICT r3 "What's missing" #2).
+"""The SQL front-end's DML entry point, kept under its original name;
+every statement goes through :func:`lakehouse.sql.execute`."""
 
-Why: analysts get snapshot-pinned READ views (``Table.create_or_
-replace_view``, ``Catalog.register_views``) — reference parity, since
-the reference's Athena surface over bronze is read-only
-(/root/reference/README.md:104-114) — but Delta/Iceberg users also
-write ``spark.sql("MERGE INTO …")``. Spark's own parser can't target
-this engine's tables (no DSv2 catalog plugin in a --py-files deploy),
-so this module parses the standard DML grammar directly and dispatches
-to ``Table.merge`` / ``Table.update`` / ``Table.delete`` — the same
-pruned, keys-only-anti-join, MoR-capable paths the Python API takes.
-Nothing here touches data: parse errors cost zero Spark jobs.
-
-Supported grammar (case-insensitive keywords; ``<pred>``/``<expr>``
-are passed through to Spark SQL verbatim, so any engine-supported
-expression works):
-
-    INSERT INTO <table> [(c1, ...)] SELECT ... | VALUES ...
-        → positional mapping, unlisted columns take their declared
-          default / NULL; generated + identity columns flow through
-          the append path's own compute/assign rules
-    DELETE FROM <table> WHERE <pred>
-    UPDATE <table> SET col = <expr> [, ...] WHERE <pred>
-    MERGE INTO <table> [AS] [t] USING <src> [AS] [s] ON <key-equality>
-        clause combinations:
-        WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *
-            → upsert (the engine's closed form: source row replaces
-              its match, unmatched source rows insert)
-        + WHEN NOT MATCHED BY SOURCE THEN DELETE      → full sync
-        + WHEN NOT MATCHED BY SOURCE AND <pred> THEN DELETE
-        + WHEN NOT MATCHED BY SOURCE THEN UPDATE SET col = <expr>, ...
-        WHEN MATCHED THEN DELETE                       → delete-by-key
-        WHEN MATCHED THEN UPDATE SET *                 → update-only
-              (source pre-filtered to existing keys, one keys-only
-              semi-join — unmatched source rows are NOT inserted)
-        WHEN NOT MATCHED THEN INSERT *                 → insert-only
-              (source pre-filtered by a keys-only anti-join)
-
-``<src>`` is a registered Spark view/table name or a parenthesized
-subquery. ``<key-equality>`` must be a single equi-condition on the
-SAME column name both sides (``t.k = s.k`` or bare ``k``) — the
-engine's merge key. Column-level ``UPDATE SET c = <expr>`` on the
-MATCHED clause is NOT supported (the closed form replaces matched rows
-with source rows; reshape the source instead) and is refused loudly,
-as is anything else outside the grammar — a clear error beats silently
-wrong DML.
-
-Scale: identical to the Python API — the parser only chooses which
-existing operator runs; every plan property (manifest pruning,
-keys-only joins, single exchange per side, MoR O(source) commits)
-is the dispatched op's own.
-"""
-
-from __future__ import annotations
-
-import re
-from typing import Optional
-
-from .errors import LakehouseError
-
-
-class SqlDmlError(LakehouseError):
-    pass
-
-
-_WS = r"\s+"
-
-
-def _strip_strings(sql: str) -> str:
-    """Blank out string literals (keeping length) so keyword regexes
-    never match inside quoted text."""
-    out = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in ("'", '"'):  # Spark accepts double-quoted literals too
-            q = c
-            j = i + 1
-            while j < n:
-                if sql[j] == q and j + 1 < n and sql[j + 1] == q:
-                    j += 2
-                    continue
-                if sql[j] == q:
-                    break
-                j += 1
-            if j >= n:
-                raise SqlDmlError("unterminated string literal")
-            out.append(q + " " * (j - i - 1) + q)
-            i = j + 1
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
-
-
-def _depths(masked: str) -> list[int]:
-    """Parenthesis depth at each position of the masked statement."""
-    out, d = [], 0
-    for c in masked:
-        if c == "(":
-            out.append(d)
-            d += 1
-        elif c == ")":
-            d -= 1
-            out.append(d)
-        else:
-            out.append(d)
-    return out
-
-
-def _kw_pos(masked: str, pattern: str, start: int = 0) -> Optional[re.Match]:
-    """First keyword match at parenthesis depth 0 — keywords inside a
-    subquery or a parenthesized expression (a JOIN's ON, a scalar
-    subquery's WHERE, a (CASE WHEN … THEN …)) never split the outer
-    statement."""
-    depths = _depths(masked)
-    for m in re.compile(pattern, re.IGNORECASE).finditer(masked, start):
-        if depths[m.start()] == 0:
-            return m
-    return None
-
-
-def _split_top_commas(s: str) -> list[str]:
-    """Split on commas outside parentheses/strings (s is UNMASKED; use
-    the masked twin for positions)."""
-    masked = _strip_strings(s)
-    parts, depth, last = [], 0, 0
-    for i, c in enumerate(masked):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[last:i])
-            last = i + 1
-    parts.append(s[last:])
-    return [p.strip() for p in parts if p.strip()]
-
-
-def _parse_set_list(text: str) -> dict[str, str]:
-    out: dict[str, str] = {}
-    for item in _split_top_commas(text):
-        m = re.match(r"^\s*([A-Za-z_][\w]*)\s*=\s*(.+)$", item, re.DOTALL)
-        if not m:
-            raise SqlDmlError(f"cannot parse SET assignment: {item!r}")
-        col = m.group(1)
-        if col in out:
-            raise SqlDmlError(f"column {col!r} assigned twice in SET")
-        out[col] = m.group(2).strip()
-    return out
-
-
-_IDENT = r"[A-Za-z_][\w.\-/]*"
-
-
-def _parse_target(text: str) -> tuple[str, Optional[str]]:
-    """'<name> [AS] [alias]' → (name, alias)."""
-    m = re.match(
-        rf"^\s*({_IDENT})(?:{_WS}(?:AS{_WS})?([A-Za-z_]\w*))?\s*$",
-        text,
-        re.IGNORECASE,
-    )
-    if not m:
-        raise SqlDmlError(f"cannot parse table reference: {text!r}")
-    alias = m.group(2)
-    if alias and alias.upper() in ("USING", "ON", "WHEN", "SET", "WHERE"):
-        raise SqlDmlError(f"cannot parse table reference: {text!r}")
-    return m.group(1), alias
-
-
-def _parse_on_key(on_text: str, t_alias, s_alias, t_name, s_name) -> str:
-    """Single equi-condition on the same column name both sides."""
-    m = re.match(
-        r"^\s*(?:([A-Za-z_]\w*)\s*\.\s*)?([A-Za-z_]\w*)\s*=\s*"
-        r"(?:([A-Za-z_]\w*)\s*\.\s*)?([A-Za-z_]\w*)\s*$",
-        on_text,
-    )
-    if not m:
-        raise SqlDmlError(
-            f"ON clause must be a single equi-condition "
-            f"'t.key = s.key': {on_text!r}"
-        )
-    qa, ca, qb, cb = m.groups()
-    if ca != cb:
-        raise SqlDmlError(
-            f"merge key must be the SAME column name on both sides "
-            f"(got {ca!r} = {cb!r}); alias the source column first"
-        )
-    valid = {
-        a for a in (t_alias, s_alias, t_name, s_name) if a is not None
-    }
-    for q in (qa, qb):
-        if q is not None and q not in valid:
-            raise SqlDmlError(
-                f"unknown qualifier {q!r} in ON clause "
-                f"(expected one of {sorted(valid)})"
-            )
-    if qa is not None and qb is not None and qa == qb:
-        raise SqlDmlError(
-            "ON clause qualifies both sides with the same alias"
-        )
-    return ca
-
-
-class _MergeClauses:
-    matched_update_star = False
-    matched_delete = False
-    not_matched_insert_star = False
-    nms: Optional[object] = None  # "delete" | dict
-    nms_condition: Optional[str] = None
-
-
-def _parse_when_clauses(rest: str, masked_rest: str) -> _MergeClauses:
-    out = _MergeClauses()
-    pat = re.compile(
-        r"WHEN\s+(NOT\s+MATCHED\s+BY\s+SOURCE|NOT\s+MATCHED|MATCHED)"
-        r"(\s+AND\s+)?",
-        re.IGNORECASE,
-    )
-    depths = _depths(masked_rest)
-    matches = [
-        m for m in pat.finditer(masked_rest) if depths[m.start()] == 0
-    ]
-    if not matches:
-        raise SqlDmlError("MERGE has no WHEN clauses")
-    if masked_rest[: matches[0].start()].strip():
-        raise SqlDmlError(
-            f"unexpected text before first WHEN clause: "
-            f"{rest[: matches[0].start()].strip()!r}"
-        )
-    for i, m in enumerate(matches):
-        end = matches[i + 1].start() if i + 1 < len(matches) else len(rest)
-        body = rest[m.end() :end].strip()
-        masked_body = masked_rest[m.end() :end].strip()
-        kind = re.sub(r"\s+", " ", m.group(1).upper())
-        cond = None
-        if m.group(2):  # ... AND <cond> THEN <action>
-            tm = _kw_pos(masked_body, r"\bTHEN\b")
-            if not tm:
-                raise SqlDmlError(f"WHEN clause missing THEN: {body!r}")
-            cond = body[: tm.start()].strip()
-            action = body[tm.end() :].strip()
-        else:
-            tm = _kw_pos(masked_body, r"^\s*THEN\b")
-            if not tm:
-                raise SqlDmlError(f"WHEN clause missing THEN: {body!r}")
-            action = body[tm.end() :].strip()
-        a_up = re.sub(r"\s+", " ", action.upper().strip())
-        if kind == "MATCHED":
-            if cond:
-                raise SqlDmlError(
-                    "WHEN MATCHED AND <cond> is not supported (the "
-                    "closed form replaces every matched row); filter "
-                    "the USING source instead"
-                )
-            if a_up == "UPDATE SET *":
-                out.matched_update_star = True
-            elif a_up == "DELETE":
-                out.matched_delete = True
-            else:
-                raise SqlDmlError(
-                    f"unsupported WHEN MATCHED action {action!r} — "
-                    "only 'UPDATE SET *' or 'DELETE' (column-level "
-                    "SET: reshape the USING source instead)"
-                )
-        elif kind == "NOT MATCHED":
-            if cond:
-                raise SqlDmlError(
-                    "WHEN NOT MATCHED AND <cond> is not supported; "
-                    "filter the USING source instead"
-                )
-            if a_up in ("INSERT *", "INSERT"):
-                out.not_matched_insert_star = True
-            else:
-                raise SqlDmlError(
-                    f"unsupported WHEN NOT MATCHED action {action!r} "
-                    "— only 'INSERT *'"
-                )
-        else:  # NOT MATCHED BY SOURCE
-            if out.nms is not None:
-                raise SqlDmlError(
-                    "at most one WHEN NOT MATCHED BY SOURCE clause"
-                )
-            if a_up == "DELETE":
-                out.nms = "delete"
-            elif a_up.startswith("UPDATE SET"):
-                out.nms = _parse_set_list(
-                    re.sub(
-                        r"^\s*UPDATE\s+SET\b",
-                        "",
-                        action,
-                        flags=re.IGNORECASE,
-                    )
-                )
-            else:
-                raise SqlDmlError(
-                    f"unsupported WHEN NOT MATCHED BY SOURCE action "
-                    f"{action!r} — 'DELETE' or 'UPDATE SET c = expr'"
-                )
-            out.nms_condition = cond
-    if out.matched_delete and (
-        out.matched_update_star or out.not_matched_insert_star
-    ):
-        raise SqlDmlError(
-            "WHEN MATCHED THEN DELETE cannot combine with update/"
-            "insert clauses (ambiguous: every source row both replaces "
-            "and deletes its match)"
-        )
-    if not (
-        out.matched_update_star
-        or out.matched_delete
-        or out.not_matched_insert_star
-        or out.nms is not None
-    ):
-        raise SqlDmlError("MERGE has no actionable clauses")
-    if out.nms is not None and not (
-        out.matched_update_star
-        or out.matched_delete
-        or out.not_matched_insert_star
-    ):
-        # the engine's closed form always writes the source rows; a
-        # statement whose ONLY action is NOT MATCHED BY SOURCE would
-        # silently upsert them — refuse rather than deviate from SQL
-        raise SqlDmlError(
-            "WHEN NOT MATCHED BY SOURCE needs a matched/not-matched "
-            "clause too (the closed form rewrites matched rows from "
-            "the source); add WHEN MATCHED THEN UPDATE SET *"
-        )
-    if (
-        out.nms is not None
-        and out.not_matched_insert_star
-        and not (out.matched_update_star or out.matched_delete)
-    ):
-        # insert-only pre-filters the source with an anti-join; the
-        # already-matched source keys would vanish from the match set
-        # and NOT MATCHED BY SOURCE would wrongly delete their targets
-        raise SqlDmlError(
-            "WHEN NOT MATCHED THEN INSERT * alone cannot combine with "
-            "WHEN NOT MATCHED BY SOURCE (the insert-only pre-filter "
-            "would shrink the match set); add WHEN MATCHED THEN "
-            "UPDATE SET *"
-        )
-    return out
-
-
-def _resolve_source(spark, catalog, src_text: str):
-    src_text = src_text.strip()
-    if src_text.startswith("("):
-        if not src_text.endswith(")"):
-            raise SqlDmlError(f"unbalanced subquery: {src_text!r}")
-        return spark.sql(src_text[1:-1])
-    if catalog is not None and src_text in (catalog.tables() or []):
-        return catalog.load_table(spark, src_text).scan()
-    return spark.table(src_text)
-
-
-def _insert_overwrite(t, spark, stmt, ow, **op_kw):
-    """``INSERT OVERWRITE [TABLE] <t> [PARTITION (c = lit, …)] <query>``
-    → ``Table.overwrite_partitions``: with a PARTITION clause the named
-    partitions are replaced (static mode — Spark semantics: a listed
-    partition column may be omitted from the query and is filled from
-    its literal); without one the replaced partitions are discovered
-    from the incoming rows (dynamic mode). One atomic commit either
-    way; the op's own guards (row-outside-filter, mixed-spec) apply."""
-    from pyspark.sql import functions as F
-
-    sp = spark or t.spark
-    query = stmt[ow.end() :].strip()
-    probe = re.sub(r"^[\s(]+", "", query)
-    if not re.match(r"^(SELECT|VALUES|WITH|TABLE)\b", probe, re.IGNORECASE):
-        raise SqlDmlError(
-            f"INSERT OVERWRITE body must be a SELECT/VALUES query, "
-            f"got {query[:40]!r}"
-        )
-    df = sp.sql(query)
-    part_filter = None
-    if ow.group(2) is not None:
-        from .sqlddl import _parse_literal, _split_top_commas
-
-        raw = stmt[ow.start(2) : ow.end(2)]
-        part_sources = [p["source"] for p in t.meta.partition_spec]
-        part_filter = []
-        for item in _split_top_commas(raw):
-            pm = re.match(
-                rf"^({_IDENT})\s*=\s*(.+)$",
-                _strip_strings(item),
-                re.DOTALL,
-            )
-            if not pm:
-                raise SqlDmlError(
-                    f"bad PARTITION entry {item[:40]!r} — expected "
-                    "<column> = <literal>"
-                )
-            col = pm.group(1)
-            if col not in part_sources:
-                raise SqlDmlError(
-                    f"PARTITION column {col!r} is not a partition "
-                    f"source column {part_sources}"
-                )
-            val = _parse_literal(item[pm.start(2) : pm.end(2)])
-            part_filter.append((col, "=", val))
-            if col not in df.columns:
-                # Spark static-partition semantics: a listed partition
-                # column may be omitted from the query body
-                df = df.withColumn(
-                    col, F.lit(val).cast(t.schema[col].dataType)
-                )
-    from .schema import conform
-
-    return t.overwrite_partitions(
-        conform(df, t.schema), partition_filter=part_filter, **op_kw
-    )
-
-
-def execute_dml(
-    sql: str,
-    *,
-    catalog=None,
-    table=None,
-    spark=None,
-    mode: str = "cow",
-    **op_kw,
-):
-    """Parse one DML statement and run it through the engine.
-
-    Pass either ``catalog`` (table names resolve through it) or a bound
-    ``table`` (the statement's table name must match its root basename
-    or be ``*``). ``mode`` forwards to the op ("cow" | "mor";
-    DELETE also accepts "mor-pos"). Extra ``op_kw`` forward verbatim
-    (e.g. ``isolation="serializable"``). Returns the op's result
-    object. The USING source of a MERGE resolves as: catalog table →
-    registered Spark view/table → parenthesized subquery."""
-    stmt = sql.strip().rstrip(";").strip()
-    masked = _strip_strings(stmt)
-    head = masked.lstrip().split(None, 1)[0].upper() if masked.strip() else ""
-
-    def _get_table(name: str):
-        if table is not None:
-            import os as _os
-
-            base = _os.path.basename(table.root.rstrip("/"))
-            if name not in ("*", base):
-                raise SqlDmlError(
-                    f"statement targets {name!r} but the bound table "
-                    f"is {base!r}"
-                )
-            return table
-        if catalog is None:
-            raise SqlDmlError("pass catalog= or table=")
-        if spark is None:
-            raise SqlDmlError("pass spark= when using catalog=")
-        return catalog.load_table(spark, name)
-
-    if head == "INSERT":
-        ow = re.match(
-            rf"^INSERT{_WS}OVERWRITE{_WS}(?:TABLE{_WS})?({_IDENT})"
-            rf"(?:\s*PARTITION\s*\(([^)]*)\))?\s*",
-            masked,
-            re.IGNORECASE,
-        )
-        if ow:
-            return _insert_overwrite(
-                _get_table(ow.group(1)), spark, stmt, ow, **op_kw
-            )
-        m = re.match(
-            rf"^INSERT{_WS}INTO{_WS}({_IDENT})\s*(\(([^)]*)\))?\s*",
-            masked,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise SqlDmlError(
-                "expected: INSERT [INTO|OVERWRITE] <table> "
-                "[(c1, ...)] | [PARTITION (c = lit, ...)] "
-                "SELECT ... | VALUES ..."
-            )
-        col_list = m.group(3)
-        end = m.end()
-        # `INSERT INTO t (SELECT ...)` — standard SQL allows a
-        # parenthesized query body with no column list; the optional
-        # paren group must not capture it as column names (it would
-        # fail later with a confusing 'columns not in schema').
-        # A real column list never starts with a query keyword.
-        if col_list is not None and re.match(
-            r"^[\s(]*(SELECT|VALUES|WITH|TABLE)\b", col_list, re.IGNORECASE
-        ):
-            col_list = None
-            end = m.end(1)
-        t = _get_table(m.group(1))
-        sp = spark or t.spark
-        query = stmt[end:].strip()
-        if query.startswith("(") and query.endswith(")"):
-            # parenthesized query body: strip ONE outer layer, only if
-            # it is balanced as a single group (so `(SELECT..) UNION
-            # (SELECT..)` is left intact for the engine parser)
-            depth, whole = 0, True
-            masked_q = _strip_strings(query)
-            for i, ch in enumerate(masked_q):
-                depth += (ch == "(") - (ch == ")")
-                if depth == 0 and i < len(masked_q) - 1:
-                    whole = False
-                    break
-            inner = query[1:-1].strip() if whole else ""
-            if re.match(r"^(SELECT|VALUES|WITH|TABLE)\b", inner, re.IGNORECASE):
-                query = inner
-        # a compound body like `(SELECT..) UNION ALL (SELECT..)` keeps
-        # its parens — probe past them for the query keyword; the
-        # engine parser still rejects malformed text loudly
-        probe = re.sub(r"^[\s(]+", "", query)
-        if not re.match(r"^(SELECT|VALUES|WITH|TABLE)\b", probe, re.IGNORECASE):
-            raise SqlDmlError(
-                f"INSERT body must be a SELECT/VALUES query, got "
-                f"{query[:40]!r}"
-            )
-        df = sp.sql(query)
-        names = [f.name for f in t.schema.fields]
-        if col_list is not None:
-            listed = [c.strip() for c in col_list.split(",") if c.strip()]
-            unknown = [c for c in listed if c not in names]
-            if unknown:
-                raise SqlDmlError(
-                    f"INSERT column(s) {unknown} not in table schema"
-                )
-            targets = listed
-        else:
-            targets = names
-        if len(df.columns) != len(targets):
-            raise SqlDmlError(
-                f"INSERT supplies {len(df.columns)} column(s) for "
-                f"{len(targets)} target column(s)"
-            )
-        # positional mapping (standard SQL), then conform: unlisted
-        # columns take their declared default / NULL; generated and
-        # identity columns flow through the append path's own rules
-        df = df.toDF(*targets)
-        from .schema import conform
-
-        return t.append(conform(df, t.schema), **op_kw)
-
-    if head == "DELETE":
-        m = re.match(
-            rf"^DELETE{_WS}FROM{_WS}({_IDENT})({_WS}WHERE{_WS})",
-            masked,
-            re.IGNORECASE,
-        )
-        if not m:
-            raise SqlDmlError(
-                "expected: DELETE FROM <table> WHERE <predicate>"
-            )
-        t = _get_table(m.group(1))
-        pred = stmt[m.end(2) :].strip()
-        if not pred:
-            raise SqlDmlError("empty WHERE predicate")
-        return t.delete(pred, mode=mode, **op_kw)
-
-    if head == "UPDATE":
-        m = re.match(
-            rf"^UPDATE{_WS}({_IDENT}){_WS}SET{_WS}", masked, re.IGNORECASE
-        )
-        if not m:
-            raise SqlDmlError(
-                "expected: UPDATE <table> SET c = expr[, ...] "
-                "WHERE <predicate>"
-            )
-        t = _get_table(m.group(1))
-        wm = _kw_pos(masked, rf"{_WS}WHERE{_WS}", m.end())
-        if not wm:
-            raise SqlDmlError(
-                "UPDATE requires a WHERE clause (use WHERE true "
-                "to update every row explicitly)"
-            )
-        set_exprs = _parse_set_list(stmt[m.end() : wm.start()])
-        pred = stmt[wm.end() :].strip()
-        if not pred:
-            raise SqlDmlError("empty WHERE predicate")
-        return t.update(set_exprs, pred, mode=mode, **op_kw)
-
-    if head == "MERGE":
-        m = re.match(rf"^MERGE{_WS}INTO{_WS}", masked, re.IGNORECASE)
-        if not m:
-            raise SqlDmlError("expected: MERGE INTO <table> ...")
-        um = _kw_pos(masked, rf"{_WS}USING{_WS}", m.end())
-        if not um:
-            raise SqlDmlError("MERGE missing USING")
-        t_name, t_alias = _parse_target(stmt[m.end() : um.start()])
-        onm = _kw_pos(masked, rf"{_WS}ON{_WS}", um.end())
-        if not onm:
-            raise SqlDmlError("MERGE missing ON")
-        src_text = stmt[um.end() : onm.start()].strip()
-        s_alias = None
-        if not src_text.endswith(")"):
-            sm = re.match(
-                rf"^({_IDENT}|\(.*\))(?:{_WS}(?:AS{_WS})?([A-Za-z_]\w*))?$",
-                src_text,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if sm:
-                src_text, s_alias = sm.group(1), sm.group(2)
-        whenm = _kw_pos(masked, rf"{_WS}WHEN{_WS}", onm.end())
-        if not whenm:
-            raise SqlDmlError("MERGE has no WHEN clauses")
-        on_text = stmt[onm.end() : whenm.start()]
-        t = _get_table(t_name)
-        sp = spark or t.spark
-        src = _resolve_source(sp, catalog, src_text)
-        s_name = src_text if re.match(rf"^{_IDENT}$", src_text) else None
-        key = _parse_on_key(on_text, t_alias, s_alias, t_name, s_name)
-        rest = stmt[whenm.start() :]
-        clauses = _parse_when_clauses(rest, masked[whenm.start() :])
-
-        from pyspark.sql import functions as F
-
-        # the statement text is the ONLY channel for per-row semantics:
-        # a source column that happens to be named like the engine's op
-        # marker (the default is 'op' — ubiquitous in CDC feeds) must
-        # NOT silently turn an upsert into deletes, so the front-end
-        # always owns a reserved marker column instead
-        op_col = "__sqldml_op"
-        if "op_col" in op_kw:
-            # silently dropping it would turn a caller's per-row CDC
-            # delete semantics into all-upserts with no indication
-            raise SqlDmlError(
-                "op_col= is not accepted by the SQL front-end (it owns "
-                "the op marker); use WHEN MATCHED THEN DELETE, or the "
-                "Python Table.merge(op_col=...) API for per-row CDC ops"
-            )
-        if op_col in src.columns:
-            raise SqlDmlError(
-                f"source column {op_col!r} collides with the DML "
-                "front-end's reserved op marker; rename it"
-            )
-        if clauses.matched_delete:
-            # delete-by-key: every source row is a DELETE op (unmatched
-            # keys are harmless no-ops in both COW and MoR paths)
-            src = src.withColumn(op_col, F.lit("delete"))
-        else:
-            src = src.withColumn(
-                op_col, F.lit(None).cast("string")
-            )
-        # NMS condition / update-set expressions are target-domain:
-        # strip the statement's own target qualifier (t.col → col) and
-        # refuse source-qualified references loudly
-        def _target_expr(expr: str) -> str:
-            masked_e = _strip_strings(expr)
-            for q in (s_alias, s_name):
-                if q and re.search(
-                    rf"\b{re.escape(q)}\s*\.", masked_e, re.IGNORECASE
-                ):
-                    raise SqlDmlError(
-                        f"NOT MATCHED BY SOURCE expressions see only "
-                        f"the TARGET row; {q!r}-qualified reference in "
-                        f"{expr!r}"
-                    )
-            for q in (t_alias, t_name):
-                if not q:
-                    continue
-                pat = re.compile(
-                    rf"\b{re.escape(q)}\s*\.\s*", re.IGNORECASE
-                )
-                pieces, last = [], 0
-                for m in pat.finditer(masked_e):
-                    pieces.append(expr[last : m.start()])
-                    last = m.end()
-                pieces.append(expr[last:])
-                expr = "".join(pieces)
-                masked_e = _strip_strings(expr)
-            return expr
-
-        nms = clauses.nms
-        nms_condition = clauses.nms_condition
-        if isinstance(nms, dict):
-            nms = {c: _target_expr(e) for c, e in nms.items()}
-        if isinstance(nms_condition, str):
-            nms_condition = _target_expr(nms_condition)
-        if clauses.matched_delete:
-            pass
-        elif clauses.matched_update_star and not clauses.not_matched_insert_star:
-            # update-only: keys-only semi-join pre-filter, so unmatched
-            # source rows are NOT inserted (one column-pruned key probe)
-            src = src.join(
-                t.scan(columns=[key]).select(key), on=key, how="left_semi"
-            )
-        elif clauses.not_matched_insert_star and not clauses.matched_update_star:
-            # insert-only: keys-only anti-join pre-filter
-            src = src.join(
-                t.scan(columns=[key]).select(key), on=key, how="left_anti"
-            )
-        return t.merge(
-            src,
-            key=key,
-            mode=mode,
-            op_col=op_col,
-            not_matched_by_source=nms,
-            not_matched_by_source_condition=nms_condition,
-            **op_kw,
-        )
-
-    raise SqlDmlError(
-        f"unsupported statement {head or sql!r} — this entry point "
-        "accepts INSERT INTO / MERGE INTO / UPDATE / DELETE only "
-        "(reads: register_views + spark.sql)"
-    )
+from .sql import SqlDmlError, execute as execute_dml  # noqa: F401

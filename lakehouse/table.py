@@ -1157,20 +1157,13 @@ class Table:
 
     def sql(self, statement: str, **kw):
         """Run one DML (``INSERT`` / ``MERGE INTO`` / ``UPDATE`` /
-        ``DELETE``) or DDL (``ALTER TABLE``) statement against THIS
-        table (the table name in the statement must match the root
-        basename, or be ``*``) — lakehouse/sqldml.py + sqlddl.py parse
-        and dispatch to the native ops."""
-        head = statement.strip().split(None, 1)[0].upper() if statement.strip() else ""
-        from .sqlddl import DDL_HEADS
+        ``DELETE``) or DDL (``ALTER`` / ``TRUNCATE TABLE``) statement
+        against THIS table (the table name in the statement must match
+        the root basename) — Spark's parser reads it and
+        lakehouse/sql.py dispatches to the native ops."""
+        from .sql import execute
 
-        if head in DDL_HEADS:
-            from .sqlddl import execute_ddl
-
-            return execute_ddl(statement, table=self, **kw)
-        from .sqldml import execute_dml
-
-        return execute_dml(statement, table=self, **kw)
+        return execute(statement, table=self, **kw)
 
     def delete(self, predicate, *, mode: str = "cow", **kw):
         """Row-level DELETE. ``mode="cow"`` rewrites touched files;

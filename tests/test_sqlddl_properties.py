@@ -1,8 +1,7 @@
-"""Property-based hardening of the DDL parser's pure helpers
-(hypothesis): the depth-aware comma splitter and the DEFAULT-literal
-parser must round-trip arbitrary well-formed inputs and refuse the
-rest loudly — a text front-end's failure mode must never be a silent
-misparse."""
+"""Property-based hardening of the DEFAULT-literal policy
+(hypothesis): it must round-trip arbitrary well-formed literals and
+refuse the rest loudly — a text front-end's failure mode must never be
+a silent misparse."""
 
 from __future__ import annotations
 
@@ -12,31 +11,7 @@ hypothesis = pytest.importorskip("hypothesis")
 from hypothesis import given, settings, strategies as st  # noqa: E402
 
 from lakehouse.sqldml import SqlDmlError  # noqa: E402
-from lakehouse.sqlddl import _parse_literal, _split_top_commas  # noqa: E402
-
-# identifier-ish atoms and parenthesized type-ish atoms (no commas at
-# top level inside an atom unless wrapped in parens)
-_atom = st.one_of(
-    st.from_regex(r"[A-Za-z_][A-Za-z0-9_]{0,8}", fullmatch=True),
-    st.from_regex(r"[a-z]{1,6}\(\d{1,2},\d{1,2}\)", fullmatch=True),
-    st.from_regex(r"[a-z]{1,6}<[a-z]{1,6}>", fullmatch=True),
-)
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(_atom, min_size=1, max_size=8))
-def test_split_top_commas_roundtrip(parts):
-    joined = ", ".join(parts)
-    assert _split_top_commas(joined) == parts
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(_atom, min_size=2, max_size=5))
-def test_split_ignores_commas_inside_parens(parts):
-    # one item that CONTAINS a comma inside parens must stay whole
-    wrapped = f"decimal({len(parts)},2)"
-    items = [wrapped] + parts
-    assert _split_top_commas(", ".join(items)) == items
+from lakehouse.sqlddl import _parse_literal  # noqa: E402
 
 
 @settings(max_examples=200, deadline=None)

@@ -137,3 +137,23 @@ def test_every_writer_honours_the_same_contract(spark, tmp_path, contract):
     assert want == ref[contract]
     if contract == "default":
         assert all(out is not None for out in got.values()), got
+
+
+def test_empty_tasks_leave_no_file_beside_real_rows(spark, tmp_path):
+    import os
+
+    t = Table.create(spark, str(tmp_path / "t"), SCHEMA)
+    # one row in the last of 4 slices: tasks 0-2 are empty, and Spark's
+    # task 0 writes a zero-row file anyway
+    one = spark.range(0, 1, 1, 4).selectExpr("id AS k", "7 AS v")
+    assert one.rdd.getNumPartitions() == 4
+    snap = t.append(one)
+    assert (snap.summary["added_files"], snap.summary["added_records"]) == (1, 1)
+    on_disk = [
+        name
+        for _dir, _sub, names in os.walk(os.path.join(t.root, "data"))
+        for name in names
+        if ".parquet" in name
+    ]
+    assert sorted(n.endswith(".crc") for n in on_disk) == [False, True]
+    assert [tuple(r) for r in t.scan().collect()] == [(0, 7, None, None)]
