@@ -12,12 +12,39 @@ The per-row invariant used by every maintenance-parity test lives here:
 never touch payload bytes, so the fingerprint must survive
 append→compact→cluster→expire→merge unchanged; the full SNR/allclose
 check (synth reference vs decoded) runs in pytest on samples.
+
+One per-clip kernel. Every per-clip UDF here is a numpy *step* run by
+``_clip_map``: per Arrow batch it decodes each payload once, calls
+``step(sr, samples, *row_args)``, encodes a rewritten payload (PCM16;
+the transcode UDF names its target codec) and builds the result columns.
+Every payload-rewriting ``*_clips`` wrapper then swaps the payload in
+one projection pair, ``_swap_payload``: the UDF struct's ``bytes,
+sr_hz, dur_ms`` replace the stored ones, ``codec`` becomes the literal
+target codec, and the step's lineage columns follow ``codec`` (or
+precede ``bytes`` — pitch shift, time stretch, noise mixing, speed
+perturbation). Every wrapper reads and writes the ``bytes`` column.
+
+Decode errors. A payload that does not decode never fails a batch and
+never drops a row in the harness: a rewrite yields null bytes, sr_hz,
+dur_ms and lineage; a feature extractor with an ``ok`` field yields
+``ok=False`` plus nulls; a scalar UDF yields null. A few UDFs keep
+their own policy, written out where they live: ``pcm_sha1`` returns
+``"DECODE_ERROR"``, ``synth_snr_db`` / ``pair_snr_db`` return -inf,
+``audio_info`` / ``wav_header`` record the error text, the one-to-many
+splitters (``split_on_silence_clips``, energy ``word_crop_examples``)
+skip the clip, and ``make_mix_udf`` leaves a clip unmixed when its
+noise payload does not decode.
+
+``dur_ms``. A transform that changes the sample count derives
+``dur_ms`` once, in ``_dur_ms``: ``int(1000 * n / sr + 0.5)``, HALF_UP
+— the value ``ingest_wav_dir``'s ``F.round`` gives for the same bytes.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
+from itertools import repeat
 from typing import Iterator, Optional, Tuple
 
 import numpy as np
@@ -93,6 +120,112 @@ def snr_db(reference: np.ndarray, test: np.ndarray) -> float:
     return 10.0 * np.log10(p_sig / p_noise) if p_sig > 0 else float("-inf")
 
 
+# --- the per-clip kernel ------------------------------------------------------
+
+_PAYLOAD = ("bytes", "sr_hz", "dur_ms", "codec")
+_SCALAR_DTYPES = {T.LongType: "Int64", T.DoubleType: "float64"}
+
+
+def _dur_ms(n: int, sr: int) -> int:
+    """Duration of ``n`` samples at ``sr`` Hz in whole ms, HALF_UP."""
+    return int(1000 * n / sr + 0.5)
+
+
+def _clip_map(step, out_type, codec: str = "pcm16"):
+    """The Arrow batch body every per-clip UDF shares. Per row: decode
+    the payload once, run ``step(sr, x, *args)`` (``args`` = that row's
+    values of any extra UDF columns), build the output row. The output
+    shape follows ``out_type``:
+
+    - a struct led by ``bytes, sr_hz, dur_ms`` (a payload rewrite): the
+      step returns ``(y, sr_out, *lineage)``; ``y`` is encoded as
+      ``codec`` at ``sr_out`` and ``dur_ms`` is ``_dur_ms(len(y))``.
+      ``y=None`` means unchanged: the stored bytes pass through as is;
+    - a struct led by ``ok`` (a feature extractor): the step returns the
+      other fields and ``ok`` is True;
+    - any other struct: the step returns every field;
+    - ``BinaryType``: the step returns samples, encoded at the input rate;
+    - any other scalar: the step returns the value.
+
+    A decode error — or a step returning None — gives the error row:
+    ``ok=False`` plus nulls when led by ``ok``, else all nulls."""
+    fields = out_type.names if isinstance(out_type, T.StructType) else None
+    rewrite = fields is not None and fields[:3] == list(_PAYLOAD[:3])
+    flagged = fields is not None and fields[0] == "ok"
+    encode = isinstance(out_type, T.BinaryType)
+    error = None
+    if fields is not None:
+        error = (False if flagged else None,) + (None,) * (len(fields) - 1)
+
+    def clip_map(raw: pd.Series, *args: pd.Series) -> pd.DataFrame:
+        from .synth import wrap_wav
+
+        rows = []
+        for b, a in zip(raw, zip(*args) if args else repeat(())):
+            try:
+                sr, x = decode_wav(b)
+            except (ValueError, struct.error):
+                rows.append(error)
+                continue
+            r = step(sr, x, *a)
+            if r is None:
+                r = error
+            elif rewrite:
+                y, sr_out, *lineage = r
+                out = bytes(b) if y is None else wrap_wav(y, sr_out, codec)
+                n = len(x if y is None else y)
+                r = (out, sr_out, _dur_ms(n, sr_out), *lineage)
+            elif flagged:
+                r = (True, *r)
+            elif encode:
+                r = wrap_wav(r, sr, codec)
+            rows.append(r)
+        if fields is None:
+            dtype = _SCALAR_DTYPES.get(type(out_type), object)
+            return pd.Series(rows, dtype=dtype)
+        cols = zip(*rows) if rows else [()] * len(fields)
+        return pd.DataFrame(
+            {f: pd.Series(c, dtype=object) for f, c in zip(fields, cols)}
+        )
+
+    return clip_map
+
+
+def _clip_udf(step, out_type, codec: str = "pcm16"):
+    """``_clip_map`` as a pandas UDF returning ``out_type``."""
+    return F.pandas_udf(_clip_map(step, out_type, codec), out_type)
+
+
+def _swap_payload(df, x, lineage=(), *, first=False, cols=None, codec=None):
+    """The payload swap of every rewriting ``*_clips`` wrapper: evaluate
+    the clip-map UDF column ``x`` once, then project the pass-through
+    columns, the struct's ``bytes, sr_hz, dur_ms``, ``codec='pcm16'``
+    and the lineage columns — after ``codec``, or before ``bytes`` when
+    ``first``. A lineage entry is a struct field name or a ``(name,
+    Column)`` pair, the Column free to read the struct as ``__x``.
+    Pass-through columns are ``cols`` (default ``df.columns``) minus the
+    payload and lineage names, so re-running a wrapper replaces its own
+    lineage rather than duplicating it.
+
+    With ``codec`` set, ``x`` is the re-encoded bytes themselves (a
+    codec-only rewrite; sr_hz and dur_ms pass through) and ONE
+    projection appends ``bytes`` and ``codec``."""
+    names = [c if isinstance(c, str) else c[0] for c in lineage]
+    swap = ("bytes", "codec") if codec else (*_PAYLOAD, *names)
+    others = [c for c in cols or df.columns if c not in swap]
+    if codec:
+        return df.select(*others, x.alias("bytes"), F.lit(codec).alias("codec"))
+    lin = [
+        F.col(f"__x.{c}").alias(c) if isinstance(c, str) else c[1].alias(c[0])
+        for c in lineage
+    ]
+    payload = [F.col(f"__x.{c}").alias(c) for c in _PAYLOAD[:3]]
+    payload.append(F.lit("pcm16").alias("codec"))
+    return df.select("*", x.alias("__x")).select(
+        *others, *(lin + payload if first else payload + lin)
+    )
+
+
 # --- Spark-facing vectorized UDFs --------------------------------------------
 
 AUDIO_INFO_TYPE = T.StructType(
@@ -162,9 +295,9 @@ def synth_snr_db(raw: pd.Series, idx: pd.Series, seed: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
-def with_audio_features(df, bytes_col: str = "bytes"):
+def with_audio_features(df):
     """Attach decoded features as a struct column (one Arrow exchange)."""
-    return df.withColumn("audio", audio_info(F.col(bytes_col)))
+    return df.withColumn("audio", audio_info(F.col("bytes")))
 
 
 # --- raw WAV directory ingest (binaryFile source -> clips schema) ------------
@@ -326,35 +459,24 @@ AUDIO_FEATURES_EXT_TYPE = T.StructType(
 )
 
 
-@F.pandas_udf(AUDIO_FEATURES_EXT_TYPE)
-def audio_features_ext(raw: pd.Series) -> pd.DataFrame:
+def _qc_features(sr: int, x: np.ndarray):
     """Batch quality features for training-data curation: peak level,
     zero-crossing rate, silence/clipping ratios and DC offset — the
     standard audio-QC screen (a mis-biased ADC shows as dc_offset, a
     hot gain stage as clipping_ratio) — all numpy reductions over the
-    decoded batch, no per-row Python beyond the decode loop."""
-    out = {
-        "peak": [], "zcr": [], "silence_ratio": [], "clipping_ratio": [],
-        "dc_offset": [],
-    }
-    for b in raw:
-        try:
-            _sr, x = decode_wav(b)
-        except (ValueError, struct.error):
-            for k in out:
-                out[k].append(None)
-            continue
-        n = len(x)
-        if n == 0:
-            for k in out:
-                out[k].append(0.0)
-            continue
-        out["peak"].append(float(np.max(np.abs(x))))
-        out["zcr"].append(float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))))
-        out["silence_ratio"].append(float(np.mean(np.abs(x) < 0.01)))
-        out["clipping_ratio"].append(float(np.mean(np.abs(x) > 0.99)))
-        out["dc_offset"].append(float(np.mean(x)))
-    return pd.DataFrame(out)
+    decoded clip; an empty clip measures all zeros."""
+    if len(x) == 0:
+        return (0.0,) * 5
+    return (
+        float(np.max(np.abs(x))),
+        float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))),
+        float(np.mean(np.abs(x) < 0.01)),
+        float(np.mean(np.abs(x) > 0.99)),
+        float(np.mean(x)),
+    )
+
+
+audio_features_ext = _clip_udf(_qc_features, AUDIO_FEATURES_EXT_TYPE)
 
 
 def make_shift_dc_udf(offset: float):
@@ -362,30 +484,19 @@ def make_shift_dc_udf(offset: float):
     DC handling — used to synthesize mis-biased-ADC fixtures for QC
     gates; pair with ``audio_features_ext.dc_offset`` for detection and
     ``normalize_clips`` for correction."""
-
-    @F.pandas_udf(T.BinaryType())
-    def shift_dc(raw: pd.Series) -> pd.Series:
-        from .synth import wrap_wav
-
-        out = []
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                out.append(None)
-                continue
-            y = np.clip(
-                x.astype(np.float64) + offset, -0.99997, 0.99997
-            ).astype(np.float32)
-            out.append(wrap_wav(y, sr, "pcm16"))
-        return pd.Series(out)
-
-    return shift_dc
+    return _clip_udf(
+        lambda sr, x: np.clip(
+            x.astype(np.float64) + offset, -0.99997, 0.99997
+        ).astype(np.float32),
+        T.BinaryType(),
+    )
 
 
-def shift_dc_clips(df, offset: float, bytes_col: str = "bytes"):
+def shift_dc_clips(df, offset: float):
+    """Shift every clip's DC bias; ``bytes`` and ``codec`` are replaced
+    in place (sr_hz and dur_ms are unchanged)."""
     return df.withColumn(
-        bytes_col, make_shift_dc_udf(offset)(F.col(bytes_col))
+        "bytes", make_shift_dc_udf(offset)(F.col("bytes"))
     ).withColumn("codec", F.lit("pcm16"))
 
 
@@ -452,46 +563,20 @@ def make_resample_udf(target_sr: int, method: str = "linear"):
     if method not in ("linear", "sinc"):
         raise ValueError(f"unknown resample method: {method!r}")
     kernel = _resample_linear if method == "linear" else _resample_sinc
-
-    @F.pandas_udf(RESAMPLED_TYPE)
-    def resample_udf(raw: pd.Series) -> pd.DataFrame:
-        from .synth import wrap_wav
-
-        out = {"bytes": [], "sr_hz": [], "dur_ms": []}
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                out["bytes"].append(None)
-                out["sr_hz"].append(None)
-                out["dur_ms"].append(None)
-                continue
-            y = kernel(x, sr, target_sr)
-            out["bytes"].append(wrap_wav(y, target_sr, "pcm16"))
-            out["sr_hz"].append(target_sr)
-            out["dur_ms"].append(int(round(1000 * len(y) / target_sr)))
-        return pd.DataFrame(out)
-
-    return resample_udf
+    return _clip_udf(
+        lambda sr, x: (kernel(x, sr, target_sr), target_sr), RESAMPLED_TYPE
+    )
 
 
-def resample_clips(
-    df, target_sr: int, bytes_col: str = "bytes", method: str = "linear"
-):
+def resample_clips(df, target_sr: int, method: str = "linear"):
     """Rewrite the audio payload at ``target_sr`` (bytes/sr_hz/dur_ms
     swapped in a single projection; codec normalized to pcm16).
     ``method="sinc"`` takes the anti-aliased windowed-sinc path —
     required when downsampling content with energy above the target
     Nyquist; ``"linear"`` (default, byte-stable with earlier rounds) is
     adequate for band-limited speech-rate conversions."""
-    r = make_resample_udf(target_sr, method)(F.col(bytes_col)).alias("__r")
-    others = [c for c in df.columns if c not in ("bytes", "sr_hz", "dur_ms", "codec")]
-    return df.select(*others, r).select(
-        *others,
-        F.col("__r.bytes").alias("bytes"),
-        F.col("__r.sr_hz").alias("sr_hz"),
-        F.col("__r.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
+    return _swap_payload(
+        df, make_resample_udf(target_sr, method)(F.col("bytes"))
     )
 
 
@@ -522,65 +607,28 @@ def make_normalize_udf(mode: str = "peak", target: float = 0.9):
     if mode not in ("peak", "rms", "lufs"):
         raise ValueError(f"unknown normalize mode: {mode!r}")
 
-    @F.pandas_udf(NORMALIZED_TYPE)
-    def normalize_udf(raw: pd.Series) -> pd.DataFrame:
-        from .synth import wrap_wav
+    def step(sr, x):
+        if mode == "lufs":
+            cur = integrated_lufs(x, sr) if len(x) else None
+            gain = 10.0 ** ((target - cur) / 20.0) if cur is not None else 1.0
+        else:
+            ref = (
+                float(np.max(np.abs(x)))
+                if mode == "peak"
+                else float(np.sqrt(np.mean(x.astype(np.float64) ** 2)))
+            ) if len(x) else 0.0
+            gain = target / ref if ref > 0 else 1.0
+        y = np.clip(x * gain, -0.99997, 0.99997).astype(np.float32)
+        return y, sr, float(20.0 * np.log10(gain)) if gain > 0 else None
 
-        out = {"bytes": [], "sr_hz": [], "dur_ms": [], "gain_db": []}
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                for k in out:
-                    out[k].append(None)
-                continue
-            if mode == "lufs":
-                cur = integrated_lufs(x, sr) if len(x) else None
-                gain = (
-                    10.0 ** ((target - cur) / 20.0)
-                    if cur is not None
-                    else 1.0
-                )
-            else:
-                ref = (
-                    float(np.max(np.abs(x)))
-                    if mode == "peak"
-                    else float(
-                        np.sqrt(np.mean(x.astype(np.float64) ** 2))
-                    )
-                ) if len(x) else 0.0
-                gain = target / ref if ref > 0 else 1.0
-            y = np.clip(x * gain, -0.99997, 0.99997).astype(np.float32)
-            out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-            out["sr_hz"].append(sr)
-            out["dur_ms"].append(int(round(1000 * len(y) / sr)))
-            out["gain_db"].append(
-                float(20.0 * np.log10(gain)) if gain > 0 else None
-            )
-        return pd.DataFrame(out)
-
-    return normalize_udf
+    return _clip_udf(step, NORMALIZED_TYPE)
 
 
-def normalize_clips(
-    df, mode: str = "peak", target: float = 0.9, bytes_col: str = "bytes"
-):
-    """Level every clip (payload swap in one projection + gain_db kept)."""
-    n = make_normalize_udf(mode, target)(F.col(bytes_col)).alias("__n")
-    # exclude our own output columns too, so re-levelling a frame that
-    # already carries gain_db can't produce an ambiguous duplicate
-    others = [
-        c
-        for c in df.columns
-        if c not in ("bytes", "sr_hz", "dur_ms", "codec", "gain_db")
-    ]
-    return df.select(*others, n).select(
-        *others,
-        F.col("__n.bytes").alias("bytes"),
-        F.col("__n.sr_hz").alias("sr_hz"),
-        F.col("__n.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
-        F.col("__n.gain_db").alias("gain_db"),
+def normalize_clips(df, mode: str = "peak", target: float = 0.9):
+    """Level every clip (payload swap in one projection + gain_db kept;
+    re-levelling a frame that already carries gain_db replaces it)."""
+    return _swap_payload(
+        df, make_normalize_udf(mode, target)(F.col("bytes")), ["gain_db"]
     )
 
 
@@ -636,26 +684,11 @@ def drc_pcm(
 def make_compress_udf(
     threshold_db: float, ratio: float, frame_ms: int, makeup_db: float
 ):
-    @F.pandas_udf(COMPRESSED_TYPE)
-    def compress_udf(raw: pd.Series) -> pd.DataFrame:
-        from .synth import wrap_wav
+    def step(sr, x):
+        y, red = drc_pcm(x, sr, threshold_db, ratio, frame_ms, makeup_db)
+        return y, sr, red
 
-        out = {"bytes": [], "sr_hz": [], "dur_ms": [], "reduction_db": []}
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                for k in out:
-                    out[k].append(None)
-                continue
-            y, red = drc_pcm(x, sr, threshold_db, ratio, frame_ms, makeup_db)
-            out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-            out["sr_hz"].append(sr)
-            out["dur_ms"].append(int(1000 * len(y) / sr + 0.5))
-            out["reduction_db"].append(red)
-        return pd.DataFrame(out)
-
-    return compress_udf
+    return _clip_udf(step, COMPRESSED_TYPE)
 
 
 def compress_dynamics_clips(
@@ -664,29 +697,14 @@ def compress_dynamics_clips(
     ratio: float = 4.0,
     frame_ms: int = 20,
     makeup_db: float = 0.0,
-    bytes_col: str = "bytes",
 ):
     """Dynamic-range compression augmentation (the telephony/broadcast
     loudness-processing channel ASR robustness recipes simulate):
     map-only, ONE Arrow decode→gain-track→encode pass, deterministic
     (no RNG ⇒ partitioning/retry invariant). ``reduction_db`` kept as
     lineage (max gain reduction applied per clip)."""
-    s = make_compress_udf(threshold_db, ratio, frame_ms, makeup_db)(
-        F.col(bytes_col)
-    ).alias("__c")
-    others = [
-        c
-        for c in df.columns
-        if c not in ("bytes", "sr_hz", "dur_ms", "codec", "reduction_db")
-    ]
-    return df.select(*others, s).select(
-        *others,
-        F.col("__c.bytes").alias("bytes"),
-        F.col("__c.sr_hz").alias("sr_hz"),
-        F.col("__c.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
-        F.col("__c.reduction_db").alias("reduction_db"),
-    )
+    udf = make_compress_udf(threshold_db, ratio, frame_ms, makeup_db)
+    return _swap_payload(df, udf(F.col("bytes")), ["reduction_db"])
 
 
 TRIMMED_TYPE = T.StructType(
@@ -707,81 +725,32 @@ def make_trim_silence_udf(threshold_db: float = -40.0, frame_ms: int = 20):
     ``threshold_db``. An all-silent clip collapses to zero samples
     (dur_ms=0) rather than nulling out — the row stays joinable."""
 
-    @F.pandas_udf(TRIMMED_TYPE)
-    def trim_udf(raw: pd.Series) -> pd.DataFrame:
-        from .synth import wrap_wav
+    def step(sr, x):
+        hop = max(1, int(sr * frame_ms / 1000))
+        n_frames = (len(x) + hop - 1) // hop
+        padded = np.zeros(n_frames * hop, dtype=np.float64)
+        padded[: len(x)] = x
+        frame_rms = np.sqrt((padded.reshape(n_frames, hop) ** 2).mean(axis=1))
+        with np.errstate(divide="ignore"):
+            frame_db = 20.0 * np.log10(frame_rms)
+        loud = np.nonzero(frame_db >= threshold_db)[0]
+        if len(loud):
+            lo, hi = int(loud[0]) * hop, min(len(x), (int(loud[-1]) + 1) * hop)
+        else:
+            lo = hi = 0
+        head = int(round(1000 * lo / sr))
+        return x[lo:hi], sr, head, int(round(1000 * (len(x) - hi) / sr))
 
-        out = {
-            "bytes": [],
-            "sr_hz": [],
-            "dur_ms": [],
-            "trimmed_head_ms": [],
-            "trimmed_tail_ms": [],
-        }
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                for k in out:
-                    out[k].append(None)
-                continue
-            hop = max(1, int(sr * frame_ms / 1000))
-            n_frames = (len(x) + hop - 1) // hop
-            padded = np.zeros(n_frames * hop, dtype=np.float64)
-            padded[: len(x)] = x
-            frame_rms = np.sqrt((padded.reshape(n_frames, hop) ** 2).mean(axis=1))
-            with np.errstate(divide="ignore"):
-                frame_db = 20.0 * np.log10(frame_rms)
-            loud = np.nonzero(frame_db >= threshold_db)[0]
-            if len(loud):
-                lo, hi = int(loud[0]) * hop, min(len(x), (int(loud[-1]) + 1) * hop)
-            else:
-                lo = hi = 0
-            y = x[lo:hi]
-            out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-            out["sr_hz"].append(sr)
-            out["dur_ms"].append(int(round(1000 * len(y) / sr)))
-            out["trimmed_head_ms"].append(int(round(1000 * lo / sr)))
-            out["trimmed_tail_ms"].append(
-                int(round(1000 * (len(x) - hi) / sr))
-            )
-        return pd.DataFrame(out)
-
-    return trim_udf
+    return _clip_udf(step, TRIMMED_TYPE)
 
 
-def trim_silence_clips(
-    df,
-    threshold_db: float = -40.0,
-    frame_ms: int = 20,
-    bytes_col: str = "bytes",
-):
+def trim_silence_clips(df, threshold_db: float = -40.0, frame_ms: int = 20):
     """Strip head/tail silence from every clip; keeps trim amounts as
     lineage columns (payload swap in one projection)."""
-    s = make_trim_silence_udf(threshold_db, frame_ms)(
-        F.col(bytes_col)
-    ).alias("__t")
-    others = [
-        c
-        for c in df.columns
-        if c
-        not in (
-            "bytes",
-            "sr_hz",
-            "dur_ms",
-            "codec",
-            "trimmed_head_ms",
-            "trimmed_tail_ms",
-        )
-    ]
-    return df.select(*others, s).select(
-        *others,
-        F.col("__t.bytes").alias("bytes"),
-        F.col("__t.sr_hz").alias("sr_hz"),
-        F.col("__t.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
-        F.col("__t.trimmed_head_ms").alias("trimmed_head_ms"),
-        F.col("__t.trimmed_tail_ms").alias("trimmed_tail_ms"),
+    return _swap_payload(
+        df,
+        make_trim_silence_udf(threshold_db, frame_ms)(F.col("bytes")),
+        ["trimmed_head_ms", "trimmed_tail_ms"],
     )
 
 
@@ -789,91 +758,40 @@ def make_segment_udf(start_ms: int, end_ms: int):
     """Vectorized time-slice (the audio analog of image crop /
     video frame-sample): keep samples in [start_ms, end_ms)."""
 
-    @F.pandas_udf(RESAMPLED_TYPE)
-    def segment_udf(raw: pd.Series) -> pd.DataFrame:
-        from .synth import wrap_wav
+    def step(sr, x):
+        lo = min(len(x), int(start_ms * sr / 1000))
+        return x[lo : min(len(x), int(end_ms * sr / 1000))], sr
 
-        out = {"bytes": [], "sr_hz": [], "dur_ms": []}
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                out["bytes"].append(None)
-                out["sr_hz"].append(None)
-                out["dur_ms"].append(None)
-                continue
-            lo = min(len(x), int(start_ms * sr / 1000))
-            hi = min(len(x), int(end_ms * sr / 1000))
-            y = x[lo:hi]
-            out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-            out["sr_hz"].append(sr)
-            out["dur_ms"].append(int(round(1000 * len(y) / sr)))
-        return pd.DataFrame(out)
-
-    return segment_udf
+    return _clip_udf(step, RESAMPLED_TYPE)
 
 
-def segment_clips(df, start_ms: int, end_ms: int, bytes_col: str = "bytes"):
+def segment_clips(df, start_ms: int, end_ms: int):
     """Trim every clip to [start_ms, end_ms); payload columns swap in one
     projection, mirroring ``resample_clips``."""
-    s = make_segment_udf(start_ms, end_ms)(F.col(bytes_col)).alias("__s")
-    others = [c for c in df.columns if c not in ("bytes", "sr_hz", "dur_ms", "codec")]
-    return df.select(*others, s).select(
-        *others,
-        F.col("__s.bytes").alias("bytes"),
-        F.col("__s.sr_hz").alias("sr_hz"),
-        F.col("__s.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
-    )
+    return _swap_payload(df, make_segment_udf(start_ms, end_ms)(F.col("bytes")))
 
 
-@F.pandas_udf(RESAMPLED_TYPE)
-def _crop_udf(raw: pd.Series, start_ms: pd.Series, end_ms: pd.Series) -> pd.DataFrame:
-    from .synth import wrap_wav
-
-    out = {"bytes": [], "sr_hz": [], "dur_ms": []}
-    for b, s_ms, e_ms in zip(raw, start_ms, end_ms):
-        try:
-            sr, x = decode_wav(b)
-        except (ValueError, struct.error):
-            out["bytes"].append(None)
-            out["sr_hz"].append(None)
-            out["dur_ms"].append(None)
-            continue
-        lo = max(0, min(len(x), int(int(s_ms) * sr / 1000)))
-        hi = max(lo, min(len(x), int(int(e_ms) * sr / 1000)))
-        y = x[lo:hi]
-        out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-        out["sr_hz"].append(sr)
-        out["dur_ms"].append(int(round(1000 * len(y) / sr)))
-    return pd.DataFrame(out)
+def _crop_step(sr, x, s_ms, e_ms):
+    lo = max(0, min(len(x), int(int(s_ms) * sr / 1000)))
+    return x[lo : max(lo, min(len(x), int(int(e_ms) * sr / 1000)))], sr
 
 
-def crop_clips(
-    df,
-    start_col="t_start_ms",
-    end_col="t_end_ms",
-    bytes_col: str = "bytes",
-):
+_crop_udf = _clip_udf(_crop_step, RESAMPLED_TYPE)
+
+
+def crop_clips(df, start_col="t_start_ms", end_col="t_end_ms"):
     """PER-ROW time-slice: each row supplies its own [start, end)
     window (columns, not literals) — the shape a training-example
     extractor needs (crop every aligned word / VAD segment in one
     pass). ``segment_clips`` is the constant-window special case.
     One Arrow batch pass; out-of-range windows clamp to the clip."""
-    s = _crop_udf(
-        F.col(bytes_col),
-        F.col(start_col).cast("long"),
-        F.col(end_col).cast("long"),
-    ).alias("__s")
-    others = [
-        c for c in df.columns if c not in ("bytes", "sr_hz", "dur_ms", "codec")
-    ]
-    return df.select(*others, s).select(
-        *others,
-        F.col("__s.bytes").alias("bytes"),
-        F.col("__s.sr_hz").alias("sr_hz"),
-        F.col("__s.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
+    return _swap_payload(
+        df,
+        _crop_udf(
+            F.col("bytes"),
+            F.col(start_col).cast("long"),
+            F.col(end_col).cast("long"),
+        ),
     )
 
 
@@ -943,9 +861,7 @@ def word_crop_examples(
                         out["span_idx"].append(sidx)
                         out["bytes"].append(wrap_wav(y, sr, "pcm16"))
                         out["sr_hz"].append(sr)
-                        out["dur_ms"].append(
-                            int(round(1000 * len(y) / sr))
-                        )
+                        out["dur_ms"].append(_dur_ms(len(y), sr))
                         out["codec"].append("pcm16")
                 yield pd.DataFrame(
                     out, columns=WORD_CROP_ENERGY_TYPE.names
@@ -1009,34 +925,20 @@ def fingerprint64(x: np.ndarray) -> int:
     return int(fp.astype(np.int64))
 
 
-def audio_fingerprint(raw: pd.Series) -> pd.Series:
-    """Batch fingerprint (Arrow pandas UDF body): bytes → int64; null /
-    undecodable clips → null."""
-    out = []
-    for b in raw:
-        try:
-            _sr, x = decode_wav(b)
-            out.append(fingerprint64(x))
-        except (ValueError, struct.error):
-            out.append(None)
-    return pd.Series(out, dtype="Int64")
+#: Batch fingerprint (Arrow pandas UDF body): bytes → Int64; null /
+#: undecodable clips → null.
+audio_fingerprint = _clip_map(lambda sr, x: fingerprint64(x), T.LongType())
 
 
-def with_audio_fingerprint(df, bytes_col: str = "bytes", out_col: str = "afp"):
+def with_audio_fingerprint(df, out_col: str = "afp"):
     """Add the 64-bit perceptual fingerprint as a column (one vectorized
     Arrow batch UDF — the only Python in the pipeline; everything
     downstream of it is JVM built-ins)."""
     udf = F.pandas_udf(audio_fingerprint, T.LongType())
-    return df.withColumn(out_col, udf(F.col(bytes_col)))
+    return df.withColumn(out_col, udf(F.col("bytes")))
 
 
-def audio_dup_pairs(
-    df,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    *,
-    max_hamming: int = 3,
-):
+def audio_dup_pairs(df, id_col: str = "clip_id", *, max_hamming: int = 3):
     """Exact + near duplicate clip pairs by perceptual fingerprint.
 
     Fingerprints via one Arrow batch UDF, then the shared 16-bit-chunk
@@ -1053,7 +955,7 @@ def audio_dup_pairs(
     from .dedup import hamming_pairs64
 
     if "afp" not in df.columns:
-        df = with_audio_fingerprint(df, bytes_col)
+        df = with_audio_fingerprint(df)
     fps = df.filter(F.col("afp").isNotNull())
     return hamming_pairs64(
         fps.select(id_col, "afp"),
@@ -1097,34 +999,20 @@ CURATE_FEATURES_TYPE = T.StructType(
 )
 
 
-@F.pandas_udf(CURATE_FEATURES_TYPE)
-def curate_features(raw: pd.Series) -> pd.DataFrame:
+def _curate_step(sr: int, x: np.ndarray):
     """ONE decode per clip serving BOTH curation screens: the QC stats
     (clipping ratio, DC offset) and the 64-bit perceptual fingerprint.
     Undecodable clips yield all-null (the QC screen flags the null)."""
-    clip, dc, afp = [], [], []
-    for b in raw:
-        try:
-            _sr, x = decode_wav(b)
-        except (ValueError, struct.error):
-            clip.append(None)
-            dc.append(None)
-            afp.append(None)
-            continue
-        if len(x) == 0:
-            clip.append(0.0)
-            dc.append(0.0)
-        else:
-            clip.append(float(np.mean(np.abs(x) > 0.99)))
-            dc.append(float(np.mean(x)))
-        afp.append(fingerprint64(x))
-    return pd.DataFrame(
-        {
-            "clipping_ratio": pd.Series(clip, dtype="float64"),
-            "dc_offset": pd.Series(dc, dtype="float64"),
-            "afp": pd.Series(afp, dtype="Int64"),
-        }
+    if len(x) == 0:
+        return 0.0, 0.0, fingerprint64(x)
+    return (
+        float(np.mean(np.abs(x) > 0.99)),
+        float(np.mean(x)),
+        fingerprint64(x),
     )
+
+
+curate_features = _clip_udf(_curate_step, CURATE_FEATURES_TYPE)
 
 
 def curate_clips(
@@ -1272,35 +1160,17 @@ def spectral_features(
     }
 
 
-@F.pandas_udf(SPECTRAL_TYPE)
-def audio_spectral(raw: pd.Series) -> pd.DataFrame:
-    out = {
-        "ok": [], "n_frames": [], "centroid_hz": [], "bandwidth_hz": [],
-        "rolloff95_hz": [], "band_energy": [], "total_energy": [],
-    }
-    for b in raw:
-        try:
-            sr, x = decode_wav(b)
-            feats = spectral_features(x, sr)
-            out["ok"].append(True)
-            for k, v in feats.items():
-                out[k].append(v)
-        except (ValueError, struct.error):
-            out["ok"].append(False)
-            for k in ("n_frames", "centroid_hz", "bandwidth_hz",
-                      "rolloff95_hz", "band_energy", "total_energy"):
-                out[k].append(None)
-    return pd.DataFrame(out)
+audio_spectral = _clip_udf(
+    lambda sr, x: tuple(spectral_features(x, sr).values()), SPECTRAL_TYPE
+)
 
 
-def with_spectral_features(df, bytes_col: str = "bytes"):
+def with_spectral_features(df):
     """Attach the framed-FFT feature struct (one Arrow exchange)."""
-    return df.withColumn("spectral", audio_spectral(F.col(bytes_col)))
+    return df.withColumn("spectral", audio_spectral(F.col("bytes")))
 
 
-def detect_upsampled_clips(
-    df, rel_threshold: float = 0.62, bytes_col: str = "bytes"
-):
+def detect_upsampled_clips(df, rel_threshold: float = 0.62):
     """Flag clips whose EFFECTIVE bandwidth sits far below the nominal
     Nyquist — the upsampled-8-kHz-masquerading-as-16-kHz defect every
     real ASR corpus contains (telephony audio re-encoded at a higher
@@ -1315,7 +1185,7 @@ def detect_upsampled_clips(
     content (a pure tone) is spectrally indistinguishable from an
     upsample and will flag; screen tonal synthetics upstream.
     """
-    s = with_spectral_features(df, bytes_col)
+    s = with_spectral_features(df)
     ratio = F.col("spectral.rolloff95_hz") / (F.col("sr_hz") / 2.0)
     return s.select(
         *df.columns,
@@ -1327,13 +1197,11 @@ def detect_upsampled_clips(
     )
 
 
-def with_spectral_embedding(
-    df, bytes_col: str = "bytes", out_col: str = "embedding"
-):
+def with_spectral_embedding(df, out_col: str = "embedding"):
     """L2-normalized log-band-energy vector as ``array<float>`` — a
     clip embedding compatible with the similarity module (cosine top-k
     / ANN over audio content, no external model needed)."""
-    df = with_spectral_features(df, bytes_col)
+    df = with_spectral_features(df)
     log_bands = F.transform(
         F.col("spectral.band_energy"), lambda v: F.log1p(v)
     )
@@ -1373,58 +1241,34 @@ def make_spectrogram_udf(
     contrast with ``audio_spectral``'s frame-AVERAGED features). One
     vectorized rfft over all frames per clip; emitted flat row-major
     with the (n_frames, n_mels) shape alongside."""
+    fb_cache: dict[int, np.ndarray] = {}
 
-    @F.pandas_udf(SPECTROGRAM_TYPE)
-    def spectrogram_udf(raw: pd.Series) -> pd.DataFrame:
-        out = {"ok": [], "n_frames": [], "n_mels": [], "logmel": []}
-        fb_cache: dict[int, np.ndarray] = {}
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                out["ok"].append(False)
-                out["n_frames"].append(None)
-                out["n_mels"].append(None)
-                out["logmel"].append(None)
-                continue
-            if len(x) < n_fft:
-                x = np.pad(x.astype(np.float64), (0, n_fft - len(x)))
-            else:
-                x = x.astype(np.float64)
-            n_frames = 1 + (len(x) - n_fft) // hop
-            idx = (
-                np.arange(n_fft)[None, :]
-                + hop * np.arange(n_frames)[:, None]
-            )
-            win = np.hanning(n_fft)
-            p = np.abs(np.fft.rfft(x[idx] * win, axis=1)) ** 2
-            if sr not in fb_cache:
-                fb_cache[sr] = _mel_filterbank(p.shape[1], sr, n_mels)
-            mel = p @ fb_cache[sr].T  # (n_frames, n_mels)
-            logmel = np.log(np.maximum(mel, 1e-30)).astype(np.float32)
-            out["ok"].append(True)
-            out["n_frames"].append(int(n_frames))
-            out["n_mels"].append(int(n_mels))
-            out["logmel"].append(logmel.reshape(-1))
-        return pd.DataFrame(out)
+    def step(sr, x):
+        if len(x) < n_fft:
+            x = np.pad(x.astype(np.float64), (0, n_fft - len(x)))
+        else:
+            x = x.astype(np.float64)
+        n_frames = 1 + (len(x) - n_fft) // hop
+        idx = np.arange(n_fft)[None, :] + hop * np.arange(n_frames)[:, None]
+        win = np.hanning(n_fft)
+        p = np.abs(np.fft.rfft(x[idx] * win, axis=1)) ** 2
+        if sr not in fb_cache:
+            fb_cache[sr] = _mel_filterbank(p.shape[1], sr, n_mels)
+        mel = p @ fb_cache[sr].T  # (n_frames, n_mels)
+        logmel = np.log(np.maximum(mel, 1e-30)).astype(np.float32)
+        return int(n_frames), int(n_mels), logmel.reshape(-1)
 
-    return spectrogram_udf
+    return _clip_udf(step, SPECTROGRAM_TYPE)
 
 
-def with_spectrogram(
-    df,
-    bytes_col: str = "bytes",
-    n_fft: int = 512,
-    hop: int = 256,
-    n_mels: int = 24,
-):
+def with_spectrogram(df, n_fft: int = 512, hop: int = 256, n_mels: int = 24):
     """Attach the framed log-mel spectrogram struct (one Arrow pass).
     The flat float array plus (n_frames, n_mels) is the storage layout
     a feature table wants: primitive parquet column, frame-sliceable,
     and the MaterializedTransform registry serves it incrementally."""
     return df.withColumn(
         "spectrogram",
-        make_spectrogram_udf(n_fft, hop, n_mels)(F.col(bytes_col)),
+        make_spectrogram_udf(n_fft, hop, n_mels)(F.col("bytes")),
     )
 
 
@@ -1499,28 +1343,15 @@ def mfcc_features(
     return [float(v) for v in c]
 
 
-@F.pandas_udf(MFCC_TYPE)
-def audio_mfcc(raw: pd.Series) -> pd.DataFrame:
-    out = {"ok": [], "mfcc": []}
-    for b in raw:
-        try:
-            sr, x = decode_wav(b)
-            out["ok"].append(True)
-            out["mfcc"].append(mfcc_features(x, sr))
-        except (ValueError, struct.error):
-            out["ok"].append(False)
-            out["mfcc"].append(None)
-    return pd.DataFrame(out)
+audio_mfcc = _clip_udf(lambda sr, x: (mfcc_features(x, sr),), MFCC_TYPE)
 
 
-def with_mfcc_embedding(
-    df, bytes_col: str = "bytes", out_col: str = "embedding"
-):
+def with_mfcc_embedding(df, out_col: str = "embedding"):
     """L2-normalized mfcc[1:] as ``array<float>`` — a LEVEL-INVARIANT
     clip embedding (c0 carries gain, so it is dropped) feeding the
     similarity module: volume-renormalized copies of a clip match
     exactly, unlike the raw band-energy embedding."""
-    df = df.withColumn("__m", audio_mfcc(F.col(bytes_col)))
+    df = df.withColumn("__m", audio_mfcc(F.col("bytes")))
     tail = F.slice(F.col("__m.mfcc"), 2, 100000)
     norm = F.sqrt(
         F.aggregate(tail, F.lit(0.0), lambda acc, v: acc + v * v)
@@ -1561,25 +1392,15 @@ def dominant_frequency(x: np.ndarray, sr: int) -> Tuple[float, float]:
     return float((i + d) * sr / len(x)), float(sr) / len(x)
 
 
-@F.pandas_udf(DOMINANT_TYPE)
-def audio_dominant(raw: pd.Series) -> pd.DataFrame:
-    out = {"ok": [], "dominant_hz": [], "bin_hz": []}
-    for b in raw:
-        try:
-            sr, x = decode_wav(b)
-            f, bw = dominant_frequency(x, sr)
-            out["ok"].append(True)
-            out["dominant_hz"].append(f)
-            out["bin_hz"].append(bw)
-        except (ValueError, struct.error):
-            out["ok"].append(False)
-            out["dominant_hz"].append(None)
-            out["bin_hz"].append(None)
-    return pd.DataFrame(out)
+# an empty clip has no spectrum: ok=False, like an undecodable one
+audio_dominant = _clip_udf(
+    lambda sr, x: dominant_frequency(x, sr) if len(x) else None,
+    DOMINANT_TYPE,
+)
 
 
-def with_dominant_freq(df, bytes_col: str = "bytes"):
-    return df.withColumn("dominant", audio_dominant(F.col(bytes_col)))
+def with_dominant_freq(df):
+    return df.withColumn("dominant", audio_dominant(F.col("bytes")))
 
 
 def synth_dominant_error_udf(seed: int):
@@ -1627,22 +1448,7 @@ def make_transcode_udf(codec: str):
     (lakehouse/g711.py) — no per-sample Python."""
     if codec not in _TRANSCODE_CODECS:
         raise ValueError(f"unsupported target codec: {codec!r}")
-
-    @F.pandas_udf(T.BinaryType())
-    def transcode_udf(raw: pd.Series) -> pd.Series:
-        from .synth import wrap_wav
-
-        out = []
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                out.append(None)
-                continue
-            out.append(wrap_wav(x, sr, codec))
-        return pd.Series(out)
-
-    return transcode_udf
+    return _clip_udf(lambda sr, x: x, T.BinaryType(), codec)
 
 
 @F.pandas_udf(T.DoubleType())
@@ -1662,17 +1468,13 @@ def pair_snr_db(raw_a: pd.Series, raw_b: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
-def transcode_clips(df, codec: str, bytes_col: str = "bytes"):
+def transcode_clips(df, codec: str):
     """Normalize the corpus to one codec (e.g. G.711 mu-law for 4x
     smaller telephony-band payloads, or pcm16 for lossless-from-here):
     one projection swaps bytes and the codec column; sr/dur unchanged.
     """
-    others = [c for c in df.columns if c not in (bytes_col, "codec")]
-    return df.select(
-        *others,
-        make_transcode_udf(codec)(F.col(bytes_col)).alias(bytes_col),
-        F.lit(codec).alias("codec"),
-    )
+    udf = make_transcode_udf(codec)
+    return _swap_payload(df, udf(F.col("bytes")), codec=codec)
 
 
 # ---------------------------------------------------------------------------
@@ -1740,7 +1542,6 @@ def split_on_silence_clips(
     frame_ms: int = 20,
     min_silence_ms: int = 100,
     min_segment_ms: int = 40,
-    bytes_col: str = "bytes",
     id_col: str = "clip_id",
 ):
     """Energy-VAD segmentation: silence runs of at least
@@ -1758,7 +1559,7 @@ def split_on_silence_clips(
 
         for pdf in batches:
             out = {k.name: [] for k in SEGMENTS_TYPE.fields}
-            for cid, b in zip(pdf[id_col], pdf[bytes_col]):
+            for cid, b in zip(pdf[id_col], pdf["bytes"]):
                 try:
                     sr, x = decode_wav(b)
                 except (ValueError, struct.error):
@@ -1780,12 +1581,12 @@ def split_on_silence_clips(
                     out["seg_idx"].append(seg_idx)
                     out["seg_start_ms"].append(int(round(1000 * a / sr)))
                     out["sr_hz"].append(sr)
-                    out["dur_ms"].append(int(round(1000 * len(y) / sr)))
+                    out["dur_ms"].append(_dur_ms(len(y), sr))
                     out["bytes"].append(wrap_wav(y, sr, "pcm16"))
                     seg_idx += 1
             yield pd.DataFrame(out)
 
-    return df.select(id_col, bytes_col).mapInPandas(gen, SEGMENTS_TYPE)
+    return df.select(id_col, "bytes").mapInPandas(gen, SEGMENTS_TYPE)
 
 
 AUGMENTED_TYPE = T.StructType(
@@ -1823,45 +1624,28 @@ def make_augment_udf(
     ``noise_snr_db`` exactly (then hard-limited into [-1, 1)).
     """
 
-    @F.pandas_udf(AUGMENTED_TYPE)
-    def augment_udf(raw: pd.Series, seed64: pd.Series) -> pd.DataFrame:
-        from .synth import wrap_wav
+    def step(sr, x, sd):
+        rng = np.random.default_rng(np.uint64(np.int64(sd)))
+        s = float(rng.uniform(*speed_range))
+        y = x.astype(np.float64)
+        if s != 1.0 and len(y) > 1:
+            n_out = max(1, int(round(len(y) / s)))
+            pos = np.arange(n_out, dtype=np.float64) * s
+            y = np.interp(pos, np.arange(len(y), dtype=np.float64), y)
+        g_db = float(rng.uniform(*gain_db_range))
+        if g_db != 0.0:
+            y = y * (10.0 ** (g_db / 20.0))
+        snr = None
+        if noise_snr_db is not None and len(y):
+            snr = float(noise_snr_db)
+            p_sig = float(np.mean(y**2))
+            if p_sig > 0:
+                sigma = np.sqrt(p_sig / (10.0 ** (snr / 10.0)))
+                y = y + rng.normal(0.0, sigma, size=len(y))
+        y = np.clip(y, -0.99997, 0.99997).astype(np.float32)
+        return y, sr, s, g_db, snr
 
-        out = {f.name: [] for f in AUGMENTED_TYPE.fields}
-        for b, sd in zip(raw, seed64):
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                for k in out:
-                    out[k].append(None)
-                continue
-            rng = np.random.default_rng(np.uint64(np.int64(sd)))
-            s = float(rng.uniform(*speed_range))
-            y = x.astype(np.float64)
-            if s != 1.0 and len(y) > 1:
-                n_out = max(1, int(round(len(y) / s)))
-                pos = np.arange(n_out, dtype=np.float64) * s
-                y = np.interp(pos, np.arange(len(y), dtype=np.float64), y)
-            g_db = float(rng.uniform(*gain_db_range))
-            if g_db != 0.0:
-                y = y * (10.0 ** (g_db / 20.0))
-            snr = None
-            if noise_snr_db is not None and len(y):
-                snr = float(noise_snr_db)
-                p_sig = float(np.mean(y**2))
-                if p_sig > 0:
-                    sigma = np.sqrt(p_sig / (10.0 ** (snr / 10.0)))
-                    y = y + rng.normal(0.0, sigma, size=len(y))
-            y = np.clip(y, -0.99997, 0.99997).astype(np.float32)
-            out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-            out["sr_hz"].append(sr)
-            out["dur_ms"].append(int(round(1000 * len(y) / sr)))
-            out["speed"].append(s)
-            out["gain_db"].append(g_db)
-            out["noise_snr_db"].append(snr)
-        return pd.DataFrame(out)
-
-    return augment_udf
+    return _clip_udf(step, AUGMENTED_TYPE)
 
 
 def augment_clips(
@@ -1870,32 +1654,15 @@ def augment_clips(
     noise_snr_db: float | None = 20.0,
     gain_db_range: tuple[float, float] = (0.0, 0.0),
     speed_range: tuple[float, float] = (1.0, 1.0),
-    bytes_col: str = "bytes",
     id_col: str = "clip_id",
 ):
     """Augment every clip (payload swap in one projection; perturbation
     parameters kept as lineage columns). Seeded per (seed, clip_id), so
     repeated runs and retried tasks produce identical bytes."""
     seed64 = F.xxhash64(F.col(id_col), F.lit(int(seed)))
-    a = make_augment_udf(noise_snr_db, gain_db_range, speed_range)(
-        F.col(bytes_col), seed64
-    ).alias("__a")
-    others = [
-        c
-        for c in df.columns
-        if c
-        not in ("bytes", "sr_hz", "dur_ms", "codec", "speed", "gain_db",
-                "noise_snr_db")
-    ]
-    return df.select(*others, a).select(
-        *others,
-        F.col("__a.bytes").alias("bytes"),
-        F.col("__a.sr_hz").alias("sr_hz"),
-        F.col("__a.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
-        F.col("__a.speed").alias("speed"),
-        F.col("__a.gain_db").alias("gain_db"),
-        F.col("__a.noise_snr_db").alias("noise_snr_db"),
+    udf = make_augment_udf(noise_snr_db, gain_db_range, speed_range)
+    return _swap_payload(
+        df, udf(F.col("bytes"), seed64), ["speed", "gain_db", "noise_snr_db"]
     )
 
 
@@ -1958,43 +1725,24 @@ def make_reverb_udf(
     re-limited into [-1, 1). ``drr_db`` (direct-to-reverberant ratio,
     pre-limit) rides along as lineage."""
 
-    @F.pandas_udf(REVERB_TYPE)
-    def reverb_udf(raw: pd.Series, seed64: pd.Series) -> pd.DataFrame:
-        from .synth import wrap_wav
+    def step(sr, x, sd):
+        rng = np.random.default_rng(np.uint64(np.int64(sd)))
+        rt60 = float(rng.uniform(*rt60_range))
+        h = _synth_rir(rng, sr, rt60, taps_per_sec)
+        xd = x.astype(np.float64)
+        y = _fft_convolve_trunc(xd, h)
+        rev = y - xd  # h[0] == 1 keeps the direct path identity
+        p_sig = float(np.mean(xd**2))
+        p_rev = float(np.mean(rev**2))
+        drr = (
+            10.0 * np.log10(p_sig / p_rev) if p_sig > 0 and p_rev > 0 else None
+        )
+        peak = float(np.max(np.abs(y))) if len(y) else 0.0
+        if peak > 0.99997:
+            y = y * (0.99997 / peak)
+        return y.astype(np.float32), sr, rt60, drr
 
-        out = {f.name: [] for f in REVERB_TYPE.fields}
-        for b, sd in zip(raw, seed64):
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                for k in out:
-                    out[k].append(None)
-                continue
-            rng = np.random.default_rng(np.uint64(np.int64(sd)))
-            rt60 = float(rng.uniform(*rt60_range))
-            h = _synth_rir(rng, sr, rt60, taps_per_sec)
-            xd = x.astype(np.float64)
-            y = _fft_convolve_trunc(xd, h)
-            rev = y - xd  # h[0] == 1 keeps the direct path identity
-            p_sig = float(np.mean(xd**2))
-            p_rev = float(np.mean(rev**2))
-            drr = (
-                10.0 * np.log10(p_sig / p_rev)
-                if p_sig > 0 and p_rev > 0
-                else None
-            )
-            peak = float(np.max(np.abs(y))) if len(y) else 0.0
-            if peak > 0.99997:
-                y = y * (0.99997 / peak)
-            y = y.astype(np.float32)
-            out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-            out["sr_hz"].append(sr)
-            out["dur_ms"].append(int(round(1000 * len(y) / sr)))
-            out["rt60_ms"].append(rt60)
-            out["drr_db"].append(drr)
-        return pd.DataFrame(out)
-
-    return reverb_udf
+    return _clip_udf(step, REVERB_TYPE)
 
 
 def reverb_clips(
@@ -2002,29 +1750,15 @@ def reverb_clips(
     seed: int = 0,
     rt60_range: tuple[float, float] = (150.0, 600.0),
     taps_per_sec: float = 4000.0,
-    bytes_col: str = "bytes",
     id_col: str = "clip_id",
 ):
     """Reverberate every clip (payload swap in one projection; the drawn
     T60 and resulting DRR kept as lineage columns). Seeded per
     (seed, clip_id) — identical bytes on any partitioning or retry."""
     seed64 = F.xxhash64(F.col(id_col), F.lit(int(seed)))
-    r = make_reverb_udf(rt60_range, taps_per_sec)(
-        F.col(bytes_col), seed64
-    ).alias("__r")
-    others = [
-        c
-        for c in df.columns
-        if c not in ("bytes", "sr_hz", "dur_ms", "codec", "rt60_ms", "drr_db")
-    ]
-    return df.select(*others, r).select(
-        *others,
-        F.col("__r.bytes").alias("bytes"),
-        F.col("__r.sr_hz").alias("sr_hz"),
-        F.col("__r.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
-        F.col("__r.rt60_ms").alias("rt60_ms"),
-        F.col("__r.drr_db").alias("drr_db"),
+    udf = make_reverb_udf(rt60_range, taps_per_sec)
+    return _swap_payload(
+        df, udf(F.col("bytes"), seed64), ["rt60_ms", "drr_db"]
     )
 
 
@@ -2508,41 +2242,22 @@ SPEED_PERTURB_TYPE = T.StructType(
 )
 
 
-@F.pandas_udf(SPEED_PERTURB_TYPE)
-def _speed_perturb_udf(raw: pd.Series, factor: pd.Series) -> pd.DataFrame:
-    from .synth import wrap_wav
-
-    out = {"bytes": [], "sr_hz": [], "dur_ms": []}
-    for b, f in zip(raw, factor):
-        try:
-            sr, x = decode_wav(b)
-        except (ValueError, struct.error):
-            out["bytes"].append(None)
-            out["sr_hz"].append(None)
-            out["dur_ms"].append(None)
-            continue
-        f = float(f)
-        if f == 1.0 or len(x) <= 1:
-            y = x
-        else:
-            n_out = max(1, int(round(len(x) / f)))
-            pos = np.arange(n_out, dtype=np.float64) * f
-            y = np.interp(
-                pos, np.arange(len(x), dtype=np.float64),
-                x.astype(np.float64),
-            ).astype(np.float32)
-        out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-        out["sr_hz"].append(sr)
-        out["dur_ms"].append(int(round(1000 * len(y) / sr)))
-    return pd.DataFrame(out)
+def _speed_perturb_step(sr, x, f):
+    f = float(f)
+    if f == 1.0 or len(x) <= 1:
+        return x, sr
+    n_out = max(1, int(round(len(x) / f)))
+    pos = np.arange(n_out, dtype=np.float64) * f
+    y = np.interp(
+        pos, np.arange(len(x), dtype=np.float64), x.astype(np.float64)
+    )
+    return y.astype(np.float32), sr
 
 
-def speed_perturb_clips(
-    df,
-    factors=(0.9, 1.0, 1.1),
-    bytes_col: str = "bytes",
-    id_col: str = "clip_id",
-):
+_speed_perturb_udf = _clip_udf(_speed_perturb_step, SPEED_PERTURB_TYPE)
+
+
+def speed_perturb_clips(df, factors=(0.9, 1.0, 1.1), id_col: str = "clip_id"):
     """Kaldi's 3-way speed perturbation as a deterministic corpus
     EXPANSION (Ko et al. 2015, "Audio augmentation for speech
     recognition"): each clip yields one variant per factor — playback
@@ -2563,7 +2278,6 @@ def speed_perturb_clips(
     fcol = F.explode(
         F.array(*[F.lit(float(f)) for f in factors])
     ).alias("speed_factor")
-    base = df.select(*df.columns, fcol)
     new_id = F.when(
         F.col("speed_factor") == 1.0, F.col(id_col)
     ).otherwise(
@@ -2574,24 +2288,11 @@ def speed_perturb_clips(
             F.col(id_col),
         )
     )
-    s = _speed_perturb_udf(
-        F.col(bytes_col), F.col("speed_factor")
-    ).alias("__s")
-    others = [
-        c
-        for c in df.columns
-        if c not in (bytes_col, "sr_hz", "dur_ms", "codec", id_col)
-    ]
-    return base.select(
-        new_id.alias(id_col), *others, "speed_factor", s
-    ).select(
-        id_col,
-        *others,
-        "speed_factor",
-        F.col("__s.bytes").alias("bytes"),
-        F.col("__s.sr_hz").alias("sr_hz"),
-        F.col("__s.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
+    base = df.select(*df.columns, fcol).withColumn(id_col, new_id)
+    return _swap_payload(
+        base,
+        _speed_perturb_udf(F.col("bytes"), F.col("speed_factor")),
+        cols=[id_col, *(c for c in df.columns if c != id_col), "speed_factor"],
     )
 
 
@@ -2670,32 +2371,18 @@ def pitch_shift_pcm(x: np.ndarray, factor: float) -> np.ndarray:
     return np.clip(y, -0.99997, 0.99997).astype(np.float32)
 
 
-def _pitch_shift_udf(raw: pd.Series, factor: pd.Series) -> pd.DataFrame:
-    from .synth import wrap_wav
-
-    out = {"bytes": [], "sr_hz": [], "dur_ms": []}
-    for b, f in zip(raw, factor):
-        try:
-            sr, x = decode_wav(b)
-        except (ValueError, struct.error):
-            out["bytes"].append(None)
-            out["sr_hz"].append(None)
-            out["dur_ms"].append(None)
-            continue
-        f = float(f)
-        y = pitch_shift_pcm(x, f)
-        out["bytes"].append(
-            wrap_wav(y, sr, "pcm16") if f != 1.0 and len(x) >= 2048 else bytes(b)
-        )
-        out["sr_hz"].append(sr)
-        # HALF_UP — the repo-wide dur_ms convention (synth + both ingests)
-        out["dur_ms"].append(int(1000 * len(x) / sr + 0.5))
-    return pd.DataFrame(out)
+# an unchanged clip (factor 1.0, or too short) keeps its stored bytes
+_pitch_shift_udf = _clip_udf(
+    lambda sr, x, f: (
+        pitch_shift_pcm(x, float(f))
+        if float(f) != 1.0 and len(x) >= 2048 else None,
+        sr,
+    ),
+    PITCHED_TYPE,
+)
 
 
-def pitch_shift_clips(
-    df, factor: float, bytes_col: str = "bytes", id_col: str = "clip_id"
-):
+def pitch_shift_clips(df, factor: float, id_col: str = "clip_id"):
     """Pitch-shift augmentation (the third leg of the Kaldi robustness
     triad next to :func:`speed_perturb_clips` — which shifts pitch AND
     tempo together — and :func:`reverb_clips`): every spectral
@@ -2714,21 +2401,12 @@ def pitch_shift_clips(
     Output keeps the clip schema (``dur_ms`` unchanged by design) and
     adds lineage column ``pitch_factor``.
     """
-    s = F.pandas_udf(_pitch_shift_udf, PITCHED_TYPE)(
-        F.col(bytes_col), F.lit(float(factor))
-    ).alias("__p")
-    others = [
-        c
-        for c in df.columns
-        if c not in (bytes_col, "sr_hz", "dur_ms", "codec", "pitch_factor")
-    ]
-    return df.select(*others, s).select(
-        *others,
-        F.lit(float(factor)).alias("pitch_factor"),
-        F.col("__p.bytes").alias("bytes"),
-        F.col("__p.sr_hz").alias("sr_hz"),
-        F.col("__p.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
+    f = F.lit(float(factor))
+    return _swap_payload(
+        df,
+        _pitch_shift_udf(F.col("bytes"), f),
+        [("pitch_factor", f)],
+        first=True,
     )
 
 
@@ -2742,31 +2420,18 @@ def time_stretch_pcm(x: np.ndarray, rate: float) -> np.ndarray:
     return np.clip(y, -0.99997, 0.99997).astype(np.float32)
 
 
-def _time_stretch_udf(raw: pd.Series, rate: pd.Series) -> pd.DataFrame:
-    from .synth import wrap_wav
-
-    out = {"bytes": [], "sr_hz": [], "dur_ms": []}
-    for b, rt in zip(raw, rate):
-        try:
-            sr, x = decode_wav(b)
-        except (ValueError, struct.error):
-            out["bytes"].append(None)
-            out["sr_hz"].append(None)
-            out["dur_ms"].append(None)
-            continue
-        rt = float(rt)
-        y = time_stretch_pcm(x, rt)
-        changed = rt != 1.0 and len(x) >= 2048
-        out["bytes"].append(wrap_wav(y, sr, "pcm16") if changed else bytes(b))
-        out["sr_hz"].append(sr)
-        # HALF_UP — the repo-wide dur_ms convention (synth + both ingests)
-        out["dur_ms"].append(int(1000 * len(y) / sr + 0.5))
-    return pd.DataFrame(out)
+# an unchanged clip (rate 1.0, or too short) keeps its stored bytes
+_time_stretch_udf = _clip_udf(
+    lambda sr, x, rt: (
+        time_stretch_pcm(x, float(rt))
+        if float(rt) != 1.0 and len(x) >= 2048 else None,
+        sr,
+    ),
+    PITCHED_TYPE,
+)
 
 
-def time_stretch_clips(
-    df, rate: float, bytes_col: str = "bytes", id_col: str = "clip_id"
-):
+def time_stretch_clips(df, rate: float, id_col: str = "clip_id"):
     """Tempo-perturb augmentation (the fourth leg next to
     :func:`speed_perturb_clips` — pitch AND tempo together —
     :func:`pitch_shift_clips` — pitch only — and :func:`reverb_clips`):
@@ -2786,21 +2451,12 @@ def time_stretch_clips(
     new length (``round(len/rate)`` samples — the length law gated in
     tests) and adds lineage column ``stretch_rate``.
     """
-    s = F.pandas_udf(_time_stretch_udf, PITCHED_TYPE)(
-        F.col(bytes_col), F.lit(float(rate))
-    ).alias("__s")
-    others = [
-        c
-        for c in df.columns
-        if c not in (bytes_col, "sr_hz", "dur_ms", "codec", "stretch_rate")
-    ]
-    return df.select(*others, s).select(
-        *others,
-        F.lit(float(rate)).alias("stretch_rate"),
-        F.col("__s.bytes").alias("bytes"),
-        F.col("__s.sr_hz").alias("sr_hz"),
-        F.col("__s.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
+    r = F.lit(float(rate))
+    return _swap_payload(
+        df,
+        _time_stretch_udf(F.col("bytes"), r),
+        [("stretch_rate", r)],
+        first=True,
     )
 
 
@@ -2820,54 +2476,36 @@ def make_mix_udf(snr_db_target: float):
     """Vectorized speech+noise mixing: decode both payloads, resample
     the noise to the speech rate if needed, tile/crop it to length from
     a seeded offset, scale it so signal-power / noise-power equals the
-    target SNR exactly, add, hard-limit, re-encode pcm16."""
+    target SNR exactly, add, hard-limit, re-encode pcm16. A noise
+    payload that is missing or does not decode leaves the clip unmixed
+    (``mixed=False``)."""
 
-    @F.pandas_udf(MIXED_TYPE)
-    def mix_udf(
-        raw: pd.Series, noise_raw: pd.Series, seed64: pd.Series
-    ) -> pd.DataFrame:
-        from .synth import wrap_wav
-
-        out = {"bytes": [], "sr_hz": [], "dur_ms": [], "mixed": []}
-        for b, nb, sd in zip(raw, noise_raw, seed64):
+    def step(sr, x, nb, sd):
+        y = x.astype(np.float64)
+        did_mix = False
+        if nb is not None:
             try:
-                sr, x = decode_wav(b)
+                nsr, nx = decode_wav(nb)
             except (ValueError, struct.error):
-                out["bytes"].append(None)
-                out["sr_hz"].append(None)
-                out["dur_ms"].append(None)
-                out["mixed"].append(None)
-                continue
-            y = x.astype(np.float64)
-            did_mix = False
-            if nb is not None:
-                try:
-                    nsr, nx = decode_wav(nb)
-                except (ValueError, struct.error):
-                    nx = None
-                if nx is not None and len(nx) and len(y):
-                    nz = _resample_linear(nx, nsr, sr).astype(np.float64)
-                    rng = np.random.default_rng(np.uint64(np.int64(sd)))
-                    off = int(rng.integers(0, max(len(nz), 1)))
-                    nz = np.roll(nz, -off)
-                    reps = int(np.ceil(len(y) / len(nz)))
-                    nz = np.tile(nz, reps)[: len(y)]
-                    p_sig = float(np.mean(y**2))
-                    p_nz = float(np.mean(nz**2))
-                    if p_sig > 0 and p_nz > 0:
-                        nz = nz * np.sqrt(
-                            p_sig / (10.0 ** (snr_db_target / 10.0)) / p_nz
-                        )
-                        y = y + nz
-                        did_mix = True
-            y = np.clip(y, -0.99997, 0.99997).astype(np.float32)
-            out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-            out["sr_hz"].append(sr)
-            out["dur_ms"].append(int(round(1000 * len(y) / sr)))
-            out["mixed"].append(did_mix)
-        return pd.DataFrame(out)
+                nx = None
+            if nx is not None and len(nx) and len(y):
+                nz = _resample_linear(nx, nsr, sr).astype(np.float64)
+                rng = np.random.default_rng(np.uint64(np.int64(sd)))
+                off = int(rng.integers(0, max(len(nz), 1)))
+                nz = np.roll(nz, -off)
+                reps = int(np.ceil(len(y) / len(nz)))
+                nz = np.tile(nz, reps)[: len(y)]
+                p_sig = float(np.mean(y**2))
+                p_nz = float(np.mean(nz**2))
+                if p_sig > 0 and p_nz > 0:
+                    nz = nz * np.sqrt(
+                        p_sig / (10.0 ** (snr_db_target / 10.0)) / p_nz
+                    )
+                    y = y + nz
+                    did_mix = True
+        return np.clip(y, -0.99997, 0.99997).astype(np.float32), sr, did_mix
 
-    return mix_udf
+    return _clip_udf(step, MIXED_TYPE)
 
 
 def mix_noise_clips(
@@ -2876,7 +2514,6 @@ def mix_noise_clips(
     snr_db: float = 10.0,
     seed: int = 0,
     buckets: int = 64,
-    bytes_col: str = "bytes",
     id_col: str = "clip_id",
     noise_id_col: str = "clip_id",
     noise_bytes_col: str = "bytes",
@@ -2933,26 +2570,21 @@ def mix_noise_clips(
     )
     joined = speech.join(reps, "__nb", "left")
     m = make_mix_udf(float(snr_db))(
-        F.col(bytes_col),
+        F.col("bytes"),
         F.col("noise_bytes"),
         F.xxhash64(F.col(id_col), F.lit(int(seed))),
-    ).alias("__m")
-    others = [
-        c
-        for c in df.columns
-        if c not in (bytes_col, "sr_hz", "dur_ms", "codec")
-    ]
-    return joined.select(*others, "noise_id", m).select(
-        *others,
-        F.when(F.col("__m.mixed"), F.col("noise_id")).alias("noise_id"),
-        F.col("__m.mixed").alias("mixed"),
-        F.when(F.col("__m.mixed"), F.lit(float(snr_db))).alias(
-            "noise_snr_db"
-        ),
-        F.col("__m.bytes").alias("bytes"),
-        F.col("__m.sr_hz").alias("sr_hz"),
-        F.col("__m.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
+    )
+    mixed = F.col("__x.mixed")
+    return _swap_payload(
+        joined,
+        m,
+        [
+            ("noise_id", F.when(mixed, F.col("noise_id"))),
+            "mixed",
+            ("noise_snr_db", F.when(mixed, F.lit(float(snr_db)))),
+        ],
+        first=True,
+        cols=df.columns,
     )
 
 
@@ -3027,28 +2659,13 @@ def make_denoise_udf(
     over: float = 2.0,
     gain_floor: float = 0.05,
 ):
-    @F.pandas_udf(DENOISED_TYPE)
-    def denoise_udf(raw: pd.Series) -> pd.DataFrame:
-        from .synth import wrap_wav
+    def step(sr, x):
+        y, floor_db = denoise_pcm(
+            x, n_fft=n_fft, over=over, gain_floor=gain_floor
+        )
+        return y, sr, float(floor_db)
 
-        out = {"bytes": [], "sr_hz": [], "dur_ms": [], "noise_floor_db": []}
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                for k in out:
-                    out[k].append(None)
-                continue
-            y, floor_db = denoise_pcm(
-                x, n_fft=n_fft, over=over, gain_floor=gain_floor
-            )
-            out["bytes"].append(wrap_wav(y, sr, "pcm16"))
-            out["sr_hz"].append(sr)
-            out["dur_ms"].append(int(1000 * len(y) / sr + 0.5))
-            out["noise_floor_db"].append(float(floor_db))
-        return pd.DataFrame(out)
-
-    return denoise_udf
+    return _clip_udf(step, DENOISED_TYPE)
 
 
 def denoise_clips(
@@ -3057,7 +2674,6 @@ def denoise_clips(
     n_fft: int = 512,
     over: float = 2.0,
     gain_floor: float = 0.05,
-    bytes_col: str = "bytes",
 ):
     """Corpus noise suppression (the cleanup half of the robustness
     recipe — `augment_clips`/`mix_noise_clips` ADD noise for training
@@ -3068,22 +2684,8 @@ def denoise_clips(
     other payload transform in this module. Adds lineage column
     ``noise_floor_db`` (the estimate the gate used; -inf for clips too
     short to denoise)."""
-    s = make_denoise_udf(n_fft, over, gain_floor)(
-        F.col(bytes_col)
-    ).alias("__d")
-    others = [
-        c
-        for c in df.columns
-        if c not in (bytes_col, "sr_hz", "dur_ms", "codec", "noise_floor_db")
-    ]
-    return df.select(*others, s).select(
-        *others,
-        F.col("__d.bytes").alias("bytes"),
-        F.col("__d.sr_hz").alias("sr_hz"),
-        F.col("__d.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
-        F.col("__d.noise_floor_db").alias("noise_floor_db"),
-    )
+    udf = make_denoise_udf(n_fft, over, gain_floor)
+    return _swap_payload(df, udf(F.col("bytes")), ["noise_floor_db"])
 
 
 PROFILE_CLIPS_TYPE = T.StructType(
@@ -3098,7 +2700,6 @@ PROFILE_CLIPS_TYPE = T.StructType(
 def profile_clips(
     df,
     *,
-    bytes_col: str = "bytes",
     transcript_col: str = "transcript",
     clipping_threshold: float = 0.002,
     dc_threshold: float = 0.02,
@@ -3132,7 +2733,7 @@ def profile_clips(
         ),
         (F.col(transcript_col).isNull()
          | (F.length(transcript_col) == 0)).cast("double").alias("_empty"),
-        audio_features_ext(F.col(bytes_col)).alias("_a"),
+        audio_features_ext(F.col("bytes")).alias("_a"),
     ).select(
         "codec", "sr_hz", "dur_ms", "_tok", "_empty", "_a.*"
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -3309,24 +2910,11 @@ def integrated_lufs(x: np.ndarray, sr: int) -> Optional[float]:
 LOUDNESS_TYPE = T.DoubleType()
 
 
-def measure_loudness_clips(
-    df, bytes_col: str = "bytes", out_col: str = "lufs"
-):
+def measure_loudness_clips(df, out_col: str = "lufs"):
     """Add a BS.1770 integrated-loudness column (one Arrow pass,
     map-only; NULL for undecodable or gated-silent payloads)."""
-
-    @F.pandas_udf(LOUDNESS_TYPE)
-    def lufs_udf(raw: pd.Series) -> pd.Series:
-        out = []
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-                out.append(integrated_lufs(x, sr))
-            except (ValueError, struct.error):
-                out.append(None)
-        return pd.Series(out, dtype="float64")
-
-    return df.withColumn(out_col, lufs_udf(F.col(bytes_col)))
+    udf = _clip_udf(lambda sr, x: integrated_lufs(x, sr), LOUDNESS_TYPE)
+    return df.withColumn(out_col, udf(F.col("bytes")))
 
 
 # --- Telephony channel simulation ---------------------------------------------
@@ -3347,7 +2935,6 @@ def simulate_telephony_clips(
     high_hz: float = 3400.0,
     codec: str = "mulaw",
     keep_rate: bool = True,
-    bytes_col: str = "bytes",
 ):
     """Telephony-channel robustness augmentation: the narrowband PSTN
     path every real ASR corpus partially arrives through — 8 kHz
@@ -3376,50 +2963,24 @@ def simulate_telephony_clips(
     if not (0 <= lo < hi <= 4000.0):
         raise ValueError("band must satisfy 0 <= low < high <= 4000 Hz")
 
-    @F.pandas_udf(TELEPHONY_TYPE)
-    def telephony_udf(raw: pd.Series) -> pd.DataFrame:
-        from .synth import wrap_wav
+    def step(sr, x):
+        n_in = len(x)
+        y = _resample_sinc(x, sr, 8000) if sr != 8000 else x
+        if len(y):
+            spec = np.fft.rfft(y.astype(np.float64))
+            f = np.fft.rfftfreq(len(y), 1.0 / 8000.0)
+            spec[(f < lo) | (f > hi)] = 0.0
+            y = np.fft.irfft(spec, n=len(y))
+        y = dec(enc(np.clip(y, -1.0, 1.0).astype(np.float32)))
+        if keep_rate and sr != 8000:
+            y = _resample_sinc(y, 8000, sr)
+            if len(y) < n_in:  # exact length restoration
+                y = np.pad(y, (0, n_in - len(y)))
+            else:
+                y = y[:n_in]
+        return y, sr if keep_rate else 8000
 
-        out = {"bytes": [], "sr_hz": [], "dur_ms": []}
-        for b in raw:
-            try:
-                sr, x = decode_wav(b)
-            except (ValueError, struct.error):
-                for k in out:
-                    out[k].append(None)
-                continue
-            n_in = len(x)
-            y = _resample_sinc(x, sr, 8000) if sr != 8000 else x
-            if len(y):
-                spec = np.fft.rfft(y.astype(np.float64))
-                f = np.fft.rfftfreq(len(y), 1.0 / 8000.0)
-                spec[(f < lo) | (f > hi)] = 0.0
-                y = np.fft.irfft(spec, n=len(y))
-            y = np.clip(y, -1.0, 1.0).astype(np.float32)
-            y = dec(enc(y))
-            if keep_rate and sr != 8000:
-                y = _resample_sinc(y, 8000, sr)
-                if len(y) < n_in:  # exact length restoration
-                    y = np.pad(y, (0, n_in - len(y)))
-                else:
-                    y = y[:n_in]
-            sr_out = sr if keep_rate else 8000
-            out["bytes"].append(wrap_wav(y, sr_out, "pcm16"))
-            out["sr_hz"].append(sr_out)
-            out["dur_ms"].append(int(round(1000 * len(y) / sr_out)))
-        return pd.DataFrame(out)
-
-    t = telephony_udf(F.col(bytes_col)).alias("__t")
-    others = [
-        c
-        for c in df.columns
-        if c not in ("bytes", "sr_hz", "dur_ms", "codec", "channel")
-    ]
-    return df.select(*others, t).select(
-        *others,
-        F.col("__t.bytes").alias("bytes"),
-        F.col("__t.sr_hz").alias("sr_hz"),
-        F.col("__t.dur_ms").alias("dur_ms"),
-        F.lit("pcm16").alias("codec"),
-        F.lit("telephony").alias("channel"),
+    udf = _clip_udf(step, TELEPHONY_TYPE)
+    return _swap_payload(
+        df, udf(F.col("bytes")), [("channel", F.lit("telephony"))]
     )

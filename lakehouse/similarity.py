@@ -455,11 +455,6 @@ def _dot_fold(a, b):
     )
 
 
-def _ivf_dots(vec, cents: list[list[float]]):
-    """One exact literal-fold dot product per centroid (JVM-side)."""
-    return [_proj(vec, row) for row in cents]
-
-
 def _ivf_qdots(vec, cents: list[list[float]]):
     """Query-side (cid, dot) struct array via ONE nested-array literal
     + higher-order functions — the centroid matrix rides as data, not
