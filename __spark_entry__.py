@@ -574,6 +574,67 @@ FROM merged
 """
 
 
+def _q_lh_sql_insert_overwrite(spark, sf_dir):
+    """PARTITION-less ``INSERT OVERWRITE t SELECT …`` text, under both
+    values of ``spark.sql.sources.partitionOverwriteMode``. ``static``
+    (Spark's default) replaces the WHOLE table in one commit — the
+    partitions the query's rows miss end up empty, and a pending MoR
+    delete file goes with the files it applied to; ``dynamic`` then
+    replaces only the partitions its rows land in (the latest date)."""
+    t = _events_table(spark, sf_dir, appends=2)
+    t.delete("event_type = 'error'", mode="mor", key="event_id")
+    ev = _events(spark, sf_dir)
+    ev.createOrReplaceTempView("sql_ow_src")
+    d = ev.agg(F.max("event_date")).collect()[0][0]
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(conf, None)
+    try:
+        spark.conf.set(conf, "static")
+        head = t.current_snapshot_id()
+        t.sql(
+            """INSERT OVERWRITE events_table
+               SELECT event_id, ts, user_id, 'replaced' AS event_type,
+                      value * 2 AS value, props, event_date
+               FROM sql_ow_src WHERE user_id % 4 = 0"""
+        )
+        assert t.snapshots()[-1].parent_snapshot_id == head, "one commit"
+        assert not t.plan().delete_files, "the MoR delete file must go"
+        spark.conf.set(conf, "dynamic")
+        t.sql(
+            f"""INSERT OVERWRITE events_table
+                SELECT event_id + 40000000 AS event_id, ts, user_id,
+                       'dynamic' AS event_type, 5.0 AS value, props,
+                       event_date
+                FROM sql_ow_src
+                WHERE event_date = DATE'{d}' AND user_id % 5 = 0"""
+        )
+    finally:
+        if prior is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prior)
+    return _events_out(t.scan())
+
+
+LH_SQL_INSERT_OVERWRITE_ORACLE = """
+WITH ev AS (SELECT *, CAST(ts AS DATE) AS event_date FROM events),
+d AS (SELECT max(event_date) AS d FROM ev),
+replaced AS (
+    SELECT event_id, ts, user_id, 'replaced' AS event_type,
+           value * 2 AS value, props, event_date
+    FROM ev WHERE user_id % 4 = 0 AND event_date <> (SELECT d FROM d)
+),
+dynamic AS (
+    SELECT event_id + 40000000 AS event_id, ts, user_id,
+           'dynamic' AS event_type, 5.0 AS value, props, event_date
+    FROM ev WHERE event_date = (SELECT d FROM d) AND user_id % 5 = 0
+),
+merged AS (SELECT * FROM replaced UNION ALL SELECT * FROM dynamic)
+SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value, props,
+       CAST(event_date AS VARCHAR) AS event_date_s
+FROM merged
+"""
+
 def _q_lh_ops_alerts(spark, sf_dir):
     """Ops alarm evaluation (lakehouse/alerts.py — r3 verdict #5; the
     reference ships CloudWatch ALARMS over its stream,
@@ -5966,6 +6027,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lh_merge_mor": _q_lh_merge_mor,
         "lh_merge_full_sync": _q_lh_merge_full_sync,
         "lh_sql_merge": _q_lh_sql_merge,
+        "lh_sql_insert_overwrite": _q_lh_sql_insert_overwrite,
         "lh_sql_ddl_lifecycle": _q_lh_sql_ddl_lifecycle,
         "lh_spj_join": _q_lh_spj_join,
         "lh_spj_anti": _q_lh_spj_anti,
@@ -6628,6 +6690,7 @@ def oracle_sql() -> dict[str, str]:
             FROM events GROUP BY 1 ORDER BY 1
         """,
         "lh_sql_merge": LH_SQL_MERGE_ORACLE,
+        "lh_sql_insert_overwrite": LH_SQL_INSERT_OVERWRITE_ORACLE,
         "lh_sql_ddl_lifecycle": LH_SQL_DDL_ORACLE,
         "lh_ops_alerts": LH_OPS_ALERTS_ORACLE,
         "lh_commit_metrics": """

@@ -983,11 +983,12 @@ def dedup_clips(table, *, id_col: str = "clip_id", max_hamming: int = 3):
     """
     from .ops.mor import delete_mor_keys
 
+    meta = table.meta
     pairs = audio_dup_pairs(
-        table.scan(), id_col=id_col, max_hamming=max_hamming
+        table._scan(meta), id_col=id_col, max_hamming=max_hamming
     )
     victims = pairs.select(F.col("clip_b").alias(id_col)).distinct()
-    return delete_mor_keys(table, victims, key=id_col)
+    return delete_mor_keys(table, meta, victims, key=id_col)
 
 
 CURATE_FEATURES_TYPE = T.StructType(
@@ -1046,8 +1047,9 @@ def curate_clips(
     from .dedup import hamming_pairs64
     from .ops.mor import delete_mor_keys
 
+    meta = table.meta
     narrow = (
-        table.scan()
+        table._scan(meta)
         .select(
             F.col(id_col),
             F.col("dur_ms"),
@@ -1079,7 +1081,7 @@ def curate_clips(
         )
         dup_victims = pairs.select(F.col("clip_b").alias(id_col))
         victims = qc_bad.unionByName(dup_victims).distinct()
-        return delete_mor_keys(table, victims, key=id_col)
+        return delete_mor_keys(table, meta, victims, key=id_col)
     finally:
         narrow.unpersist()
 

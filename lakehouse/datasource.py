@@ -1089,13 +1089,14 @@ class _FormatWriter:
     def abort(self, messages, batchId: Optional[int] = None) -> None:
         _drop_files(self._root, _collect_rel_paths(messages))
 
-    def _entries(self, rels):
+    def _entries(self, rels, properties):
         from .ops.append import _parse_partition_dirs, harvest_stats
 
         return harvest_stats(
             None,
             self._root,
             [(rel, _parse_partition_dirs(rel, self._spec)) for rel in rels],
+            properties=properties,
         )
 
 
@@ -1108,16 +1109,13 @@ class LakehouseBatchWriter(_FormatWriter, DataSourceArrowWriter):
     def commit(self, messages):
         from .table import Table
 
-        entries = self._entries(_collect_rel_paths(messages))
         t = Table(None, self._root)
+        meta = t.meta
+        entries = self._entries(_collect_rel_paths(messages), meta.properties)
         if self._overwrite:
-            plan = t.plan()
-            removed = [e.file_path for e in plan.files] + [
-                e.file_path for e in plan.delete_files
-            ]
-            t._commit_files("overwrite", entries, removed)
+            t._replace_all(meta, "overwrite", entries)
         else:
-            t._commit_files("append", entries)
+            t._commit_files("append", entries, base=meta)
 
 
 class LakehouseStreamWriter(_FormatWriter, DataSourceStreamArrowWriter):
@@ -1135,13 +1133,15 @@ class LakehouseStreamWriter(_FormatWriter, DataSourceStreamArrowWriter):
         from .table import Table
 
         t = Table(None, self._root)
+        meta = t.meta
         rels = _collect_rel_paths(messages)
-        if batch_replayed(t, batchId):
+        if batch_replayed(meta, batchId):
             _drop_files(self._root, rels)  # checkpoint replay
             return
         t._commit_files(
-            "append", self._entries(rels),
+            "append", self._entries(rels, meta.properties),
             summary={"stream_batch_id": int(batchId)},
+            base=meta,
         )
 
 

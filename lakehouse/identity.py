@@ -149,7 +149,7 @@ def assign_identity(
 
 
 def validate_merge_supplied_ids(
-    table, src: DataFrame, specs, key: str, *, branch=None
+    table, meta, src: DataFrame, specs, key: str, *, branch=None
 ) -> None:
     """GENERATED ALWAYS enforcement for MERGE sources. Delta rejects
     explicit identity values in INSERT/UPDATE/MERGE wholesale; this
@@ -201,13 +201,9 @@ def validate_merge_supplied_ids(
         else None
     )
     try:
-        if branch is not None:
-            try:
-                tgt = table.scan(ref=branch, filter=flt, columns=[key])
-            except RefError:
-                tgt = table.scan(filter=flt, columns=[key])
-        else:
-            tgt = table.scan(filter=flt, columns=[key])
+        # the txn branch exists from its first staged commit on
+        ref = branch if branch in meta.refs else None
+        tgt = table._scan(meta, ref=ref, filter=flt, columns=[key])
         bad = (
             supplied.select(key)
             .join(tgt.select(key), on=key, how="left_anti")

@@ -275,9 +275,11 @@ def commit(
     CommitConflictError itself if the new current state invalidates the
     pending change (e.g. a compaction's source files were replaced).
 
-    ``base``: the metadata the op already loaded (and must not be
-    mutated by ``apply``). The first attempt commits on it; if it is
-    stale the CAS loses, and only then is the current version read."""
+    ``base``: the one metadata version the op read at entry (``apply``
+    must not mutate it). The first attempt commits on it; only a lost
+    CAS reads the current version, once per lost attempt. Returns the
+    version this commit published: a following step of the same op
+    continues on it without reading it back."""
     for attempt in range(max_retries):
         if base is None:
             base = load_metadata(table_root)

@@ -149,6 +149,7 @@ def _link_or_copy(src: str, dst: str) -> bool:
 
 def add_files(
     table,
+    meta,
     src,
     *,
     recursive: bool = True,
@@ -184,7 +185,6 @@ def add_files(
                 "for EXTERNAL files"
             )
 
-    meta = table.meta
     table_schema = T.StructType.fromJson(meta.schema_json)
     spec = meta.partition_spec
 
@@ -234,7 +234,9 @@ def add_files(
         if fills:
             fill_by_rel[rel] = fills
 
-    entries = harvest_stats(table.spark, root, files)
+    entries = harvest_stats(
+        table.spark, root, files, properties=meta.properties
+    )
     for e in entries:
         for col, v in fill_by_rel.get(e.file_path, {}).items():
             e.stats[col] = {
@@ -274,4 +276,5 @@ def add_files(
             "zero-copy-links": linked,
         },
         branch=branch,
+        base=meta,
     )

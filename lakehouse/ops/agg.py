@@ -132,13 +132,13 @@ def count_rows(table, *, filter=None) -> AggResult:  # noqa: A002
     files are read with the residual predicate (Catalyst prunes the
     read to the predicate columns — a count scans no payload bytes)."""
     preds = normalize_filter(filter)
-    plan = table.plan(filter=filter)
+    meta = table.meta
+    plan = table._plan(meta, filter=filter)
     if plan.delete_files:
-        df = table.scan(filter=filter)
+        df = table._scan(meta, filter=filter)
         return AggResult(df.count(), 0, len(plan.files), "mor-deletes-pending")
     from ..fieldids import stats_lookup
 
-    meta = table.meta
     stats_of = stats_lookup(meta.schemas, meta.current_schema_id)
     full, partial = [], []
     for e in plan.files:
@@ -149,7 +149,7 @@ def count_rows(table, *, filter=None) -> AggResult:  # noqa: A002
     if partial:
         from ..meta.scan import read_entries
 
-        df = read_entries(table.spark, table.meta, table.root, partial)
+        df = read_entries(table.spark, meta, table.root, partial)
         residual = to_sql(preds)
         if residual:
             df = df.filter(residual)
@@ -165,9 +165,10 @@ def min_max(table, columns, *, filter=None) -> AggResult:  # noqa: A002
     ``{col: (min, max)}`` in stats encoding (temporal values as ISO
     strings — callers compare like-for-like)."""
     preds = normalize_filter(filter)
-    plan = table.plan(filter=filter)
+    meta = table.meta
+    plan = table._plan(meta, filter=filter)
     if plan.delete_files:
-        df = table.scan(filter=filter)
+        df = table._scan(meta, filter=filter)
         row = df.agg(
             *[F.min(c).alias(f"mn_{c}") for c in columns],
             *[F.max(c).alias(f"mx_{c}") for c in columns],
@@ -184,7 +185,6 @@ def min_max(table, columns, *, filter=None) -> AggResult:  # noqa: A002
         )
     from ..fieldids import stats_lookup
 
-    meta = table.meta
     stats_of = stats_lookup(meta.schemas, meta.current_schema_id)
     full, partial = [], []
     for e in plan.files:
@@ -208,7 +208,7 @@ def min_max(table, columns, *, filter=None) -> AggResult:  # noqa: A002
     if partial:
         from ..meta.scan import read_entries
 
-        df = read_entries(table.spark, table.meta, table.root, partial)
+        df = read_entries(table.spark, meta, table.root, partial)
         residual = to_sql(preds)
         if residual:
             df = df.filter(residual)
@@ -254,7 +254,8 @@ def sum_agg(table, columns, *, filter=None) -> AggResult:  # noqa: A002
     AVG = sum / count at the caller.
     """
     preds = normalize_filter(filter)
-    plan = table.plan(filter=filter)
+    meta = table.meta
+    plan = table._plan(meta, filter=filter)
 
     def scan_agg(df, n_meta, n_scan, fallback=None):
         row = df.agg(
@@ -266,12 +267,11 @@ def sum_agg(table, columns, *, filter=None) -> AggResult:  # noqa: A002
 
     if plan.delete_files:
         return scan_agg(
-            table.scan(filter=filter), 0, len(plan.files),
+            table._scan(meta, filter=filter), 0, len(plan.files),
             "mor-deletes-pending",
         )
     from ..fieldids import stats_lookup
 
-    meta = table.meta
     stats_of = stats_lookup(meta.schemas, meta.current_schema_id)
 
     def has_sum(e) -> bool:
@@ -296,7 +296,7 @@ def sum_agg(table, columns, *, filter=None) -> AggResult:  # noqa: A002
     if partial:
         from ..meta.scan import read_entries
 
-        df = read_entries(table.spark, table.meta, table.root, partial)
+        df = read_entries(table.spark, meta, table.root, partial)
         residual = to_sql(preds)
         if residual:
             df = df.filter(residual)

@@ -78,8 +78,8 @@ def harvest_stats(
     table_root: str,
     files: Sequence[tuple[str, dict[str, Any]]],
     *,
+    properties: Mapping[str, Any],
     sort_order: str = "",
-    properties: Optional[Mapping[str, Any]] = None,
 ) -> list[DataFileEntry]:
     """Footer-only stats harvest; distributed over executors when the file
     count is too large for the driver to chew through serially and a
@@ -94,20 +94,13 @@ def harvest_stats(
     ``lakehouse`` format writers' commit, and ``add_files`` — so blooms
     and sums stay consistent across ops without per-op wiring. MoR
     delete files are the one exception: they take plain footer stats.
-    ``properties``: the table properties the op already loaded (read
-    from the current metadata when omitted).
+    ``properties``: the table properties of the op's read version.
     """
     from ..bloom import bloom_columns_property, harvest_file_blooms
-    from ..meta.snapshots import load_metadata
     from .agg import agg_stats_columns_property
 
-    props = (
-        properties
-        if properties is not None
-        else load_metadata(table_root).properties
-    )
-    bloom_cols = bloom_columns_property(props)
-    sum_cols = agg_stats_columns_property(props)
+    bloom_cols = bloom_columns_property(properties)
+    sum_cols = agg_stats_columns_property(properties)
 
     def one(item):
         rel, part = item
@@ -143,10 +136,10 @@ def write_files(
     job_rel: str,
     spec: Sequence[dict[str, Any]],
     *,
+    properties: Mapping[str, Any],
     extra_dirs: Sequence[str] = (),
     sort_order: str = "",
     mode: str = "error",
-    properties: Optional[Mapping[str, Any]] = None,
 ) -> list[DataFileEntry]:
     """The one data-file kernel: save ``df`` as Parquet under
     ``job_rel``, list the files the job wrote, harvest their entries.
@@ -217,11 +210,11 @@ def write_data_files(
     spec: Sequence[dict[str, Any]],
     df: DataFrame,
     *,
+    properties: Mapping[str, Any],
     target_file_count: Optional[int] = None,
     files_per_partition: Optional[int] = None,
     sort_order: str = "",
     job_dir: Optional[str] = None,
-    properties: Optional[Mapping[str, Any]] = None,
     identity: Optional[Mapping[str, Mapping[str, int]]] = None,
 ) -> list[DataFileEntry]:
     """Write new rows as committed-later data files under the table's
@@ -243,22 +236,18 @@ def write_data_files(
     ``None``/``None`` keeps the incoming partitioning (no shuffle — the
     streaming append path).
 
-    ``properties``: the table properties the op already loaded — the
-    contract and the stats harvest read them (one metadata read per
-    write when omitted). ``identity``: identity specs whose NULLs are
-    filled right after the conform; the committing op passes them
-    because it advances the watermarks in its own commit.
+    ``properties``: the table properties of the op's read version — the
+    contract and the stats harvest read them. ``identity``: identity
+    specs whose NULLs are filled right after the conform; the committing
+    op passes them because it advances the watermarks in its own commit.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from ..constraints import apply_generated, enforce
     from ..identity import assign_identity
-    from ..meta.snapshots import load_metadata
     from ..sortorder import provenance_tag
 
-    if properties is None:
-        properties = load_metadata(table_root).properties
     out = conform(df, T.StructType.fromJson(schema_json))
     if identity:
         out = assign_identity(out, identity)

@@ -36,6 +36,7 @@ from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..curves import bits_per_dim
 from ..lineage import LineageLog
@@ -86,6 +87,7 @@ def _column_bounds(
 
 def cluster(
     table,
+    meta,
     columns: Sequence[str],
     *,
     curve: str = "zorder",
@@ -107,7 +109,7 @@ def cluster(
     if curve not in ("zorder", "hilbert"):
         raise ValueError("curve must be 'zorder' or 'hilbert'")
     spark = table.spark
-    schema = table.schema
+    schema = T.StructType.fromJson(meta.schema_json)
     col_types = {f.name: f.dataType for f in schema.fields}
     for c in columns:
         if c not in col_types:
@@ -117,12 +119,11 @@ def cluster(
     log.start_job(
         "cluster", {"columns": list(columns), "curve": curve}
     )
-    live = table.plan(filter=partition_filter).files
+    live = table._plan(meta, filter=partition_filter).files
     if not live:
         log.finish_job({"partitions": 0})
         return ClusterResult(log.job_id, None, 0, 0, 0, 0)
 
-    meta = table.meta
     spec = meta.partition_spec
     bounds = _column_bounds(live, columns)
     bits = bits_per_dim(len(columns))
@@ -191,7 +192,7 @@ def cluster(
         GRID = 64
         from ..meta.scan import read_entries
 
-        base = read_entries(spark, table.meta, table.root, live, schema)
+        base = read_entries(spark, meta, table.root, live, schema)
 
         def with_pk(df):
             df, part_cols = with_partition_columns(df, spec)
@@ -279,8 +280,8 @@ def cluster(
             .sortWithinPartitions(*part_cols, "__bucket", ZKEY_COL)
         )
         all_entries = write_files(
-            out, table.root, job_data_rel, spec, extra_dirs=["__bucket"],
-            sort_order=sort_order, mode="overwrite",
+            out, table.root, job_data_rel, spec, properties=meta.properties,
+            extra_dirs=["__bucket"], sort_order=sort_order, mode="overwrite",
         )
         entries_by_pk: dict[str, list[DataFileEntry]] = {}
         for e in all_entries:
@@ -357,6 +358,7 @@ def cluster(
             "curve": curve,
             "bytes_rewritten": bytes_rewritten,
         },
+        base=meta,
     )
     log.finish_job(
         {

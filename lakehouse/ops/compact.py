@@ -48,6 +48,7 @@ from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..lineage import LineageLog
 from ..meta.manifests import DataFileEntry
@@ -160,7 +161,7 @@ def _inherit_partition(entries, members) -> None:
 
 
 def _run_bins_direct(
-    table, log, pending, job_data_rel, entries_by_key, fault_injector
+    table, meta, log, pending, job_data_rel, entries_by_key, fault_injector
 ) -> None:
     """Job-per-bin concatenation: read a bin's files, ``coalesce(1)``
     (no shuffle — the payload is streamed scan → write), one output
@@ -181,7 +182,6 @@ def _run_bins_direct(
         clustered = sort_order.startswith(("zorder(", "hilbert("))
         from ..meta.scan import read_entries
 
-        meta = table.meta
         if clustered:
             # clustered files carry the hidden physical zkey column;
             # read it along, re-sort the concatenation (merge of sorted
@@ -195,7 +195,7 @@ def _run_bins_direct(
             df = (
                 read_entries(
                     spark, meta, table.root, members,
-                    schema_with_zkey(table.schema),
+                    schema_with_zkey(T.StructType.fromJson(meta.schema_json)),
                 )
                 .coalesce(1)
                 .sortWithinPartitions("zkey")
@@ -207,6 +207,7 @@ def _run_bins_direct(
             )
         entries = write_files(
             df, table.root, out_rel_dir, (),
+            properties=meta.properties,
             sort_order=sort_order if clustered else "",
             mode="overwrite",  # rerun of an interrupted bin
         )
@@ -222,7 +223,7 @@ def _run_bins_direct(
 
 
 def _run_bins_shuffle(
-    table, log, pending, job_data_rel, entries_by_key, fault_injector
+    table, meta, log, pending, job_data_rel, entries_by_key, fault_injector
 ) -> None:
     """One Spark job for every pending bin: broadcast file→bin map
     joined on ``input_file_name()``, hash-repartition on the bin key,
@@ -244,7 +245,6 @@ def _run_bins_shuffle(
     # current schema). Unmapped tables keep the one-branch plan.
     from ..meta.scan import read_entries
 
-    meta = table.meta
     file_to_bin = []
     all_members = []
     for k, members in pending:
@@ -278,7 +278,8 @@ def _run_bins_shuffle(
     # every output footer is harvested in one pass; bins are then
     # finalized in deterministic order (lineage only; no further jobs)
     all_entries = write_files(
-        out, table.root, attempt_rel, (), extra_dirs=["__bin"]
+        out, table.root, attempt_rel, (), properties=meta.properties,
+        extra_dirs=["__bin"],
     )
     by_key: dict[str, list[DataFileEntry]] = {}
     for e in all_entries:
@@ -308,6 +309,7 @@ def _run_bins_shuffle(
 
 def compact(
     table,
+    meta,
     *,
     target_file_size: int = DEFAULT_TARGET_FILE_SIZE,
     small_file_threshold: Optional[int] = None,
@@ -317,7 +319,8 @@ def compact(
     execution: str = "auto",
     fault_injector: Optional[Callable[[str], None]] = None,
 ) -> CompactionResult:
-    """Rewrite small files into ~``target_file_size`` files per partition.
+    """Rewrite small files into ~``target_file_size`` files per partition,
+    planned, read, written and committed on the one version ``meta``.
 
     ``execution``: "direct" (job-per-bin concatenation, no shuffle),
     "shuffle" (one job for all bins), or "auto" (direct up to
@@ -343,13 +346,13 @@ def compact(
 
     from ..fieldids import has_mapped_schemas
 
-    live = table.plan(filter=partition_filter).files
+    live = table._plan(meta, filter=partition_filter).files
     bins = plan_bins(
         live,
         target_file_size=target_file_size,
         small_file_threshold=threshold,
         min_input_files=min_input_files,
-        schema_groups=has_mapped_schemas(table.meta.schemas),
+        schema_groups=has_mapped_schemas(meta.schemas),
     )
     if not bins:
         log.finish_job({"bins": 0})
@@ -382,33 +385,13 @@ def compact(
             clustered_pending.append((k, m))
         else:
             plain_pending.append((k, m))
-    if clustered_pending:
-        _run_bins_direct(
-            table,
-            log,
-            clustered_pending,
-            job_data_rel,
-            entries_by_key,
-            fault_injector,
-        )
-    if plain_pending and execution == "direct":
-        _run_bins_direct(
-            table,
-            log,
-            plain_pending,
-            job_data_rel,
-            entries_by_key,
-            fault_injector,
-        )
-    elif plain_pending:
-        _run_bins_shuffle(
-            table,
-            log,
-            plain_pending,
-            job_data_rel,
-            entries_by_key,
-            fault_injector,
-        )
+    run_plain = _run_bins_direct if execution == "direct" else _run_bins_shuffle
+    for run, todo in (
+        (_run_bins_direct, clustered_pending), (run_plain, plain_pending)
+    ):
+        if todo:
+            run(table, meta, log, todo, job_data_rel, entries_by_key,
+                fault_injector)
 
     added: list[DataFileEntry] = []
     removed: list[str] = []
@@ -427,6 +410,7 @@ def compact(
             "bins": len(bins),
             "bytes_rewritten": bytes_rewritten,
         },
+        base=meta,
     )
     log.finish_job(
         {

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any, Optional
 
 from pyspark.sql import functions as F
@@ -52,6 +52,7 @@ class GcResult:
 
 def expire_snapshots(
     table,
+    meta,
     *,
     keep_last: Optional[int] = None,
     older_than_ms: Optional[int] = None,
@@ -119,23 +120,9 @@ def expire_snapshots(
         # the stream replay guard must keep skipping the batches whose
         # snapshots go now
         props = mark_expired_batches(base.properties, expired)
-        return S.TableMetadata(
-            table_uuid=base.table_uuid,
-            location=base.location,
-            version=base.version,
-            schema_json=base.schema_json,
-            schemas=base.schemas,
-            current_schema_id=base.current_schema_id,
-            partition_spec=base.partition_spec,
-            partition_specs=base.partition_specs,
-            default_spec_id=base.default_spec_id,
-            current_snapshot_id=base.current_snapshot_id,
-            snapshots=surviving,
-            properties=props,
-            refs=refs,
-        )
+        return replace(base, snapshots=surviving, properties=props, refs=refs)
 
-    meta = S.commit(table.root, apply)
+    meta = S.commit(table.root, apply, base=meta)
     return ExpireResult(
         expired_snapshot_ids=expired_holder.get("ids", []),
         surviving_snapshot_ids=[s.snapshot_id for s in meta.snapshots],
@@ -175,6 +162,7 @@ def _live_manifest_paths(meta: S.TableMetadata, table_root: str) -> set[str]:
 
 def remove_orphan_files(
     table,
+    meta,
     *,
     older_than_ms: Optional[int] = None,
     dry_run: bool = False,
@@ -193,7 +181,6 @@ def remove_orphan_files(
         if older_than_ms is not None
         else int(time.time() * 1000) - DEFAULT_GRACE_MS
     )
-    meta = table.meta
     on_disk = _storage_files(table.root)
 
     use_spark = mode == "spark" or (

@@ -118,13 +118,14 @@ def conform_merge_source(schema, source: DataFrame, op_col: str) -> DataFrame:
 
 
 def _validation_spec(
-    table, isolation, validate_from, key, key_min, key_max,
+    meta, isolation, validate_from, key, key_min, key_max,
     nms_domain=None,
 ):
     """Serializable-isolation spec for Table._validate_serializable:
     the operation's read base + its source-key range, stat-encoded so
     it compares like manifest min/max (meta/manifests._encode_stat).
-    ``validate_from`` defaults to the table head at plan time — pass an
+    ``validate_from`` defaults to the head of the op's read version
+    ``meta`` — pass an
     older snapshot id when the source was computed against it (the
     multi-step-pipeline shape Iceberg covers with fromSnapshot).
 
@@ -143,7 +144,7 @@ def _validation_spec(
     base = (
         validate_from
         if validate_from is not None
-        else table.current_snapshot_id()
+        else meta.current_snapshot_id
     )
     spec = {
         "from_snapshot_id": base,
@@ -589,6 +590,7 @@ def _nms_file_sets(meta, nms, cond_sql, cond_preds, touched, live_all):
 
 def merge_into(
     table,
+    meta,
     source: DataFrame,
     *,
     key: str = "clip_id",
@@ -609,8 +611,7 @@ def merge_into(
     if strategy not in ("auto", "broadcast", "shuffle"):
         raise MergeError(f"unknown merge strategy: {strategy!r}")
     spark = table.spark
-    meta = table.meta
-    schema = table.schema
+    schema = T.StructType.fromJson(meta.schema_json)
     if key not in [f.name for f in schema.fields]:
         raise MergeError(f"merge key {key!r} not in table schema")
     nms, nms_cond_sql, nms_cond_preds = _normalize_nms(
@@ -643,7 +644,7 @@ def merge_into(
 
     id_specs = identity_of(meta.properties)
     if id_specs:
-        validate_merge_supplied_ids(table, src, id_specs, key)
+        validate_merge_supplied_ids(table, meta, src, id_specs, key)
         src = assign_identity(
             src,
             id_specs,
@@ -687,7 +688,7 @@ def merge_into(
         None
         if int(stats.src_rows or 0) == 0 and nms_domain is None
         else _validation_spec(
-            table, isolation, validate_from, key,
+            meta, isolation, validate_from, key,
             stats.key_min if int(stats.src_rows or 0) else None,
             stats.key_max if int(stats.src_rows or 0) else None,
             nms_domain=nms_domain,
@@ -708,7 +709,7 @@ def merge_into(
     key_bytes = int(stats.key_bytes or 0)
 
     # --- file-level pruning: which target files can contain source keys? -----
-    live = table.plan().files
+    live = table._plan(meta).files
     live_all = live  # pre-pruning list, shared with the NMS clause
     if int(stats.src_rows or 0) == 0:
         touched = []
@@ -820,7 +821,7 @@ def merge_into(
         from ..meta.scan import read_entries
 
         target_sub = read_entries(
-            spark, table.meta, table.root, touched_entries, schema
+            spark, meta, table.root, touched_entries, schema
         )
     else:
         target_sub = spark.createDataFrame([], schema)
@@ -890,6 +891,7 @@ def merge_into(
         meta.schema_json,
         meta.partition_spec,
         result,
+        properties=meta.properties,
         target_file_count=target_file_count,
         job_dir=f"data/{log.job_id}",
     )
@@ -917,6 +919,7 @@ def merge_into(
         set_props=set_props,
         validate=validate,
         props_guard=props_guard,
+        base=meta,
     )
     log.finish_task(
         "merge",

@@ -40,10 +40,12 @@ from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..expressions import sql_column, sql_text
 from ..lineage import LineageLog
 from ..meta.manifests import DataFileEntry, collect_file_stats
+from ..meta.snapshots import TableMetadata
 from ..ops.append import write_data_files, write_files
 from ..ops.row_filter import _predicate_sql
 
@@ -76,6 +78,7 @@ class ConvertDeletesResult:
 
 def delete_mor(
     table,
+    meta,
     predicate,
     *,
     key: str = "clip_id",
@@ -92,7 +95,7 @@ def delete_mor(
     ``validate=False`` to keep the trickle-delete hot path at
     O(deleted keys) + one key-collection pass.
     """
-    if key not in [f.name for f in table.schema.fields]:
+    if key not in [f["name"] for f in meta.schema_json["fields"]]:
         raise ValueError(f"delete key {key!r} not in table schema")
     pred_sql, _tuples = _predicate_sql(predicate)
     log = LineageLog(table.root, job_id)
@@ -104,7 +107,7 @@ def delete_mor(
     # (already-deleted rows don't resurface in the key set); Catalyst
     # prunes the read down to the columns the predicate + key need
     keys_df = (
-        table.scan()
+        table._scan(meta)
         .filter(sql_column(pred_sql))
         .select(key)
         .filter(F.col(key).isNotNull())
@@ -121,7 +124,7 @@ def delete_mor(
         #    would be deleted too — silent over-delete).
         pred_col = sql_column(pred_sql)
         n_null_matched = (
-            table.scan().filter(pred_col & F.col(key).isNull()).count()
+            table._scan(meta).filter(pred_col & F.col(key).isNull()).count()
         )
         if n_null_matched:
             raise ValueError(
@@ -130,7 +133,7 @@ def delete_mor(
                 f"deleted by key. Use mode='cow'."
             )
         n_over = (
-            table.scan()
+            table._scan(meta)
             .filter(~F.coalesce(pred_col, F.lit(False)))
             .select(F.col(key))
             .join(
@@ -148,7 +151,7 @@ def delete_mor(
                 f"mode='cow', or a key the predicate covers exactly."
             )
 
-    return _commit_eq_delete(table, keys_df, key, log)
+    return _commit_eq_delete(table, meta, keys_df, key, log)
 
 
 # rows per delete-file shard: a ~10M-key parquet is a few tens of MB.
@@ -174,25 +177,28 @@ def _write_eq_delete_file(
             key
         )
     w.write.parquet(out_abs)
+    return _delete_entries(table.root, out_rel_dir, f"eqdelete({key})")
+
+
+def _delete_entries(root: str, out_rel_dir: str, sort_order: str):
+    """Footer-stat entries (``content="deletes"``) of the non-empty
+    delete files a writer left under ``out_rel_dir``."""
     entries = []
-    for n in sorted(os.listdir(out_abs)):
-        if not n.endswith(".parquet"):
-            continue
-        rel = f"{out_rel_dir}/{n}"
-        entry = collect_file_stats(
-            os.path.join(table.root, rel),
-            rel,
-            {},
-            sort_order=f"eqdelete({key})",
-        )
-        entry.content = "deletes"
-        if entry.record_count:
-            entries.append(entry)
+    for n in sorted(os.listdir(os.path.join(root, out_rel_dir))):
+        if n.endswith(".parquet"):
+            rel = f"{out_rel_dir}/{n}"
+            entry = collect_file_stats(
+                os.path.join(root, rel), rel, {}, sort_order=sort_order
+            )
+            entry.content = "deletes"
+            if entry.record_count:
+                entries.append(entry)
     return entries
 
 
 def _commit_eq_delete(
-    table, keys_df, key: str, log: LineageLog, mode_label: str = "merge-on-read"
+    table, meta, keys_df, key: str, log: LineageLog,
+    mode_label: str = "merge-on-read",
 ) -> MorDeleteResult:
     """Write a keys DataFrame as an equality delete file and commit it —
     the shared tail of predicate-driven and key-set-driven MoR deletes."""
@@ -213,6 +219,7 @@ def _commit_eq_delete(
             "key": key,
             "keys_deleted": n_keys,
         },
+        base=meta,
     )
     log.finish_task("delete_mor", entries, files_in=[], bytes_in=0)
     log.finish_job({"snapshot_id": snap.snapshot_id, "keys_deleted": n_keys})
@@ -223,6 +230,7 @@ def _commit_eq_delete(
 
 def delete_mor_keys(
     table,
+    meta,
     keys_df,
     *,
     key: str = "clip_id",
@@ -242,11 +250,12 @@ def delete_mor_keys(
         .filter(F.col(key).isNotNull())
         .distinct()
     )
-    return _commit_eq_delete(table, keys, key, log)
+    return _commit_eq_delete(table, meta, keys, key, log)
 
 
 def merge_into_mor(
     table,
+    meta,
     source,
     *,
     key: str = "clip_id",
@@ -306,7 +315,7 @@ def merge_into_mor(
         _validation_spec as _merge_validation_spec,
     )
 
-    schema = table.schema
+    schema = T.StructType.fromJson(meta.schema_json)
     if key not in [f.name for f in schema.fields]:
         raise MergeError(f"merge key {key!r} not in table schema")
     if isolation not in ("snapshot", "serializable"):
@@ -327,7 +336,6 @@ def merge_into_mor(
         if nms is None
         else (nms_cond_preds if nms_cond_preds is not None else "all")
     )
-    meta = table.meta
     from ..identity import (
         advance_watermarks,
         assign_identity,
@@ -345,7 +353,7 @@ def merge_into_mor(
         # explicit ids on insert-shaped rows rejected pre-write (reads
         # the txn branch head when one is staged).
         validate_merge_supplied_ids(
-            table, src, id_specs, key, branch=branch
+            table, meta, src, id_specs, key, branch=branch
         )
         src = assign_identity(
             src,
@@ -385,7 +393,7 @@ def merge_into_mor(
         if target_file_count is None:
             # size appends like the COW path (~128 MB targets) from
             # manifest stats alone — no target data read
-            live = table.plan().files
+            live = table._plan(meta).files
             tb = sum(e.file_size_bytes for e in live)
             tr = sum(e.record_count for e in live)
             avg_row = tb / tr if tr else 1024
@@ -401,6 +409,7 @@ def merge_into_mor(
                 meta.schema_json,
                 meta.partition_spec,
                 src.filter(not_delete).select(*cols),
+                properties=meta.properties,
                 target_file_count=target_file_count,
                 job_dir=f"data/{log.job_id}",
             )
@@ -433,15 +442,8 @@ def merge_into_mor(
             # and rows the txn already deleted must not re-surface. The
             # branch ref only exists after the txn's first staged
             # commit; before that its parent IS the main head.
-            from ..errors import RefError
-
-            if branch is not None:
-                try:
-                    tgt = table.scan(ref=branch, filter=nms_cond_preds)
-                except RefError:
-                    tgt = table.scan(filter=nms_cond_preds)
-            else:
-                tgt = table.scan(filter=nms_cond_preds)
+            ref = branch if branch in meta.refs else None
+            tgt = table._scan(meta, ref=ref, filter=nms_cond_preds)
             if nms_cond_sql is not None:
                 tgt = tgt.filter(sql_column(nms_cond_sql))
             dead = tgt.select(F.col(key))
@@ -449,8 +451,6 @@ def merge_into_mor(
                 dead = dead.join(
                     src.select(F.col(key)), on=key, how="left_anti"
                 )
-            from pyspark import StorageLevel
-
             dead = dead.persist(StorageLevel.MEMORY_AND_DISK)
             counts = dead.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -509,12 +509,13 @@ def merge_into_mor(
                 None
                 if n_rows == 0 and nms_domain is None
                 else _merge_validation_spec(
-                    table, isolation, validate_from, key,
+                    meta, isolation, validate_from, key,
                     stats.key_min if n_rows else None,
                     stats.key_max if n_rows else None,
                     nms_domain=nms_domain,
                 )
             ),
+            base=meta,
         )
         log.finish_task(
             "merge_mor", del_entries + data_entries, files_in=[], bytes_in=0
@@ -535,6 +536,7 @@ def merge_into_mor(
 
 def update_mor(
     table,
+    meta,
     set_exprs: dict[str, str],
     predicate,
     *,
@@ -552,13 +554,13 @@ def update_mor(
     unique non-null key over the matched rows (enforced by the merge)."""
     from .row_filter import _predicate_sql
 
-    schema = table.schema
+    schema = T.StructType.fromJson(meta.schema_json)
     names = {f.name for f in schema.fields}
     for c in set_exprs:
         if c not in names:
             raise ValueError(f"unknown column in SET: {c!r}")
     pred_sql, tuples = _predicate_sql(predicate)
-    matched = table.scan(filter=prune_filter or tuples).filter(
+    matched = table._scan(meta, filter=prune_filter or tuples).filter(
         sql_column(pred_sql)
     )
     src = matched.select(
@@ -571,6 +573,7 @@ def update_mor(
     )
     return merge_into_mor(
         table,
+        meta,
         src,
         key=key,
         job_id=job_id,
@@ -583,6 +586,7 @@ def update_mor(
 
 def delete_mor_positional(
     table,
+    meta,
     predicate,
     *,
     prune_filter=None,
@@ -614,7 +618,7 @@ def delete_mor_positional(
     # tuple predicates prune the candidate file set through the manifest
     # stats; SQL-string predicates scan all files unless the caller
     # passes an explicit prune_filter (same contract as the COW path)
-    plan = table.plan(filter=prune_filter or tuples)
+    plan = table._plan(meta, filter=prune_filter or tuples)
     if not plan.files:
         log.finish_job({"snapshot_id": None, "keys_deleted": 0})
         return MorDeleteResult(log.job_id, None, 0, None)
@@ -626,7 +630,7 @@ def delete_mor_positional(
     # stale positions together with the delete files themselves.
     pos_df = (
         read_entries(
-            table.spark, table.meta, table.root, plan.files, lineage=True
+            table.spark, meta, table.root, plan.files, lineage=True
         )
         .filter(sql_column(pred_sql))
         .select(
@@ -652,6 +656,7 @@ def delete_mor_positional(
             "mode": "merge-on-read-positional",
             "positions_deleted": n_rows,
         },
+        base=meta,
     )
     log.finish_task("delete_mor_pos", entries, files_in=[], bytes_in=0)
     log.finish_job({"snapshot_id": snap.snapshot_id, "keys_deleted": n_rows})
@@ -678,21 +683,7 @@ def _write_pos_delete_files(
     else:
         w = pos_df.repartitionByRange(n_files, "file_path", "row_pos")
     w.sortWithinPartitions("file_path", "row_pos").write.parquet(out_abs)
-    entries = []
-    for n in sorted(os.listdir(out_abs)):
-        if not n.endswith(".parquet"):
-            continue
-        rel = f"{out_rel_dir}/{n}"
-        entry = collect_file_stats(
-            os.path.join(table.root, rel),
-            rel,
-            {},
-            sort_order=POS_DELETE_ORDER,
-        )
-        entry.content = "deletes"
-        if entry.record_count:
-            entries.append(entry)
-    return entries
+    return _delete_entries(table.root, out_rel_dir, POS_DELETE_ORDER)
 
 
 def _pos_delete_touches(e, d) -> bool:
@@ -728,6 +719,7 @@ def _range_intersects(fstats: dict, dstats: dict) -> bool:
 
 def convert_deletes(
     table,
+    meta,
     *,
     job_id: Optional[str] = None,
 ) -> ConvertDeletesResult:
@@ -755,12 +747,10 @@ def convert_deletes(
     name exact rows — re-appends after conversion land in new paths and
     are untouched.
     """
-    from pyspark.sql import types as T
-
     from ..meta.scan import _eq_delete_join, _split_delete_kinds, read_entries
 
     spark = table.spark
-    plan = table.plan()
+    plan = table._plan(meta)
     dels = plan.delete_files
     eq_dels, pos_dels = _split_delete_kinds(dels)
     if not eq_dels and len(pos_dels) <= 1:
@@ -795,12 +785,10 @@ def convert_deletes(
             need = sorted(by_key)
             # read ONLY the delete-key column(s): the reduced schema
             # prunes the parquet scan to keys + _metadata
-            reduced = T.StructType(
-                [f for f in table.schema.fields if f.name in need]
-            )
+            schema = T.StructType.fromJson(meta.schema_json)
+            reduced = T.StructType([f for f in schema if f.name in need])
             df = read_entries(
-                spark, table.meta, table.root, affected, reduced,
-                lineage=True,
+                spark, meta, table.root, affected, reduced, lineage=True,
             )
             for key in need:
                 hit = _eq_delete_join(
@@ -833,6 +821,7 @@ def convert_deletes(
             [],
             removed,
             summary={"job_id": log.job_id, "mode": "convert-deletes"},
+            base=meta,
         )
         log.finish_job({"snapshot_id": snap.snapshot_id, "positions": 0})
         return ConvertDeletesResult(
@@ -859,6 +848,7 @@ def convert_deletes(
             "pos_files_compacted": len(pos_dels),
             "positions_written": n_pos,
         },
+        base=meta,
     )
     log.finish_task("convert_deletes", added, files_in=removed, bytes_in=0)
     log.finish_job({"snapshot_id": snap.snapshot_id, "positions": n_pos})
@@ -873,18 +863,21 @@ def convert_deletes(
 
 def materialize_deletes(
     table,
+    meta,
     *,
     target_file_count: Optional[int] = None,
     job_id: Optional[str] = None,
-) -> MaterializeResult:
-    """Apply every pending delete (equality AND positional) to the data
-    files it can touch and drop the delete files (one REPLACE commit)."""
+) -> tuple[MaterializeResult, TableMetadata]:
+    """Apply every pending delete (equality AND positional) of ``meta``
+    to the data files it can touch and drop the delete files (one
+    REPLACE commit). Also returns the version a following step runs
+    on: the one this commit published (``meta`` if none was needed)."""
     from ..meta.scan import read_entries
 
-    plan = table.plan()
+    plan = table._plan(meta)
     dels = plan.delete_files
     if not dels:
-        return MaterializeResult("noop", None, 0, 0, 0)
+        return MaterializeResult("noop", None, 0, 0, 0), meta
     log = LineageLog(table.root, job_id)
     log.start_job("materialize_deletes", {"delete_files": len(dels)})
 
@@ -920,16 +913,17 @@ def materialize_deletes(
     entries: list[DataFileEntry] = []
     if plain:
         rewrite_df = read_entries(
-            table.spark, table.meta, table.root, plain, deletes=dels
+            table.spark, meta, table.root, plain, deletes=dels
         )
         bytes_in = sum(e.file_size_bytes for e in plain)
         if target_file_count is None:
             target_file_count = max(1, -(-bytes_in // (128 * 1024 * 1024)))
         entries = write_data_files(
             table.root,
-            table.meta.schema_json,
-            table.meta.partition_spec,
+            meta.schema_json,
+            meta.partition_spec,
             rewrite_df,
+            properties=meta.properties,
             target_file_count=target_file_count,
             job_dir=f"data/{log.job_id}",
         )
@@ -940,12 +934,11 @@ def materialize_deletes(
         from ..partitioning import with_partition_columns
 
         df = read_entries(
-            table.spark, table.meta, table.root, files,
-            schema_with_zkey(table.schema), deletes=dels,
+            table.spark, meta, table.root, files,
+            schema_with_zkey(T.StructType.fromJson(meta.schema_json)),
+            deletes=dels,
         )
-        df, part_cols = with_partition_columns(
-            df, table.meta.partition_spec
-        )
+        df, part_cols = with_partition_columns(df, meta.partition_spec)
         # range-repartition on (partition, zkey) + in-task sort: output
         # files per partition value carry DISJOINT zkey ranges, so the
         # sort_order label and the zkey-adjacent compaction packing stay
@@ -960,10 +953,10 @@ def materialize_deletes(
         ).sortWithinPartitions(*part_cols, ZKEY_COL)
         entries += write_files(
             df, table.root, f"data/{log.job_id}/sorted{i}",
-            table.meta.partition_spec, sort_order=so,
+            meta.partition_spec, properties=meta.properties, sort_order=so,
         )
     removed = [e.file_path for e in affected] + [d.file_path for d in dels]
-    snap = table._commit_files(
+    snap, published = table._commit(
         "replace",
         entries,
         removed,
@@ -972,6 +965,7 @@ def materialize_deletes(
             "materialized_deletes": len(dels),
             "data_files_rewritten": len(affected),
         },
+        base=meta,
     )
     log.finish_task(
         "materialize_deletes",
@@ -986,4 +980,4 @@ def materialize_deletes(
         delete_files_removed=len(dels),
         data_files_rewritten=len(affected),
         files_written=len(entries),
-    )
+    ), published

@@ -44,6 +44,7 @@ class OverwriteResult:
 
 def overwrite_partitions(
     table,
+    meta,
     df,
     *,
     partition_filter=None,
@@ -53,8 +54,8 @@ def overwrite_partitions(
     """Replace whole partitions with ``df`` in one atomic commit.
 
     ``partition_filter`` given → static mode; omitted → dynamic mode.
+    Planned, written and committed on the one version ``meta``.
     """
-    meta = table.meta
     spec = meta.partition_spec
     if not spec:
         raise ValueError(
@@ -68,9 +69,8 @@ def overwrite_partitions(
     # silently leave their rows behind and static mode would drop files
     # whose rows may fall outside the filter. Files record their
     # spec_id at commit, so the guard is exact.
-    stale = [
-        e for e in table.plan().files if e.spec_id != meta.default_spec_id
-    ]
+    live = table._plan(meta).files
+    stale = [e for e in live if e.spec_id != meta.default_spec_id]
     if stale:
         raise ValueError(
             f"{len(stale)} live files were written under an older "
@@ -88,7 +88,7 @@ def overwrite_partitions(
                 f"static overwrite filter may only reference partition "
                 f"columns {sorted(part_names)}; got {bad}"
             )
-        removed_entries = table.plan(filter=partition_filter).files
+        removed_entries = table._plan(meta, filter=partition_filter).files
         # guard: no incoming row may land outside the cleared partitions.
         # Evaluate the filter over the *derived* partition columns, so it
         # is correct for transform specs (day/bucket/...) too.
@@ -117,7 +117,7 @@ def overwrite_partitions(
         names = [f["name"] for f in spec]
         removed_entries = [
             e
-            for e in table.plan().files
+            for e in live
             if tuple(
                 encode_partition_value(e.partition.get(n)) for n in names
             )
@@ -138,6 +138,7 @@ def overwrite_partitions(
         meta.schema_json,
         meta.partition_spec,
         df,
+        properties=meta.properties,
         target_file_count=target_file_count,
         job_dir=f"data/{log.job_id}",
     )
@@ -152,6 +153,7 @@ def overwrite_partitions(
             "partitions_replaced": len(parts),
             "rows_written": rows_written,
         },
+        base=meta,
     )
     log.finish_task(
         "overwrite",

@@ -10,7 +10,7 @@ same data files (op = "rewrite-manifests", zero data movement).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from ..meta import snapshots as S
 from ..meta.manifests import DataFileEntry, read_manifest, write_manifest
@@ -27,7 +27,7 @@ class RewriteManifestsResult:
 
 
 def rewrite_manifests(
-    table, *, entries_per_manifest: int = DEFAULT_ENTRIES_PER_MANIFEST
+    table, meta, *, entries_per_manifest: int = DEFAULT_ENTRIES_PER_MANIFEST
 ) -> RewriteManifestsResult:
     result: dict = {}
 
@@ -75,21 +75,9 @@ def rewrite_manifests(
             manifests_after=len(manifests_out),
             entries=len(entries),
         )
-        return S.TableMetadata(
-            table_uuid=base.table_uuid,
-            location=base.location,
-            version=base.version,
-            schema_json=base.schema_json,
-            schemas=base.schemas,
-            current_schema_id=base.current_schema_id,
-            partition_spec=base.partition_spec,
-            partition_specs=base.partition_specs,
-            default_spec_id=base.default_spec_id,
-            current_snapshot_id=sid,
-            snapshots=base.snapshots + [new_snap],
-            properties=base.properties,
-            refs=base.refs,
+        return replace(
+            base, current_snapshot_id=sid, snapshots=base.snapshots + [new_snap]
         )
 
-    S.commit(table.root, apply)
+    S.commit(table.root, apply, base=meta)
     return RewriteManifestsResult(**result)

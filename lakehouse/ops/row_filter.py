@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import Column, functions as F
+from pyspark.sql import types as T
 
 from ..expressions import normalize_filter, sql_column, sql_text, to_sql
 from ..lineage import LineageLog
@@ -56,9 +57,7 @@ def _predicate_sql(predicate) -> tuple[str, Optional[list]]:
     return sql, predicate
 
 
-def _probe_matches(
-    table, files, pred_sql
-) -> dict[str, int]:
+def _probe_matches(table, meta, files, pred_sql) -> dict[str, int]:
     """Matched-row count per relative file path (narrow, column-pruned)."""
     if not files:
         return {}
@@ -68,7 +67,7 @@ def _probe_matches(
     # the path rides as a column read with each row: input_file_name()
     # is empty once a subquery predicate turns the filter into a join
     rows = (
-        read_entries(spark, table.meta, table.root, list(files), lineage=True)
+        read_entries(spark, meta, table.root, list(files), lineage=True)
         .filter(sql_column(pred_sql))
         .groupBy("__path")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -79,6 +78,7 @@ def _probe_matches(
 
 def _finish(
     table,
+    meta,
     operation: str,
     log: LineageLog,
     rewrite_df,
@@ -89,7 +89,6 @@ def _finish(
     target_file_count: Optional[int],
     summary: dict,
 ) -> DmlResult:
-    meta = table.meta
     entries = []
     if rewrite_paths:
         if target_file_count is None:
@@ -101,6 +100,7 @@ def _finish(
             meta.schema_json,
             meta.partition_spec,
             rewrite_df,
+            properties=meta.properties,
             target_file_count=target_file_count,
             job_dir=f"data/{log.job_id}",
         )
@@ -112,6 +112,7 @@ def _finish(
             entries,
             removed,
             summary={"job_id": log.job_id, **summary},
+            base=meta,
         )
     log.finish_task(
         operation, entries, files_in=removed, bytes_in=bytes_in
@@ -134,6 +135,7 @@ def _finish(
 
 def delete(
     table,
+    meta,
     predicate,
     *,
     prune_filter=None,
@@ -144,8 +146,8 @@ def delete(
     pred_sql, tuples = _predicate_sql(predicate)
     log = LineageLog(table.root, job_id)
     log.start_job("delete", {"predicate": sql_text(pred_sql)})
-    candidates = table.plan(filter=prune_filter or tuples).files
-    matched = _probe_matches(table, candidates, pred_sql)
+    candidates = table._plan(meta, filter=prune_filter or tuples).files
+    matched = _probe_matches(table, meta, candidates, pred_sql)
     by_path = {e.file_path: e for e in candidates}
     drop_paths = [
         p
@@ -161,12 +163,12 @@ def delete(
         from ..meta.scan import read_entries
 
         rewrite_df = read_entries(
-            table.spark, table.meta, table.root,
+            table.spark, meta, table.root,
             [by_path[p] for p in rewrite_paths if p in by_path],
         ).filter(~sql_column(pred_sql))
     rows_affected = sum(matched.values())
     return _finish(
-        table, "delete", log, rewrite_df, drop_paths, rewrite_paths,
+        table, meta, "delete", log, rewrite_df, drop_paths, rewrite_paths,
         bytes_in, rows_affected, target_file_count,
         {"predicate": sql_text(pred_sql), "rows_deleted": rows_affected},
     )
@@ -174,6 +176,7 @@ def delete(
 
 def update(
     table,
+    meta,
     set_exprs: dict[str, str],
     predicate,
     *,
@@ -182,7 +185,7 @@ def update(
     job_id: Optional[str] = None,
 ) -> DmlResult:
     """UPDATE table SET col = expr, ... WHERE predicate (copy-on-write)."""
-    schema = table.schema
+    schema = T.StructType.fromJson(meta.schema_json)
     names = {f.name: f.dataType for f in schema.fields}
     for c in set_exprs:
         if c not in names:
@@ -196,8 +199,8 @@ def update(
             "set": {c: sql_text(e) for c, e in set_exprs.items()},
         },
     )
-    candidates = table.plan(filter=prune_filter or tuples).files
-    matched = _probe_matches(table, candidates, pred_sql)
+    candidates = table._plan(meta, filter=prune_filter or tuples).files
+    matched = _probe_matches(table, meta, candidates, pred_sql)
     rewrite_paths = sorted(matched)
     by_path = {e.file_path: e for e in candidates}
     bytes_in = sum(
@@ -208,7 +211,7 @@ def update(
         from ..meta.scan import read_entries
 
         df = read_entries(
-            table.spark, table.meta, table.root,
+            table.spark, meta, table.root,
             [by_path[p] for p in rewrite_paths if p in by_path],
         )
         projections = []
@@ -227,7 +230,7 @@ def update(
         rewrite_df = df.select(*projections)
     rows_affected = sum(matched.values())
     return _finish(
-        table, "overwrite", log, rewrite_df, [], rewrite_paths,
+        table, meta, "overwrite", log, rewrite_df, [], rewrite_paths,
         bytes_in, rows_affected, target_file_count,
         {"predicate": sql_text(pred_sql), "rows_updated": rows_affected},
     )

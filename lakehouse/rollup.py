@@ -415,12 +415,14 @@ class MaterializedRollup:
             .select(*gnames, _gkey_expr(gnames), *_agg_out_cols(aggs))
         )
         t = self.table
-        prior = t.plan().files
+        meta = t.meta
+        prior = t._plan(meta).files
         entries = write_data_files(
             t.root,
-            t.meta.schema_json,
-            t.meta.partition_spec,
+            meta.schema_json,
+            meta.partition_spec,
             full,
+            properties=meta.properties,
             target_file_count=max(1, len(prior)),
             job_dir=f"data/resync-{to_id}-{__import__('uuid').uuid4().hex[:8]}",
         )
@@ -430,6 +432,7 @@ class MaterializedRollup:
             [e.file_path for e in prior],
             summary={"mode": "rollup-full-resync", "base_snapshot": to_id},
             set_props={"rollup_synced_snapshot": to_id},
+            base=meta,
         )
         return RefreshResult("full-resync", synced, to_id, -1, 0)
 

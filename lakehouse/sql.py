@@ -21,6 +21,7 @@ from pyspark.sql.classic.column import Column
 from pyspark.sql.classic.dataframe import DataFrame
 
 from .errors import LakehouseError
+from .ops.append import write_data_files
 from .schema import DEFAULT_KEY, conform
 
 
@@ -246,7 +247,9 @@ def _insert(st, plan, kw):
         ("a column list on INSERT OVERWRITE", cols and overwrite),
     ])
     t = st.load(st.name(plan.table()))
-    names = [f.name for f in t.schema.fields]
+    meta = t.meta
+    schema = T.StructType.fromJson(meta.schema_json)
+    names = [f.name for f in schema.fields]
     if not overwrite:
         unknown = [c for c in cols if c not in names]
         if unknown:
@@ -255,8 +258,19 @@ def _insert(st, plan, kw):
         if len(df.columns) != len(targets):
             n, m = len(df.columns), len(targets)
             raise SqlDmlError(f"INSERT supplies {n} column(s) for {m} targets")
-        return t.append(conform(df.toDF(*targets), t.schema), **kw)
-    part_sources = [p["source"] for p in t.meta.partition_spec]
+        return t._append(meta, conform(df.toDF(*targets), schema), **kw)
+    if not spec and st.spark.conf.get(
+        "spark.sql.sources.partitionOverwriteMode", "static"
+    ).lower() == "static":
+        # Spark's default for a PARTITION-less INSERT OVERWRITE: the
+        # query's rows replace the whole table, in one commit
+        entries = write_data_files(
+            t.root, meta.schema_json, meta.partition_spec,
+            conform(st.frame(plan.query()), schema),
+            properties=meta.properties, **kw,
+        )
+        return t._replace_all(meta, "overwrite", entries, static_overwrite=True)
+    part_sources = [p["source"] for p in meta.partition_spec]
     part_filter, fills = [], {}
     for col, value in spec.items():
         value = _opt(value)
@@ -265,7 +279,7 @@ def _insert(st, plan, kw):
         if col not in part_sources:
             raise SqlDmlError(f"PARTITION {col!r} is not a partition column")
         # Spark hands partition values over as unquoted text
-        dt = t.schema[col].dataType
+        dt = schema[col].dataType
         if isinstance(dt, T.IntegralType):
             value = int(value)
         elif isinstance(dt, T.FractionalType):
@@ -278,7 +292,7 @@ def _insert(st, plan, kw):
     # static-partition semantics: a listed column may be omitted
     df = df.withColumns({c: v for c, v in fills.items() if c not in df.columns})
     return t.overwrite_partitions(
-        conform(df, t.schema), partition_filter=part_filter or None, **kw
+        conform(df, schema), partition_filter=part_filter or None, **kw
     )
 
 

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .errors import LakehouseError
-from .meta.snapshots import TableMetadata
 
 
 #: table property: the highest ``stream_batch_id`` among the snapshots
@@ -41,10 +40,7 @@ def _batch_ids(snapshots) -> set[int]:
 
 def committed_batch_ids(table) -> set[int]:
     """Batch ids of the table's retained snapshots (scan of snapshot
-    summaries — small driver-side metadata). ``table`` may also be a
-    ``TableMetadata`` already loaded from the table."""
-    if isinstance(table, TableMetadata):
-        return _batch_ids(table.snapshots)
+    summaries — small driver-side metadata)."""
     return _batch_ids(table.snapshots())
 
 
@@ -62,17 +58,15 @@ def mark_expired_batches(properties: dict, dropped) -> dict:
     return {**properties, EXPIRED_BATCH_PROP: max(ids)}
 
 
-def batch_replayed(table, batch_id: int) -> bool:
-    """The replay guard every idempotent sink runs first: True when
-    ``batch_id`` is already committed, either in a retained snapshot or
-    at or below the expired-batch mark (its snapshot has since been
-    expired). One metadata load serves both checks; ``table`` may also
-    be a ``TableMetadata`` the op already loaded."""
-    meta = table if isinstance(table, TableMetadata) else table.meta
+def batch_replayed(meta, batch_id: int) -> bool:
+    """The replay guard every idempotent sink runs first, on the
+    metadata version the sink then commits on: True when ``batch_id``
+    is already committed, either in a retained snapshot or at or below
+    the expired-batch mark (its snapshot has since been expired)."""
     mark = meta.properties.get(EXPIRED_BATCH_PROP)
     if mark is not None and int(batch_id) <= int(mark):
         return True
-    return int(batch_id) in committed_batch_ids(meta)
+    return int(batch_id) in _batch_ids(meta.snapshots)
 
 
 def append_batch(table, *, target_file_count: Optional[int] = None):
@@ -127,7 +121,8 @@ def upsert_batch(
     """
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_replayed(table, batch_id):
+        meta = table.meta
+        if batch_replayed(meta, batch_id):
             return
         if batch_df.isEmpty():
             return
@@ -142,7 +137,8 @@ def upsert_batch(
             )
         else:
             src = batch_df.dropDuplicates([key])
-        table.merge(
+        table._merge(
+            meta,
             src,
             key=key,
             strategy=strategy,
@@ -173,32 +169,34 @@ def append_if_absent_batch(
     to probe by key list falls back to a full key-column scan with NO
     broadcast hint (the table's key set is corpus-scaled — AQE decides).
     Batch-id idempotency as in ``append_batch``; duplicate keys WITHIN
-    a batch collapse to one arbitrary row first.
+    a batch collapse to one arbitrary row first. One metadata version
+    serves the guard, the key probe and the append. An empty batch
+    (told from the key probe) or one whose keys are all present (told
+    from the append's output) commits nothing: a replay re-derives it.
     """
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_replayed(table, batch_id):
-            return
-        if batch_df.isEmpty():
+        meta = table.meta
+        if batch_replayed(meta, batch_id):
             return
         batch = batch_df.dropDuplicates([key])
         # probe the size BEFORE collecting: an oversized micro-batch
         # must never pay an unbounded driver collect just to learn it
         # should fall back (limit k+1 bounds the probe at k+1 rows)
         probe = batch.select(key).limit(max_probe_keys + 1).collect()
+        if not probe:
+            return
         if len(probe) <= max_probe_keys:
             keys = [r[0] for r in probe]
-            existing = table.scan(filter=[(key, "in", keys)]).select(key)
-            src = batch.join(F.broadcast(existing), key, "left_anti")
+            existing = table._scan(meta, filter=[(key, "in", keys)])
+            src = batch.join(F.broadcast(existing.select(key)), key, "left_anti")
         else:
-            existing = table.scan().select(key)
+            existing = table._scan(meta).select(key)
             src = batch.join(existing, key, "left_anti")
-        if src.isEmpty():
-            # nothing new: no snapshot to carry the batch id, and none
-            # needed — a replay re-derives the same empty set
-            return
-        table.append(
+        table._append(
+            meta,
             src,
+            commit_empty=False,
             target_file_count=target_file_count,
             extra_summary={"stream_batch_id": int(batch_id)},
         )
@@ -271,7 +269,8 @@ def replicate_batch(
     """
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_replayed(dst, batch_id):
+        meta = dst.meta
+        if batch_replayed(meta, batch_id):
             return
         if batch_df.isEmpty():
             return
@@ -290,7 +289,8 @@ def replicate_batch(
                 F.col("_change_type") == "delete", F.lit("delete")
             ).otherwise(F.lit("upsert")),
         ).drop("_change_type", "_commit_snapshot_id", "__rn")
-        dst.merge(
+        dst._merge(
+            meta,
             src,
             mode="mor",
             key=key,

@@ -14,6 +14,7 @@ capability the jar provided is a module here (SURVEY.md §2 second table).
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import shutil
 import time
@@ -89,6 +90,10 @@ class Table:
 
     @property
     def meta(self) -> S.TableMetadata:
+        """The newest metadata version, read from storage on every
+        access. An op reads it once, at entry, and plans, reads, writes
+        and commits (``_commit(base=meta)``) on that one version; only a
+        commit that loses the CAS reads the table again."""
         return S.load_metadata(self.root)
 
     @property
@@ -205,7 +210,11 @@ class Table:
                             f"after read base {from_sid}; replan"
                         )
 
-    def _commit_files(
+    def _commit_files(self, *args, **kw) -> S.Snapshot:
+        """:meth:`_commit`, returning only the new snapshot."""
+        return self._commit(*args, **kw)[0]
+
+    def _commit(
         self,
         operation: str,
         added: Sequence[DataFileEntry],
@@ -218,7 +227,7 @@ class Table:
         validate: Optional[dict[str, Any]] = None,
         props_guard: Optional[dict[str, Any]] = None,
         base: Optional[S.TableMetadata] = None,
-    ) -> S.Snapshot:
+    ) -> tuple[S.Snapshot, S.TableMetadata]:
         """Build snapshot N+1 = parent − removed + added, with manifest
         rewrite: any parent manifest touched by a removal is rewritten
         without the removed entries; untouched manifests are reused as-is
@@ -246,9 +255,14 @@ class Table:
         write-audit-publish staging surface. A missing branch is created
         at the current main head first.
 
-        ``base``: the metadata the op already loaded; the first CAS
-        attempt commits on it (see ``snapshots.commit``).
+        ``base``: the one metadata version the op read at entry. The
+        first CAS attempt commits on it (see ``snapshots.commit``), and
+        added files without spec or schema ids get its ids, the ones
+        they were written under, also when the commit rebases.
+
+        Returns the new snapshot and the version this commit published.
         """
+        read_base = base
         removed = set(removed_paths)
         result_holder: dict[str, S.Snapshot] = {}
         commit_t0 = time.monotonic()
@@ -359,17 +373,21 @@ class Table:
                 # also record the partition spec their partition VALUES
                 # were derived under (overwrite's mixed-spec guard keys
                 # on it) — ops that carry old-spec values forward
-                # (compaction) pre-set spec_id and must keep it. The
-                # write schema id follows the same rule: None = written
-                # under the schema this commit resolves to (incl. an
-                # evolution in the same commit); rewriting ops that
-                # DON'T re-project must pre-set the input's schema_id.
+                # (compaction) pre-set spec_id and must keep it; None =
+                # the op's read version. The write schema id follows the
+                # same rule (or this commit's evolution); rewriting ops
+                # that DON'T re-project must pre-set the input's id.
+                written = read_base or base
                 for e in added:
                     e.seq = sid
                     if e.spec_id is None:
-                        e.spec_id = base.default_spec_id
+                        e.spec_id = written.default_spec_id
                     if e.schema_id is None:
-                        e.schema_id = schema_id
+                        e.schema_id = (
+                            schema_id
+                            if new_schema is not None
+                            else written.current_schema_id
+                        )
                 rel, summ = write_manifest(self.root, added)
                 manifests_out.append({"path": rel, "summary": summ})
 
@@ -406,16 +424,11 @@ class Table:
                         props.pop(k, None)
                     else:
                         props[k] = v
-            return S.TableMetadata(
-                table_uuid=base.table_uuid,
-                location=base.location,
-                version=base.version,  # bumped by commit()
+            return dataclasses.replace(
+                base,
                 schema_json=schema_json,
                 schemas=schemas,
                 current_schema_id=schema_id,
-                partition_spec=base.partition_spec,
-                partition_specs=base.partition_specs,
-                default_spec_id=base.default_spec_id,
                 current_snapshot_id=(
                     sid if branch is None else base.current_snapshot_id
                 ),
@@ -424,8 +437,8 @@ class Table:
                 refs=refs,
             )
 
-        S.commit(self.root, apply, base=base)
-        return result_holder["snap"]
+        published = S.commit(self.root, apply, base=read_base)
+        return result_holder["snap"], published
 
     # --- refs: branches, tags, rollback, write-audit-publish ------------------
 
@@ -802,11 +815,15 @@ class Table:
         ref: Optional[str] = None,
         distributed: bool = False,
     ) -> ScanPlan:
-        meta = self.meta
-        if ref is not None:
-            if snapshot_id is not None:
-                raise RefError("pass either snapshot_id or ref, not both")
-            snapshot_id = self._resolve_ref(meta, ref)
+        return self._plan(
+            self.meta, filter=filter, snapshot_id=snapshot_id, ref=ref,
+            distributed=distributed,
+        )
+
+    def _plan(self, meta: S.TableMetadata, *, filter=None,  # noqa: A002
+              snapshot_id=None, ref=None, distributed=False) -> ScanPlan:
+        """``plan`` on the op's already-read ``meta``."""
+        snapshot_id = self._read_target(meta, snapshot_id, ref)
         if distributed:
             return plan_scan_distributed(
                 self.spark, self.root, meta, filter=filter, snapshot_id=snapshot_id
@@ -815,32 +832,21 @@ class Table:
             self.root, meta, filter=filter, snapshot_id=snapshot_id
         )
 
+    def _read_target(self, meta, snapshot_id, ref, as_of=None) -> Optional[int]:
+        """The snapshot id a read names — directly, through a ref's
+        head, or as of a timestamp; None = the current head."""
+        if sum(x is not None for x in (snapshot_id, ref, as_of)) > 1:
+            raise RefError("pass only one of snapshot_id / ref / as_of")
+        if ref is not None:
+            return self._resolve_ref(meta, ref)
+        if as_of is not None:
+            return _snapshot_as_of(meta, as_of)
+        return snapshot_id
+
     def snapshot_as_of(self, ts) -> int:
         """Latest snapshot whose commit time is <= ``ts`` (datetime,
         date, or epoch millis) — Iceberg's timestamp time travel."""
-        import datetime as _dt
-
-        if isinstance(ts, _dt.datetime):
-            ms = int(ts.timestamp() * 1000)
-        elif isinstance(ts, _dt.date):
-            ms = int(
-                _dt.datetime.combine(ts, _dt.time.max).timestamp() * 1000
-            )
-        else:
-            ms = int(ts)
-        best = None
-        for s in self.meta.snapshots:
-            if s.timestamp_ms <= ms and (
-                best is None or s.timestamp_ms > best.timestamp_ms
-                or (s.timestamp_ms == best.timestamp_ms
-                    and s.snapshot_id > best.snapshot_id)
-            ):
-                best = s
-        if best is None:
-            raise SnapshotNotFoundError(
-                f"no snapshot at or before {ts!r}"
-            )
-        return best.snapshot_id
+        return _snapshot_as_of(self.meta, ts)
 
     def scan(
         self,
@@ -867,17 +873,17 @@ class Table:
         never driver-materializes a huge file list. ``False`` forces the
         driver planner.
         """
-        meta = self.meta
-        if as_of is not None:
-            if snapshot_id is not None or ref is not None:
-                raise RefError(
-                    "pass only one of snapshot_id / ref / as_of"
-                )
-            snapshot_id = self.snapshot_as_of(as_of)
-        if ref is not None:
-            if snapshot_id is not None:
-                raise RefError("pass either snapshot_id or ref, not both")
-            snapshot_id = self._resolve_ref(meta, ref)
+        return self._scan(
+            self.meta, filter=filter, snapshot_id=snapshot_id, ref=ref,
+            as_of=as_of, columns=columns,
+            distributed_planning=distributed_planning,
+        )
+
+    def _scan(self, meta: S.TableMetadata, *, filter=None,  # noqa: A002
+              snapshot_id=None, ref=None, as_of=None, columns=None,
+              distributed_planning=None) -> DataFrame:
+        """``scan`` on the op's already-read ``meta``."""
+        snapshot_id = self._read_target(meta, snapshot_id, ref, as_of)
         if distributed_planning is None:
             threshold = int(
                 meta.properties.get("scan_lazy_threshold", 100_000)
@@ -893,10 +899,25 @@ class Table:
             return read_lazy_plan(
                 self.spark, self.root, meta, lplan, columns=columns
             )
-        plan = self.plan(filter=filter, snapshot_id=snapshot_id)
+        plan = plan_scan(
+            self.root, meta, filter=filter, snapshot_id=snapshot_id
+        )
         return read_plan(
             self.spark, self.root, meta, plan, columns=columns
         )
+
+    def _manifest_list(
+        self, meta: S.TableMetadata, snapshot_id: Optional[int]
+    ) -> list[dict[str, Any]]:
+        """The manifest list of ``snapshot_id`` (None: the head); empty
+        for a table with no snapshot."""
+        sid = (
+            snapshot_id if snapshot_id is not None
+            else meta.current_snapshot_id
+        )
+        if sid is None:
+            return []
+        return S.read_manifest_list(self.root, meta.snapshot(sid).manifest_list)
 
     def _tracked_entry_count(
         self, meta: S.TableMetadata, snapshot_id: Optional[int]
@@ -904,17 +925,9 @@ class Table:
         """Pre-pruning manifest entry count of the target snapshot, from
         manifest-list summaries alone (one small JSON read, no manifest
         opened) — drives the auto lazy-planning decision."""
-        sid = (
-            snapshot_id if snapshot_id is not None
-            else meta.current_snapshot_id
-        )
-        if sid is None:
-            return 0
-        manifests = S.read_manifest_list(
-            self.root, meta.snapshot(sid).manifest_list
-        )
         return sum(
-            m.get("summary", {}).get("entry_count", 0) for m in manifests
+            m.get("summary", {}).get("entry_count", 0)
+            for m in self._manifest_list(meta, snapshot_id)
         )
 
     def scan_with_lineage(
@@ -942,19 +955,20 @@ class Table:
         from .errors import LakehouseError
         from .meta.scan import read_entries
 
-        plan = self.plan(filter=filter, snapshot_id=snapshot_id)
+        meta = self.meta
+        plan = self._plan(meta, filter=filter, snapshot_id=snapshot_id)
         if plan.delete_files:
             raise LakehouseError(
                 "scan_with_lineage: table has pending merge-on-read "
                 "deletes; run materialize_deletes() first"
             )
         df = read_entries(
-            self.spark, self.meta, self.root, plan.files, lineage=True
+            self.spark, meta, self.root, plan.files, lineage=True
         )
         if plan.residual_sql:
             df = df.filter(plan.residual_sql)
         return df.select(
-            *self.schema.names,
+            *T.StructType.fromJson(meta.schema_json).names,
             F.col("__path").alias("_file"),
             F.col("__pos").alias("_pos"),
             F.col("__seq").cast("long").alias("_snapshot_id"),
@@ -1010,57 +1024,47 @@ class Table:
         def apply(base: S.TableMetadata) -> S.TableMetadata:
             specs = [list(s) for s in base.partition_specs] + [annotated]
             holder["spec_id"] = len(specs) - 1
-            return S.TableMetadata(
-                table_uuid=base.table_uuid,
-                location=base.location,
-                version=base.version,
-                schema_json=base.schema_json,
-                schemas=base.schemas,
-                current_schema_id=base.current_schema_id,
+            return dataclasses.replace(
+                base,
                 partition_spec=annotated,
                 partition_specs=specs,
                 default_spec_id=len(specs) - 1,
-                current_snapshot_id=base.current_snapshot_id,
-                snapshots=base.snapshots,
-                properties=base.properties,
-                refs=base.refs,
             )
 
         S.commit(self.root, apply)
         return holder["spec_id"]
 
-    def _materialize_pending_deletes(self) -> None:
+    def _materialize_pending_deletes(self, meta: S.TableMetadata):
         """Ops that rewrite raw data files must not run with pending
         merge-on-read deletes: a rewritten row gets a fresh seq, so an
         older equality delete would silently stop applying to it.
         Materializing first keeps every rewrite path (compact, cluster,
-        MERGE, COW DML, overwrite) oblivious to MoR state."""
-        if self.plan().delete_files:
-            from .ops.mor import materialize_deletes as _mat
+        MERGE, COW DML, overwrite) oblivious to MoR state. Returns the
+        version the op continues on (the fold-in's, if it committed)."""
+        from .ops.mor import materialize_deletes as _mat
 
-            _mat(self)
+        return _mat(self, meta)[1]
 
     def compact(self, **kw):
         from .ops.compact import compact as _compact
 
-        self._materialize_pending_deletes()
-        return _compact(self, **kw)
+        return _compact(self, self._materialize_pending_deletes(self.meta), **kw)
 
     def cluster(self, columns: Sequence[str], **kw):
         from .ops.cluster import cluster as _cluster
 
-        self._materialize_pending_deletes()
-        return _cluster(self, columns, **kw)
+        meta = self._materialize_pending_deletes(self.meta)
+        return _cluster(self, meta, columns, **kw)
 
     def expire_snapshots(self, **kw):
         from .ops.expire import expire_snapshots as _expire
 
-        return _expire(self, **kw)
+        return _expire(self, self.meta, **kw)
 
     def remove_orphan_files(self, **kw):
         from .ops.expire import remove_orphan_files as _gc
 
-        return _gc(self, **kw)
+        return _gc(self, self.meta, **kw)
 
     def add_files(self, src, **kw):
         """Metadata-only adoption of EXISTING parquet (Iceberg
@@ -1069,7 +1073,7 @@ class Table:
         read or rewritten (lakehouse/ops/adopt.py)."""
         from .ops.adopt import add_files as _adopt
 
-        return _adopt(self, src, **kw)
+        return _adopt(self, self.meta, src, **kw)
 
     def maintain(self, **kw):
         """One-call maintenance autopilot: metadata-only decisions
@@ -1104,9 +1108,19 @@ class Table:
         rewritten for the evolution itself (old rows scan as null /
         up-cast); without the flag, unknown source columns are silently
         dropped by the conform projection, Delta's default too."""
+        return self._merge(
+            self.meta, source, mode=mode, schema_evolution=schema_evolution,
+            **kw,
+        )
+
+    def _merge(self, meta: S.TableMetadata, source: DataFrame, *,
+               mode: str = "cow", schema_evolution: bool = False, **kw):
+        """``merge`` on the op's already-read ``meta``."""
+        if mode not in ("cow", "mor"):
+            raise ValueError(f"unknown merge mode: {mode!r}")
         if schema_evolution:
-            self._evolve_for_merge_source(
-                source, op_col=kw.get("op_col", "op")
+            meta = self._evolve_for_merge_source(
+                meta, source, op_col=kw.get("op_col", "op")
             )
         if mode == "mor":
             from .ops.mor import merge_into_mor as _merge_mor
@@ -1114,23 +1128,22 @@ class Table:
             # no materialization needed: the new delete gets a NEW seq,
             # and rows appended in this commit share it (so survive);
             # pending older deletes keep applying to their older files
-            return _merge_mor(self, source, **kw)
-        if mode != "cow":
-            raise ValueError(f"unknown merge mode: {mode!r}")
+            return _merge_mor(self, meta, source, **kw)
         from .ops.merge import merge_into as _merge
 
-        self._materialize_pending_deletes()
-        return _merge(self, source, **kw)
+        return _merge(self, self._materialize_pending_deletes(meta), source, **kw)
 
-    def _evolve_for_merge_source(self, source: DataFrame, *, op_col: str):
+    def _evolve_for_merge_source(
+        self, meta: S.TableMetadata, source: DataFrame, *, op_col: str
+    ) -> S.TableMetadata:
         """Compute the union schema of table × merge source (new source
         columns appended nullable, safely-widened types adopted) and
-        commit it via evolve_schema — a no-op commit-free pass when the
-        source brings nothing new. The op marker column never evolves
-        into the table."""
+        commit it as a schema evolution — a no-op commit-free pass when
+        the source brings nothing new. The op marker column never
+        evolves into the table. Returns the version the merge runs on."""
         from .schema import is_widening
 
-        cur = self.schema
+        cur = T.StructType.fromJson(meta.schema_json)
         cur_names = {f.name for f in cur.fields}
         src_by_name = {f.name: f for f in source.schema.fields}
         changed = False
@@ -1152,8 +1165,12 @@ class Table:
             if f.name not in cur_names and f.name != op_col:
                 fields.append(T.StructField(f.name, f.dataType, True))
                 changed = True
-        if changed:
-            self.evolve_schema(T.StructType(fields))
+        if not changed:
+            return meta
+        return self._commit(
+            "evolve-schema", [], (), new_schema=T.StructType(fields),
+            summary={"schema_fields": len(fields)}, base=meta,
+        )[1]
 
     def sql(self, statement: str, **kw):
         """Run one DML (``INSERT`` / ``MERGE INTO`` / ``UPDATE`` /
@@ -1174,22 +1191,22 @@ class Table:
         if mode == "mor":
             from .ops.mor import delete_mor as _delete_mor
 
-            return _delete_mor(self, predicate, **kw)
+            return _delete_mor(self, self.meta, predicate, **kw)
         if mode == "mor-pos":
             from .ops.mor import delete_mor_positional as _delete_pos
 
-            return _delete_pos(self, predicate, **kw)
+            return _delete_pos(self, self.meta, predicate, **kw)
         if mode != "cow":
             raise ValueError(f"unknown delete mode: {mode!r}")
         from .ops.row_filter import delete as _delete
 
-        self._materialize_pending_deletes()
-        return _delete(self, predicate, **kw)
+        meta = self._materialize_pending_deletes(self.meta)
+        return _delete(self, meta, predicate, **kw)
 
     def materialize_deletes(self, **kw):
         from .ops.mor import materialize_deletes as _mat
 
-        return _mat(self, **kw)
+        return _mat(self, self.meta, **kw)[0]
 
     def truncate(self) -> S.Snapshot:
         """TRUNCATE TABLE: one commit removing EVERY live data file and
@@ -1200,22 +1217,27 @@ class Table:
         stay time-travelable; ``expire_snapshots`` GCs the file bytes
         later. Schema, partition spec, properties, identity watermarks
         and sort orders all survive."""
-        plan = self.plan()
-        removed = [e.file_path for e in plan.files] + [
-            d.file_path for d in plan.delete_files
-        ]
+        return self._replace_all(self.meta, "delete", [], truncate=True)
+
+    def _replace_all(
+        self, meta: S.TableMetadata, operation: str, entries, **summary
+    ) -> S.Snapshot:
+        """One commit on ``meta`` that swaps every live data and MoR
+        delete file for ``entries``: truncate, the static full-table
+        ``INSERT OVERWRITE`` and the format writer's overwrite. Pending
+        deletes need no fold-in: every file they apply to goes too."""
+        plan = self._plan(meta)
         return self._commit_files(
-            "delete",
-            [],
-            removed,
+            operation,
+            entries,
+            [e.file_path for e in plan.files + plan.delete_files],
             summary={
-                "truncate": True,
+                **summary,
                 "removed_files": len(plan.files),
                 "removed_delete_files": len(plan.delete_files),
-                "removed_records": sum(
-                    e.record_count for e in plan.files
-                ),
+                "removed_records": sum(e.record_count for e in plan.files),
             },
+            base=meta,
         )
 
     def evolve_schema(self, new_schema: T.StructType) -> S.Snapshot:
@@ -1224,11 +1246,8 @@ class Table:
         same gate as append(new_schema=...). Existing files stay live;
         subsequent scans read them up-cast under the new schema."""
         return self._commit_files(
-            "evolve-schema",
-            [],
-            (),
+            "evolve-schema", [], (), new_schema=new_schema,
             summary={"schema_fields": len(new_schema.fields)},
-            new_schema=new_schema,
         )
 
     # --- field-id column mapping: rename / drop without rewrites --------------
@@ -1284,20 +1303,14 @@ class Table:
                 summary={"added_files": 0, "removed_files": 0, **summary},
             )
             holder["snap"] = snap
-            return S.TableMetadata(
-                table_uuid=base.table_uuid,
-                location=base.location,
-                version=base.version,
+            return dataclasses.replace(
+                base,
                 schema_json=schema_json,
                 schemas=schemas,
                 current_schema_id=new_schema_id,
-                partition_spec=base.partition_spec,
-                partition_specs=base.partition_specs,
-                default_spec_id=base.default_spec_id,
                 current_snapshot_id=sid,
                 snapshots=base.snapshots + [snap],
                 properties=props,
-                refs=base.refs,
             )
 
         S.commit(self.root, apply)
@@ -1484,7 +1497,6 @@ class Table:
         """CAS-update table properties (merge semantics; ``None``
         removes a key). Rides the same optimistic commit loop as data
         commits — safe under concurrent writers."""
-        import dataclasses
 
         def apply(base: S.TableMetadata) -> S.TableMetadata:
             p = dict(base.properties)
@@ -1726,7 +1738,7 @@ class Table:
         ``materialize_deletes`` rewrite."""
         from .ops.mor import convert_deletes as _conv
 
-        return _conv(self, **kw)
+        return _conv(self, self.meta, **kw)
 
     def update(
         self, set_exprs: dict[str, str], predicate, *, mode: str = "cow", **kw
@@ -1738,19 +1750,18 @@ class Table:
         if mode == "mor":
             from .ops.mor import update_mor as _update_mor
 
-            return _update_mor(self, set_exprs, predicate, **kw)
+            return _update_mor(self, self.meta, set_exprs, predicate, **kw)
         if mode != "cow":
             raise ValueError(f"unknown update mode: {mode!r}")
         from .ops.row_filter import update as _update
 
-        self._materialize_pending_deletes()
-        return _update(self, set_exprs, predicate, **kw)
+        meta = self._materialize_pending_deletes(self.meta)
+        return _update(self, meta, set_exprs, predicate, **kw)
 
     def overwrite_partitions(self, df: DataFrame, **kw):
         from .ops.overwrite import overwrite_partitions as _ow
 
-        self._materialize_pending_deletes()
-        return _ow(self, df, **kw)
+        return _ow(self, self._materialize_pending_deletes(self.meta), df, **kw)
 
     def incremental_scan(self, **kw) -> DataFrame:
         # MoR-safe as-is: a pending equality delete only applies to data
@@ -1777,7 +1788,7 @@ class Table:
     def rewrite_manifests(self, **kw):
         from .ops.rewrite_manifests import rewrite_manifests as _rw
 
-        return _rw(self, **kw)
+        return _rw(self, self.meta, **kw)
 
     def clone_to(self, dest_root: str, **kw) -> "Table":
         """Zero-copy clone into ``dest_root`` (lakehouse/ops/clone.py):
@@ -1795,23 +1806,13 @@ class Table:
 
         Built from the manifest Parquet files with a distributed read, so
         it works at millions-of-files scale without driver memory."""
-        meta = self.meta
-        sid = (
-            snapshot_id
-            if snapshot_id is not None
-            else meta.current_snapshot_id
-        )
         schema = (
             "file_path string, partition_json string, record_count bigint, "
             "file_size_bytes bigint, stats_json string, sort_order string"
         )
-        if sid is None:
-            return self.spark.createDataFrame([], schema)
         paths = [
             os.path.join(self.root, m["path"])
-            for m in S.read_manifest_list(
-                self.root, meta.snapshot(sid).manifest_list
-            )
+            for m in self._manifest_list(self.meta, snapshot_id)
         ]
         if not paths:
             return self.spark.createDataFrame([], schema)
@@ -1830,18 +1831,10 @@ class Table:
         the list summaries already in memory — zero file I/O. The
         operator view for manifest-health decisions (rewrite_manifests
         thresholds, pruning selectivity)."""
-        meta = self.meta
-        sid = (
-            snapshot_id
-            if snapshot_id is not None
-            else meta.current_snapshot_id
-        )
         schema = (
             "path string, entry_count bigint, record_count bigint, "
             "total_bytes bigint, delete_count bigint, partition_count bigint"
         )
-        if sid is None:
-            return self.spark.createDataFrame([], schema)
         rows = [
             (
                 m["path"],
@@ -1851,9 +1844,7 @@ class Table:
                 int(m["summary"].get("delete_count", 0)),
                 len(m["summary"].get("partitions", [])),
             )
-            for m in S.read_manifest_list(
-                self.root, meta.snapshot(sid).manifest_list
-            )
+            for m in self._manifest_list(self.meta, snapshot_id)
         ]
         return self.spark.createDataFrame(rows, schema)
 
@@ -1999,3 +1990,27 @@ class Table:
             "size_drift": size_drift,
             "consistent": not missing and not size_drift,
         }
+
+
+def _snapshot_as_of(meta: S.TableMetadata, ts) -> int:
+    """Latest snapshot of ``meta`` committed at or before ``ts``
+    (datetime, date, or epoch millis)."""
+    import datetime as _dt
+
+    if isinstance(ts, _dt.datetime):
+        ms = int(ts.timestamp() * 1000)
+    elif isinstance(ts, _dt.date):
+        ms = int(_dt.datetime.combine(ts, _dt.time.max).timestamp() * 1000)
+    else:
+        ms = int(ts)
+    best = None
+    for s in meta.snapshots:
+        if s.timestamp_ms <= ms and (
+            best is None or s.timestamp_ms > best.timestamp_ms
+            or (s.timestamp_ms == best.timestamp_ms
+                and s.snapshot_id > best.snapshot_id)
+        ):
+            best = s
+    if best is None:
+        raise SnapshotNotFoundError(f"no snapshot at or before {ts!r}")
+    return best.snapshot_id

@@ -362,12 +362,14 @@ class MaterializedTransform:
 
         full = self._apply(base.scan(snapshot_id=to_id, columns=self.columns))
         t = self.table
-        prior = t.plan().files
+        meta = t.meta
+        prior = t._plan(meta).files
         entries = write_data_files(
             t.root,
-            t.meta.schema_json,
-            t.meta.partition_spec,
+            meta.schema_json,
+            meta.partition_spec,
             full,
+            properties=meta.properties,
             target_file_count=max(1, len(prior)),
             job_dir=f"data/resync-{to_id}-{uuid.uuid4().hex[:8]}",
         )
@@ -380,6 +382,7 @@ class MaterializedTransform:
                 "base_snapshot": to_id,
             },
             set_props={"transform_synced_snapshot": to_id},
+            base=meta,
         )
         return TransformRefreshResult("full-resync", synced, to_id, -1, 0)
 

@@ -503,8 +503,10 @@ class TestAdviceR4:
 
 
 class TestInsertOverwrite:
-    """INSERT OVERWRITE text form → overwrite_partitions (static via
-    PARTITION (...), dynamic without)."""
+    """INSERT OVERWRITE text form: PARTITION (...) → a static partition
+    replace; without it, ``spark.sql.sources.partitionOverwriteMode``
+    decides — ``static`` (Spark's default) replaces the whole table,
+    ``dynamic`` the partitions the query's rows land in."""
 
     @pytest.fixture()
     def days(self, spark, tmp_path):
@@ -537,7 +539,18 @@ class TestInsertOverwrite:
         ks = sorted(r.k for r in out.filter("day = '1'").collect())
         assert ks == [900, 901]
 
-    def test_dynamic_overwrite(self, spark, days):
+    @pytest.fixture()
+    def overwrite_mode(self, spark):
+        key = "spark.sql.sources.partitionOverwriteMode"
+        before = spark.conf.get(key, None)
+        yield lambda mode: spark.conf.set(key, mode)
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+    def test_dynamic_overwrite(self, spark, days, overwrite_mode):
+        overwrite_mode("dynamic")
         days.sql(
             "INSERT OVERWRITE TABLE days "
             "SELECT CAST(id AS BIGINT) AS k, '2' AS day FROM range(3)"
@@ -547,6 +560,37 @@ class TestInsertOverwrite:
         assert out.filter("day = '0'").count() == 10
         assert out.filter("day = '1'").count() == 10
         assert out.count() == 23
+
+    def test_static_overwrite_replaces_partitioned_table(
+        self, spark, days, overwrite_mode
+    ):
+        # Spark's default mode: the query's rows replace every live file
+        overwrite_mode("static")
+        before = days.current_snapshot_id()
+        n_files = len(days.plan().files)
+        days.sql(
+            "INSERT OVERWRITE TABLE days "
+            "SELECT CAST(id AS BIGINT) AS k, '2' AS day FROM range(3)"
+        )
+        rows = sorted(tuple(r) for r in days.scan().collect())
+        assert rows == [(0, "2"), (1, "2"), (2, "2")]
+        snaps = days.snapshots()
+        assert snaps[-1].parent_snapshot_id == before  # one commit
+        assert snaps[-1].summary["removed_files"] == n_files
+
+    def test_static_overwrite_replaces_unpartitioned_table(
+        self, spark, tmp_path, overwrite_mode
+    ):
+        overwrite_mode("static")
+        schema = T.StructType([T.StructField("k", T.LongType())])
+        t = Table.create(spark, str(tmp_path / "flat"), schema)
+        t.append(spark.range(5).select(F.col("id").alias("k")))
+        t.delete([("k", "=", 0)], mode="mor", key="k")  # a pending delete
+        before = t.current_snapshot_id()
+        t.sql("INSERT OVERWRITE flat SELECT id + 10 AS k FROM range(2)")
+        assert sorted(r.k for r in t.scan().collect()) == [10, 11]
+        assert t.snapshots()[-1].parent_snapshot_id == before
+        assert not t.plan().delete_files
 
     def test_overwrite_refusals(self, spark, days):
         with pytest.raises(SqlDmlError, match="not a partition"):

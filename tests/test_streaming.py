@@ -166,6 +166,35 @@ def test_append_if_absent_batch_key_dedup(spark, clips_table):
     assert clips_table.scan().count() == 40
 
 
+def test_append_if_absent_nothing_new_commits_nothing(
+    spark, clips_table, monkeypatch
+):
+    """An empty batch (told from the key probe) and a batch whose keys
+    are all present (told from the append's output) commit no snapshot,
+    leave no job directory behind, and run no ``isEmpty()`` job."""
+    import os
+
+    from pyspark.sql.classic import dataframe as classic_dataframe
+
+    from lakehouse.streaming import append_if_absent_batch
+
+    cb = append_if_absent_batch(clips_table, key="clip_id")
+    cb(synth_clips_df(spark, 12, seed=7, n_days=2), 0)
+    head = clips_table.current_snapshot_id()
+    jobs_before = set(os.listdir(os.path.join(clips_table.root, "data")))
+
+    def no_is_empty(self):
+        raise AssertionError("append_if_absent_batch ran an isEmpty() job")
+
+    monkeypatch.setattr(classic_dataframe.DataFrame, "isEmpty", no_is_empty)
+    cb(spark.createDataFrame([], CLIPS_SCHEMA), 1)
+    cb(synth_clips_df(spark, 12, seed=7, n_days=2), 2)  # all present
+    assert clips_table.current_snapshot_id() == head
+    assert clips_table.scan().count() == 12
+    jobs_after = set(os.listdir(os.path.join(clips_table.root, "data")))
+    assert not [d for d in jobs_after - jobs_before if d.startswith("job-")]
+
+
 def test_append_if_absent_oversized_batch_bounds_driver_collect(
     spark, clips_table, monkeypatch
 ):
