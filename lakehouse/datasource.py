@@ -25,7 +25,7 @@ Two readers:
   row-level — file skipping is a superset optimization and can never
   change results.
 
-Two writers (the write-side twins, same registered format):
+Two writers (same registered format):
 
 - **batch** — ``df.write.format("lakehouse").mode("append"|"overwrite")``:
   tasks conform Arrow batches to the table schema, split rows by the
@@ -38,7 +38,7 @@ Two writers (the write-side twins, same registered format):
 - **stream** — ``df.writeStream.format("lakehouse")``: idempotent
   micro-batch appends keyed by ``stream_batch_id`` in the snapshot
   summary, so a checkpoint replay after restart drops its duplicate
-  files instead of double-committing — the standard-API twin of
+  files instead of double-committing — the standard-API form of
   ``streaming.append_batch``.
 
 Both writers share one planning/task/abort half and harvest through
@@ -54,9 +54,12 @@ outside the contract ``Table.append`` enforces.
 
 - **stream** — ``spark.readStream.format("lakehouse")``: offsets are
   snapshot ids, each micro-batch reads exactly the data files appended
-  in ``(start, end]`` following the incremental-append-scan contract of
-  ``ops/changes.py`` (data-neutral replace/rewrite snapshots are
-  skipped; row-changing snapshots raise unless ``allow_replays``).
+  in ``(start, end]``, as planned by the one change planner
+  ``ops/changes.plan_changes`` that ``Table.incremental_scan`` uses too
+  (data-neutral replace/rewrite snapshots are skipped; row-changing
+  snapshots raise unless ``allow_replays``); ``changes=true`` streams
+  its per-snapshot steps as CDC rows. The two readers differ only in
+  how they read the planned files.
   Offsets live in the query checkpoint, so restart resumes exactly-once
   as long as the referenced snapshots have not been expired.
 
@@ -65,7 +68,7 @@ partitioned join (spj.py) — goes through ONE per-file kernel,
 :func:`read_files`: physical names by field id (``fieldids.physical_
 names``), fills and initial-defaults, then one select/exclude row mask
 for selector and delete files under the sequence rule. It is the Arrow
-twin of the Spark-side kernel ``meta/scan.read_entries``.
+counterpart of the Spark-side kernel ``meta/scan.read_entries``.
 
 Scale note: the Arrow-in-Python read path moves data through executor
 Python workers, so it deliberately targets *integration* (federated
@@ -265,11 +268,15 @@ def _file_dicts(root, entries, names) -> list[dict]:
     ]
 
 
-def _partitions_for(root, plan, target_bytes, names) -> list[FilesPartition]:
-    deletes = _delete_dicts(root, plan.delete_files)
+def _partitions_for(
+    root, files, delete_files, target_bytes, names, **tags
+) -> list[FilesPartition]:
+    """Bin-packed read tasks over ``files``, each masked by
+    ``delete_files``; ``tags`` are the CDC fields every task carries."""
+    deletes = _delete_dicts(root, delete_files)
     return [
-        FilesPartition(_file_dicts(root, members, names), deletes)
-        for members in _bin_pack(plan.files, target_bytes)
+        FilesPartition(_file_dicts(root, members, names), deletes, **tags)
+        for members in _bin_pack(files, target_bytes)
     ]
 
 
@@ -573,7 +580,8 @@ class LakehouseBatchReader(DataSourceReader):
         )
         parts = _partitions_for(
             self._root,
-            plan,
+            plan.files,
+            plan.delete_files,
             self._target_bytes,
             fieldids.physical_names(
                 meta.schemas, _view_schema_id(meta, self._snapshot_id)
@@ -684,35 +692,10 @@ class LakehouseStreamReader(DataSourceStreamReader):
         self._position = nxt
         return {"snapshot_id": nxt}
 
-    def _added_files(self, meta, from_id, to_id):
-        """Data files appended in (from, to] — spark-free twin of
-        ops/changes.incremental_scan (same contract, cited there)."""
-        from .ops.changes import APPEND_OPS, DATA_NEUTRAL_OPS, _chain
-
-        def live(sid):
-            if sid is None:
-                return {}
-            return {
-                e.file_path: e
-                for e in plan_scan(self._root, meta, snapshot_id=sid).files
-            }
-
-        added = []
-        for snap in _chain(meta, from_id, to_id):
-            if snap.operation in DATA_NEUTRAL_OPS:
-                continue
-            if snap.operation not in APPEND_OPS and not self._allow_replays:
-                raise LakehouseError(
-                    f"stream read hit row-changing snapshot "
-                    f"{snap.snapshot_id} ({snap.operation!r}); restart "
-                    f"from a later offset or set allow_replays=true"
-                )
-            prev = live(snap.parent_snapshot_id)
-            cur = live(snap.snapshot_id)
-            added.extend(e for p, e in cur.items() if p not in prev)
-        return added
-
     def partitions(self, start: dict, end: dict):
+        from .ops.changes import plan_changes
+        from .ops.mor import touched_by
+
         from_id, to_id = start.get("snapshot_id"), end.get("snapshot_id")
         # the WAL-recorded batch end is the authoritative stream
         # position — on restart this call precedes latestOffset(), so
@@ -722,122 +705,59 @@ class LakehouseStreamReader(DataSourceStreamReader):
         if to_id is None or from_id == to_id:
             return [FilesPartition([], [])]
         meta = load_metadata(self._root)
-        if self._changes:
-            return self._change_partitions(meta, from_id, to_id)
-        added = self._added_files(meta, from_id, to_id)
-        plan = _Plan(added)
-        parts = _partitions_for(
-            self._root,
-            plan,
-            self._target_bytes,
-            fieldids.physical_names(meta.schemas, self._schema_id),
-        )
-        return parts or [FilesPartition([], [])]
-
-    def _change_partitions(self, meta, from_id, to_id):
-        """CDC planning: per snapshot in (from, to], diff the live file
-        sets. Added data files → insert partitions (ordinary bin-packed
-        read, NO deletes — nothing can mask a file at its own commit).
-        New delete files → one partition group over the parent-live
-        data files they can touch (seq rule + min/max or path overlap,
-        the same probe ops/changes.row_changes uses), carrying the new
-        deletes as SELECTORS and the pre-existing ones as exclusions.
-        Everything stays a map over files — no shuffle, no driver rows.
-        """
-        from .ops.changes import DATA_NEUTRAL_OPS, _chain
-        from .ops.mor import _pos_delete_touches, _range_intersects
-
         names = fieldids.physical_names(meta.schemas, self._schema_id)
+        if not self._changes:
+            steps = plan_changes(
+                self._root, meta, from_id, to_id,
+                allow_replays=self._allow_replays,
+            )
+            parts = _partitions_for(
+                self._root, [e for step in steps for e in step.added], (),
+                self._target_bytes, names,
+            )
+            return parts or [FilesPartition([], [])]
+        # CDC planning, per row-changing snapshot in (from, to]. Added
+        # data files → insert partitions (ordinary bin-packed read, NO
+        # deletes — nothing can mask a file at its own commit). New
+        # delete files → one partition group over the parent-live data
+        # files they can touch, carrying the new deletes as SELECTORS
+        # and the pre-existing ones as exclusions. Everything stays a
+        # map over files — no shuffle, no driver rows.
         parts: list[FilesPartition] = []
-        plans: dict = {}  # adjacent chain steps share a boundary plan
-
-        def _plan(sid):
-            if sid not in plans:
-                plans[sid] = (
-                    plan_scan(self._root, meta, snapshot_id=sid)
-                    if sid is not None
-                    else None
-                )
-            return plans[sid]
-
-        for snap in _chain(meta, from_id, to_id):
-            if snap.operation in DATA_NEUTRAL_OPS:
-                continue
-            prev_plan = _plan(snap.parent_snapshot_id)
-            cur_plan = _plan(snap.snapshot_id)
-            prev_files = {
-                e.file_path: e
-                for e in (prev_plan.files if prev_plan else [])
-            }
-            cur_files = {e.file_path: e for e in cur_plan.files}
-            removed = [p for p in prev_files if p not in cur_files]
-            added = [e for p, e in cur_files.items() if p not in prev_files]
-            prev_dels = {
-                d.file_path: d
-                for d in (prev_plan.delete_files if prev_plan else [])
-            }
-            if removed:
-                # copy-on-write mutation (merge/update/delete/
-                # overwrite; data-neutral rewrites were skipped above):
-                # Iceberg-changelog semantics — every LIVE row of a
-                # removed file streams as a delete (selectors=None =
-                # select-all; the parent's pending deletes still
-                # exclude), added files stream as inserts below. A
-                # carried-over row appears as a delete+insert pair
-                # (net no-op) — exactly Iceberg's raw changelog without
-                # carryover removal, which keeps planning map-only and
-                # the read bounded by the commit's touched files
-                # (r3 verdict #7; pairing/netting is changelog_view's
-                # batch job, not the stream's).
-                for part in _partitions_for(
+        for step in plan_changes(
+            self._root, meta, from_id, to_id, allow_replays=True
+        ):
+            sid = step.snapshot.snapshot_id
+            prev_dels = step.parent.delete_files if step.parent else []
+            # copy-on-write mutation (merge/update/delete/overwrite):
+            # Iceberg-changelog semantics — every LIVE row of a removed
+            # file streams as a delete (selectors=None = select-all; the
+            # parent's pending deletes still exclude), added files
+            # stream as inserts. A carried-over row appears as a
+            # delete+insert pair (net no-op) — exactly Iceberg's raw
+            # changelog without carryover removal, which keeps planning
+            # map-only and the read bounded by the commit's touched
+            # files (pairing/netting is changelog_view's batch job, not
+            # the stream's).
+            parts += _partitions_for(
+                self._root, step.removed, prev_dels, self._target_bytes,
+                names, change="delete", snapshot_id=sid,
+            )
+            parts += _partitions_for(
+                self._root, step.added, (), self._target_bytes, names,
+                change="insert", snapshot_id=sid,
+            )
+            if step.new_deletes and step.parent:
+                parts += _partitions_for(
                     self._root,
-                    _Plan(
-                        [prev_files[p] for p in removed],
-                        prev_dels.values(),
-                    ),
+                    touched_by(step.parent.files, step.new_deletes),
+                    prev_dels,
                     self._target_bytes,
                     names,
-                ):
-                    part.change = "delete"
-                    part.snapshot_id = snap.snapshot_id
-                    parts.append(part)
-            new_dels = [
-                d
-                for d in cur_plan.delete_files
-                if d.file_path not in prev_dels
-            ]
-            for part in _partitions_for(
-                self._root, _Plan(added), self._target_bytes,
-                names,
-            ):
-                part.change = "insert"
-                part.snapshot_id = snap.snapshot_id
-                parts.append(part)
-            if new_dels:
-                def _touched(e):
-                    return any(
-                        e.seq < d.seq
-                        and (
-                            _pos_delete_touches(e, d)
-                            if d.is_pos_delete
-                            else _range_intersects(
-                                e.stats.get(d.delete_key) or {},
-                                d.stats.get(d.delete_key) or {},
-                            )
-                        )
-                        for d in new_dels
-                    )
-
-                affected = [e for e in prev_files.values() if _touched(e)]
-                selectors = _delete_dicts(self._root, new_dels)
-                for part in _partitions_for(
-                    self._root, _Plan(affected, prev_dels.values()),
-                    self._target_bytes, names,
-                ):
-                    part.change = "delete"
-                    part.selectors = selectors
-                    part.snapshot_id = snap.snapshot_id
-                    parts.append(part)
+                    change="delete",
+                    selectors=_delete_dicts(self._root, step.new_deletes),
+                    snapshot_id=sid,
+                )
         return parts or [FilesPartition([], [])]
 
     def read(self, partition: FilesPartition):
@@ -855,14 +775,6 @@ class LakehouseStreamReader(DataSourceStreamReader):
         pass
 
 
-class _Plan:
-    """Duck-typed ScanPlan carrier for _partitions_for."""
-
-    def __init__(self, files, delete_files=()):
-        self.files = files
-        self.delete_files = list(delete_files)
-
-
 # --- Arrow write path (tasks write parquet; driver commits the snapshot) ------
 
 
@@ -874,7 +786,7 @@ class FilesCommitMessage(WriterCommitMessage):
 
 
 def _derive_partition_array(tbl, field):
-    """Arrow twin of partitioning.partition_field_expr (vectorized).
+    """Arrow form of partitioning.partition_field_expr (vectorized).
 
     ``bucket`` is deliberately unsupported here: its value is Spark's
     ``xxhash64`` and a Python reimplementation risks silently diverging
@@ -1120,7 +1032,7 @@ class LakehouseBatchWriter(_FormatWriter, DataSourceArrowWriter):
 
 class LakehouseStreamWriter(_FormatWriter, DataSourceStreamArrowWriter):
     """``df.writeStream.format("lakehouse")`` — idempotent micro-batch
-    appends, the standard-API twin of streaming.append_batch (which the
+    appends, the standard-API form of streaming.append_batch (which the
     reference expresses as ``writeStream.format("delta")``,
     /root/reference/etl/glue_stream.py:339-349). Replayed batch ids
     (restart from checkpoint) drop their files instead of re-committing.

@@ -126,13 +126,12 @@ class AggResult:
     per_column: dict[str, Any] = field(default_factory=dict)
 
 
-def count_rows(table, *, filter=None) -> AggResult:  # noqa: A002
+def count_rows(table, meta, *, filter=None) -> AggResult:  # noqa: A002
     """COUNT(*) with optional AND-of-predicates filter. Kept files that
     fully match contribute their manifest ``record_count``; boundary
     files are read with the residual predicate (Catalyst prunes the
     read to the predicate columns — a count scans no payload bytes)."""
     preds = normalize_filter(filter)
-    meta = table.meta
     plan = table._plan(meta, filter=filter)
     if plan.delete_files:
         df = table._scan(meta, filter=filter)
@@ -157,7 +156,7 @@ def count_rows(table, *, filter=None) -> AggResult:  # noqa: A002
     return AggResult(int(n), len(full), len(partial))
 
 
-def min_max(table, columns, *, filter=None) -> AggResult:  # noqa: A002
+def min_max(table, meta, columns, *, filter=None) -> AggResult:  # noqa: A002
     """MIN/MAX per column with optional filter. Fully-matching files
     answer from manifest min/max (SQL MIN/MAX ignore nulls, exactly
     like the stats do); boundary files are read column-pruned to
@@ -165,7 +164,6 @@ def min_max(table, columns, *, filter=None) -> AggResult:  # noqa: A002
     ``{col: (min, max)}`` in stats encoding (temporal values as ISO
     strings — callers compare like-for-like)."""
     preds = normalize_filter(filter)
-    meta = table.meta
     plan = table._plan(meta, filter=filter)
     if plan.delete_files:
         df = table._scan(meta, filter=filter)
@@ -237,7 +235,7 @@ def agg_stats_columns_property(
     return [str(c) for c in raw]
 
 
-def sum_agg(table, columns, *, filter=None) -> AggResult:  # noqa: A002
+def sum_agg(table, meta, columns, *, filter=None) -> AggResult:  # noqa: A002
     """SUM + non-null COUNT per column with optional filter — the
     metadata-only answer to ``SELECT SUM(c), COUNT(c), AVG(c)``.
 
@@ -254,7 +252,6 @@ def sum_agg(table, columns, *, filter=None) -> AggResult:  # noqa: A002
     AVG = sum / count at the caller.
     """
     preds = normalize_filter(filter)
-    meta = table.meta
     plan = table._plan(meta, filter=filter)
 
     def scan_agg(df, n_meta, n_scan, fallback=None):

@@ -682,17 +682,19 @@ def merge_into(
         )
         .collect()[0]
     )
-    validate = (
-        # empty source: no key range to miss — but an NMS clause still
-        # reads its whole condition domain, so its spec survives
-        None
-        if int(stats.src_rows or 0) == 0 and nms_domain is None
-        else _validation_spec(
-            meta, isolation, validate_from, key,
-            stats.key_min if int(stats.src_rows or 0) else None,
-            stats.key_max if int(stats.src_rows or 0) else None,
-            nms_domain=nms_domain,
-        )
+    if int(stats.src_rows or 0) == 0 and nms is None:
+        # nothing to match, insert or sync: no fold-in, no write job,
+        # no snapshot
+        src.unpersist()
+        return MergeResult(job_id or "merge-empty", None, 0, 0, 0)
+    meta = table._materialize_pending_deletes(meta)
+    # an empty source has no key range to miss — but an NMS clause
+    # still reads its whole condition domain, so its spec survives
+    validate = _validation_spec(
+        meta, isolation, validate_from, key,
+        stats.key_min if int(stats.src_rows or 0) else None,
+        stats.key_max if int(stats.src_rows or 0) else None,
+        nms_domain=nms_domain,
     )
     if (stats.max_n or 0) > 1:
         dup = (

@@ -717,6 +717,30 @@ def _range_intersects(fstats: dict, dstats: dict) -> bool:
         return True
 
 
+def touched_by(entries, deletes) -> list[DataFileEntry]:
+    """The data files of ``entries`` some delete of ``deletes`` can name
+    rows of, from manifests alone: the sequence rule (the file's seq is
+    strictly smaller than the delete's) and the stats probe (a
+    positional delete's ``file_path`` range, an equality delete's key
+    range). Missing stats count as touched."""
+    return [
+        e
+        for e in entries
+        if any(
+            e.seq < d.seq
+            and (
+                _pos_delete_touches(e, d)
+                if d.is_pos_delete
+                else _range_intersects(
+                    e.stats.get(d.delete_key) or {},
+                    d.stats.get(d.delete_key) or {},
+                )
+            )
+            for d in deletes
+        )
+    ]
+
+
 def convert_deletes(
     table,
     meta,
@@ -766,18 +790,7 @@ def convert_deletes(
     if eq_dels:
         # candidate data files: any eq delete may touch them (manifest
         # stats only — same prune as materialize, no data read to plan)
-        affected = [
-            e
-            for e in plan.files
-            if any(
-                e.seq < d.seq
-                and _range_intersects(
-                    e.stats.get(d.delete_key) or {},
-                    d.stats.get(d.delete_key) or {},
-                )
-                for d in eq_dels
-            )
-        ]
+        affected = touched_by(plan.files, eq_dels)
         if affected:
             by_key: dict[str, list] = {}
             for d in eq_dels:
@@ -881,22 +894,7 @@ def materialize_deletes(
     log = LineageLog(table.root, job_id)
     log.start_job("materialize_deletes", {"delete_files": len(dels)})
 
-    affected: list[DataFileEntry] = []
-    for e in plan.files:
-        for d in dels:
-            if e.seq >= d.seq:
-                continue
-            touched = (
-                _pos_delete_touches(e, d)
-                if d.is_pos_delete
-                else _range_intersects(
-                    e.stats.get(d.delete_key) or {},
-                    d.stats.get(d.delete_key) or {},
-                )
-            )
-            if touched:
-                affected.append(e)
-                break
+    affected = touched_by(plan.files, dels)
 
     # clustered files (they carry the hidden zkey column) are rewritten
     # separately so the delete application does not strip the column,

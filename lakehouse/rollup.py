@@ -34,6 +34,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .table import Table
 
@@ -114,6 +115,15 @@ def _full_agg_exprs(aggs: dict[str, tuple]) -> list:
         elif kind == "max":
             out.append(F.max(F.expr(expr)).alias(name))
     return out
+
+
+def _spec(props: dict) -> tuple[list[str], dict, dict[str, tuple]]:
+    """``(group_by, group_exprs, aggs)`` from a rollup's properties."""
+    return (
+        json.loads(props["rollup_group_by"]),
+        json.loads(props.get("rollup_group_exprs") or "{}"),
+        {k: tuple(v) for k, v in json.loads(props["rollup_aggs"]).items()},
+    )
 
 
 @dataclass
@@ -245,147 +255,97 @@ class MaterializedRollup:
     # -- maintenance --------------------------------------------------------
 
     def refresh(self, **merge_kw) -> RefreshResult:
-        base = self.base
-        to_id = base.current_snapshot_id()
-        synced = self._props.get("rollup_synced_snapshot")
+        """Fold the base's change since the synced snapshot in. Reads
+        the rollup's and the base's metadata once each, and commits on
+        the rollup version it read."""
+        from .ops.changes import (
+            full_resync,
+            incremental_scan,
+            refresh_path,
+            row_changes,
+        )
+
+        meta = self.table.meta
+        props = meta.properties
+        base = Table(self.spark, props["rollup_base_root"])
+        bmeta = base.meta
+        to_id = bmeta.current_snapshot_id
+        synced = props.get("rollup_synced_snapshot")
         if synced == to_id or to_id is None:
             return RefreshResult("noop", synced, to_id, 0, 0)
-        group_by, aggs = self.group_by, self.aggs
-        group_exprs = self.group_exprs
+        group_by, group_exprs, aggs = _spec(props)
         gnames = group_by + list(group_exprs)
+        need = _needed_columns(
+            T.StructType.fromJson(bmeta.schema_json), group_by, aggs,
+            group_exprs,
+        )
+        marker = {"rollup_synced_snapshot": to_id}
 
-        if synced is None:
-            full = (
-                _with_groups(
-                    base.scan(
-                        snapshot_id=to_id,
-                        columns=_needed_columns(
-                            base.schema, group_by, aggs, group_exprs
-                        ),
-                    ),
-                    group_exprs,
-                )
+        def base_rows():
+            return _with_groups(
+                base._scan(bmeta, snapshot_id=to_id, columns=need),
+                group_exprs,
+            )
+
+        def full_agg():
+            return (
+                base_rows()
                 .groupBy(*gnames)
                 .agg(*_full_agg_exprs(aggs))
-                .select(
-                    *gnames, _gkey_expr(gnames), *_agg_out_cols(aggs)
-                )
+                .select(*gnames, _gkey_expr(gnames), *_agg_out_cols(aggs))
             )
+
+        if synced is None:
             # marker rides the SAME commit as the data: a crash can
             # never leave rows without the marker (replay would append
             # the full build a second time)
-            self.table.append(
-                full, set_props={"rollup_synced_snapshot": to_id}
-            )
+            self.table._append(meta, full_agg(), set_props=marker)
             return RefreshResult("full", None, to_id, -1, 0)
 
-        from .errors import LakehouseError, SnapshotNotFoundError
-
-        # data-neutral shortcut (zero reads): compaction, clustering,
-        # and manifest rewrites change no logical rows — their CDC diff
-        # would read 2x the rewritten bytes only for every row to
-        # cancel. Recognize the chain from the snapshot log alone and
-        # just advance the marker.
-        try:
-            from .ops.changes import DATA_NEUTRAL_OPS, _chain
-
-            chain = _chain(base.meta, synced, to_id)
-            if chain and all(
-                s.operation in DATA_NEUTRAL_OPS for s in chain
-            ):
-                self.table.set_properties(rollup_synced_snapshot=to_id)
-                return RefreshResult("incremental", synced, to_id, 0, 0)
-        except LakehouseError:
-            pass  # broken/expired chain: recovery paths below decide
-
-        # append-only fast path (appends mixed with data-neutral
-        # maintenance): when every ROW-CHANGING snapshot in (synced, to]
-        # is an append, the delta IS the appended files read once —
-        # insert-only, no multiset diff, no delete algebra. Refresh cost
+        # neutral: compaction, clustering and manifest rewrites change
+        # no logical rows — just advance the marker (zero reads).
+        # append: the delta IS the appended files read once —
+        # insert-only, no multiset diff, no delete algebra; refresh cost
         # stays ∝ new data even when a compaction rewrote the whole base
-        # in between (the diff/resync paths below would read the table
-        # once or twice for rows that all cancel).
-        delta = None
-        try:
-            ins = base.incremental_scan(
-                from_snapshot_id=synced, to_snapshot_id=to_id
-            ).select(
-                *_needed_columns(base.schema, group_by, aggs, group_exprs)
+        # in between. changes: the CDC diff, projected to the columns
+        # the algebra reads (payload columns never enter its scan or
+        # exchange; projection commutes with the multiset diff for
+        # signed-delta aggregation). resync: the synced snapshot
+        # expired, or the diff would read at least
+        # rollup_resync_cost_ratio x the table (float, "off" disables).
+        path = refresh_path(
+            base, bmeta, synced, to_id,
+            props.get("rollup_resync_cost_ratio", "1.0"),
+        )
+        if path == "resync":
+            full_resync(self.table, meta, full_agg(), "rollup", to_id)
+            return RefreshResult("full-resync", synced, to_id, -1, 0)
+        if path == "neutral":
+            self.table._set_properties(meta, marker)
+            return RefreshResult("incremental", synced, to_id, 0, 0)
+        if path == "append":
+            delta = incremental_scan(
+                base, bmeta, from_snapshot_id=synced, to_snapshot_id=to_id
+            ).select(*need).withColumn("_change_type", F.lit("insert"))
+        else:
+            delta = row_changes(
+                base, bmeta, from_snapshot_id=synced, to_snapshot_id=to_id,
+                columns=need,
             )
-            delta = ins.withColumn("_change_type", F.lit("insert"))
-        except SnapshotNotFoundError:
-            return self._full_resync(base, to_id, group_by, aggs, synced)
-        except LakehouseError:
-            pass  # row-changing non-append snapshots: CDC/resync below
-
-        if delta is None:
-            # cost guard (manifest arithmetic, zero I/O): after a
-            # table-wide change (e.g. a positional-delete
-            # materialization rewrote every file, or an equality delete
-            # whose key range touches every file) the CDC diff reads
-            # old+new of everything — up to 2x the table — while a
-            # recompute reads it once. When the diff would read >=
-            # ratio x a full scan, take the resync path. Tunable per
-            # table: rollup_resync_cost_ratio = float ("off" disables;
-            # tests exercising the incremental algebra on tiny
-            # many-times-touched tables turn it off).
-            guard = str(
-                self._props.get("rollup_resync_cost_ratio", "1.0")
-            )
-            try:
-                if guard.lower() not in ("off", "none", ""):
-                    from .ops.changes import diff_read_bytes
-
-                    diff_b, live_b = diff_read_bytes(
-                        base, from_snapshot_id=synced, to_snapshot_id=to_id
-                    )
-                    if live_b > 0 and diff_b >= float(guard) * live_b:
-                        return self._full_resync(
-                            base, to_id, group_by, aggs, synced
-                        )
-                delta = base.row_changes(
-                    from_snapshot_id=synced,
-                    to_snapshot_id=to_id,
-                    # project the CDC diff to the columns the algebra
-                    # reads: payload columns (audio bytes) never enter
-                    # the diff's scan or exchange, and projection
-                    # commutes with the multiset diff for signed-delta
-                    # aggregation (a pair cancelled only under
-                    # projection contributes +1/-1 to every agg anyway)
-                    columns=_needed_columns(
-                        base.schema, group_by, aggs, group_exprs
-                    ),
-                )
-            except SnapshotNotFoundError:
-                # the synced base snapshot has EXPIRED — the CDC chain
-                # to it is gone, so the delta is unrecoverable. Recover
-                # with one atomic full resync (recompute + overwrite
-                # commit) instead of failing: the rollup lags expiry,
-                # never breaks on it.
-                return self._full_resync(
-                    base, to_id, group_by, aggs, synced
-                )
-
-        try:
-            src, n_groups, n_recomputed, cached = self._incremental_source(
-                _with_groups(delta, group_exprs), gnames, aggs, base, to_id
-            )
-        except SnapshotNotFoundError:
-            return self._full_resync(base, to_id, group_by, aggs, synced)
+        src, n_groups, n_recomputed, cached = self._incremental_source(
+            meta, _with_groups(delta, group_exprs), gnames, aggs, base_rows
+        )
         try:
             if n_groups:
                 # old+delta values are NOT replay-idempotent: stamp the
                 # marker inside the merge commit itself
-                self.table.merge(
-                    src,
-                    key=GKEY,
-                    set_props={"rollup_synced_snapshot": to_id},
-                    **merge_kw,
+                self.table._merge(
+                    meta, src, key=GKEY, set_props=marker, **merge_kw
                 )
             else:
                 # no data change: a metadata-only stamp (replaying an
                 # empty diff is harmless either way)
-                self.table.set_properties(rollup_synced_snapshot=to_id)
+                self.table._set_properties(meta, marker)
         finally:
             for c in cached:
                 c.unpersist()
@@ -393,52 +353,11 @@ class MaterializedRollup:
             "incremental", synced, to_id, n_groups, n_recomputed
         )
 
-    def _full_resync(self, base, to_id, group_by, aggs, synced):
-        """Recompute the whole rollup and swap it in with ONE atomic
-        overwrite commit (add new files, remove all current ones)."""
-        from .ops.append import write_data_files
-
-        group_exprs = self.group_exprs
-        gnames = list(group_by) + list(group_exprs)
-        full = (
-            _with_groups(
-                base.scan(
-                    snapshot_id=to_id,
-                    columns=_needed_columns(
-                        base.schema, group_by, aggs, group_exprs
-                    ),
-                ),
-                group_exprs,
-            )
-            .groupBy(*gnames)
-            .agg(*_full_agg_exprs(aggs))
-            .select(*gnames, _gkey_expr(gnames), *_agg_out_cols(aggs))
-        )
-        t = self.table
-        meta = t.meta
-        prior = t._plan(meta).files
-        entries = write_data_files(
-            t.root,
-            meta.schema_json,
-            meta.partition_spec,
-            full,
-            properties=meta.properties,
-            target_file_count=max(1, len(prior)),
-            job_dir=f"data/resync-{to_id}-{__import__('uuid').uuid4().hex[:8]}",
-        )
-        t._commit_files(
-            "overwrite",
-            entries,
-            [e.file_path for e in prior],
-            summary={"mode": "rollup-full-resync", "base_snapshot": to_id},
-            set_props={"rollup_synced_snapshot": to_id},
-            base=meta,
-        )
-        return RefreshResult("full-resync", synced, to_id, -1, 0)
-
-    def _incremental_source(self, delta, group_by, aggs, base, to_id):
+    def _incremental_source(self, meta, delta, group_by, aggs, base_rows):
         """MERGE source for one refresh: one row per delta group with
-        the new agg values (or op='delete' when its count reaches 0)."""
+        the new agg values (or op='delete' when its count reaches 0).
+        ``meta`` is the rollup's version; ``base_rows()`` the base rows
+        at the refresh target."""
         sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
             F.lit(-1)
         )
@@ -483,7 +402,7 @@ class MaterializedRollup:
             d.unpersist()
             return None, 0, 0, []
 
-        cur = self.table.scan().select(
+        cur = self.table._scan(meta).select(
             F.col(GKEY).alias("_cur_gkey"),
             *[F.col(n).alias(f"_cur_{n}") for n in _agg_out_cols(aggs)],
         )
@@ -536,18 +455,7 @@ class MaterializedRollup:
             n_recomputed = keys.count()
             if n_recomputed:
                 exact = (
-                    _with_groups(
-                        base.scan(
-                            snapshot_id=to_id,
-                            columns=_needed_columns(
-                                base.schema,
-                                self.group_by,
-                                aggs,
-                                self.group_exprs,
-                            ),
-                        ),
-                        self.group_exprs,
-                    )
+                    base_rows()
                     .select("*", _gkey_expr(group_by))
                     .join(F.broadcast(keys), on=GKEY, how="left_semi")
                     .groupBy(*group_by)

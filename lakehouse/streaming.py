@@ -117,14 +117,13 @@ def upsert_batch(
     (event-time/processing-time ordering), otherwise an arbitrary one
     per key. Batch-id idempotency works exactly like ``append_batch``:
     the id commits atomically in the merge snapshot's summary, so a
-    replayed batch after restart is skipped.
+    replayed batch after restart is skipped. An empty batch (told from
+    the merge's own stats pass) commits nothing.
     """
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
         meta = table.meta
         if batch_replayed(meta, batch_id):
-            return
-        if batch_df.isEmpty():
             return
         if order_col is not None:
             from pyspark.sql.window import Window
@@ -265,14 +264,13 @@ def replicate_batch(
     appended rows share a snapshot and the batch id stamps atomically
     WITH the data: a replayed batch after a crash is skipped whole,
     never half-applied. Cost per batch is O(changes): zero target
-    reads (MoR merge), no payload ever shuffles twice.
+    reads (MoR merge), no payload ever shuffles twice. An empty batch
+    (told from the merge's own stats pass) commits nothing.
     """
 
     def _inner(batch_df: DataFrame, batch_id: int) -> None:
         meta = dst.meta
         if batch_replayed(meta, batch_id):
-            return
-        if batch_df.isEmpty():
             return
         from pyspark.sql.window import Window
 

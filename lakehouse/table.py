@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from .errors import (
     CommitConflictError,
+    LakehouseError,
     RefError,
     SchemaEvolutionError,
     SnapshotNotFoundError,
@@ -1131,7 +1132,7 @@ class Table:
             return _merge_mor(self, meta, source, **kw)
         from .ops.merge import merge_into as _merge
 
-        return _merge(self, self._materialize_pending_deletes(meta), source, **kw)
+        return _merge(self, meta, source, **kw)
 
     def _evolve_for_merge_source(
         self, meta: S.TableMetadata, source: DataFrame, *, op_col: str
@@ -1220,13 +1221,17 @@ class Table:
         return self._replace_all(self.meta, "delete", [], truncate=True)
 
     def _replace_all(
-        self, meta: S.TableMetadata, operation: str, entries, **summary
+        self, meta: S.TableMetadata, operation: str, entries, *,
+        plan: Optional[ScanPlan] = None,
+        set_props: Optional[dict[str, Any]] = None, **summary,
     ) -> S.Snapshot:
         """One commit on ``meta`` that swaps every live data and MoR
         delete file for ``entries``: truncate, the static full-table
-        ``INSERT OVERWRITE`` and the format writer's overwrite. Pending
-        deletes need no fold-in: every file they apply to goes too."""
-        plan = self._plan(meta)
+        ``INSERT OVERWRITE``, the format writer's overwrite and a
+        derived table's full resync. Pending deletes need no fold-in:
+        every file they apply to goes too. ``plan``: the caller's plan
+        of ``meta``'s head, when it has one."""
+        plan = plan or self._plan(meta)
         return self._commit_files(
             operation,
             entries,
@@ -1237,6 +1242,7 @@ class Table:
                 "removed_delete_files": len(plan.delete_files),
                 "removed_records": sum(e.record_count for e in plan.files),
             },
+            set_props=set_props,
             base=meta,
         )
 
@@ -1497,8 +1503,33 @@ class Table:
         """CAS-update table properties (merge semantics; ``None``
         removes a key). Rides the same optimistic commit loop as data
         commits — safe under concurrent writers."""
+        self._set_properties(None, props)
+
+    def _set_properties(
+        self, meta: Optional[S.TableMetadata], props: dict[str, Any], *,
+        checked_rows: bool = False,
+    ) -> S.TableMetadata:
+        """``set_properties`` committed on ``meta`` (None: the newest
+        version); returns the published version. ``checked_rows``: the
+        caller validated the new properties against ``meta``'s rows, so
+        a row-changing snapshot committed since then is a conflict."""
+        from .ops.changes import DATA_NEUTRAL_OPS, _chain
+
+        def rows_changed(base: S.TableMetadata) -> bool:
+            try:
+                since = _chain(
+                    base, meta.current_snapshot_id, base.current_snapshot_id
+                )
+            except LakehouseError:  # expired or rolled back
+                return True
+            return any(s.operation not in DATA_NEUTRAL_OPS for s in since)
 
         def apply(base: S.TableMetadata) -> S.TableMetadata:
+            if checked_rows and rows_changed(base):
+                raise CommitConflictError(
+                    f"rows changed after the check on snapshot "
+                    f"{meta.current_snapshot_id}; re-run it"
+                )
             p = dict(base.properties)
             for k, v in props.items():
                 if v is None:
@@ -1507,7 +1538,7 @@ class Table:
                     p[k] = v
             return dataclasses.replace(base, properties=p)
 
-        S.commit(self.root, apply)
+        return S.commit(self.root, apply, base=meta)
 
     # --- write-time sort order (lakehouse/sortorder.py) --------------------
 
@@ -1559,10 +1590,11 @@ class Table:
         from .errors import ConstraintViolationError
 
         validate_name(name)
-        if name in constraints_of(self.meta.properties):
+        meta = self.meta
+        if name in constraints_of(meta.properties):
             raise ValueError(f"CHECK constraint {name!r} already exists")
         bad = (
-            self.scan()
+            self._scan(meta)
             .where(~F.coalesce(F.expr(expr), F.lit(True)))
             .limit(1_000_001)
             .count()
@@ -1572,7 +1604,9 @@ class Table:
                 f"cannot add CHECK constraint {name!r} ({expr}): "
                 f"{bad} existing row(s) violate it"
             )
-        self.set_properties(**{CONSTRAINT_PREFIX + name: expr})
+        self._set_properties(
+            meta, {CONSTRAINT_PREFIX + name: expr}, checked_rows=True
+        )
 
     def drop_check_constraint(self, name: str) -> None:
         from .constraints import CONSTRAINT_PREFIX, constraints_of
@@ -1600,12 +1634,13 @@ class Table:
         from .constraints import GENERATED_PREFIX, generated_of
         from .errors import ConstraintViolationError
 
-        if column not in [f.name for f in self.schema.fields]:
+        meta = self.meta
+        if column not in T.StructType.fromJson(meta.schema_json).names:
             raise ValueError(f"no column {column!r} in the table schema")
-        if column in generated_of(self.meta.properties):
+        if column in generated_of(meta.properties):
             raise ValueError(f"{column!r} already has a generation rule")
         bad = (
-            self.scan()
+            self._scan(meta)
             .where(
                 F.col(column).isNotNull()
                 & ~F.expr(f"`{column}` <=> ({expr})")
@@ -1618,7 +1653,9 @@ class Table:
                 f"cannot declare {column!r} GENERATED AS ({expr}): "
                 f"{bad} existing row(s) contradict it"
             )
-        self.set_properties(**{GENERATED_PREFIX + column: expr})
+        self._set_properties(
+            meta, {GENERATED_PREFIX + column: expr}, checked_rows=True
+        )
 
     def drop_generated_column_rule(self, column: str) -> None:
         from .constraints import GENERATED_PREFIX, generated_of
@@ -1646,24 +1683,27 @@ class Table:
             validate_identity_column,
         )
 
-        if column in identity_of(self.meta.properties):
+        meta = self.meta
+        if column in identity_of(meta.properties):
             raise ValueError(f"{column!r} is already an identity column")
         validate_identity_column(
-            self.schema, self.meta.properties, column, step
+            T.StructType.fromJson(meta.schema_json), meta.properties,
+            column, step,
         )
         high = int(start)
-        if self.current_snapshot_id() is not None:
+        if meta.current_snapshot_id is not None:
             # metadata-first MAX with its own boundary-file fallback, so
             # stat-less (e.g. adopted) files can't hide a high value
             from .ops.agg import min_max
 
-            cur_max = min_max(self, [column]).per_column[column][1]
+            cur_max = min_max(self, meta, [column]).per_column[column][1]
             if cur_max is not None:
                 high = max(high, int(cur_max) + int(step))
         if mode not in ("default", "always"):
             raise ValueError(f"identity mode {mode!r} (default | always)")
-        self.set_properties(
-            **identity_prop(column, start, step, high, mode)
+        self._set_properties(
+            meta, identity_prop(column, start, step, high, mode),
+            checked_rows=True,
         )
 
     def drop_identity_column_rule(self, column: str) -> None:
@@ -1711,14 +1751,14 @@ class Table:
         to the real scan when MoR deletes are pending."""
         from .ops.agg import count_rows as _count
 
-        return _count(self, filter=filter)
+        return _count(self, self.meta, filter=filter)
 
     def min_max(self, columns, *, filter=None):  # noqa: A002
         """MIN/MAX per column, metadata-first (manifest min/max for
         fully-matching files with exact stats, reads for the rest)."""
         from .ops.agg import min_max as _min_max
 
-        return _min_max(self, columns, filter=filter)
+        return _min_max(self, self.meta, columns, filter=filter)
 
     def sum_agg(self, columns, *, filter=None):  # noqa: A002
         """SUM + non-null COUNT per column, metadata-first: tables
@@ -1728,7 +1768,7 @@ class Table:
         ``{col: (sum, nonnull_count)}``."""
         from .ops.agg import sum_agg as _sum_agg
 
-        return _sum_agg(self, columns, filter=filter)
+        return _sum_agg(self, self.meta, columns, filter=filter)
 
     def convert_deletes(self, **kw):
         """Minor delete compaction: fold every pending equality delete
@@ -1770,12 +1810,12 @@ class Table:
         # which the append-scan contract already rejects.
         from .ops.changes import incremental_scan as _inc
 
-        return _inc(self, **kw)
+        return _inc(self, self.meta, **kw)
 
     def row_changes(self, **kw) -> DataFrame:
         from .ops.changes import row_changes as _cdc
 
-        return _cdc(self, **kw)
+        return _cdc(self, self.meta, **kw)
 
     def changelog_view(self, **kw) -> DataFrame:
         """CDC with update PAIRING: delete+insert sharing the
@@ -1783,7 +1823,7 @@ class Table:
         (Iceberg's create_changelog_view counterpart)."""
         from .ops.changes import changelog_view as _clv
 
-        return _clv(self, **kw)
+        return _clv(self, self.meta, **kw)
 
     def rewrite_manifests(self, **kw):
         from .ops.rewrite_manifests import rewrite_manifests as _rw

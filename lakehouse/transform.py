@@ -37,7 +37,6 @@ Transforms come in two kinds:
 from __future__ import annotations
 
 import json
-import uuid
 from dataclasses import dataclass
 from typing import Callable, Optional, Sequence
 
@@ -210,113 +209,96 @@ class MaterializedTransform:
     def columns(self) -> list[str]:
         return json.loads(self._props["transform_columns"])
 
-    def _apply(self, df: DataFrame) -> DataFrame:
-        exprs = (
-            json.loads(self._props["transform_exprs"])
-            if self._props.get("transform_exprs")
-            else None
-        )
-        return _apply_spec(
-            df, self.key, exprs, self._props.get("transform_name")
-        )
-
     def scan(self) -> DataFrame:
         return self.table.scan()
 
     def expected(self) -> DataFrame:
         """Full recompute over the current base snapshot — the oracle
         the incremental path must equal row-for-row."""
-        return self._apply(self.base.scan(columns=self.columns))
+        return _apply_props(
+            self.base.scan(columns=self.columns), self._props
+        )
 
     # -- maintenance --------------------------------------------------------
 
     def refresh(self, **merge_kw) -> TransformRefreshResult:
-        base = self.base
-        to_id = base.current_snapshot_id()
-        synced = self._props.get("transform_synced_snapshot")
+        """Fold the base's change since the synced snapshot in. Reads
+        the derived table's and the base's metadata once each, and
+        commits on the derived version it read."""
+        from pyspark import StorageLevel
+
+        from .ops.changes import (
+            full_resync,
+            incremental_scan,
+            refresh_path,
+            row_changes,
+        )
+
+        meta = self.table.meta
+        props = meta.properties
+        base = Table(self.spark, props["transform_base_root"])
+        bmeta = base.meta
+        to_id = bmeta.current_snapshot_id
+        synced = props.get("transform_synced_snapshot")
         if synced == to_id or to_id is None:
             return TransformRefreshResult("noop", synced, to_id, 0, 0)
-        cols, key = self.columns, self.key
+        cols = json.loads(props["transform_columns"])
+        key = props["transform_key"]
+        marker = {"transform_synced_snapshot": to_id}
+
+        def full() -> DataFrame:
+            return _apply_props(
+                base._scan(bmeta, snapshot_id=to_id, columns=cols), props
+            )
 
         if synced is None:
-            full = self._apply(
-                base.scan(snapshot_id=to_id, columns=cols)
-            )
             # marker rides the SAME commit: plain appends are not
             # replay-idempotent, so a crash between data and marker
             # would duplicate every feature row on the next refresh
-            self.table.append(
-                full, set_props={"transform_synced_snapshot": to_id}
-            )
+            self.table._append(meta, full(), set_props=marker)
             return TransformRefreshResult("full", None, to_id, -1, 0)
 
-        from .errors import LakehouseError, SnapshotNotFoundError
-
-        # append-only fast path: when every snapshot in (synced, to] is
-        # an append, the delta IS the added files — no multiset diff, no
-        # payload shuffle, no delete handling. Features for the new rows
-        # append straight in (base keys are unique, so an appended base
-        # row is a new key by invariant). This is the common case a
-        # 100 TB feature pipeline lives in: refresh cost ∝ new data.
-        ins = None
-        try:
-            # the chain walk is driver-side and raises here, before any
-            # distributed work, when the delta is not append-only
-            ins = base.incremental_scan(
-                from_snapshot_id=synced, to_snapshot_id=to_id
+        # the rollup's four paths (ops/changes.refresh_path): neutral
+        # advances the marker with zero reads; append reads the added
+        # files only — no multiset diff, no payload shuffle, no delete
+        # handling (base keys are unique, so an appended base row is a
+        # new key by invariant): the path a 100 TB feature pipeline
+        # lives in, refresh cost ∝ new data; changes reads the CDC
+        # diff; resync recomputes (synced snapshot expired, or the diff
+        # would read >= transform_resync_cost_ratio x the table).
+        path = refresh_path(
+            base, bmeta, synced, to_id,
+            props.get("transform_resync_cost_ratio", "1.0"),
+        )
+        if path == "resync":
+            full_resync(self.table, meta, full(), "transform", to_id)
+            return TransformRefreshResult("full-resync", synced, to_id, -1, 0)
+        if path == "neutral":
+            self.table._set_properties(meta, marker)
+            return TransformRefreshResult("incremental", synced, to_id, 0, 0)
+        if path == "append":
+            ins = incremental_scan(
+                base, bmeta, from_snapshot_id=synced, to_snapshot_id=to_id
             ).select(*cols)
-        except SnapshotNotFoundError:
-            return self._full_resync(base, to_id, synced)
-        except LakehouseError:
-            pass  # row-changing snapshots in the chain: full CDC below
-        if ins is not None:
-            from pyspark import StorageLevel
-
-            ups = self._apply(ins).persist(StorageLevel.MEMORY_AND_DISK)
+            ups = _apply_props(ins, props).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
             try:
                 n_up = ups.count()
                 if n_up:
-                    self.table.append(
-                        ups,
-                        set_props={"transform_synced_snapshot": to_id},
-                    )
+                    self.table._append(meta, ups, set_props=marker)
                 else:
-                    self.table.set_properties(
-                        transform_synced_snapshot=to_id
-                    )
+                    self.table._set_properties(meta, marker)
             finally:
                 ups.unpersist()
             return TransformRefreshResult(
                 "incremental", synced, to_id, n_up, 0
             )
 
-        # cost guard (manifest arithmetic, zero I/O): when a table-wide
-        # change makes the CDC diff read >= ratio x a full scan,
-        # recompute once instead of diffing twice the table. Tunable:
-        # transform_resync_cost_ratio = float ("off" disables).
-        guard = str(
-            self._props.get("transform_resync_cost_ratio", "1.0")
-        )
-        try:
-            if guard.lower() not in ("off", "none", ""):
-                from .ops.changes import diff_read_bytes
-
-                diff_b, live_b = diff_read_bytes(
-                    base, from_snapshot_id=synced, to_snapshot_id=to_id
-                )
-                if live_b > 0 and diff_b >= float(guard) * live_b:
-                    return self._full_resync(base, to_id, synced)
-            delta = base.row_changes(
-                from_snapshot_id=synced,
-                to_snapshot_id=to_id,
-                columns=cols,
-            )
-        except SnapshotNotFoundError:
-            return self._full_resync(base, to_id, synced)
-
-        from pyspark import StorageLevel
-
-        delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
+        delta = row_changes(
+            base, bmeta, from_snapshot_id=synced, to_snapshot_id=to_id,
+            columns=cols,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             ins = delta.filter(F.col("_change_type") == "insert").drop(
                 "_change_type"
@@ -326,7 +308,7 @@ class MaterializedTransform:
                 .select(key)
                 .subtract(ins.select(key))
             )
-            ups = self._apply(ins).withColumn(
+            ups = _apply_props(ins, props).withColumn(
                 "op", F.lit(None).cast("string")
             )
             dels = del_keys.withColumn("op", F.lit("delete"))
@@ -336,16 +318,11 @@ class MaterializedTransform:
                 n_up = ups.count()
                 n_del = src.filter(F.col("op") == "delete").count()
                 if n_up + n_del:
-                    self.table.merge(
-                        src,
-                        key=key,
-                        set_props={"transform_synced_snapshot": to_id},
-                        **merge_kw,
+                    self.table._merge(
+                        meta, src, key=key, set_props=marker, **merge_kw
                     )
                 else:
-                    self.table.set_properties(
-                        transform_synced_snapshot=to_id
-                    )
+                    self.table._set_properties(meta, marker)
             finally:
                 src.unpersist()
         finally:
@@ -354,37 +331,16 @@ class MaterializedTransform:
             "incremental", synced, to_id, n_up, n_del
         )
 
-    def _full_resync(self, base, to_id, synced) -> TransformRefreshResult:
-        """Recompute everything and swap it in with ONE atomic overwrite
-        commit — taken when the synced snapshot expired (CDC chain gone)
-        or when the cost guard finds the diff would read >= the table."""
-        from .ops.append import write_data_files
 
-        full = self._apply(base.scan(snapshot_id=to_id, columns=self.columns))
-        t = self.table
-        meta = t.meta
-        prior = t._plan(meta).files
-        entries = write_data_files(
-            t.root,
-            meta.schema_json,
-            meta.partition_spec,
-            full,
-            properties=meta.properties,
-            target_file_count=max(1, len(prior)),
-            job_dir=f"data/resync-{to_id}-{uuid.uuid4().hex[:8]}",
-        )
-        t._commit_files(
-            "overwrite",
-            entries,
-            [e.file_path for e in prior],
-            summary={
-                "mode": "transform-full-resync",
-                "base_snapshot": to_id,
-            },
-            set_props={"transform_synced_snapshot": to_id},
-            base=meta,
-        )
-        return TransformRefreshResult("full-resync", synced, to_id, -1, 0)
+def _apply_props(df: DataFrame, props: dict) -> DataFrame:
+    """Run the transform a derived table's properties declare."""
+    exprs = props.get("transform_exprs")
+    return _apply_spec(
+        df,
+        props["transform_key"],
+        json.loads(exprs) if exprs else None,
+        props.get("transform_name"),
+    )
 
 
 def _apply_spec(

@@ -63,6 +63,7 @@ from dataclasses import dataclass, field
 from typing import Any, Optional
 
 from .errors import LakehouseError, RefError
+from .meta.snapshots import publish_json
 
 
 class TransactionError(LakehouseError):
@@ -74,19 +75,10 @@ def _txns_dir(catalog_path: str) -> str:
 
 
 def _cas_create(path: str, payload: dict[str, Any]) -> None:
-    """Atomically create ``path`` (os.link CAS — same discipline as
-    table commits); raises if it already exists."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, path)
-    except FileExistsError:
+    """Atomically create ``path`` through the table commits' CAS
+    primitive (``snapshots.publish_json``); raises if it exists."""
+    if not publish_json(path, payload):
         raise TransactionError(f"transaction ledger entry exists: {path}")
-    finally:
-        os.unlink(tmp)
 
 
 def _main_ancestry(meta) -> set[int]:

@@ -416,66 +416,47 @@ class WdsSyncResult:
         )
 
 
-def _dirty_shard_ids(table, from_sid: int, key_col: str,
+def _dirty_shard_ids(table, meta, from_sid: int, key_col: str,
                      n_shards: int) -> set:
-    """Shard ids whose keys MAY have changed in (from_sid, head] — a
-    conservative superset read from O(churn) narrow column data:
+    """Shard ids whose keys MAY have changed in (from_sid, head of
+    ``meta``] — a conservative superset read from O(churn) narrow
+    column data, per row-changing snapshot (``ops/changes.plan_changes``;
+    data-NEUTRAL rewrites — compaction, clustering, delete conversion —
+    move bytes, not keys, and never dirty a shard):
 
-    - keys in the symmetric difference of the two snapshots' data-file
-      sets (appends, rewrites — both row versions read, union of keys);
-    - for NEW equality-delete files on the export key: the deleted keys
-      themselves (the delete file IS a key column);
-    - for other new delete files (positional, or eq on another column):
-      every key of the data files they can touch (same seq/stats probe
-      the CDC planners use).
+    - keys of the data files it added or removed (both row versions
+      read, union of keys);
+    - for its NEW equality-delete files on the export key: the deleted
+      keys themselves (the delete file IS a key column);
+    - for its other new delete files (positional, or eq on another
+      column): every key of the parent's data files they can touch.
 
     Deterministic hash shard assignment is what makes this sound: a
     key's shard is a pure function of the key, so dirty keys map to
     dirty shards with no state. Conservative is safe — re-serializing
     a clean shard reproduces it byte-identically.
     """
-    from .ops.changes import DATA_NEUTRAL_OPS, _chain, _read_file_entries
-    from .ops.mor import _pos_delete_touches, _range_intersects
+    from .ops.changes import _read, plan_changes
+    from .ops.mor import touched_by
 
-    meta = table.meta
     key_frames = []
-    plans: dict = {}  # adjacent chain steps share a boundary plan
 
-    def _plan(sid):
-        if sid not in plans:
-            plans[sid] = (
-                table.plan(snapshot_id=sid) if sid is not None else None
+    def keys_of(entries):
+        if entries:
+            key_frames.append(
+                _read(table, meta, entries).select(
+                    F.col(key_col).alias("_key")
+                )
             )
-        return plans[sid]
 
-    # walk the chain so data-NEUTRAL rewrites (compaction, clustering,
-    # delete conversion) never dirty a shard — their file churn moves
-    # bytes, not keys. Real mutations diff against their own parent.
-    for snap in _chain(meta, from_sid, meta.current_snapshot_id):
-        if snap.operation in DATA_NEUTRAL_OPS:
-            continue
-        old_plan = _plan(snap.parent_snapshot_id)
-        new_plan = _plan(snap.snapshot_id)
-        old_files = {
-            e.file_path: e for e in (old_plan.files if old_plan else [])
-        }
-        new_files = {e.file_path: e for e in new_plan.files}
-        sym = [e for p, e in old_files.items() if p not in new_files]
-        sym += [e for p, e in new_files.items() if p not in old_files]
-        old_dels = {
-            d.file_path
-            for d in (old_plan.delete_files if old_plan else [])
-        }
-        new_dels = [
-            d for d in new_plan.delete_files if d.file_path not in old_dels
-        ]
-        if sym:
-            key_frames.append(_read_file_entries(table, sym).select(
-                F.col(key_col).alias("_key")
-            ))
-        eq_on_key = [d for d in new_dels
+    for step in plan_changes(
+        table.root, meta, from_sid, meta.current_snapshot_id,
+        allow_replays=True,
+    ):
+        keys_of(step.removed + step.added)
+        eq_on_key = [d for d in step.new_deletes
                      if not d.is_pos_delete and d.delete_key == key_col]
-        other = [d for d in new_dels
+        other = [d for d in step.new_deletes
                  if d.is_pos_delete or d.delete_key != key_col]
         if eq_on_key:
             key_frames.append(
@@ -484,29 +465,8 @@ def _dirty_shard_ids(table, from_sid: int, key_col: str,
                       for d in eq_on_key]
                 ).select(F.col(key_col).alias("_key"))
             )
-        if other:
-            touched = [
-                e
-                for e in old_files.values()
-                if any(
-                    e.seq < d.seq
-                    and (
-                        _pos_delete_touches(e, d)
-                        if d.is_pos_delete
-                        else _range_intersects(
-                            e.stats.get(d.delete_key) or {},
-                            d.stats.get(d.delete_key) or {},
-                        )
-                    )
-                    for d in other
-                )
-            ]
-            if touched:
-                key_frames.append(
-                    _read_file_entries(table, touched).select(
-                        F.col(key_col).alias("_key")
-                    )
-                )
+        if other and step.parent:
+            keys_of(touched_by(step.parent.files, other))
     if not key_frames:
         return set()
     keys = key_frames[0]
@@ -548,7 +508,8 @@ def sync_webdataset(
     tests/test_webdataset.py.
     """
     state_path = os.path.join(out_dir, STATE_FILE)
-    head = table.current_snapshot_id()
+    meta = table.meta
+    head = meta.current_snapshot_id
     state = None
     if os.path.exists(state_path):
         with open(state_path) as f:
@@ -603,7 +564,7 @@ def sync_webdataset(
 
     if state is None:
         man = export_webdataset(
-            table.scan(), out_dir, n_shards=n_shards, key_col=key_col,
+            table._scan(meta), out_dir, n_shards=n_shards, key_col=key_col,
             **export_kw,
         )
         shards = _rows_to_state(man.collect())
@@ -616,11 +577,11 @@ def sync_webdataset(
         return WdsSyncResult("noop", head, set(), set(),
                              _manifest_df(state["shards"]))
     try:
-        dirty = _dirty_shard_ids(table, synced, key_col, n_shards)
+        dirty = _dirty_shard_ids(table, meta, synced, key_col, n_shards)
     except LakehouseError:
         # synced snapshot expired from the log: one full re-export
         man = export_webdataset(
-            table.scan(), out_dir, n_shards=n_shards, key_col=key_col,
+            table._scan(meta), out_dir, n_shards=n_shards, key_col=key_col,
             **export_kw,
         )
         shards = _rows_to_state(man.collect())
@@ -637,7 +598,7 @@ def sync_webdataset(
         return WdsSyncResult("noop", head, set(), set(),
                              _manifest_df(state["shards"]))
     man = export_webdataset(
-        table.scan(), out_dir, n_shards=n_shards, key_col=key_col,
+        table._scan(meta), out_dir, n_shards=n_shards, key_col=key_col,
         only_shards=dirty, **export_kw,
     )
     shards = dict(state["shards"])

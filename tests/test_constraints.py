@@ -193,3 +193,74 @@ def test_generated_add_validates_existing_rows(spark, tmp_path):
     )
     with _pytest.raises(ConstraintViolationError):
         t.set_generated_column("event_date", "to_date(ingest_ts)")
+
+
+def _rid_table(spark, root):
+    from pyspark.sql import types as T
+
+    t = Table.create(spark, root, T.StructType([
+        T.StructField("rid", T.LongType()),
+        T.StructField("payload", T.StringType()),
+    ]))
+    t.append(spark.createDataFrame(
+        [(1, "a"), (2, "b")], "rid long, payload string"
+    ))
+    return t
+
+
+#: setter -> (table builder, the setter, an append that breaks its rule)
+RACED_SETTERS = {
+    "check": (
+        lambda spark, root: _rid_table(spark, root),
+        lambda t: t.add_check_constraint("rid_small", "rid < 100"),
+        lambda spark, t: t.append(
+            spark.createDataFrame([(500, "x")], "rid long, payload string")
+        ),
+    ),
+    "generated": (
+        lambda spark, root: Table.create(spark, root, CLIPS_SCHEMA),
+        lambda t: t.set_generated_column("event_date", "to_date(ingest_ts)"),
+        lambda spark, t: t.append(
+            _bad_rows(spark, t, event_date="1999-01-01")
+        ),
+    ),
+    "identity": (
+        lambda spark, root: _rid_table(spark, root),
+        lambda t: t.set_identity_column("rid"),
+        lambda spark, t: t.append(
+            spark.createDataFrame([(500, "x")], "rid long, payload string")
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("setter", sorted(RACED_SETTERS))
+def test_setter_conflicts_with_rows_appended_after_its_check(
+    spark, tmp_path, monkeypatch, setter
+):
+    """The rule setters validate the existing rows and commit on the
+    version they validated: a breaking row appended between the check
+    and the commit makes the commit raise, instead of landing a rule
+    the table already breaks."""
+    from lakehouse.errors import CommitConflictError
+    from lakehouse.meta import snapshots as S
+
+    build, set_rule, break_rule = RACED_SETTERS[setter]
+    t = build(spark, str(tmp_path / "t"))
+    other = Table.load(spark, t.root)
+    orig_commit = S.commit
+    fired: list[bool] = []
+
+    def commit_after_race(*a, **kw):
+        if not fired:
+            fired.append(True)
+            break_rule(spark, other)
+        return orig_commit(*a, **kw)
+
+    monkeypatch.setattr(S, "commit", commit_after_race)
+    props = dict(t.meta.properties)
+    with pytest.raises(CommitConflictError):
+        set_rule(t)
+    monkeypatch.undo()
+    assert fired
+    assert t.meta.properties == props

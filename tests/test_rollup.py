@@ -279,14 +279,34 @@ def test_sync_marker_is_atomic_with_refresh_commits(spark, pair, monkeypatch):
     pdf = synth_clips_pdf(range(300, 330), seed=9, n_days=4)
     t.append(spark.createDataFrame(pdf, schema=CLIPS_SCHEMA))
 
-    monkeypatch.setattr(
-        Table, "set_properties",
-        lambda self, **kw: (_ for _ in ()).throw(
-            AssertionError("data-changing refresh used a separate stamp")
-        ),
-    )
+    def separate_stamp(*a, **kw):
+        raise AssertionError("data-changing refresh used a separate stamp")
+
+    monkeypatch.setattr(Table, "set_properties", separate_stamp)
+    monkeypatch.setattr(Table, "_set_properties", separate_stamp)
     res = r.refresh()  # incremental merge: marker inside the merge commit
     assert res.mode == "incremental" and res.groups_changed > 0
     monkeypatch.undo()
     assert r.refresh().mode == "noop"  # marker landed with the merge
     _check(r)
+
+
+def test_mor_refreshed_rollup_resync_drops_delete_files(spark, pair):
+    """A rollup refreshed with ``mode="mor"`` carries equality-delete
+    files. A full resync (its synced base snapshot expired) swaps the
+    recompute in for every live data AND delete file of the rollup."""
+    t, r = pair
+    r.table.set_properties(rollup_resync_cost_ratio="off")
+    r.refresh()
+    t.delete("dur_ms <= 1000", mode="cow")
+    assert r.refresh(mode="mor").mode == "incremental"
+    assert r.table.plan().delete_files
+    pdf = synth_clips_pdf(range(300, 330), seed=9, n_days=4)
+    t.append(spark.createDataFrame(pdf, schema=CLIPS_SCHEMA))
+    t.delete("dur_ms <= 1400", mode="cow")
+    t.expire_snapshots(keep_last=1)
+
+    assert r.refresh(mode="mor").mode == "full-resync"
+    assert not r.table.plan().delete_files
+    _check(r)
+    assert r.refresh().mode == "noop"

@@ -195,6 +195,46 @@ def test_append_if_absent_nothing_new_commits_nothing(
     assert not [d for d in jobs_after - jobs_before if d.startswith("job-")]
 
 
+def test_merge_sinks_empty_batch_commits_nothing(
+    spark, clips_table, monkeypatch
+):
+    """An empty micro-batch into the upsert (copy-on-write MERGE) and
+    the replicate (merge-on-read MERGE) sink is told from the merge's
+    own stats pass: no ``isEmpty()`` job, no snapshot (not even the
+    copy-on-write fold-in of a pending merge-on-read delete), no job
+    directory."""
+    import os
+
+    from pyspark.sql import types as T
+    from pyspark.sql.classic import dataframe as classic_dataframe
+
+    from lakehouse.streaming import replicate_batch, upsert_batch
+
+    clips_table.append(synth_clips_df(spark, 12, seed=7, n_days=2))
+    gone = clips_table.scan().select("clip_id").first()[0]
+    clips_table.delete([("clip_id", "=", gone)], mode="mor")
+    head = clips_table.current_snapshot_id()
+    data = os.path.join(clips_table.root, "data")
+    dirs_before = set(os.listdir(data))
+
+    def no_is_empty(self):
+        raise AssertionError("a merge sink ran an isEmpty() job")
+
+    monkeypatch.setattr(classic_dataframe.DataFrame, "isEmpty", no_is_empty)
+    upsert_batch(clips_table)(spark.createDataFrame([], CLIPS_SCHEMA), 0)
+    changes = T.StructType(
+        CLIPS_SCHEMA.fields
+        + [
+            T.StructField("_change_type", T.StringType()),
+            T.StructField("_commit_snapshot_id", T.LongType()),
+        ]
+    )
+    replicate_batch(clips_table)(spark.createDataFrame([], changes), 1)
+    assert clips_table.current_snapshot_id() == head
+    assert clips_table.scan().count() == 11
+    assert set(os.listdir(data)) == dirs_before
+
+
 def test_append_if_absent_oversized_batch_bounds_driver_collect(
     spark, clips_table, monkeypatch
 ):
