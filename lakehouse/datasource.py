@@ -15,7 +15,8 @@ Two readers:
 
 - **batch** — plans against table metadata on the driver (the same
   spark-free ``plan_scan`` the native path uses: partition pruning,
-  min/max file skipping, manifest summary pruning), bin-packs surviving
+  min/max file skipping, manifest summary pruning) on the one metadata
+  version the reader read at construction, bin-packs surviving
   files into input partitions, and reads them as Arrow record batches in
   executors via pyarrow. Merge-on-read deletes — equality (key values)
   and positional ((file_path, row_pos) rows) — are applied in-task with
@@ -62,6 +63,11 @@ outside the contract ``Table.append`` enforces.
   how they read the planned files.
   Offsets live in the query checkpoint, so restart resumes exactly-once
   as long as the referenced snapshots have not been expired.
+  PySpark 4.1's Python stream reader has no Trigger.AvailableNow hook,
+  so ``trigger(availableNow=True)`` runs as ONE micro-batch up to
+  ``latestOffset`` (Spark logs a fallback warning); with
+  ``max_snapshots_per_batch`` set, that one batch still stops at the
+  rate limit, and the rest is read by the next run.
 
 Every Arrow read — batch, ``changes=true`` CDC, and the storage-
 partitioned join (spj.py) — goes through ONE per-file kernel,
@@ -106,6 +112,7 @@ from pyspark.sql.datasource import (
 from . import fieldids
 from .errors import LakehouseError
 from .expressions import Predicate
+from .meta.manifests import pack_by_size
 from .meta.scan import plan_scan
 from .meta.snapshots import TableMetadata, load_metadata
 
@@ -217,21 +224,6 @@ class FilesPartition(InputPartition):
         self.snapshot_id = snapshot_id
 
 
-def _bin_pack(entries, target_bytes: int):
-    """FFD bin-pack manifest entries into ~target-sized read tasks."""
-    bins: list[tuple[int, list]] = []
-    for e in sorted(entries, key=lambda e: -e.file_size_bytes):
-        placed = False
-        for i, (size, members) in enumerate(bins):
-            if size + e.file_size_bytes <= target_bytes:
-                bins[i] = (size + e.file_size_bytes, members + [e])
-                placed = True
-                break
-        if not placed:
-            bins.append((e.file_size_bytes, [e]))
-    return [members for _, members in bins]
-
-
 def _delete_dicts(root, delete_files) -> list[dict]:
     """Manifest delete entries → the picklable dicts read tasks ship."""
     return [
@@ -276,7 +268,7 @@ def _partitions_for(
     deletes = _delete_dicts(root, delete_files)
     return [
         FilesPartition(_file_dicts(root, members, names), deletes, **tags)
-        for members in _bin_pack(files, target_bytes)
+        for members in pack_by_size(files, target_bytes)
     ]
 
 
@@ -556,7 +548,9 @@ class LakehouseBatchReader(DataSourceReader):
 
     def __init__(self, root: str, options):
         self._root = root
-        meta = load_metadata(root)
+        # one metadata read per query: partitions() plans on this same
+        # version, then drops it (read tasks never need it)
+        self._meta = meta = load_metadata(root)
         sid = _resolve_snapshot(meta, options)
         # pin NOW even when no snapshot was asked for: schema and plan
         # must come from the same snapshot, and partitions() runs later
@@ -570,8 +564,13 @@ class LakehouseBatchReader(DataSourceReader):
         )
         self._preds: list[Predicate] = []
 
+    def __getstate__(self):
+        # Spark pickles the reader into the executor read function
+        # BEFORE it calls partitions(): keep the metadata out of it
+        return {k: v for k, v in self.__dict__.items() if k != "_meta"}
+
     def partitions(self):
-        meta = load_metadata(self._root)
+        meta, self._meta = self._meta, None
         plan = plan_scan(
             self._root,
             meta,

@@ -29,20 +29,12 @@ from dataclasses import dataclass, field
 from typing import Any, Optional
 
 from .meta.manifests import DataFileEntry
+from .meta.snapshots import _atomic_write_json
 
 RUNNING = "RUNNING"
 DONE = "DONE"
 
 _TASK_RE = re.compile(r"^task-(.+)\.json$")
-
-
-def _atomic_json(path: str, payload: dict) -> None:
-    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
 
 
 @dataclass
@@ -73,7 +65,7 @@ class LineageLog:
         path = os.path.join(self.dir, "job.json")
         if os.path.exists(path):  # resume: keep the original record
             return
-        _atomic_json(
+        _atomic_write_json(
             path, {"job_id": self.job_id, "op": op, "params": params, "status": RUNNING}
         )
 
@@ -83,7 +75,7 @@ class LineageLog:
             rec = json.load(f)
         rec["status"] = DONE
         rec["summary"] = summary
-        _atomic_json(path, rec)
+        _atomic_write_json(path, rec)
 
     def job_record(self) -> Optional[dict]:
         path = os.path.join(self.dir, "job.json")
@@ -98,7 +90,7 @@ class LineageLog:
         return os.path.join(self.dir, f"task-{key}.json")
 
     def start_task(self, key: str, files_in: list[str], bytes_in: int) -> None:
-        _atomic_json(
+        _atomic_write_json(
             self._task_path(key),
             TaskRecord(key, RUNNING, files_in=files_in, bytes_in=bytes_in).__dict__,
         )
@@ -122,7 +114,7 @@ class LineageLog:
             records_out=sum(e.record_count for e in entries),
             zkey_range=zkey_range,
         )
-        _atomic_json(self._task_path(key), rec.__dict__)
+        _atomic_write_json(self._task_path(key), rec.__dict__)
 
     def tasks(self) -> dict[str, TaskRecord]:
         out: dict[str, TaskRecord] = {}

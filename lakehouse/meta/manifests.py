@@ -174,6 +174,24 @@ class DataFileEntry:
 POS_DELETE_ORDER = "posdelete"
 
 
+def pack_by_size(
+    entries: Iterable[DataFileEntry], target_bytes: int
+) -> list[list[DataFileEntry]]:
+    """First-fit-decreasing bin packing by ``file_size_bytes``: each bin
+    holds at most ``target_bytes`` (a larger file gets a bin of its own).
+    Used for compaction's rewrite groups and the datasource's read
+    tasks."""
+    bins: list[tuple[int, list[DataFileEntry]]] = []
+    for e in sorted(entries, key=lambda e: -e.file_size_bytes):
+        for i, (size, members) in enumerate(bins):
+            if size + e.file_size_bytes <= target_bytes:
+                bins[i] = (size + e.file_size_bytes, members + [e])
+                break
+        else:
+            bins.append((e.file_size_bytes, [e]))
+    return [members for _size, members in bins]
+
+
 def collect_file_stats(
     abs_path: str,
     rel_path: str,

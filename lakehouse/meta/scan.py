@@ -19,12 +19,17 @@ and ``scan_with_lineage`` call it. Its Arrow twin is
 ``datasource.read_files``; both take the name mapping from
 ``fieldids.physical_names``.
 
-For manifest sets too large for the driver (10^12-row tables have
-millions of files), ``plan_scan_lazy`` + ``read_lazy_plan`` run the same
-pruning as a Spark job over the manifest Parquet files themselves and
-keep the kept-file set as a DataFrame end-to-end; the driver only ever
-holds bounded chunks of bare paths. ``plan_scan_distributed`` is the
-driver-materialized variant for metadata APIs that need entry objects.
+Pruning is ONE per-entry rule, :class:`EntryTest` ("may this manifest
+entry hold a matching row?": partition values, min/max stats under the
+entry's write-time names, Bloom sidecars), built once per plan and run
+by two planners. ``plan_scan`` runs it in a driver loop over manifest
+entries (the default; ``ScanPlan`` holds entry objects).
+``plan_scan_lazy`` runs it inside an Arrow-batched Spark job over the
+manifest Parquet files themselves, for manifest sets too large for the
+driver (10^12-row tables have millions of files): the kept-file set
+stays a DataFrame and ``read_lazy_plan`` hands the driver only bounded
+chunks of bare paths. ``LazyScanPlan.collect`` materializes it for
+metadata APIs (``Table.plan(distributed=True)``).
 """
 
 from __future__ import annotations
@@ -37,6 +42,7 @@ from typing import Any, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..bloom import BLOOM_PROBE_CAP, entry_passes_blooms, eq_probes, read_sidecar
 from ..expressions import (
     Predicate,
     matches_partition,
@@ -44,7 +50,7 @@ from ..expressions import (
     normalize_filter,
     to_sql,
 )
-from .manifests import DataFileEntry, read_manifest
+from .manifests import MANIFEST_ARROW_SCHEMA, DataFileEntry, read_manifest
 from .snapshots import TableMetadata, read_manifest_list
 
 
@@ -65,43 +71,64 @@ class ScanPlan:
         return self.candidate_files - len(self.files)
 
 
-def _bloom_refine(table_root, kept, preds, *, names_of=None):
-    """Point-lookup refinement: after partition + min/max pruning, test
-    ``=``/``in`` predicates against per-file Bloom sidecars (opt-in via
-    the ``bloom_columns`` table property). Driver IO is bounded: only
-    runs while the surviving set is ≤ BLOOM_PROBE_CAP files — a point
-    lookup post-pruning has few candidates, a broad scan skips this
-    step entirely. A bloom "no" is definite; results never change.
-    """
-    from ..bloom import (
-        BLOOM_PROBE_CAP,
-        entry_passes_blooms,
-        eq_probes,
-        read_sidecar,
-    )
+class EntryTest:
+    """The one scan-planning rule (Iceberg spec, "Scan Planning"): may
+    this manifest entry hold a row matching ``preds``? Built once per
+    plan from ``(meta, preds, table_root)`` and called per entry by every
+    planner: ``plan_scan``'s driver loop, ``prune_entries_df``'s executor
+    closure, MERGE's NOT MATCHED BY SOURCE candidates and the
+    serializable-commit check. Three conservative tests:
 
-    probes = eq_probes(preds) if preds else []
-    if not probes or not kept or len(kept) > BLOOM_PROBE_CAP:
-        return kept
-    out = []
-    for entry in kept:
-        # rename/drop safe: sidecars and stats are keyed by the file's
-        # WRITE-TIME names — translate each probe's column first
-        eprobes = probes
-        if names_of is not None:
-            eprobes = []
-            for c, vals in probes:
-                phys = names_of(entry, c)
-                if phys is not None:
-                    eprobes.append((phys, vals))
-        if any(
-            (entry.stats.get(c) or {}).get("bloom") for c, _v in eprobes
-        ):
-            sidecar = read_sidecar(os.path.join(table_root, entry.file_path))
-            if not entry_passes_blooms(entry.stats, sidecar, eprobes):
-                continue
-        out.append(entry)
-    return out
+    - the entry's identity-partition values (exact);
+    - per-file min/max/null stats, looked up under the entry's
+      write-time physical names (``fieldids.stats_lookup``: rename/drop
+      sound);
+    - with a ``table_root``, ``=``/``in`` predicates against the file's
+      Bloom sidecar (``bloom_columns`` tables), read only for entries
+      whose stats carry the ``bloom`` marker. A Bloom "no" is definite.
+
+    It holds the small name mapping, never the ``TableMetadata``, so it
+    ships into executor closures as is. ``meta=None`` reads stats by
+    plain name (a never-mapped table)."""
+
+    def __init__(
+        self,
+        meta: Optional[TableMetadata],
+        preds: Sequence[Predicate],
+        table_root: Optional[str] = None,
+    ):
+        from .. import fieldids
+
+        schemas, sid = (meta.schemas, meta.current_schema_id) if meta else ([], 0)
+        self.preds = list(preds)
+        self.probes = eq_probes(self.preds) if table_root else []
+        self._root = table_root
+        self._names_of = fieldids.name_lookup(schemas, sid)
+        self._stats_of = fieldids.stats_lookup(schemas, sid)
+
+    def stats_match(self, entry: DataFileEntry) -> bool:
+        """Partition and stats tests: pure metadata, no IO."""
+        part = entry.partition or {}
+        return all(matches_partition(p, part) for p in self.preds) and all(
+            matches_stats(p, self._stats_of(entry, p.col)) for p in self.preds
+        )
+
+    def bloom_match(self, entry: DataFileEntry) -> bool:
+        """Bloom test: one sidecar read when a probed column has one."""
+        eprobes = []
+        for c, vals in self.probes:
+            phys = self._names_of(entry, c)
+            if phys is not None:
+                eprobes.append((phys, vals))
+        if not any((entry.stats.get(c) or {}).get("bloom") for c, _v in eprobes):
+            return True
+        sidecar = read_sidecar(os.path.join(self._root, entry.file_path))
+        return entry_passes_blooms(entry.stats, sidecar, eprobes)
+
+    def __call__(self, entry: DataFileEntry) -> bool:
+        return self.stats_match(entry) and (
+            not self.probes or self.bloom_match(entry)
+        )
 
 
 def _manifest_may_match(
@@ -119,6 +146,23 @@ def _manifest_may_match(
     return False
 
 
+def _may_open(manifest: dict, preds: Sequence[Predicate]) -> bool:
+    """Manifest-level pruning; a manifest holding deletes is always
+    opened, because every read must see every delete."""
+    summary = manifest.get("summary", {})
+    return (
+        not preds
+        or summary.get("delete_count", 0) > 0
+        or _manifest_may_match(summary, preds)
+    )
+
+
+def _data_entry_count(manifest: dict) -> int:
+    """Data entries of a manifest, from its list summary alone."""
+    summary = manifest.get("summary", {})
+    return summary.get("entry_count", 0) - summary.get("delete_count", 0)
+
+
 def plan_scan(
     table_root: str,
     meta: TableMetadata,
@@ -127,46 +171,33 @@ def plan_scan(
     snapshot_id: Optional[int] = None,
 ) -> ScanPlan:
     """Driver-side planning (metadata is small relative to data)."""
-    from .. import fieldids
-
     preds = normalize_filter(filter)
     if snapshot_id is None and meta.current_snapshot_id is None:
         return ScanPlan([], to_sql(preds), snapshot_id=0)  # empty table
     snap = meta.snapshot(snapshot_id)
     manifests = read_manifest_list(table_root, snap.manifest_list)
-    # rename/drop safe: translate predicate names to each entry's
-    # write-time physical names before any stats lookup
-    names_of = fieldids.name_lookup(meta.schemas, meta.current_schema_id)
-    stats_of = fieldids.stats_lookup(meta.schemas, meta.current_schema_id)
+    test = EntryTest(meta, preds, table_root)
 
     kept: list[DataFileEntry] = []
     deletes: list[DataFileEntry] = []
     candidates = 0
     pruned_manifests = 0
     for m in manifests:
-        summary = m.get("summary", {})
-        has_deletes = summary.get("delete_count", 0) > 0
-        if preds and not has_deletes and not _manifest_may_match(summary, preds):
+        if not _may_open(m, preds):
             pruned_manifests += 1
-            # entry_count here is data-only by construction: the guard
-            # above never summary-prunes a manifest holding deletes
-            candidates += summary.get("entry_count", 0)
+            candidates += _data_entry_count(m)
             continue
         for entry in read_manifest(table_root, m["path"]):
             if entry.is_delete:
                 deletes.append(entry)  # never pruned: reads must see them
                 continue
             candidates += 1
-            if preds:
-                if not all(matches_partition(p, entry.partition) for p in preds):
-                    continue
-                if not all(
-                    matches_stats(p, stats_of(entry, p.col)) for p in preds
-                ):
-                    continue
-            kept.append(entry)
-
-    kept = _bloom_refine(table_root, kept, preds, names_of=names_of)
+            if not preds or test.stats_match(entry):
+                kept.append(entry)
+    # driver sidecar IO stays bounded: only a point lookup, with few
+    # survivors, probes Bloom filters; a broad scan skips the step
+    if test.probes and len(kept) <= BLOOM_PROBE_CAP:
+        kept = [e for e in kept if test.bloom_match(e)]
 
     return ScanPlan(
         files=kept,
@@ -439,21 +470,36 @@ def read_entries(
     return df
 
 
-def _split_deletes(mdf: DataFrame) -> tuple[DataFrame, list[DataFileEntry]]:
-    """Split a manifest-entry DataFrame into (data rows, collected
-    equality-delete entries). Delete entries are a bounded small set, so
-    collecting them driver-side is safe even on the lazy path."""
+_MANIFEST_DDL = ", ".join(
+    f"{f.name} {'string' if f.type == 'string' else 'bigint'}"
+    for f in MANIFEST_ARROW_SCHEMA
+)
+
+
+def manifest_entries_df(
+    spark: SparkSession, table_root: str, manifests: Sequence[dict]
+) -> tuple[DataFrame, Optional[DataFrame]]:
+    """The entries of ``manifests`` as DataFrames: (data entries, delete
+    entries or None). One Spark read over the manifest Parquet files;
+    the delete half is None when the list summaries record no delete
+    entry, so no caller pays a job to look for them."""
     from pyspark.sql import functions as F
 
+    if not manifests:
+        return spark.createDataFrame([], _MANIFEST_DDL), None
+    # mergeSchema: pre-round-2 manifests lack the content/seq columns
+    mdf = spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(table_root, m["path"]) for m in manifests]
+    )
     if "content" not in mdf.columns:
-        return mdf, []
-    deletes = [
-        DataFileEntry.from_row(r.asDict())
-        for r in mdf.filter(F.col("content") == "deletes").collect()
-    ]
+        return mdf, None
+    content = F.coalesce(F.col("content"), F.lit("data"))
+    has_deletes = any(
+        m.get("summary", {}).get("delete_count", 1) for m in manifests
+    )
     return (
-        mdf.filter(F.coalesce(F.col("content"), F.lit("data")) != "deletes"),
-        deletes,
+        mdf.filter(content != "deletes"),
+        mdf.filter(content == "deletes") if has_deletes else None,
     )
 
 
@@ -494,97 +540,24 @@ def prune_entries_df(
     table_root: Optional[str] = None,
     meta: Optional[TableMetadata] = None,
 ) -> DataFrame:
-    """Partition + stats pruning over a manifest-entry DataFrame, as a
-    DataFrame transformation — the output never touches the driver here.
-
-    Pruning runs inside an Arrow-batched ``mapInPandas`` (no per-row
-    Python at the JVM boundary); this is the reusable core of both the
-    distributed planner and the lazy scan path, and the unit under the
-    1M-virtual-file gate in tests/test_planner_scale.py. When
-    ``table_root`` is given, ``=``/``in`` predicates are additionally
-    tested against per-file Bloom sidecars executor-side (shared
-    storage) — no driver cap needed on this path, and sidecar IO only
-    happens for entries whose stats carry the ``bloom`` marker.
-    """
+    """:class:`EntryTest` over a manifest-entry DataFrame, as a DataFrame
+    transformation: the output never touches the driver. Each Arrow
+    batch becomes one ``DataFileEntry`` per row (``to_pylist`` keeps
+    nulls as None), so executors run the driver's test on the driver's
+    entry objects. The unit under the 1M-virtual-file gate in
+    tests/test_planner_scale.py."""
     if not preds:
         return mdf
-    import pandas as pd
-
-    from .. import fieldids
-
-    pred_payload = [(p.col, p.op, p.value) for p in preds]
-    # field-id mapping: ship a tiny gid→(current col→physical name)
-    # dict into the closure so every executor-side stats/bloom lookup
-    # uses the entry's write-time names (rename/drop sound, identical
-    # to the driver path). None = unmapped table, plain name lookups.
-    phys_by_gid = None
-    cur_gid = -1
-    if meta is not None:
-        cur_gid = meta.current_schema_id
-        names = fieldids.physical_names(meta.schemas, cur_gid)
-        if names is not None:
-            cols = [p.col for p in preds]
-            phys_by_gid = {
-                gid: {c: m.get(c) for c in cols} for gid, m in names.items()
-            }
-    has_gid_col = "schema_id" in mdf.columns
+    test = EntryTest(meta, preds, table_root)
 
     def keep_batch(batches):
-        from ..bloom import entry_passes_blooms, eq_probes, read_sidecar
-        from ..expressions import Predicate as P
-        from ..expressions import matches_partition as mp
-        from ..expressions import matches_stats as ms
+        import pyarrow as pa
 
-        local_preds = [P(c, o, v) for c, o, v in pred_payload]
-        probes = eq_probes(local_preds) if table_root else []
-        for pdf in batches:
-            if phys_by_gid is not None and has_gid_col:
-                gids = [
-                    int(g) if g is not None and not pd.isna(g) else -1
-                    for g in pdf["schema_id"]
-                ]
-            else:
-                gids = [cur_gid] * len(pdf)
-            mask = []
-            for part_j, stats_j, rel, gid in zip(
-                pdf["partition_json"],
-                pdf["stats_json"],
-                pdf["file_path"],
-                gids,
-            ):
-                part = json.loads(part_j or "{}")
-                stats = json.loads(stats_j or "{}")
-                if phys_by_gid is None:
-                    name_of = {p.col: p.col for p in local_preds}
-                else:
-                    name_of = phys_by_gid.get(
-                        gid, phys_by_gid[cur_gid]
-                    )
-                ok = all(mp(p, part) for p in local_preds) and all(
-                    ms(
-                        p,
-                        (
-                            stats.get(name_of[p.col])
-                            if name_of[p.col] is not None
-                            else None
-                        ),
-                    )
-                    for p in local_preds
-                )
-                eprobes = [
-                    (name_of[c], v)
-                    for c, v in probes
-                    if name_of[c] is not None
-                ]
-                if ok and eprobes and any(
-                    (stats.get(c) or {}).get("bloom") for c, _v in eprobes
-                ):
-                    sidecar = read_sidecar(os.path.join(table_root, rel))
-                    ok = entry_passes_blooms(stats, sidecar, eprobes)
-                mask.append(ok)
-            yield pdf[pd.Series(mask, index=pdf.index)]
+        for batch in batches:
+            mask = [test(DataFileEntry.from_row(r)) for r in batch.to_pylist()]
+            yield batch.filter(pa.array(mask, type=pa.bool_()))
 
-    return mdf.mapInPandas(keep_batch, mdf.schema)
+    return mdf.mapInArrow(keep_batch, mdf.schema)
 
 
 @dataclass
@@ -649,6 +622,20 @@ class LazyScanPlan:
         if chunk:
             yield chunk
 
+    def collect(self) -> ScanPlan:
+        """The driver-materialized plan (one job), for metadata APIs
+        that need entry objects: ``Table.plan(distributed=True)``."""
+        return ScanPlan(
+            files=[
+                DataFileEntry.from_row(r.asDict())
+                for r in self.files_df.collect()
+            ],
+            residual_sql=self.residual_sql,
+            snapshot_id=self.snapshot_id,
+            candidate_files=self.candidate_files,
+            delete_files=self.delete_files,
+        )
+
 
 def plan_scan_lazy(
     spark: SparkSession,
@@ -662,32 +649,23 @@ def plan_scan_lazy(
     scale path when a snapshot tracks more files than the driver should
     hold (millions of entries)."""
     preds = normalize_filter(filter)
-    if snapshot_id is None and meta.current_snapshot_id is None:
-        empty = spark.createDataFrame(
-            [], "file_path string, partition_json string, stats_json string"
-        )
-        return LazyScanPlan(empty, to_sql(preds), 0, 0)
-    snap = meta.snapshot(snapshot_id)
-    manifests = read_manifest_list(table_root, snap.manifest_list)
-    paths = [os.path.join(table_root, m["path"]) for m in manifests]
-    candidates = sum(
-        m.get("summary", {}).get("entry_count", 0) for m in manifests
-    )
-    if not paths:
-        empty = spark.createDataFrame(
-            [], "file_path string, partition_json string, stats_json string"
-        )
-        return LazyScanPlan(empty, to_sql(preds), snap.snapshot_id, 0)
-    # mergeSchema: pre-round-2 manifests lack the content/seq columns
-    mdf, deletes = _split_deletes(
-        spark.read.option("mergeSchema", "true").parquet(*paths)
+    sid, manifests = 0, []
+    if snapshot_id is not None or meta.current_snapshot_id is not None:
+        snap = meta.snapshot(snapshot_id)
+        sid = snap.snapshot_id
+        manifests = read_manifest_list(table_root, snap.manifest_list)
+    mdf, ddf = manifest_entries_df(
+        spark, table_root, [m for m in manifests if _may_open(m, preds)]
     )
     return LazyScanPlan(
         files_df=prune_entries_df(mdf, preds, table_root, meta=meta),
         residual_sql=to_sql(preds),
-        snapshot_id=snap.snapshot_id,
-        candidate_files=candidates,
-        delete_files=deletes,
+        snapshot_id=sid,
+        candidate_files=sum(_data_entry_count(m) for m in manifests),
+        # a bounded small set: collected even on the lazy path
+        delete_files=[
+            DataFileEntry.from_row(r.asDict()) for r in ddf.collect()
+        ] if ddf is not None else [],
     )
 
 
@@ -715,42 +693,3 @@ def read_lazy_plan(
     if df is None:
         df = read_entries(spark, meta, table_root, [])
     return _finish(df, plan.residual_sql, columns)
-
-
-def plan_scan_distributed(
-    spark: SparkSession,
-    table_root: str,
-    meta: TableMetadata,
-    *,
-    filter=None,  # noqa: A002
-    snapshot_id: Optional[int] = None,
-) -> ScanPlan:
-    """Distributed pruning, driver-materialized result — for metadata
-    APIs that need ``DataFileEntry`` objects (``plan()``/``live_files``).
-    Output size is bounded by the files that survive pruning; callers
-    that only need to READ the data should use ``plan_scan_lazy`` +
-    ``read_lazy_plan`` instead, which never materialize the entry list.
-    """
-    preds = normalize_filter(filter)
-    if snapshot_id is None and meta.current_snapshot_id is None:
-        return ScanPlan([], to_sql(preds), snapshot_id=0)  # empty table
-    snap = meta.snapshot(snapshot_id)
-    manifests = read_manifest_list(table_root, snap.manifest_list)
-    paths = [os.path.join(table_root, m["path"]) for m in manifests]
-    if not paths:
-        return ScanPlan([], to_sql(preds), snap.snapshot_id)
-
-    mdf, deletes = _split_deletes(
-        spark.read.option("mergeSchema", "true").parquet(*paths)
-    )
-    total = mdf.count()
-    kept_rows = prune_entries_df(
-        mdf, preds, table_root, meta=meta
-    ).collect()
-    return ScanPlan(
-        files=[DataFileEntry.from_row(r.asDict()) for r in kept_rows],
-        residual_sql=to_sql(preds),
-        snapshot_id=snap.snapshot_id,
-        candidate_files=total,
-        delete_files=deletes,
-    )

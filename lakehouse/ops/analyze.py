@@ -32,6 +32,8 @@ from typing import Any, Optional, Sequence
 
 from pyspark.sql import functions as F
 
+from ..meta.snapshots import _atomic_write_json
+
 KMV_K = 1024
 _STATS_DIR = "metadata/stats"
 
@@ -129,10 +131,7 @@ def _write_stats(
             "k": nd.k,
             "sketch": nd.sketch,
         }
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(merged, f)
-    os.replace(tmp, path)
+    _atomic_write_json(path, merged)
 
 
 def read_stats(
@@ -281,10 +280,7 @@ def _write_histograms(
             "bounds": h.bounds,
             "method": h.method,
         }
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(merged, f)
-    os.replace(tmp, path)
+    _atomic_write_json(path, merged)
 
 
 def read_histograms(

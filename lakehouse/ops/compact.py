@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lineage import LineageLog
-from ..meta.manifests import DataFileEntry
+from ..meta.manifests import DataFileEntry, pack_by_size
 from ..ops.append import write_files
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024
@@ -111,12 +111,12 @@ def plan_bins(
         small = [e for e in group if e.file_size_bytes < small_file_threshold]
         if len(small) < min_input_files:
             continue
-        open_bins: list[tuple[int, list[DataFileEntry]]] = []
         if sort_order.startswith(("zorder(", "hilbert(")):
             # clustered files: pack ADJACENT zkey ranges sequentially so
             # each output file covers one contiguous, pairwise-disjoint
             # key range — FFD by size would merge far-apart ranges and
             # produce overlapping (pruning-hostile) outputs
+            open_bins: list[tuple[int, list[DataFileEntry]]] = []
             ordered = sorted(
                 small,
                 key=lambda e: (
@@ -134,20 +134,10 @@ def plan_bins(
                     open_bins[-1] = (size + e.file_size_bytes, members + [e])
                 else:
                     open_bins.append((e.file_size_bytes, [e]))
+            packed = [members for _size, members in open_bins]
         else:
-            for e in sorted(small, key=lambda x: -x.file_size_bytes):
-                placed = False
-                for i, (size, members) in enumerate(open_bins):
-                    if size + e.file_size_bytes <= target_file_size:
-                        open_bins[i] = (
-                            size + e.file_size_bytes,
-                            members + [e],
-                        )
-                        placed = True
-                        break
-                if not placed:
-                    open_bins.append((e.file_size_bytes, [e]))
-        bins.extend(members for _size, members in open_bins if len(members) >= 2)
+            packed = pack_by_size(small, target_file_size)
+        bins.extend(members for members in packed if len(members) >= 2)
     return bins
 
 

@@ -135,8 +135,8 @@ def _validation_spec(
     rows inside it changes the outcome. ``"all"`` = no condition / raw
     SQL condition (domain unknowable from stats) — every concurrent
     non-data-neutral commit conflicts; a tuple-predicate list = the
-    same conservative stats overlap test the scan planner prunes with
-    (expressions.matches_stats), zero data I/O."""
+    scan planner's own per-entry test (``meta/scan.EntryTest``), zero
+    data I/O."""
     if isolation != "serializable":
         return None
     from ..meta.manifests import _encode_stat
@@ -538,8 +538,8 @@ def _nms_file_sets(meta, nms, cond_sql, cond_preds, touched, live_all):
     Candidates come from ``live_all`` — the SAME entry list the key
     probe planned against (no second manifest sweep, no snapshot-
     consistency window between two plans); the tuple-language condition
-    prunes it driver-side with the planner's own any-row tests
-    (matches_partition + matches_stats).
+    prunes it driver-side with the planner's own per-entry test
+    (``meta/scan.EntryTest``, without Bloom sidecar IO).
 
     A file whose every row satisfies the condition can be DROPPED
     outright under ``nms == "delete"``: its unmatched rows are deleted
@@ -552,16 +552,10 @@ def _nms_file_sets(meta, nms, cond_sql, cond_preds, touched, live_all):
     if nms is None:
         return [], []
     if cond_preds:
-        from ..expressions import matches_partition, matches_stats
-        from ..fieldids import stats_lookup as _sl
+        from ..meta.scan import EntryTest
 
-        st_of = _sl(meta.schemas, meta.current_schema_id)
-        cands = [
-            e
-            for e in live_all
-            if all(matches_partition(p, e.partition or {}) for p in cond_preds)
-            and all(matches_stats(p, st_of(e, p.col)) for p in cond_preds)
-        ]
+        may_match = EntryTest(meta, cond_preds)
+        cands = [e for e in live_all if may_match(e)]
     else:
         cands = list(live_all)
     drops, rewrites = [], []

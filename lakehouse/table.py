@@ -35,9 +35,10 @@ from .errors import (
 from .meta import snapshots as S
 from .meta.manifests import DataFileEntry, read_manifest, write_manifest
 from .meta.scan import (
+    EntryTest,
     ScanPlan,
+    manifest_entries_df,
     plan_scan,
-    plan_scan_distributed,
     plan_scan_lazy,
     read_lazy_plan,
     read_plan,
@@ -122,8 +123,8 @@ class Table:
         (write skew / lost delete). Data-neutral rewrites never
         conflict. Overlap tests ride manifest min/max stats only (zero
         data I/O); missing stats conservatively conflict."""
+        from .expressions import Predicate
         from .ops.changes import DATA_NEUTRAL_OPS, _chain
-        from .ops.mor import _range_intersects
 
         from_sid = spec["from_snapshot_id"]
         if base.current_snapshot_id == from_sid:
@@ -131,15 +132,19 @@ class Table:
         key = spec["key"]
         # key range absent (None min/max) for NMS-only merges with an
         # empty source: only the condition-domain test applies
-        rng = (
-            {"min": spec["min"], "max": spec["max"]}
-            if spec.get("min") is not None
-            else None
-        )
+        key_test = None
+        if spec.get("min") is not None:
+            key_test = EntryTest(base, [
+                Predicate(key, ">=", spec["min"]),
+                Predicate(key, "<=", spec["max"]),
+            ])
         # WHEN NOT MATCHED BY SOURCE read set: "all" (unconditional /
         # raw-SQL condition) or the condition's tuple predicates, tested
-        # with the same conservative stats overlap the scan planner uses
+        # with the scan planner's own per-entry test
         nms_dom = spec.get("nms_domain")
+        nms_test = (
+            EntryTest(base, nms_dom) if nms_dom not in (None, "all") else None
+        )
         try:
             chain = _chain(base, from_sid, base.current_snapshot_id)
         except Exception:
@@ -164,17 +169,15 @@ class Table:
                 if m["path"] in parent_paths:
                     continue
                 for e in read_manifest(self.root, m["path"]):
-                    if rng is not None:
-                        if e.is_pos_delete:
-                            # positions name files of OLDER snapshots
-                            # the operation read — always a potential
-                            # conflict
-                            st = None
-                        elif e.is_delete and e.delete_key != key:
-                            st = None  # deletes on another key: unknown
-                        else:
-                            st = e.stats.get(key)
-                        if st is None or _range_intersects(st, rng):
+                    if key_test is not None:
+                        # positions name files of OLDER snapshots the
+                        # operation read, and deletes on another key
+                        # are unknown: both always potentially conflict
+                        if (
+                            e.is_pos_delete
+                            or (e.is_delete and e.delete_key != key)
+                            or key_test(e)
+                        ):
                             raise CommitConflictError(
                                 f"serializable conflict: snapshot "
                                 f"{snap.snapshot_id} "
@@ -192,15 +195,9 @@ class Table:
                         # clause's boundary-file rewrites — stats can't
                         # bound positional deletes at all, so conflict
                         hit = True
-                    elif nms_dom == "all":
-                        hit = True  # the clause read the whole table
                     else:
-                        from .expressions import matches_stats
-
-                        hit = all(
-                            matches_stats(p, e.stats.get(p.col))
-                            for p in nms_dom
-                        )
+                        # "all": the clause read the whole table
+                        hit = nms_test is None or nms_test(e)
                     if hit:
                         raise CommitConflictError(
                             f"serializable conflict: snapshot "
@@ -826,9 +823,9 @@ class Table:
         """``plan`` on the op's already-read ``meta``."""
         snapshot_id = self._read_target(meta, snapshot_id, ref)
         if distributed:
-            return plan_scan_distributed(
+            return plan_scan_lazy(
                 self.spark, self.root, meta, filter=filter, snapshot_id=snapshot_id
-            )
+            ).collect()
         return plan_scan(
             self.root, meta, filter=filter, snapshot_id=snapshot_id
         )
@@ -1842,21 +1839,16 @@ class Table:
     # --- metadata tables (Iceberg files/snapshots/history counterpart) --------
 
     def files_df(self, snapshot_id: Optional[int] = None) -> DataFrame:
-        """Live data files as a DataFrame (one row per file, with stats).
+        """Live data files as a DataFrame (one row per file, with stats;
+        merge-on-read delete files are not listed — ``manifests_df``
+        counts them).
 
         Built from the manifest Parquet files with a distributed read, so
         it works at millions-of-files scale without driver memory."""
-        schema = (
-            "file_path string, partition_json string, record_count bigint, "
-            "file_size_bytes bigint, stats_json string, sort_order string"
+        data, _deletes = manifest_entries_df(
+            self.spark, self.root, self._manifest_list(self.meta, snapshot_id)
         )
-        paths = [
-            os.path.join(self.root, m["path"])
-            for m in self._manifest_list(self.meta, snapshot_id)
-        ]
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*sorted(set(paths))).select(
+        return data.select(
             "file_path",
             "partition_json",
             "record_count",

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .errors import LakehouseError
+from .meta.snapshots import _atomic_write_json
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -534,20 +535,12 @@ def sync_webdataset(
         return spark.createDataFrame(rows, schema=schema)
 
     def _commit_state(shards: dict) -> None:
-        tmp = f"{state_path}.tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "synced_snapshot_id": head,
-                    "n_shards": n_shards,
-                    "key_col": key_col,
-                    "shards": shards,
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-        os.replace(tmp, state_path)
+        _atomic_write_json(state_path, {
+            "synced_snapshot_id": head,
+            "n_shards": n_shards,
+            "key_col": key_col,
+            "shards": shards,
+        })
 
     def _rows_to_state(man_rows) -> dict:
         return {
