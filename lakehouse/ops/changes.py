@@ -11,8 +11,8 @@ proportional to the change, never the table:
   :class:`ChangeStep` per row-changing snapshot: the data files it
   added and removed and the delete files it added, diffed against its
   parent's plan. Each boundary snapshot is planned once. ``replace``-
-  type snapshots (compact / cluster / rewrite-manifests) are
-  data-neutral and skipped; row-changing operations other than
+  type snapshots (compact / cluster / rewrite-manifests) and schema
+  changes are data-neutral and skipped; row-changing operations other than
   ``append`` raise unless ``allow_replays`` (Iceberg's
   incremental-append-scan contract). Its readers: ``incremental_scan``
   (Spark side), the stream reader's append and CDC modes (Arrow side,
@@ -47,7 +47,13 @@ from ..meta.scan import ScanPlan, plan_scan, read_entries
 from .mor import touched_by
 
 APPEND_OPS = {"append"}
-DATA_NEUTRAL_OPS = {"replace", "rewrite-manifests", "evolve-schema"}
+#: snapshots that change no row: rewrites that move rows verbatim, and
+#: schema changes that commit no file (``cherry-pick`` is not one: a
+#: published MoR merge carries its delete files)
+DATA_NEUTRAL_OPS = {
+    "replace", "rewrite-manifests", "evolve-schema",
+    "add-column", "rename-column", "drop-column",
+}
 
 
 def _chain(meta: S.TableMetadata, from_id: Optional[int], to_id: int):

@@ -224,6 +224,7 @@ class Table:
         set_props: Optional[dict[str, Any]] = None,
         validate: Optional[dict[str, Any]] = None,
         props_guard: Optional[dict[str, Any]] = None,
+        referenced: Sequence[str] = (),
         base: Optional[S.TableMetadata] = None,
     ) -> tuple[S.Snapshot, S.TableMetadata]:
         """Build snapshot N+1 = parent − removed + added, with manifest
@@ -246,6 +247,12 @@ class Table:
         be live in the parent we end up committing against — if a
         concurrent commit already replaced one, raise CommitConflictError
         so the maintenance job can replan (classic Iceberg validation).
+        ``referenced``: data files the added positional deletes name rows
+        of. They were live in ``base``; if the head moved since, the same
+        manifest walk checks each is still live and raises
+        CommitConflictError otherwise (Iceberg's
+        ``validateDataFilesExist``) — positions into a rewritten file
+        would hide nothing.
 
         ``branch``: commit onto a named branch ref instead of main — the
         parent is the branch head and only the ref advances, leaving
@@ -300,17 +307,27 @@ class Table:
                 head_id = base.current_snapshot_id  # implicit branch-create
             manifests_out: list[dict[str, Any]] = []
             still_to_remove = set(removed)
+            still_to_find = (
+                set(referenced)
+                if read_base is None
+                or head_id != read_base.current_snapshot_id
+                else set()
+            )
             if head_id is not None:
                 parent_list = S.read_manifest_list(
                     self.root, base.snapshot(head_id).manifest_list
                 )
                 for m in parent_list:
-                    if not still_to_remove:
-                        # every removed path is accounted for: the rest
-                        # of the parent list is reused unopened
+                    if not (still_to_remove or still_to_find):
+                        # every removed and referenced path is accounted
+                        # for: the rest of the parent list is reused
+                        # unopened
                         manifests_out.append(m)
                         continue
                     entries = read_manifest(self.root, m["path"])
+                    still_to_find.difference_update(
+                        e.file_path for e in entries
+                    )
                     hit = [e for e in entries if e.file_path in still_to_remove]
                     if not hit:
                         manifests_out.append(m)
@@ -331,6 +348,13 @@ class Table:
                     f"{operation}: {len(still_to_remove)} source files no "
                     f"longer live (concurrently rewritten); replan needed: "
                     f"{sorted(still_to_remove)[:3]}..."
+                )
+            if still_to_find:
+                raise CommitConflictError(
+                    f"{operation}: {len(still_to_find)} data files its "
+                    f"positional deletes name are no longer live "
+                    f"(concurrently rewritten); replan needed: "
+                    f"{sorted(still_to_find)[:3]}..."
                 )
             schema_id = base.current_schema_id
             schemas = list(base.schemas)
@@ -1112,21 +1136,12 @@ class Table:
         )
 
     def _merge(self, meta: S.TableMetadata, source: DataFrame, *,
-               mode: str = "cow", schema_evolution: bool = False, **kw):
+               schema_evolution: bool = False, **kw):
         """``merge`` on the op's already-read ``meta``."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"unknown merge mode: {mode!r}")
         if schema_evolution:
             meta = self._evolve_for_merge_source(
                 meta, source, op_col=kw.get("op_col", "op")
             )
-        if mode == "mor":
-            from .ops.mor import merge_into_mor as _merge_mor
-
-            # no materialization needed: the new delete gets a NEW seq,
-            # and rows appended in this commit share it (so survive);
-            # pending older deletes keep applying to their older files
-            return _merge_mor(self, meta, source, **kw)
         from .ops.merge import merge_into as _merge
 
         return _merge(self, meta, source, **kw)

@@ -148,3 +148,25 @@ def test_refresh_reads_each_table_once(spark, base, monkeypatch, kind, change):
     assert out["res"].mode == "incremental"
     assert S.current_version(d.table.root) == version + 1
     assert _rows(d.scan()) == _rows(d.expected())
+
+
+@pytest.mark.parametrize(
+    "change",
+    [
+        lambda t: t.add_column("extra", "int", default=7),
+        lambda t: t.rename_column("transcript", "text"),
+        lambda t: t.drop_column("transcript"),
+    ],
+    ids=["add_column", "rename_column", "drop_column"],
+)
+def test_incremental_scan_across_schema_change(spark, tmp_path, change):
+    """A schema change commits no file: an append-only read across it
+    returns exactly the appended rows."""
+    t = Table.create(spark, str(tmp_path / "t"), CLIPS_SCHEMA)
+    t.append(_clips(spark, 0, 4))
+    s0 = t.current_snapshot_id()
+    t.append(_clips(spark, 4, 4))
+    change(t)
+    t.append(_clips(spark, 8, 4))
+    assert t.incremental_scan(from_snapshot_id=s0).count() == 8
+    assert t.row_changes(from_snapshot_id=s0).count() == 8

@@ -419,6 +419,13 @@ def test_merge_mor_equals_cow_and_rewrites_nothing(spark, tmp_path):
     assert len(dels) == 1 and not dels[0].is_pos_delete
 
     assert scan_fingerprint(t_mor) == scan_fingerprint(t_cow)
+    # each mode keeps its own snapshot-summary keys
+    cow_sum = t_cow.meta.snapshots[-1].summary
+    mor_sum = t_mor.meta.snapshots[-1].summary
+    assert cow_sum["files_touched"] > 0 and "mode" not in cow_sum
+    assert mor_sum["mode"] == "merge-on-read"
+    assert mor_sum["keys_in_delete_file"] == 45  # every source key
+    assert "files_touched" not in mor_sum
 
     # updated keys appended in the SAME commit as the delete survive it
     # (same seq — the strict sequence rule), already implied by the
@@ -435,6 +442,8 @@ def test_merge_mor_rejects_null_and_duplicate_keys(spark, table_root):
     from lakehouse.errors import MergeError
 
     t = _table(spark, table_root)
+    before = t.current_snapshot_id()
+    spark.catalog.clearCache()
     pdf = synth_clips_pdf(range(0, 4), seed=42, n_days=2)
     dup = pd.concat([pdf, pdf.iloc[[0]]], ignore_index=True)
     with pytest.raises(MergeError, match="duplicate"):
@@ -454,6 +463,9 @@ def test_merge_mor_rejects_null_and_duplicate_keys(spark, table_root):
             spark.createDataFrame(nul, schema=nullable),
             key="clip_id", mode="mor",
         )
+    # a refused merge commits nothing and leaves no source cached
+    assert t.current_snapshot_id() == before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_merge_mor_then_reinsert_seq_rule(spark, table_root):

@@ -181,13 +181,17 @@ def _racers(spark):
         "add_column": lambda other: other.add_column(
             "extra", "int", default=7
         ),
+        "compact": lambda other: other.compact(),
+        "cluster": lambda other: other.cluster(["dur_ms"]),
     }
 
 
 @pytest.mark.parametrize(
     "op,racer",
     [(op, "append") for op in RACED]
-    + [(op, "add_column") for op in ("compact", "merge_cow", "merge_mor")],
+    + [(op, "add_column") for op in ("compact", "merge_cow", "merge_mor")]
+    # positions into files a concurrent rewrite retired hide nothing
+    + [("delete_mor_pos", racer) for racer in ("compact", "cluster")],
 )
 def test_concurrent_commit_rebases_or_conflicts(
     spark, bases, monkeypatch, op, racer
